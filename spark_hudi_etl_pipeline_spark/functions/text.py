@@ -1,8 +1,13 @@
 """Text-analysis column functions (north-star extension; SURVEY.md §7
-Phase 4). All pure JVM built-in expressions — tokenization, quality
-scoring, language ID, and fingerprinting run inside whole-stage codegen
-with zero Python in the executor hot path, so they scale to 100 TB of
-`documents` exactly like any other projection.
+Phase 4). Tokenization, quality scoring, language ID and fingerprinting
+are JVM built-in expressions that run inside whole-stage codegen, so
+they scale to 100 TB of `documents` like any other projection.
+
+The exceptions are the Arrow twins :func:`quality_score_arrow` and
+:func:`language_id_arrow`: pandas UDFs, so their rows cross into a
+Python worker in batches. The registered quality and language-ID
+queries use them because one vectorized Python pass beat the
+interpreted higher-order-function chains of their JVM twins.
 """
 
 from __future__ import annotations

@@ -379,7 +379,6 @@ def lsh_candidate_pairs(
     bands: int = 8,
     k: int = 5,
     max_bucket: int = 1000,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` bands of
     ``num_hashes/bands`` rows, bucket by band hash, emit candidate id
@@ -389,10 +388,7 @@ def lsh_candidate_pairs(
     single hot bucket can't go quadratic — the standard skew guard.
     """
     rows = num_hashes // bands
-    if use_arrow:
-        sig_expr = minhash_signature_arrow(num_hashes, k)(F.col(text_col))
-    else:
-        sig_expr = minhash_signature(text_col, num_hashes, k)
+    sig_expr = minhash_signature_arrow(num_hashes, k)(F.col(text_col))
     # The signature stage is CPU-bound; fan out under-parallel scans
     # (measured locally: 2.2s → 0.9s).
     df = _fan_out(df)
@@ -445,7 +441,6 @@ def minhash_dedup_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 5,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidates verified with the exact
     shingle-set Jaccard (array_intersect/array_union) ≥ ``threshold``.
@@ -454,8 +449,7 @@ def minhash_dedup_pairs(
     pair (semi-join prefilter), so the expensive second shingling pass
     scales with collisions, not corpus size."""
     cands = lsh_candidate_pairs(
-        df, id_col, text_col, num_hashes=num_hashes, bands=bands, k=k,
-        use_arrow=use_arrow,
+        df, id_col, text_col, num_hashes=num_hashes, bands=bands, k=k
     )
     # Candidate pairs are consumed twice (prefilter + verify join) and are
     # small by construction (bounded by bucket collisions) — materialize

@@ -33,6 +33,7 @@ Scale design (100 TB table, small incremental batch):
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, Window
@@ -42,8 +43,7 @@ PRECOMBINE_TIEBREAK = "__precombine_rn"
 
 
 def precombine_batch(
-    batch: DataFrame, keys: list[str], precombine: str,
-    *, salt_buckets: int | None = None,
+    batch: DataFrame, keys: list[str], precombine: str
 ) -> DataFrame:
     """Collapse the batch to one row per key, keeping the row with the
     largest ``precombine`` value (Hudi preCombineField semantics,
@@ -52,41 +52,13 @@ def precombine_batch(
     Hudi's own tie behavior is unspecified; we keep the first by file
     order like Hudi's default payload.
 
-    ``salt_buckets=N`` opts into a salted two-phase max-by for hot-key
-    batches (r5 verdict ask #5): phase 1 reduces within ``(keys,
-    salt)``, phase 2 reduces the ≤N survivors per key. Ties on the
-    precombine value break by a row-content hash (a total order, needed
-    so the two-phase result is well-defined); identical to the flat
-    path whenever the precombine value is unique per key.
-
-    MEASURED GUIDANCE (SCALE.md §hot-key upsert probe): leave this OFF
-    on Spark 4 — the engine plans the ``rank<=1`` filter as
-    ``WindowGroupLimit`` Partial/Final, a map-side top-1-per-key
-    reduction BEFORE the shuffle, so a hot key arrives at its reducer
-    already collapsed to ~one row per upstream task and the flat path
-    beat salt_buckets=16 at every probed skew (the salted path pays a
-    second shuffle for protection the engine already provides). The
-    option exists for engines/paths without that rewrite, and because
-    guessing was not acceptable: the probe is how we know.
+    Hot-key batches need no salting (SCALE.md §hot-key upsert probe):
+    Spark 4 plans the ``rank<=1`` filter as ``WindowGroupLimit``
+    Partial/Final, a map-side top-1-per-key reduction BEFORE the
+    shuffle, so a hot key arrives at its reducer already collapsed to
+    ~one row per upstream task (pinned by
+    ``tests/test_merge.py::test_flat_precombine_plans_window_group_limit``).
     """
-    if salt_buckets and salt_buckets > 1:
-        tie = F.xxhash64(*[F.col(c) for c in batch.columns])
-        salt = F.pmod(tie, F.lit(salt_buckets))
-        w1 = Window.partitionBy(*keys, "__salt").orderBy(
-            F.desc(precombine), F.asc("__tie")
-        )
-        w2 = Window.partitionBy(*keys).orderBy(
-            F.desc(precombine), F.asc("__tie")
-        )
-        return (
-            batch.withColumn("__tie", tie)
-            .withColumn("__salt", salt)
-            .withColumn(PRECOMBINE_TIEBREAK, F.row_number().over(w1))
-            .filter(F.col(PRECOMBINE_TIEBREAK) == 1)
-            .withColumn(PRECOMBINE_TIEBREAK, F.row_number().over(w2))
-            .filter(F.col(PRECOMBINE_TIEBREAK) == 1)
-            .drop(PRECOMBINE_TIEBREAK, "__salt", "__tie")
-        )
     w = Window.partitionBy(*keys).orderBy(F.desc(precombine))
     return (
         batch.withColumn(PRECOMBINE_TIEBREAK, F.row_number().over(w))
@@ -151,15 +123,8 @@ def merge_upsert(
     delete_col: str | None = None,
     evolve_schema: bool = False,
     partial_update: bool = False,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """Pure-DataFrame upsert: returns the post-merge table contents.
-
-    ``salt_buckets=N`` salts the in-batch precombine window for hot-key
-    batches (see :func:`precombine_batch`); every other stage of the
-    merge is key-unique on both sides, so the window is the only skew
-    surface. The merge result is identical whenever the precombine
-    value is unique per key (ties instead break by row-content hash).
 
     ``existing=None`` models first write. Batch rows always beat existing
     rows with equal precombine values (Hudi upsert overwrite semantics —
@@ -204,9 +169,7 @@ def merge_upsert(
         existing, batch = align_schemas(
             existing, batch, skip=(delete_col,) if delete_col else ()
         )
-    deduped = precombine_batch(
-        batch, keys, precombine, salt_buckets=salt_buckets
-    )
+    deduped = precombine_batch(batch, keys, precombine)
     if existing is None:
         if delete_col is not None:
             deduped = deduped.filter(
@@ -410,10 +373,16 @@ def upsert_parquet(
 ) -> int:
     """Materializing upsert sink (reference R7 write_hudi_table,
     :238-260, re-expressed): merge ``batch`` into the parquet table at
-    ``path``; returns rows written. Read-modify-write with an overwrite
-    commit; single atomic directory swap via a staging write because
-    parquet has no transaction log (Hudi/Delta would make this a real
-    ACID commit — connector passthrough point).
+    ``path``; returns rows written. Read-modify-write: the merge is
+    materialized with ``localCheckpoint`` and then overwrites the table
+    directory in place. That overwrite is not atomic — parquet has no
+    transaction log, so a crash during the write can leave the table
+    partly written. The crash-safe path is the manifest-committed
+    writers (:func:`upsert_parquet_indexed`,
+    :func:`upsert_parquet_bloom_indexed`,
+    :func:`upsert_parquet_record_indexed`), whose commit point is one
+    manifest publish (Hudi/Delta would make this a real ACID commit —
+    connector passthrough point).
 
     ``evolve_schema=True`` = Hudi ``hoodie.schema.on.read.enable``
     passthrough semantics: the table schema widens to the batch's new
@@ -432,6 +401,98 @@ def upsert_parquet(
         # Materialize the merge before overwriting the files we read.
         merged = merged.localCheckpoint(eager=True)
     return _write_parquet_counted(merged, path)
+
+
+def _dynamic_overwrite(spark, df: DataFrame, path: str, partition_col: str) -> None:
+    """Write ``df`` replacing only the hive partitions it contains rows
+    for (``partitionOverwriteMode=dynamic``), restoring the session's
+    prior mode afterwards."""
+    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def _upsert_partitioned(
+    spark,
+    batch: DataFrame,
+    path: str,
+    keys: list[str],
+    precombine: str,
+    partition_col: str,
+    *,
+    delete_col: str | None,
+    global_index: bool,
+) -> int:
+    """Shared body of the two partitioned upsert sinks,
+    :func:`upsert_parquet_partitioned` (``global_index=False``) and
+    ``tableops.upsert_parquet_partitioned_global`` (``True``). They
+    differ only in the merge key (``keys + [partition_col]`` or
+    ``keys``) and in the partitions they touch: the batch's own, plus,
+    with the global index, those currently holding a batch key."""
+    import os
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    merge_keys = keys if global_index else keys + [partition_col]
+    table = None  # first write
+    if os.path.isdir(path):  # reading an absent path logs a stack trace
+        try:
+            table = spark.read.parquet(path)
+        except AnalysisException:  # deletes emptied every partition
+            pass
+    # ONE planning job (r14, guide §1.4) for both touched-partition
+    # sets: the batch's distinct target partitions and, with the global
+    # index, the index lookup (column-pruned (keys, partition) table
+    # scan semi-joined against the broadcast batch keys). It runs before
+    # any write, so a NULL partition value is rejected on the first
+    # write exactly as on every later one (same contract as
+    # insert_overwrite) and leaves no table behind.
+    plan = batch.select(
+        F.lit(1).alias("is_new"), F.col(partition_col).alias("p")
+    ).distinct()
+    if global_index and table is not None:
+        plan = plan.unionByName(
+            table.select(*keys, partition_col)
+            .join(F.broadcast(batch.select(*keys).distinct()), on=keys, how="left_semi")
+            .select(F.lit(0).alias("is_new"), F.col(partition_col).alias("p"))
+            .distinct()
+        )
+    plan_rows = plan.collect()
+    if any(r["is_new"] == 1 and r["p"] is None for r in plan_rows):
+        raise ValueError(
+            f"null partition value in batch column {partition_col!r} — "
+            "Hudi-style partition paths require a non-null partition key"
+        )
+    touched = set()
+    if table is not None:
+        touched = {r["p"] for r in plan_rows}
+        table = table.filter(F.col(partition_col).isin(sorted(touched)))
+    merged = merge_upsert(
+        table, batch, merge_keys, precombine, delete_col=delete_col
+    )
+    if table is not None:
+        # The commit overwrites files the merge read — materialize first.
+        merged = merged.localCheckpoint(eager=True)
+    # Ride the row count AND the surviving-partition set on the commit
+    # write itself (r14, guide §1.4): a trailing distinct-collect +
+    # count() would be two more jobs for numbers the write already sees.
+    obs = Observation()
+    observed = merged.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.collect_set(partition_col).alias("parts"),
+    )
+    _dynamic_overwrite(spark, observed, path, partition_col)
+    # Partitions emptied by moves/deletes produce no output rows, so the
+    # dynamic overwrite never visits them — drop them as the commit step
+    # (Hudi records this tombstone in the timeline).
+    for value in touched - set(obs.get["parts"]):
+        shutil.rmtree(f"{path}/{partition_col}={value}", ignore_errors=True)
+    return int(obs.get["n"])
 
 
 def upsert_parquet_partitioned(
@@ -456,14 +517,16 @@ def upsert_parquet_partitioned(
     (``hoodie.index.type=SIMPLE/BLOOM``): record keys are unique *within*
     a partition, so the merge key is ``keys + [partition_col]`` and a
     batch row whose key exists in a different partition inserts rather
-    than moves (a global-index variant would first resolve key →
-    partition with one extra join against the key index).
+    than moves (the global-index variant is
+    ``tableops.upsert_parquet_partitioned_global``).
 
     Execution shape, in order:
 
     1. *Index lookup*: the batch's distinct partition values — a
        driver-side list bounded by the number of touched partitions
-       (what Hudi reads from its index), not by batch rows.
+       (what Hudi reads from its index), not by batch rows. A NULL
+       partition value raises ``ValueError`` before anything is
+       written, on the first write too.
     2. *Pruned read*: the existing table filtered with
        ``partition_col IN (touched)`` — Catalyst turns this into
        ``PartitionFilters``, so untouched partitions are never scanned.
@@ -476,66 +539,16 @@ def upsert_parquet_partitioned(
 
     Returns rows written into the touched partitions.
     """
-    first_write = False
-    try:
-        spark.read.parquet(path)
-    except Exception:  # first write: path absent
-        first_write = True
-    if first_write:
-        merged = merge_upsert(
-            None, batch, keys + [partition_col], precombine, delete_col=delete_col
-        )
-        obs = Observation()
-        merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(path)
-        return int(obs.get["n"])
-
-    touched = [
-        r[0] for r in batch.select(partition_col).distinct().collect()
-    ]
-    if any(v is None for v in touched):
-        raise ValueError(
-            f"null partition value in batch column {partition_col!r} — "
-            "Hudi-style partition paths require a non-null partition key"
-        )
-    existing_sub = spark.read.parquet(path).filter(
-        F.col(partition_col).isin(touched)
+    return _upsert_partitioned(
+        spark, batch, path, keys, precombine, partition_col,
+        delete_col=delete_col, global_index=False,
     )
-    merged = merge_upsert(
-        existing_sub,
-        batch,
-        keys + [partition_col],
-        precombine,
-        delete_col=delete_col,
-    )
-    # We overwrite the very files the merge reads — materialize first.
-    merged = merged.localCheckpoint(eager=True)
-
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-    if delete_col is not None:
-        # A partition whose every row was deleted produces no output rows,
-        # so dynamic overwrite never visits it — drop its directory as the
-        # commit step (Hudi records this tombstone in the timeline).
-        import shutil
-
-        remaining = {
-            r[0] for r in merged.select(partition_col).distinct().collect()
-        }
-        for value in set(touched) - remaining:
-            shutil.rmtree(f"{path}/{partition_col}={value}", ignore_errors=True)
-    return merged.count()
 
 
 # ---------------------------------------------------------------------------
-# Manifest commit protocol (shared by the file-indexed and bloom-indexed
-# COW writers): the commit point is publishing manifest version N+1 — a
+# Manifest commit protocol (shared by the range-, bloom- and
+# record-indexed COW writers, the clustering service and operators/wap.py):
+# the commit point is publishing manifest version N+1 — a
 # single new immutable object — never a directory mutation.
 #
 #   write new data files (unique names; invisible until referenced)
@@ -657,21 +670,26 @@ def read_indexed_table(spark, path: str) -> DataFrame:
 
 
 def _commit_staged(
-    spark, path: str, staging: str, version: int, kept: list[str],
+    path: str, staged: DataFrame, version: int, kept: list[str],
     *, clean: bool = True,
 ) -> tuple[list[str], int]:
-    """Shared commit tail: move staged part files in under unique names
-    (pre-commit — invisible until referenced), publish manifest
-    ``version`` over ``kept`` + the new files (THE commit point), then
-    best-effort-clean files the new manifest no longer references.
-    Returns (new file basenames, rows written)."""
+    """Shared commit tail: write ``staged`` to a staging directory under
+    the table (rows counted by an Observation on that write job — the
+    write doubles as materialization of a merge that reads the files it
+    replaces), move the part files in under unique names (pre-commit —
+    invisible until referenced), publish manifest ``version`` over
+    ``kept`` + the new files (THE commit point), then best-effort-clean
+    files the new manifest no longer references. Returns (new file
+    basenames, rows written)."""
     import glob
     import os
     import shutil
     import uuid
 
+    staging = f"{path}/.staging-{uuid.uuid4().hex}"
     moved = []
     try:
+        n_written = _write_parquet_counted(staged, staging)
         for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
             dest = os.path.join(
                 path, f"part-upsert-{uuid.uuid4().hex}-{i:05d}.parquet"
@@ -696,11 +714,6 @@ def _commit_staged(
                     os.remove(f)
                 except OSError:
                     pass
-    n_written = (
-        spark.read.parquet(*[os.path.join(path, m) for m in moved]).count()
-        if moved
-        else 0
-    )
     return moved, n_written
 
 
@@ -714,6 +727,150 @@ class IndexedUpsertResult(NamedTuple):
 
     rows_written: int
     version: int
+
+
+class _SidecarIndex(NamedTuple):
+    """A file index kept as a parquet relation in an underscore-prefixed
+    sidecar directory of the table (invisible to table scans), with at
+    least one row per data file. ``build(spark, path, key, files)``
+    indexes ``files``; ``probe(index, batch, key)`` returns the names of
+    the files that may hold one of the batch's keys."""
+
+    dirname: str
+    build: Callable[..., DataFrame]
+    probe: Callable[[DataFrame, DataFrame, str], list[str]]
+
+
+def _valid_sidecar(
+    spark, path: str, live_files: list[str], dirname: str
+) -> DataFrame | None:
+    """The sidecar relation in ``dirname`` if present AND its file set
+    equals the manifest's live set (metadata-scale check), else None. A
+    crash between the manifest publish and the sidecar rewrite leaves a
+    stale sidecar whose missing entries for new files would yield index
+    FALSE NEGATIVES — a later upsert would skip those files and write
+    duplicate keys; callers fall back to a cold rebuild over the
+    manifest-listed files instead (orphaned pre-crash files ignored)."""
+    import os
+
+    sidecar = os.path.join(path, dirname)
+    if not os.path.isdir(sidecar):
+        return None
+    candidate = spark.read.parquet(sidecar)
+    sidecar_files = {
+        r["file"] for r in candidate.select("file").distinct().collect()
+    }
+    return candidate if sidecar_files == set(live_files) else None
+
+
+def _range_probe_files(
+    spark, path: str, key: str, files: list[str], batch: DataFrame
+) -> list[str]:
+    """SIMPLE-index lookup: the ``files`` whose footer ``[min, max]``
+    range of ``key`` holds a batch key. A broadcast range join of the
+    file-bounds relation (tiny, footer-only reads) against the batch's
+    distinct keys — only file NAMES reach the driver."""
+    from .clustering import file_column_bounds
+
+    bounds = [
+        b
+        for b in file_column_bounds(path, [key], files=files)
+        if b[key][0] is not None
+    ]
+    key_type = batch.schema[key].dataType.simpleString()
+    files_df = spark.createDataFrame(
+        [(b["file"], b[key][0], b[key][1]) for b in bounds],
+        f"file string, lo {key_type}, hi {key_type}",
+    )
+    return [
+        r["file"]
+        for r in (
+            batch.select(F.col(key).alias("__bk"))
+            .distinct()
+            .join(
+                F.broadcast(files_df),
+                (F.col("__bk") >= F.col("lo")) & (F.col("__bk") <= F.col("hi")),
+            )
+            .select("file")
+            .distinct()
+            .collect()
+        )
+    ]
+
+
+def _indexed_upsert(
+    spark,
+    batch: DataFrame,
+    path: str,
+    key: str,
+    precombine: str,
+    *,
+    delete_col: str | None,
+    index: _SidecarIndex | None,
+    clean: bool = True,
+    base_version: int | None = None,
+) -> IndexedUpsertResult:
+    """Shared body of the manifest-committed indexed writers: first
+    write, live (or ``base_version``) file set, affected-file lookup,
+    merge against the affected files only, stage → manifest commit →
+    clean, then sidecar maintenance. ``index=None`` is the SIMPLE
+    key-range index (parquet footers, no sidecar); otherwise ``index``
+    names the sidecar kind (bloom or record-level)."""
+    import os
+
+    def write_sidecar(rel: DataFrame) -> None:
+        rel.write.mode("overwrite").parquet(os.path.join(path, index.dirname))
+
+    if not os.path.isdir(path):
+        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
+        n = _write_parquet_counted(merged, path)
+        version, live = table_live_files(path)
+        _manifest_publish(path, live, version + 1)
+        if index is not None:
+            write_sidecar(index.build(spark, path, key, live))
+        return IndexedUpsertResult(n, version + 1)
+
+    version, live_files = table_live_files(path)
+    if base_version is not None and base_version != version:
+        live_files = manifest_files_at(path, base_version)
+        # The post-commit cleaner keys off the NEW manifest alone; with a
+        # non-latest base it would delete files other versions (other
+        # branch heads) still reference. Never clean on a branched write.
+        clean = False
+    if index is None:
+        affected = _range_probe_files(spark, path, key, live_files, batch)
+    else:
+        rel = _valid_sidecar(spark, path, live_files, index.dirname)
+        if rel is None:
+            rel = index.build(spark, path, key, live_files)  # cold (re)build
+        # Materialize now (metadata-scale): the commit below deletes data
+        # files and overwrites the sidecar this lazy plan reads from.
+        rel = rel.localCheckpoint(eager=True)
+        affected = index.probe(rel, batch, key)
+    existing_sub = (
+        spark.read.parquet(*[os.path.join(path, f) for f in affected])
+        if affected
+        else None
+    )
+    merged = merge_upsert(
+        existing_sub, batch, [key], precombine, delete_col=delete_col
+    )
+    kept = [f for f in live_files if f not in set(affected)]
+    moved, n_written = _commit_staged(
+        path, merged, version + 1, kept, clean=clean
+    )
+    if index is not None:
+        # Post-commit incremental index maintenance: drop replaced files'
+        # rows, add the new files' rows — O(commit), never O(table). A
+        # crash before this write is healed by the manifest-mismatch
+        # cold rebuild.
+        kept_rel = rel.filter(~F.col("file").isin(affected))
+        write_sidecar(
+            kept_rel.unionByName(index.build(spark, path, key, moved))
+            if moved
+            else kept_rel
+        )
+    return IndexedUpsertResult(n_written, version + 1)
 
 
 def upsert_parquet_indexed(
@@ -767,69 +924,11 @@ def upsert_parquet_indexed(
     This is what lets two branches write the same table without seeing
     each other: each merges from its own pinned snapshot.
     """
-    import os
-    import uuid
-
-    from .clustering import file_column_bounds
-
-    if not os.path.isdir(path):
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-        n = _write_parquet_counted(merged, path)
-        version, live = table_live_files(path)
-        _manifest_publish(path, live, version + 1)
-        return IndexedUpsertResult(n, version + 1)
-
-    version, live_files = table_live_files(path)
-    if base_version is not None and base_version != version:
-        live_files = manifest_files_at(path, base_version)
-        # The post-commit cleaner keys off the NEW manifest alone; with a
-        # non-latest base it would delete files other versions (other
-        # branch heads) still reference. Never clean on a branched write.
-        clean = False
-    bounds = [
-        b
-        for b in file_column_bounds(path, [key], files=live_files)
-        if b[key][0] is not None
-    ]
-    files_df = spark.createDataFrame(
-        [(b["file"], b[key][0], b[key][1]) for b in bounds],
-        f"file string, lo {batch.schema[key].dataType.simpleString()}, "
-        f"hi {batch.schema[key].dataType.simpleString()}",
+    return _indexed_upsert(
+        spark, batch, path, key, precombine,
+        delete_col=delete_col, index=None, clean=clean,
+        base_version=base_version,
     )
-    affected = [
-        r["file"]
-        for r in (
-            batch.select(F.col(key).alias("__bk"))
-            .distinct()
-            .join(
-                F.broadcast(files_df),
-                (F.col("__bk") >= F.col("lo")) & (F.col("__bk") <= F.col("hi")),
-            )
-            .select("file")
-            .distinct()
-            .collect()
-        )
-    ]
-    if affected:
-        existing_sub = spark.read.parquet(
-            *[os.path.join(path, f) for f in affected]
-        )
-        merged = merge_upsert(
-            existing_sub, batch, [key], precombine, delete_col=delete_col
-        )
-    else:
-        merged = merge_upsert(
-            None, batch, [key], precombine, delete_col=delete_col
-        )
-    # Stage (the merge reads the files it replaces, so the staging write
-    # doubles as materialization) → manifest commit → clean.
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staging)
-    kept = [f for f in live_files if f not in set(affected)]
-    _, n_written = _commit_staged(
-        spark, path, staging, version + 1, kept, clean=clean
-    )
-    return IndexedUpsertResult(n_written, version + 1)
 
 
 #: Bloom-index sizing: 65536 bits (8 KiB) / 5 hashes per file ⇒ <0.5%
@@ -936,24 +1035,6 @@ def _bloom_probe_files(words: DataFrame, probe_keys: DataFrame, key: str) -> lis
     ]
 
 
-def _valid_sidecar_words(
-    spark, path: str, live_files: list[str], *, sidecar_dir: str = _BLOOM_DIR
-) -> DataFrame | None:
-    """The bloom sidecar relation if present AND consistent with the
-    manifest's live file set (see the crash-recovery rationale in
-    :func:`upsert_parquet_bloom_indexed`), else None."""
-    import os
-
-    sidecar = os.path.join(path, sidecar_dir)
-    if not os.path.isdir(sidecar):
-        return None
-    candidate = spark.read.parquet(sidecar)
-    sidecar_files = {
-        r["file"] for r in candidate.select("file").distinct().collect()
-    }
-    return candidate if sidecar_files == set(live_files) else None
-
-
 def build_secondary_index(spark, path: str, col: str) -> int:
     """Secondary bloom index on a NON-key column (Hudi 1.0's secondary
     index): per-file bloom bitsets over ``col``'s values, stored in a
@@ -989,11 +1070,13 @@ def read_point_lookup(
     of the write-side index pruning (Hudi serves point lookups through
     the same bloom/column-stats metadata). Pruning source, best first:
 
-    1. the ``_bloom`` sidecar (when present and manifest-consistent) —
-       per-key membership, survives hash-scattered layouts;
-    2. parquet footer min/max ranges — effective on a
+    1. the ``_rli`` record-level index (primary lookups; when present
+       and manifest-consistent) — exact key→file mapping;
+    2. the ``_bloom`` sidecar (same conditions) — per-key membership,
+       survives hash-scattered layouts;
+    3. parquet footer min/max ranges — effective on a
        ``cluster_linear``-by-key layout;
-    3. no index ⇒ the full manifest-consistent file set (correct,
+    4. no index ⇒ the full manifest-consistent file set (correct,
        unpruned).
 
     The residual ``key IN (values)`` filter always applies (bloom false
@@ -1021,29 +1104,15 @@ def read_point_lookup(
     )
     # Exact record-level index first (primary lookups only — the RLI
     # maps the RECORD key): no false positives, minimal file set.
-    if primary:
-        rli = _valid_rli(spark, path, live_files)
-        if rli is not None:
-            candidates = [
-                r["file"]
-                for r in (
-                    rli.join(F.broadcast(probe_df), on=key, how="left_semi")
-                    .select("file")
-                    .distinct()
-                    .collect()
-                )
-            ]
-            reader = spark.read.parquet(
-                *[os.path.join(path, f) for f in (candidates or [live_files[0]])]
-            )
-            out = reader.filter(F.col(key).isin(values))
-            return out.limit(0) if not candidates else out
-    words = _valid_sidecar_words(
-        spark, path, live_files, sidecar_dir=f"{_BLOOM_DIR}_{key}"
-    )
-    if words is None and primary:
-        words = _valid_sidecar_words(spark, path, live_files)
-    if words is not None:
+    rli = _valid_sidecar(spark, path, live_files, _RLI_DIR) if primary else None
+    words = None
+    if rli is None:
+        words = _valid_sidecar(spark, path, live_files, f"{_BLOOM_DIR}_{key}")
+        if words is None and primary:
+            words = _valid_sidecar(spark, path, live_files, _BLOOM_DIR)
+    if rli is not None:
+        candidates = _rli_probe_files(rli, probe_df, key)
+    elif words is not None:
         candidates = _bloom_probe_files(words, probe_df, key)
     else:
         bounds = [
@@ -1102,79 +1171,13 @@ def upsert_parquet_bloom_indexed(
     anywhere leaves readers consistent and at worst costs one cold
     index rebuild.
     """
-    import os
-    import uuid
-
-    sidecar = os.path.join(path, _BLOOM_DIR)
-
-    if not os.path.isdir(path):
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-        n = _write_parquet_counted(merged, path)
-        version, live = table_live_files(path)
-        _manifest_publish(path, live, version + 1)
-        _table_bloom_words(spark, path, key, live).write.mode(
-            "overwrite"
-        ).parquet(sidecar)
-        return n
-
-    version, live_files = table_live_files(path)
-    # Load the sidecar only if its file set matches the manifest's live
-    # set (metadata-scale check): a crash between the manifest publish
-    # and the sidecar rewrite leaves a stale sidecar whose missing
-    # entries for new files yield bloom FALSE NEGATIVES — a later upsert
-    # would skip those files and write duplicate keys. On any mismatch,
-    # fall back to the cold rebuild (one column-pruned key scan over the
-    # manifest-listed files; orphaned pre-crash files are ignored).
-    words = _valid_sidecar_words(spark, path, live_files)
-    if words is None:
-        words = _table_bloom_words(spark, path, key, live_files)  # cold (re)build
-    # Materialize now (metadata-scale): the commit below deletes data
-    # files and overwrites the sidecar this lazy plan reads from.
-    words = words.localCheckpoint(eager=True)
-    affected = _bloom_probe_files(words, batch, key)
-    if affected:
-        existing_sub = spark.read.parquet(*[os.path.join(path, f) for f in affected])
-        merged = merge_upsert(existing_sub, batch, [key], precombine, delete_col=delete_col)
-    else:
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-
-    # Same stage → manifest-commit → clean protocol as the SIMPLE index.
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staging)
-    kept_files = [f for f in live_files if f not in set(affected)]
-    moved, n_written = _commit_staged(
-        spark, path, staging, version + 1, kept_files
-    )
-    # Post-commit incremental index maintenance: drop replaced files'
-    # words, add the new files' words — O(commit), the sidecar rewrite
-    # itself is metadata-scale. (words was materialized above; a crash
-    # before this line is healed by the manifest-mismatch cold rebuild.)
-    kept_words = words.filter(~F.col("file").isin(affected))
-    new_words = (
-        _table_bloom_words(spark, path, key, moved) if moved else None
-    )
-    out_words = (
-        kept_words.unionByName(new_words) if new_words is not None else kept_words
-    )
-    out_words.write.mode("overwrite").parquet(sidecar)
-    return n_written
+    return _indexed_upsert(
+        spark, batch, path, key, precombine,
+        delete_col=delete_col, index=_BLOOM_INDEX,
+    ).rows_written
 
 
 _RLI_DIR = "_rli"  # record-level index sidecar: (key, file) rows
-
-
-def _valid_rli(spark, path: str, live_files: list[str]) -> DataFrame | None:
-    """The record-level index relation if present AND consistent with
-    the manifest's live file set (same self-heal contract as the bloom
-    sidecar), else None."""
-    import os
-
-    d = os.path.join(path, _RLI_DIR)
-    if not os.path.isdir(d):
-        return None
-    candidate = spark.read.parquet(d)
-    rli_files = {r["file"] for r in candidate.select("file").distinct().collect()}
-    return candidate if rli_files == set(live_files) else None
 
 
 def _table_rli(spark, path: str, key: str, files: list[str]) -> DataFrame:
@@ -1194,6 +1197,29 @@ def _table_rli(spark, path: str, key: str, files: list[str]) -> DataFrame:
         F.lit(None).cast(src.schema[key].dataType).alias(key), "file"
     )
     return rows.unionByName(markers)
+
+
+def _rli_probe_files(rli: DataFrame, probe_keys: DataFrame, key: str) -> list[str]:
+    """Files the record-level index maps a probe key to: the probe's
+    distinct keys (broadcast) semi-join the (key, file) relation — exact,
+    no false positives; only file NAMES reach the driver."""
+    return [
+        r["file"]
+        for r in (
+            rli.join(
+                F.broadcast(probe_keys.select(key).distinct()),
+                on=key,
+                how="left_semi",
+            )
+            .select("file")
+            .distinct()
+            .collect()
+        )
+    ]
+
+
+_BLOOM_INDEX = _SidecarIndex(_BLOOM_DIR, _table_bloom_words, _bloom_probe_files)
+_RECORD_INDEX = _SidecarIndex(_RLI_DIR, _table_rli, _rli_probe_files)
 
 
 def upsert_parquet_record_indexed(
@@ -1224,54 +1250,10 @@ def upsert_parquet_record_indexed(
     the sidecar self-heals by manifest-mismatch cold rebuild.
     Returns rows written.
     """
-    import os
-    import uuid
-
-    if not os.path.isdir(path):
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-        n = _write_parquet_counted(merged, path)
-        version, live = table_live_files(path)
-        _manifest_publish(path, live, version + 1)
-        _table_rli(spark, path, key, live).write.mode("overwrite").parquet(
-            os.path.join(path, _RLI_DIR)
-        )
-        return n
-
-    version, live_files = table_live_files(path)
-    rli = _valid_rli(spark, path, live_files)
-    if rli is None:
-        rli = _table_rli(spark, path, key, live_files)  # cold rebuild
-    # Materialize: the commit below deletes files this lazy plan reads.
-    rli = rli.localCheckpoint(eager=True)
-    batch_keys = batch.select(F.col(key)).distinct()
-    affected = [
-        r["file"]
-        for r in (
-            rli.join(F.broadcast(batch_keys), on=key, how="left_semi")
-            .select("file")
-            .distinct()
-            .collect()
-        )
-    ]
-    if affected:
-        existing_sub = spark.read.parquet(*[os.path.join(path, f) for f in affected])
-        merged = merge_upsert(existing_sub, batch, [key], precombine, delete_col=delete_col)
-    else:
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(staging)
-    kept_files = [f for f in live_files if f not in set(affected)]
-    moved, n_written = _commit_staged(spark, path, staging, version + 1, kept_files)
-    # Incremental index maintenance: O(commit).
-    kept_rows = rli.filter(~F.col("file").isin(affected))
-    out_rows = (
-        kept_rows.unionByName(_table_rli(spark, path, key, moved))
-        if moved
-        else kept_rows
-    )
-    out_rows.write.mode("overwrite").parquet(os.path.join(path, _RLI_DIR))
-    return n_written
+    return _indexed_upsert(
+        spark, batch, path, key, precombine,
+        delete_col=delete_col, index=_RECORD_INDEX,
+    ).rows_written
 
 
 def recluster_indexed_table(
@@ -1298,22 +1280,18 @@ def recluster_indexed_table(
     ranges tighten simultaneously, so skipping works for predicates on
     EITHER column, at the cost of looser single-column ranges than the
     linear layout."""
-    import uuid
-
     from .clustering import cluster_linear, cluster_zorder
 
     version, live_files = table_live_files(path)
     if not live_files:
         raise FileNotFoundError(f"no data files at {path!r}")
     current = read_indexed_table(spark, path)
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
     clustered = (
         cluster_zorder(current, key, zorder_with, n_files)
         if zorder_with is not None
         else cluster_linear(current, [key], n_files)
     )
-    clustered.write.mode("overwrite").parquet(staging)
-    _, n_written = _commit_staged(spark, path, staging, version + 1, kept=[])
+    _, n_written = _commit_staged(path, clustered, version + 1, kept=[])
     return n_written
 
 

@@ -38,19 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .clustering import cluster_linear
-from .merge import merge_upsert
-
-
-def _dynamic_overwrite(spark, df: DataFrame, path: str, partition_col: str) -> None:
-    """Write ``df`` replacing only the hive partitions it contains rows
-    for (``partitionOverwriteMode=dynamic``), restoring the session's
-    prior mode afterwards."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+from .merge import _dynamic_overwrite, _upsert_partitioned
 
 
 def insert_overwrite(
@@ -200,87 +188,14 @@ def upsert_parquet_partitioned_global(
        deleted) is dropped explicitly, since dynamic overwrite never
        visits partitions with no output rows.
 
-    Returns rows written into the touched partitions.
+    Returns rows written into the touched partitions. A NULL partition
+    value raises ``ValueError`` before anything is written, on the first
+    write too.
     """
-    from pyspark.sql import Observation
-
-    first_write = not os.path.isdir(path)
-    if first_write:
-        # NULL-partition check BEFORE the write: a first write must
-        # reject the same input later batches reject, not silently land
-        # rows in __HIVE_DEFAULT_PARTITION__ (same contract as
-        # insert_overwrite). Metadata-scale collect: distinct partition
-        # values of one batch.
-        new_parts = {
-            r[0] for r in batch.select(partition_col).distinct().collect()
-        }
-        if None in new_parts:
-            raise ValueError(
-                f"null partition value in batch column {partition_col!r}"
-            )
-        merged = merge_upsert(
-            None, batch, keys, precombine, delete_col=delete_col
-        )
-        # Piggyback the row count on the write job itself (Observation)
-        # instead of a second full merge recompute — merged is lazy here,
-        # so a trailing .count() would replay the precombine window.
-        obs = Observation()
-        merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(path)
-        return int(obs.get["n"])
-
-    batch_keys = batch.select(*keys).distinct()
-    table = spark.read.parquet(path)
-    # ONE planning job for both touched-partition sets (r14, guide §1.4):
-    # the batch's distinct target partitions and the global-index lookup
-    # (column-pruned (keys, partition) table scan semi-joined against the
-    # broadcast batch keys) used to be two separate collects — their
-    # union computes both in a single job, still before any write (the
-    # NULL-partition rejection below therefore still precedes the commit).
-    plan_rows = (
-        batch.select(
-            F.lit(1).alias("is_new"), F.col(partition_col).alias("p")
-        )
-        .distinct()
-        .unionByName(
-            table.select(*keys, partition_col)
-            .join(F.broadcast(batch_keys), on=keys, how="left_semi")
-            .select(F.lit(0).alias("is_new"), F.col(partition_col).alias("p"))
-            .distinct()
-        )
-        .collect()
+    return _upsert_partitioned(
+        spark, batch, path, keys, precombine, partition_col,
+        delete_col=delete_col, global_index=True,
     )
-    new_parts = {r["p"] for r in plan_rows if r["is_new"] == 1}
-    if None in new_parts:
-        raise ValueError(
-            f"null partition value in batch column {partition_col!r}"
-        )
-    old_parts = {r["p"] for r in plan_rows if r["is_new"] == 0}
-    touched = sorted(old_parts | new_parts)
-    existing_sub = table.filter(F.col(partition_col).isin(touched))
-    merged = merge_upsert(
-        existing_sub, batch, keys, precombine, delete_col=delete_col
-    )
-    # The commit overwrites files the merge read — materialize first.
-    merged = merged.localCheckpoint(eager=True)
-    # Ride the row count AND the surviving-partition set on the commit
-    # write itself (r14, guide §1.4): the trailing distinct-collect +
-    # count() were two more jobs over the checkpoint for numbers the
-    # write job already sees every row of.
-    obs = Observation()
-    observed = merged.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.collect_set(partition_col).alias("parts"),
-    )
-    _dynamic_overwrite(spark, observed, path, partition_col)
-    # Partitions emptied by moves/deletes produce no output rows, so the
-    # dynamic overwrite never visits them — drop them as the commit step.
-    remaining = set(obs.get["parts"])
-    for value in set(touched) - remaining:
-        shutil.rmtree(f"{path}/{partition_col}={value}", ignore_errors=True)
-    return int(obs.get["n"])
 
 
 def retention_delete(

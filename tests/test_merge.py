@@ -305,39 +305,9 @@ def test_merge_into_null_delete_condition_updates(spark):
     assert sorted(tuple(r) for r in out.select("k", "v").collect()) == [(1, 100)]
 
 
-def test_salted_precombine_matches_flat(spark):
-    """salt_buckets must not change the merge result when the precombine
-    value is unique per key (the documented contract) — replayed on the
-    exact upsert_precombine fixture shape and on a hot-key batch."""
-    from spark_hudi_etl_pipeline_spark.operators.merge import merge_upsert
-    from spark_hudi_etl_pipeline_spark.sources import load_table
-
-    cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
-    existing = load_table(spark, "/root/testdata/sf0.001", "orders").select(*cols)
-    b1 = (
-        existing.filter(F.col("o_orderkey") % 3 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") * 2.0)
-        .withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS"))
-    )
-    b2 = (
-        existing.filter(F.col("o_orderkey") % 6 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") * 4.0)
-        .withColumn("o_orderdate", F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"))
-    )
-    batch = b1.unionByName(b2)
-    flat = merge_upsert(existing, batch, ["o_orderkey"], "o_orderdate")
-    salted = merge_upsert(
-        existing, batch, ["o_orderkey"], "o_orderdate", salt_buckets=8
-    )
-    assert {tuple(r) for r in flat.collect()} == {
-        tuple(r) for r in salted.collect()
-    }
-
-
-def test_salted_precombine_hot_key(spark):
-    """A single key holding most of the batch (the salting motivation):
-    the winner is the max-precombine row under both paths, and the
-    salted path is self-consistent across reruns."""
+def test_flat_precombine_hot_key(spark):
+    """A single key holding most of the batch: the winner is its
+    max-precombine row and every other key keeps its one row."""
     from spark_hudi_etl_pipeline_spark.operators.merge import precombine_batch
 
     rows = [(1, i, f"v{i}") for i in range(500)] + [
@@ -345,51 +315,11 @@ def test_salted_precombine_hot_key(spark):
     ]
     batch = spark.createDataFrame(rows, "k int, prec int, v string")
     flat = {tuple(r) for r in precombine_batch(batch, ["k"], "prec").collect()}
-    salted = {
-        tuple(r)
-        for r in precombine_batch(
-            batch, ["k"], "prec", salt_buckets=16
-        ).collect()
-    }
-    assert flat == salted
-    assert (1, 499, "v499") in salted and len(salted) == 9
-    again = {
-        tuple(r)
-        for r in precombine_batch(
-            batch, ["k"], "prec", salt_buckets=16
-        ).collect()
-    }
-    assert again == salted
-
-
-def test_salted_precombine_tie_break_deterministic(spark):
-    """Precombine ties under salting break by row-content hash — the
-    same winner every run, independent of partition layout."""
-    from spark_hudi_etl_pipeline_spark.operators.merge import precombine_batch
-
-    rows = [(1, 5, f"tie{i}") for i in range(50)]
-    batch = spark.createDataFrame(rows, "k int, prec int, v string")
-    outs = []
-    for n_shuffle in ("5", "11"):
-        spark.conf.set("spark.sql.shuffle.partitions", n_shuffle)
-        try:
-            outs.append(
-                tuple(
-                    sorted(
-                        tuple(r)
-                        for r in precombine_batch(
-                            batch, ["k"], "prec", salt_buckets=7
-                        ).collect()
-                    )
-                )
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-    assert outs[0] == outs[1] and len(outs[0]) == 1
+    assert (1, 499, "v499") in flat and len(flat) == 9
 
 
 def test_flat_precombine_plans_window_group_limit(spark):
-    """The measured reason salting stays off by default (SCALE.md
+    """The measured reason the precombine needs no salted path (SCALE.md
     §hot-key upsert probe): Spark plans the rank<=1 filter as a
     Partial+Final WindowGroupLimit — map-side top-1-per-key before the
     shuffle. Pin it so an engine upgrade that drops the rewrite is a

@@ -129,10 +129,34 @@ def test_nonglobal_index_key_inserts_in_new_partition(spark, table):
     }
 
 
-def test_null_partition_value_rejected(spark, table):
-    batch = spark.createDataFrame([(9, None, "x", 1)], SCHEMA)
+@pytest.mark.parametrize("first_write", [True, False], ids=["first", "later"])
+@pytest.mark.parametrize("global_index", [False, True], ids=["nonglobal", "global"])
+def test_null_partition_value_rejected(spark, tmp_path, global_index, first_write):
+    """A NULL partition value raises before anything is written, on the
+    first write as on later ones, under both index kinds: no table
+    directory appears, and an existing table keeps its partitions."""
+    from spark_hudi_etl_pipeline_spark.operators.tableops import (
+        upsert_parquet_partitioned_global,
+    )
+
+    upsert = (
+        upsert_parquet_partitioned_global
+        if global_index
+        else upsert_parquet_partitioned
+    )
+    path = str(tmp_path / "tbl")
+    if not first_write:
+        seed = spark.createDataFrame([(1, "a", "a1", 1)], SCHEMA)
+        upsert(spark, seed, path, ["k"], "prec", "p")
+        before = sorted(os.listdir(path))
+    batch = spark.createDataFrame([(9, None, "x", 1), (1, "a", "a1-new", 2)], SCHEMA)
     with pytest.raises(ValueError, match="null partition value"):
-        upsert_parquet_partitioned(spark, batch, table, ["k"], "prec", "p")
+        upsert(spark, batch, path, ["k"], "prec", "p")
+    if first_write:
+        assert not os.path.exists(path)
+    else:
+        assert sorted(os.listdir(path)) == before
+        assert rows_of(spark.read.parquet(path)) == {(1, "a1", 1, "a")}
 
 
 def test_first_write_creates_partitioned_layout(spark, tmp_path, table):

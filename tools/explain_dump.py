@@ -59,7 +59,7 @@ def main() -> None:
 
     pseudo = {"pagerank_iteration_lazy": _pagerank_iteration_lazy}
     for name in names:
-        df = pseudo.get(name, QUERIES.get(name))(spark, sf_dir)
+        df = (pseudo.get(name) or QUERIES[name])(spark, sf_dir)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")

@@ -38,6 +38,7 @@ def summarize(simple: str, formatted: str) -> dict[str, object]:
     return {
         "broadcast_hash_join": simple.count("BroadcastHashJoin"),
         "sort_merge_join": simple.count("SortMergeJoin"),
+        "shuffled_hash_join": simple.count("ShuffledHashJoin"),
         "bnl_join": simple.count("BroadcastNestedLoopJoin"),
         "shuffle_exchange": len(
             re.findall(r"Exchange (?:hash|range)partitioning", simple)
