@@ -227,15 +227,41 @@ def _ab_schedule(sessions: int) -> list[str]:
     return order[:sessions]
 
 
+def _prev_snapshot(repo: str) -> tuple[str, str] | None:
+    """(hash, subject) of the newest ``round N: end-of-round snapshot``
+    commit whose tree differs from HEAD's, or None. A snapshot taken
+    just before this bench has HEAD's tree, so A/B-ing against it would
+    compare the tree with itself and measure only noise."""
+    head_tree = subprocess.run(
+        ["git", "-C", repo, "rev-parse", "HEAD^{tree}"],
+        capture_output=True, text=True, check=True, timeout=30,
+    ).stdout.strip()
+    # Anchored to the driver's snapshot-subject format — an unanchored
+    # phrase grep would match ordinary commits whose message merely
+    # MENTIONS the snapshot convention (it did).
+    log = subprocess.run(
+        ["git", "-C", repo, "log", "-E",
+         "--grep", r"^round [0-9]+: end-of-round snapshot",
+         "--format=%H %T %s"],
+        capture_output=True, text=True, check=True, timeout=30,
+    ).stdout
+    for line in log.splitlines():
+        commit, tree, subject = line.split(" ", 2)
+        if tree != head_tree:
+            return commit, subject
+    return None
+
+
 def _ab_interleaved(sf_dir: str) -> dict:
     """Interleaved previous-snapshot A/B (BASELINE.md §conventions).
 
-    Checks the most recent ``end-of-round snapshot`` commit into a
-    temporary detached worktree, then runs single-JVM probe sessions
-    (``tools/ab_probe.py`` subprocesses, each with its own warmup) over
-    :data:`AB_PROBES` on a counterbalanced pair-flipped schedule
-    (:func:`_ab_schedule`), recording each session's side, start
-    timestamp, and wall so a contention hump is visible in the artifact.
+    Checks the most recent ``end-of-round snapshot`` commit that differs
+    from HEAD (:func:`_prev_snapshot`) into a temporary detached
+    worktree, then runs single-JVM probe sessions (``tools/ab_probe.py``
+    subprocesses, each with its own warmup) over :data:`AB_PROBES` on a
+    counterbalanced pair-flipped schedule (:func:`_ab_schedule`),
+    recording each session's side, start timestamp, and wall so a
+    contention hump is visible in the artifact.
     Returns per-tree per-query min walls and the cur/prev ratio. Never
     raises: on any failure (no git, no snapshot commit, subprocess
     error) returns ``{"error": ...}`` so the bench artifact still lands.
@@ -245,18 +271,10 @@ def _ab_interleaved(sf_dir: str) -> dict:
     passes = int(os.environ.get("SPARK_GRAFT_AB_PASSES", "2"))
     wt = None
     try:
-        # Anchored to the driver's snapshot-subject format — an
-        # unanchored phrase grep would match ordinary commits whose
-        # message merely MENTIONS the snapshot convention (it did).
-        rev = subprocess.run(
-            ["git", "-C", repo, "log", "-E",
-             "--grep", r"^round [0-9]+: end-of-round snapshot",
-             "--format=%H %s", "-n", "1"],
-            capture_output=True, text=True, check=True, timeout=30,
-        ).stdout.strip()
-        if not rev:
-            return {"error": "no end-of-round snapshot commit found"}
-        prev_hash, prev_subject = rev.split(" ", 1)
+        prev = _prev_snapshot(repo)
+        if prev is None:
+            return {"error": "no end-of-round snapshot commit differs from HEAD"}
+        prev_hash, prev_subject = prev
         wt = os.path.join("/tmp", f"spark_graft_ab_{prev_hash[:12]}")
         # Reuse the worktree only if it is a COMPLETE checkout of
         # prev_hash: a bench killed mid-cleanup can leave a partial tree

@@ -16,10 +16,11 @@ attributes cost PER QUERY, Spark-first:
   query can share a wall on an idle cluster and behave very
   differently on a contended one).
 - **plan shape** (shuffle/broadcast exchanges, join strategies, pushed
-  filters, codegen spans) parsed from the physical plan — the same
-  extraction ``tools/plan_audit.py`` uses for PLANS.md, recorded per
-  run so a plan regression (a new Exchange, a lost PushedFilters)
-  shows up in the cost log even when the wall is noisy.
+  filters, codegen spans) parsed from the physical plan by
+  :func:`summarize` — the one extraction ``tools/plan_audit.py`` also
+  uses for PLANS.md and the plan golden, recorded per run so a plan
+  regression (a new Exchange, a lost PushedFilters) shows up in the
+  cost log even when the wall is noisy.
 
 One row per profiled run is upserted into a keyed parquet cost table
 through the same manifest-committed writer as the reference-schema audit
@@ -38,6 +39,7 @@ import re
 import time
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -70,20 +72,53 @@ COST_SCHEMA = StructType(
 )
 
 
-def plan_shape(df: DataFrame) -> dict[str, int]:
-    """Scale-critical physical-plan counters (the PLANS.md extraction,
-    inlined so the engine doesn't import from tools/)."""
-    buf_s, buf_f, buf_c = io.StringIO(), io.StringIO(), io.StringIO()
+def plan_text(df: DataFrame) -> tuple[str, str]:
+    """(simple, formatted): simple carries inline Exchange arguments;
+    formatted carries untruncated PushedFilters/ReadSchema."""
+    buf_s, buf_f = io.StringIO(), io.StringIO()
     with contextlib.redirect_stdout(buf_s):
         df.explain()
     with contextlib.redirect_stdout(buf_f):
         df.explain("formatted")
+    return buf_s.getvalue(), buf_f.getvalue()
+
+
+def summarize(simple: str, formatted: str) -> dict[str, object]:
+    """Scale-critical physical-plan counters from :func:`plan_text`:
+    join strategies, exchanges, pushed filters, per-scan projected
+    column widths, top-k and Arrow stages. The one plan-shape
+    extraction behind PLANS.md, the plan golden and the cost table."""
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
+    pushed_n = sum(len([p for p in grp.split(",") if p.strip()]) for grp in pushed)
+    read_cols = re.findall(r"ReadSchema: struct<([^>]*)>", formatted)
+    scan_widths = [len([c for c in grp.split(",") if c.strip()]) for grp in read_cols]
+    return {
+        "broadcast_hash_join": simple.count("BroadcastHashJoin"),
+        "sort_merge_join": simple.count("SortMergeJoin"),
+        "shuffled_hash_join": simple.count("ShuffledHashJoin"),
+        "bnl_join": simple.count("BroadcastNestedLoopJoin"),
+        "shuffle_exchange": len(
+            re.findall(r"Exchange (?:hash|range)partitioning", simple)
+        ),
+        "broadcast_exchange": simple.count("BroadcastExchange"),
+        "pushed_filters": pushed_n,
+        "scan_col_widths": scan_widths,
+        "take_ordered": simple.count("TakeOrderedAndProject"),
+        "arrow_eval": simple.count("ArrowEvalPython") + simple.count("MapInPandas"),
+    }
+
+
+def plan_shape(df: DataFrame) -> dict[str, int]:
+    """The cost table's plan counters: a subset of :func:`summarize`
+    plus the number of whole-stage codegen spans."""
+    s = summarize(*plan_text(df))
     # Under AQE no pre-execution plan text carries codegen spans (the
     # AdaptiveSparkPlan wrapper hides its subtrees until runtime), so
     # the count is taken from the NON-adaptive physical plan — same
     # operators, same codegen fusion boundaries, available at plan
     # time. AQE is restored immediately; the toggle affects only this
     # explain's planning.
+    buf_c = io.StringIO()
     sess = df.sparkSession
     aqe = sess.conf.get("spark.sql.adaptive.enabled")
     try:
@@ -94,21 +129,31 @@ def plan_shape(df: DataFrame) -> dict[str, int]:
             df.select("*").explain("codegen")
     finally:
         sess.conf.set("spark.sql.adaptive.enabled", aqe)
-    simple, formatted = buf_s.getvalue(), buf_f.getvalue()
     found = re.search(r"Found (\d+) WholeStageCodegen subtrees", buf_c.getvalue())
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
     return {
-        "shuffle_exchanges": len(
-            re.findall(r"Exchange (?:hash|range)partitioning", simple)
-        ),
-        "broadcast_exchanges": simple.count("BroadcastExchange"),
-        "broadcast_hash_joins": simple.count("BroadcastHashJoin"),
-        "sort_merge_joins": simple.count("SortMergeJoin"),
-        "pushed_filters": sum(
-            len([p for p in grp.split(",") if p.strip()]) for grp in pushed
-        ),
+        "shuffle_exchanges": s["shuffle_exchange"],
+        "broadcast_exchanges": s["broadcast_exchange"],
+        "broadcast_hash_joins": s["broadcast_hash_join"],
+        "sort_merge_joins": s["sort_merge_join"],
+        "pushed_filters": s["pushed_filters"],
         "codegen_spans": int(found.group(1)) if found else 0,
     }
+
+
+def job_footprint(sc: SparkContext, group: str) -> tuple[int, int]:
+    """(jobs, tasks) the status tracker recorded for job group ``group``."""
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group) or []
+    n_tasks = 0
+    for jid in job_ids:
+        info = tracker.getJobInfo(jid)
+        if info is None:
+            continue
+        for sid in info.stageIds:
+            sinfo = tracker.getStageInfo(sid)
+            if sinfo is not None:
+                n_tasks += int(sinfo.numTasks)
+    return len(job_ids), n_tasks
 
 
 def profile_run(
@@ -129,22 +174,12 @@ def profile_run(
     finally:
         sc.setJobGroup(None, None)
     wall = time.perf_counter() - t0
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group) or []
-    n_tasks = 0
-    for jid in job_ids:
-        info = tracker.getJobInfo(jid)
-        if info is None:
-            continue
-        for sid in info.stageIds:
-            sinfo = tracker.getStageInfo(sid)
-            if sinfo is not None:
-                n_tasks += int(sinfo.numTasks)
+    n_jobs, n_tasks = job_footprint(sc, group)
     return {
         "query_name": query_name,
         "rows_out": int(obs.get["rows_out"]),
         "wall_sec": round(wall, 3),
-        "n_jobs": len(job_ids),
+        "n_jobs": n_jobs,
         "n_tasks": n_tasks,
         **shape,
         "created_at": now_ms(),

@@ -171,17 +171,9 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineResult:
             processing_time_seconds=duration,
         )
         if config.cost_log_path is not None and shape is not None:
-            from .costlog import write_cost_entry
+            from .costlog import job_footprint, write_cost_entry
 
-            tracker = spark.sparkContext.statusTracker()
-            job_ids = tracker.getJobIdsForGroup(cost_group) or []
-            n_tasks = 0
-            for jid in job_ids:
-                info = tracker.getJobInfo(jid)
-                for sid in info.stageIds if info is not None else []:
-                    sinfo = tracker.getStageInfo(sid)
-                    if sinfo is not None:
-                        n_tasks += int(sinfo.numTasks)
+            n_jobs, n_tasks = job_footprint(spark.sparkContext, cost_group)
             write_cost_entry(
                 spark,
                 config.cost_log_path,
@@ -189,7 +181,7 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineResult:
                     "query_name": config.name,
                     "rows_out": records,
                     "wall_sec": round(duration, 3),
-                    "n_jobs": len(job_ids),
+                    "n_jobs": n_jobs,
                     "n_tasks": n_tasks,
                     **shape,
                     "created_at": run_ts,

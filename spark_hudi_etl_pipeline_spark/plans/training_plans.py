@@ -187,8 +187,10 @@ def repetition_metrics_arrow(docs: DataFrame) -> DataFrame:
 
 
 def repetition_metrics(docs: DataFrame) -> DataFrame:
-    """DataFrame-level core of ``text_repetition_filters`` (also driven
-    by ``tools/scale_probe.py`` on replicated corpora).
+    """Expression twin of :func:`repetition_metrics_arrow`, the
+    DataFrame-level core of ``text_repetition_filters`` (kept as the
+    parity-test reference; ``tools/scale_probe.py --queries
+    text_repetition_filters`` times the Arrow path the query runs).
 
     Per-k pipeline, all within the row: gram strings → xxhash64 codes
     (8-byte comparisons instead of string compares; a collision would
@@ -607,8 +609,9 @@ def pack_sequences_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pack_sequences(docs: DataFrame) -> DataFrame:
-    """DataFrame-level core of ``pack_sequences_token_budget`` (also
-    driven by ``tools/scale_probe.py`` on replicated corpora)."""
+    """DataFrame-level core of ``pack_sequences_token_budget`` (timed on
+    replicated corpora by ``tools/scale_probe.py --queries
+    pack_sequences_token_budget``)."""
     d = docs.select(
         "doc_id",
         (F.col("doc_id") % _PACK_BUCKETS).alias("b"),

@@ -11,44 +11,14 @@ a reviewable artifact. Usage:
 
 from __future__ import annotations
 
-import contextlib
-import io
-import re
 import sys
 
 sys.path.insert(0, "/root/repo")
 
-
-def plan_text(df) -> tuple[str, str]:
-    """(simple, formatted): simple carries inline Exchange arguments;
-    formatted carries untruncated PushedFilters/ReadSchema."""
-    buf_s, buf_f = io.StringIO(), io.StringIO()
-    with contextlib.redirect_stdout(buf_s):
-        df.explain()
-    with contextlib.redirect_stdout(buf_f):
-        df.explain("formatted")
-    return buf_s.getvalue(), buf_f.getvalue()
-
-
-def summarize(simple: str, formatted: str) -> dict[str, object]:
-    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
-    pushed_n = sum(len([p for p in grp.split(",") if p.strip()]) for grp in pushed)
-    read_cols = re.findall(r"ReadSchema: struct<([^>]*)>", formatted)
-    scan_widths = [len([c for c in grp.split(",") if c.strip()]) for grp in read_cols]
-    return {
-        "broadcast_hash_join": simple.count("BroadcastHashJoin"),
-        "sort_merge_join": simple.count("SortMergeJoin"),
-        "shuffled_hash_join": simple.count("ShuffledHashJoin"),
-        "bnl_join": simple.count("BroadcastNestedLoopJoin"),
-        "shuffle_exchange": len(
-            re.findall(r"Exchange (?:hash|range)partitioning", simple)
-        ),
-        "broadcast_exchange": simple.count("BroadcastExchange"),
-        "pushed_filters": pushed_n,
-        "scan_col_widths": scan_widths,
-        "take_ordered": simple.count("TakeOrderedAndProject"),
-        "arrow_eval": simple.count("ArrowEvalPython") + simple.count("MapInPandas"),
-    }
+from spark_hudi_etl_pipeline_spark.pipeline.costlog import (  # noqa: E402
+    plan_text,
+    summarize,
+)
 
 
 GOLDEN_PATH = "/root/repo/tools/plan_golden.json"
