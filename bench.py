@@ -39,16 +39,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-#: Headline suite: one representative per tier (aggregation, fact-fact
-#: join, star join, window, sessionization, JSON, keyed upsert, as-of
-#: join, event-time window, fuzzy dedup ×2, similarity, text scoring,
-#: repetition filters, sequence packing, sliding distinct, constraint
-#: validation, iterative PageRank, plus the lifecycle tier: global-index
-#: upsert, timeline CDC pull, MERGE INTO).
-#: CORE is the suite every round since r1 has measured — cross-round
-#: wall-clock comparisons (VERDICT.md's core-19 table) depend on this
-#: exact membership, so grow the bench by appending to LIFECYCLE (or a
-#: new named tier), never by inserting into CORE.
+#: Headline suite as ONE ordered ``(query, tier)`` table: ``HEADLINE`` is
+#: its query column, and each tier's wall sum lands in the headline JSON
+#: as ``<tier>_sec`` (:func:`tier_secs`). Grow the bench by appending rows
+#: under a new tier name, never by inserting into an existing tier: the
+#: core19 rows are the suite every round since r1 has measured, and
+#: cross-round wall comparisons (VERDICT.md's core-19 table) depend on
+#: their exact membership and order.
 #:
 #: Cross-round caveat (round 7): pagerank_cust_supp_top20 reads ~2 s
 #: HIGHER than r5/r6 because pagerank_ranks now owns and FREES its
@@ -56,118 +53,93 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 #: 2-3 silently reused the leaked cache and under-reported the honest
 #: per-invocation cost. The iteration plan itself is unchanged
 #: (exchange-free, pinned by tests/test_graph.py).
-CORE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_regional_revenue",
-    "q9_profit_by_nation_year",
-    "window_running_customer_spend",
-    "events_sessionize",
-    "events_json_extract",
-    "upsert_precombine",
-    "asof_purchase_prior_click",
-    "window_tumbling_event_stats",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "knn_bruteforce_cosine",
-    "text_quality_scores",
-    "text_repetition_filters",
-    "pack_sequences_token_budget",
-    "rolling_7d_active_users",
-    "validate_constraints",
-    "pagerank_cust_supp_top20",
+TIERS: list[tuple[str, str]] = [
+    # core19: one representative per engine tier (aggregation, fact-fact
+    # join, star join, window, sessionization, JSON, keyed upsert, as-of
+    # join, event-time window, fuzzy dedup ×2, similarity, text scoring,
+    # repetition filters, sequence packing, sliding distinct, constraint
+    # validation, iterative PageRank).
+    ("q1_pricing_summary", "core19"),
+    ("q3_shipping_priority", "core19"),
+    ("q5_regional_revenue", "core19"),
+    ("q9_profit_by_nation_year", "core19"),
+    ("window_running_customer_spend", "core19"),
+    ("events_sessionize", "core19"),
+    ("events_json_extract", "core19"),
+    ("upsert_precombine", "core19"),
+    ("asof_purchase_prior_click", "core19"),
+    ("window_tumbling_event_stats", "core19"),
+    ("dedup_minhash_lsh", "core19"),
+    ("dedup_simhash", "core19"),
+    ("knn_bruteforce_cosine", "core19"),
+    ("text_quality_scores", "core19"),
+    ("text_repetition_filters", "core19"),
+    ("pack_sequences_token_budget", "core19"),
+    ("rolling_7d_active_users", "core19"),
+    ("validate_constraints", "core19"),
+    ("pagerank_cust_supp_top20", "core19"),
+    # lifecycle (round 5): global-index upsert, timeline CDC pull, MERGE
+    # INTO. Like stats_skipping_range_scan below, these time their own
+    # table-service writes.
+    ("upsert_global_index", "lifecycle"),
+    ("timeline_cdc_incremental", "lifecycle"),
+    ("merge_into_orders", "lifecycle"),
+    # curation (round 7): streaming incremental dedup through the
+    # fingerprint store, composed IVF-PQ ANN, sparse TF-IDF search.
+    ("streaming_dedup_store", "curation"),
+    ("knn_ivfpq_adc", "curation"),
+    ("tfidf_similar_docs", "curation"),
+    # timeseries (round 7): OHLC downsampling with the integer EWMA
+    # kernel, the monthly cascade over daily partials, the stats-sidecar
+    # pruned range scan (dominated by its own staging: clustered rewrite
+    # + sidecar build), the k-anonymity release gate, PQ-blocked
+    # contrastive hard-negative mining. End-of-round-7 reference at sf0.1
+    # (min-of-3, warm): core19 18.9s, lifecycle 5.4s, curation 7.3s,
+    # timeseries 10.2s.
+    ("events_ohlc_daily", "timeseries"),
+    ("events_ohlc_monthly_cascade", "timeseries"),
+    ("stats_skipping_range_scan", "timeseries"),
+    ("k_anon_customer_release", "timeseries"),
+    ("contrastive_hard_negatives", "timeseries"),
+    # modal (round 9): perceptual image dedup through the real raster
+    # decoder, Y4M scene cuts, WAV VAD segmentation, BM25⊕dense RRF
+    # fusion, the Holt forecast fold.
+    ("image_ahash_neardup", "modal"),
+    ("video_scene_cuts", "modal"),
+    ("audio_vad_segments", "modal"),
+    ("hybrid_rrf_retrieval", "modal"),
+    ("events_holt_forecast", "modal"),
+    # behavior (round 11): histogram-binned RFM segmentation, basket
+    # association rules, token-budget greedy selection, the Markov
+    # transition matrix.
+    ("rfm_customer_segments", "behavior"),
+    ("assoc_rules_brand_lift", "behavior"),
+    ("token_budget_selection", "behavior"),
+    ("event_transition_matrix", "behavior"),
+    # r12: sessionized funnel attribution, Bloom-gated decontamination.
+    ("funnel_attributed_conversions", "r12"),
+    ("decontaminate_bloom_gate", "r12"),
+    # r13: the Bloom gate composed with incremental aggregate refresh,
+    # two-stage SQ8 scan→exact rerank, the per-epoch shard shuffle.
+    ("decontaminated_stats_refresh", "r13"),
+    ("knn_sq8_rerank", "r13"),
+    ("epoch_shuffle_shards", "r13"),
+    # r14: two older queries the r14 optimization round rewrote
+    # (triangle: single enumeration + hash-built closing join; language
+    # id: Arrow twin), timed to keep their cost visible.
+    ("graph_triangle_top20", "r14"),
+    ("text_language_id", "r14"),
 ]
 
-#: Lifecycle tier added in round 5 (timed separately as lifecycle_sec).
-LIFECYCLE = [
-    "upsert_global_index",
-    "timeline_cdc_incremental",
-    "merge_into_orders",
-]
+HEADLINE = [q for q, _ in TIERS]
 
-#: Curation tier added in round 7 (timed separately as curation_sec):
-#: streaming incremental dedup through the fingerprint store, composed
-#: IVF-PQ ANN, and sparse TF-IDF similarity search.
-CURATION = [
-    "streaming_dedup_store",
-    "knn_ivfpq_adc",
-    "tfidf_similar_docs",
-]
 
-#: Time-series + governance tier added late in round 7 (timed
-#: separately as timeseries_sec): OHLC downsampling with the integer
-#: EWMA kernel, the monthly cascade over daily partials, the
-#: stats-sidecar pruned range scan, the k-anonymity release gate, and
-#: PQ-blocked contrastive hard-negative mining.
-#: End-of-round-7 reference numbers at sf0.1 (min-of-3, warm):
-#: core19 18.9s, lifecycle 5.4s, curation 7.3s, timeseries 10.2s.
-#: Note: stats_skipping_range_scan's bench time is dominated by its
-#: own staging (clustered rewrite + sidecar build), not the pruned
-#: scan — same convention as the lifecycle tier, which also times its
-#: table-service writes.
-TIMESERIES = [
-    "events_ohlc_daily",
-    "events_ohlc_monthly_cascade",
-    "stats_skipping_range_scan",
-    "k_anon_customer_release",
-    "contrastive_hard_negatives",
-]
-
-#: Modal/retrieval tier added in round 9 (timed separately as
-#: modal_sec): perceptual image dedup through the real raster decoder
-#: (exact-hash clusters + banded rep join), Y4M scene cuts, WAV VAD
-#: segmentation, BM25⊕dense RRF fusion, and the Holt forecast fold.
-MODAL = [
-    "image_ahash_neardup",
-    "video_scene_cuts",
-    "audio_vad_segments",
-    "hybrid_rrf_retrieval",
-    "events_holt_forecast",
-]
-
-#: Behavioral-analytics tier added in round 11 (timed separately as
-#: behavior_sec): histogram-binned RFM segmentation, basket association
-#: rules through the checkpointed (customer, brand) set, token-budget
-#: greedy dataset selection, and the Markov transition matrix.
-BEHAVIOR = [
-    "rfm_customer_segments",
-    "assoc_rules_brand_lift",
-    "token_budget_selection",
-    "event_transition_matrix",
-]
-
-#: Round-12 tier (timed separately as r12_sec): sessionized funnel
-#: attribution (user-keyed fold + touch argmax) and Bloom-gated
-#: decontamination (map-side position gate + exact verify).
-R12 = [
-    "funnel_attributed_conversions",
-    "decontaminate_bloom_gate",
-]
-
-#: Round-13 tier (timed separately as r13_sec): the Bloom gate composed
-#: with incremental aggregate refresh (batched corpus decontamination
-#: folding into materialized stats), two-stage SQ8 scan→exact rerank
-#: retrieval, and the deterministic per-epoch shard shuffle.
-R13 = [
-    "decontaminated_stats_refresh",
-    "knn_sq8_rerank",
-    "epoch_shuffle_shards",
-]
-
-#: Round-14 tier (timed separately as r14_sec; ADDITIVE — existing tiers
-#: and their membership are untouched). Both queries predate r13 in the
-#: registry but were never headline-timed; the r14 OPTIMIZATION round
-#: rewrote both (triangle: single enumeration + hash-built closing join,
-#: 17→~3 s; language id: Arrow twin of the interpreted HOF cascade), so
-#: they join the bench to keep their cost visible to future rounds.
-R14 = [
-    "graph_triangle_top20",
-    "text_language_id",
-]
-
-HEADLINE = (
-    CORE + LIFECYCLE + CURATION + TIMESERIES + MODAL + BEHAVIOR + R12 + R13 + R14
-)
+def tier_secs(timings: dict[str, float]) -> dict[str, float]:
+    """``{"<tier>_sec": summed wall}`` for every tier, in table order."""
+    secs: dict[str, float] = {}
+    for q, tier in TIERS:
+        secs[f"{tier}_sec"] = secs.get(f"{tier}_sec", 0) + timings[q]
+    return {k: round(v, 3) for k, v in secs.items()}
 
 #: A/B probe set: one representative per tier, restricted to queries old
 #: enough to exist in the previous snapshot's registry, including the four
@@ -509,15 +481,7 @@ def main() -> None:
         "metric": "headline_suite_wall_sec",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "core19_sec": round(sum(timings[n] for n in CORE), 3),
-        "lifecycle_sec": round(sum(timings[n] for n in LIFECYCLE), 3),
-        "curation_sec": round(sum(timings[n] for n in CURATION), 3),
-        "timeseries_sec": round(sum(timings[n] for n in TIMESERIES), 3),
-        "modal_sec": round(sum(timings[n] for n in MODAL), 3),
-        "behavior_sec": round(sum(timings[n] for n in BEHAVIOR), 3),
-        "r12_sec": round(sum(timings[n] for n in R12), 3),
-        "r13_sec": round(sum(timings[n] for n in R13), 3),
-        "r14_sec": round(sum(timings[n] for n in R14), 3),
+        **tier_secs(timings),
         "cpu_canary_sec": cpu_canary,
         "spark_canary_sec": spark_canary,
         "queries": timings,

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..sources import load_table
-from .registry import query
+from .registry import fresh_table, query, scratch
 
 #: Shared normalized-text SQL fragment — must mirror functions.text.normalize
 #: (lower → strip punct → collapse whitespace → trim) exactly.
@@ -964,22 +964,10 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     with batch 1, verdict batch 2. Scale shape: the store (corpus-sized
     at 100 TB) is bucketed by fingerprint and probed with no exchange
     on its side; only the incoming batch shuffles (once, on the fp)."""
-    import os
-    import re as _re
 
     from ..functions import text
 
-    tag = _re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    tbl = f"fp_store_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # A fresh session's in-memory catalog does not know about a previous
-    # run's managed-table directory, so DROP alone leaves the location
-    # behind and saveAsTable then fails with LOCATION_ALREADY_EXISTS.
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = _re.sub(r"^file:/*", "/", wh)
-    shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+    tbl = fresh_table(spark, sf_dir, "fp_store")
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     extra1 = d.filter(F.col("doc_id") < 10).select(
@@ -1026,20 +1014,11 @@ def streaming_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch reuses the same operator, so there is one dedup
     semantic across engines. Store batch ids follow the streaming
     micro-batch id, so checkpoint-recovery replays are idempotent."""
-    import os
-    import re as _re
-    import shutil
 
     from ..functions import text
     from ..streaming.windows import foreach_batch_dedup_store
-    from .lifecycle_plans import _scratch
 
-    tag = _re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    tbl = f"fp_store_strm_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = _re.sub(r"^file:/*", "/", wh)
-    shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+    tbl = fresh_table(spark, sf_dir, "fp_store_strm")
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     extra1 = d.filter(F.col("doc_id") < 10).select(
@@ -1058,12 +1037,12 @@ def streaming_dedup_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fps(df: DataFrame) -> DataFrame:
         return df.select("doc_id", text.fingerprint("text").alias("fp"))
 
-    verdicts = _scratch(sf_dir, "strm_dedup_verdicts")
+    verdicts = scratch(sf_dir, "strm_dedup_verdicts")
     for run, (batch, vpath) in enumerate(
         ((batch1, None), (batch2, verdicts)), start=1
     ):
-        stage = _scratch(sf_dir, f"strm_dedup_b{run}")
-        chk = _scratch(sf_dir, f"strm_dedup_chk{run}")
+        stage = scratch(sf_dir, f"strm_dedup_b{run}")
+        chk = scratch(sf_dir, f"strm_dedup_chk{run}")
         staged = fps(batch)
         staged.write.mode("overwrite").parquet(stage)
         q = (
@@ -1317,22 +1296,11 @@ def dedup_minhash_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     their originals (estimated Jaccard ≥ 0.5), everything else is
     novel. Uses a per-(sf, run)-scoped store table; verdicts come from
     the probe ingest only."""
-    import os
-    import re as _re
-    import shutil
 
     from ..operators.dedup import minhash_store_ingest
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tag = _re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    tbl = f"mh_store_probe_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    # A fresh session's in-memory catalog does not know about a previous
-    # run's managed-table directory; DROP alone leaves the location and
-    # saveAsTable then fails with LOCATION_ALREADY_EXISTS.
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = _re.sub(r"^file:/*", "/", wh)
-    shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+    tbl = fresh_table(spark, sf_dir, "mh_store_probe")
     seed = d.filter(F.col("doc_id") < 250)
     probe = d.filter(F.col("doc_id") >= 250).unionByName(
         d.filter(F.col("doc_id") < 5).select(
@@ -1362,19 +1330,10 @@ def streaming_minhash_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeded docs) and records per-row verdicts. Scale shape identical to
     the batch path — foreachBatch reuses the same operator, one fuzzy
     dedup semantic across engines."""
-    import os
-    import re as _re
-    import shutil
 
     from ..streaming.windows import foreach_batch_minhash_store
-    from .lifecycle_plans import _scratch
 
-    tag = _re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    tbl = f"mh_store_strm_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    wh = _re.sub(r"^file:/*", "/", wh)
-    shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+    tbl = fresh_table(spark, sf_dir, "mh_store_strm")
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     seed = d.filter(F.col("doc_id") < 250)
@@ -1384,12 +1343,12 @@ def streaming_minhash_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("text"), F.lit(" appended tail words")).alias("text"),
         )
     )
-    verdicts = _scratch(sf_dir, "strm_mh_verdicts")
+    verdicts = scratch(sf_dir, "strm_mh_verdicts")
     for run, (batch, vpath) in enumerate(
         ((seed, None), (probe, verdicts)), start=1
     ):
-        stage = _scratch(sf_dir, f"strm_mh_b{run}")
-        chk = _scratch(sf_dir, f"strm_mh_chk{run}")
+        stage = scratch(sf_dir, f"strm_mh_b{run}")
+        chk = scratch(sf_dir, f"strm_mh_chk{run}")
         batch.write.mode("overwrite").parquet(stage)
         q = (
             spark.readStream.schema(batch.schema)

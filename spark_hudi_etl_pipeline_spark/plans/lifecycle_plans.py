@@ -21,7 +21,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,16 +40,9 @@ from ..operators.timeline import (
     savepoint,
 )
 from ..sources import load_table
-from .registry import query
+from .registry import query, scratch
 
 ORDER_COLS = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"]
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/{name}_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh table per run
-    return path
 
 
 def _final_select(df: DataFrame) -> DataFrame:
@@ -105,7 +97,7 @@ ORDER BY o_orderkey, o_orderstatus
 )
 def upsert_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "global_upsert")
+    path = scratch(sf_dir, "global_upsert")
     upsert_parquet_partitioned_global(
         spark, orders, path, ["o_orderkey"], "o_orderdate", "o_orderstatus"
     )
@@ -161,7 +153,7 @@ ORDER BY o_orderkey, o_orderstatus
 )
 def insert_overwrite_restate(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "insert_overwrite")
+    path = scratch(sf_dir, "insert_overwrite")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     restated = orders.filter(
         (F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 3 == 0)
@@ -208,7 +200,7 @@ ORDER BY o_orderkey, o_orderstatus
 )
 def timeline_restore_savepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "restore_sp")
+    path = scratch(sf_dir, "restore_sp")
     commit_append(spark, orders, path, 1)
     good = (
         orders.filter(F.col("o_orderkey") % 3 == 0)
@@ -275,7 +267,7 @@ ORDER BY o_orderkey, o_orderstatus
 )
 def timeline_cleaned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "cleaned_read")
+    path = scratch(sf_dir, "cleaned_read")
     commit_append(spark, orders, path, 1)
     for mod, mult, days, ts in ((3, 2.0, 30, 2), (5, 3.0, 60, 3), (7, 4.0, 90, 4)):
         batch = (
@@ -315,7 +307,7 @@ ORDER BY o_orderkey, o_orderstatus
 )
 def bulk_insert_global_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "bulk_insert")
+    path = scratch(sf_dir, "bulk_insert")
     bulk_insert(
         spark, orders, path, sort_cols=["o_orderkey"], mode="GLOBAL_SORT"
     )
@@ -380,7 +372,7 @@ def timeline_cdc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeline import timeline_cdc
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "timeline_cdc")
+    path = scratch(sf_dir, "timeline_cdc")
     base = orders.withColumn("deleted", F.lit(False))
     commit_append(spark, base, path, 1)
     c2 = (
@@ -442,7 +434,7 @@ def indexed_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    path = _scratch(sf_dir, "point_lookup")
+    path = scratch(sf_dir, "point_lookup")
     # First write through the bloom writer: data + manifest + sidecar.
     upsert_parquet_bloom_indexed(
         spark,
@@ -509,12 +501,9 @@ def streaming_timeline_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ts", F.col("ts") + F.expr("INTERVAL 1 HOUR"))
         .withColumn("value", F.col("value") + 100.0)
     )
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_tl_in_{tag}"
-    target = f"/root/repo/.scratch/stream_tl_out_{tag}"
-    chk = f"/root/repo/.scratch/stream_tl_chk_{tag}"
-    for p in (stage, target, chk):
-        shutil.rmtree(p, ignore_errors=True)
+    stage = scratch(sf_dir, "stream_tl_in")
+    target = scratch(sf_dir, "stream_tl_out")
+    chk = scratch(sf_dir, "stream_tl_chk")
     ev.repartition(4).write.mode("overwrite").parquet(stage)
     upd.repartition(2).write.mode("append").parquet(stage)
     stream = (
@@ -782,7 +771,7 @@ def secondary_index_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    path = _scratch(sf_dir, "secondary_idx")
+    path = scratch(sf_dir, "secondary_idx")
     bulk_insert(
         spark, orders, path, sort_cols=["o_orderkey"], mode="GLOBAL_SORT"
     )
@@ -839,9 +828,9 @@ def timeline_bootstrap_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeline import bootstrap_timeline
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    legacy = _scratch(sf_dir, "legacy_orders")
+    legacy = scratch(sf_dir, "legacy_orders")
     orders.write.mode("overwrite").parquet(legacy)
-    path = _scratch(sf_dir, "bootstrap_tl")
+    path = scratch(sf_dir, "bootstrap_tl")
     bootstrap_timeline(spark, legacy, path, commit_ts=1)
     upd = (
         orders.filter(F.col("o_orderkey") % 3 == 0)
@@ -913,7 +902,7 @@ def timeline_cdc_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeline import timeline_cdc
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "timeline_cdc_img")
+    path = scratch(sf_dir, "timeline_cdc_img")
     commit_append(spark, orders.withColumn("deleted", F.lit(False)), path, 1)
     c2 = (
         orders.filter(F.col("o_orderkey") % 3 == 0)
@@ -990,7 +979,7 @@ ORDER BY o_orderkey
 )
 def timeline_read_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "tl_meta")
+    path = scratch(sf_dir, "tl_meta")
     commit_append(spark, orders, path, 1)
     for mod, mult, days, ts in ((3, 2.0, 30, 2), (5, 3.0, 60, 3)):
         batch = (
@@ -1041,7 +1030,7 @@ def timeline_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "tl_history")
+    path = scratch(sf_dir, "tl_history")
     commit_append(spark, orders.limit(100), path, 1)
     commit_append(spark, orders.limit(50), path, 2)
     compact_timeline(spark, path, ["o_orderkey"], "o_orderdate", 2)
@@ -1113,9 +1102,7 @@ def streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = ev.filter(F.col("event_type") == "purchase")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_scd2_{tag}"
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = scratch(sf_dir, "stream_scd2")
     purchases.write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(purchases.schema).parquet(stage)
     joined = stream.join(
@@ -1125,7 +1112,7 @@ def streaming_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("effective_to").isNull() | (F.col("ts") < F.col("effective_to"))),
         "left",
     )
-    qname = f"stream_scd2_{tag}"
+    qname = os.path.basename(stage)
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -1194,7 +1181,7 @@ def upsert_record_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    path = _scratch(sf_dir, "rli_upsert")
+    path = scratch(sf_dir, "rli_upsert")
     upsert_parquet_record_indexed(
         spark,
         orders.repartition(16, F.col("o_orderkey")),
@@ -1262,7 +1249,7 @@ def timeline_rollback_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeline import rollback_last
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "rollback_tl")
+    path = scratch(sf_dir, "rollback_tl")
     commit_append(spark, orders, path, 1)
     good = (
         orders.filter(F.col("o_orderkey") % 3 == 0)
@@ -1307,7 +1294,7 @@ def recluster_scan_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    path = _scratch(sf_dir, "recluster_eq")
+    path = scratch(sf_dir, "recluster_eq")
     upsert_parquet_bloom_indexed(
         spark,
         orders.repartition(16, F.col("o_orderkey")),
@@ -1380,11 +1367,11 @@ def lakehouse_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import foreach_batch_timeline_commit
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    legacy = _scratch(sf_dir, "e2e_legacy")
+    legacy = scratch(sf_dir, "e2e_legacy")
     orders.write.mode("overwrite").parquet(legacy)
-    tl = _scratch(sf_dir, "e2e_tl")
-    chk = _scratch(sf_dir, "e2e_chk")
-    stage = _scratch(sf_dir, "e2e_stage")
+    tl = scratch(sf_dir, "e2e_tl")
+    chk = scratch(sf_dir, "e2e_chk")
+    stage = scratch(sf_dir, "e2e_stage")
 
     # 1. Adopt the legacy table without copying a file.
     bootstrap_timeline(spark, legacy, tl, commit_ts=1)
@@ -1484,7 +1471,7 @@ def timeline_auto_compact_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeline import compaction_instants, maybe_compact
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "auto_compact")
+    path = scratch(sf_dir, "auto_compact")
     commit_append(spark, orders, path, 1)
     for mod, mult, days, ts in ((3, 2.0, 30, 2), (5, 3.0, 60, 3), (7, 4.0, 90, 4)):
         batch = (
@@ -1560,7 +1547,7 @@ def cdc_apply_downstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.timeline import timeline_cdc
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    tl = _scratch(sf_dir, "cdc_apply_tl")
+    tl = scratch(sf_dir, "cdc_apply_tl")
     base = orders.withColumn("deleted", F.lit(False))
     commit_append(spark, base, tl, 1)
     c2 = (
@@ -1586,7 +1573,7 @@ def cdc_apply_downstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit_append(spark, c3, tl, 3)
 
     pred = F.col("o_totalprice") > 150000
-    ds = _scratch(sf_dir, "cdc_apply_ds")
+    ds = scratch(sf_dir, "cdc_apply_ds")
     seed = (
         orders.filter(pred)
         .withColumn("v", F.lit(1))
@@ -1709,7 +1696,7 @@ def retention_expire_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").withColumn(
         "month", F.substring(F.col("o_orderdate").cast("string"), 1, 7)
     )
-    path = _scratch(sf_dir, "retention_orders")
+    path = scratch(sf_dir, "retention_orders")
     o.write.mode("overwrite").partitionBy("month").parquet(path)
     retention_delete(
         spark,
@@ -1777,8 +1764,8 @@ def table_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    src_path = _scratch(sf_dir, "clone_src")
-    dst_path = _scratch(sf_dir, "clone_dst")
+    src_path = scratch(sf_dir, "clone_src")
+    dst_path = scratch(sf_dir, "clone_dst")
     commit_append(spark, orders, src_path, 1)
     # Source-side restatement committed BEFORE the clone is taken —
     # cloning at as_of=1 must still never see it (time-travel clone).
@@ -1867,7 +1854,7 @@ def multi_table_txn_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.merge import upsert_parquet_indexed
     from ..operators.txn import read_table_at_catalog, txn_commit
 
-    root = _scratch(sf_dir, "txn_cat")
+    root = scratch(sf_dir, "txn_cat")
     base_path = os.path.join(root, "orders_cow")
     agg_path = os.path.join(root, "status_agg")
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
@@ -1986,7 +1973,7 @@ def branch_merge_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
         txn_commit,
     )
 
-    root = _scratch(sf_dir, "txn_branch")
+    root = scratch(sf_dir, "txn_branch")
     path = os.path.join(root, "orders_cow")
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
 
@@ -2082,7 +2069,7 @@ ORDER BY tbl
 def gdpr_erase_subject(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.txn import read_table_at_catalog, txn_commit
 
-    root = _scratch(sf_dir, "txn_gdpr")
+    root = scratch(sf_dir, "txn_gdpr")
     cust_path = os.path.join(root, "customer_cow")
     ord_path = os.path.join(root, "orders_cow")
     customer = load_table(spark, sf_dir, "customer").select(
@@ -2181,7 +2168,7 @@ def stats_skipping_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import build_table_stats, read_stats_range
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "stats_range")
+    path = scratch(sf_dir, "stats_range")
     write_clustered(
         cluster_linear(orders, ["o_orderdate", "o_orderkey"], 24), path
     )
@@ -2216,7 +2203,7 @@ def stats_metadata_group_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.stats import build_table_stats, group_count_from_stats
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
-    path = _scratch(sf_dir, "stats_groupcount")
+    path = scratch(sf_dir, "stats_groupcount")
     write_clustered(
         cluster_linear(orders, ["o_orderstatus", "o_orderkey"], 12), path
     )
@@ -2273,7 +2260,7 @@ def symlink_manifest_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    path = _scratch(sf_dir, "symlink_tbl")
+    path = scratch(sf_dir, "symlink_tbl")
     write_clustered(cluster_linear(orders, ["o_orderkey"], 8), path)
     updates = (
         orders.filter(F.col("o_orderkey") % 7 == 0)
@@ -2403,7 +2390,7 @@ def deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    path = _scratch(sf_dir, "dv_orders")
+    path = scratch(sf_dir, "dv_orders")
     orders.write.mode("overwrite").parquet(path)
     delete_with_vectors(
         spark,
@@ -2555,7 +2542,7 @@ def dv_compaction_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    path = _scratch(sf_dir, "dv_compact_orders")
+    path = scratch(sf_dir, "dv_compact_orders")
     write_clustered(cluster_linear(orders, ["o_orderkey"], 8), path)
     delete_with_vectors(spark, path, F.col("o_orderkey") < 6000)
     delete_with_vectors(spark, path, F.col("o_orderkey") % 97 == 0)

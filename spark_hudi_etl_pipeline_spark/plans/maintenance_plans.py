@@ -9,17 +9,13 @@ recompute over all history.
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.maintenance import refresh_aggregate_parquet, snapshot_diff
 from ..operators.timeline import commit_append, read_as_of
 from ..sources import load_table
-from .registry import query
+from .registry import query, scratch
 
 # --------------------------------------------------------------------------
 # Incremental aggregate refresh: two watermark-split batches (the
@@ -52,9 +48,7 @@ def incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", F.col("value").cast("decimal(18,2)").alias("value")
     )
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/agg_state_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh state per run
+    path = scratch(sf_dir, "agg_state")
     cut = F.lit("2024-01-15 00:00:00").cast("timestamp")
     for batch in (ev.filter(F.col("ts") < cut), ev.filter(F.col("ts") >= cut)):
         state = refresh_aggregate_parquet(
@@ -195,9 +189,7 @@ ORDER BY o_orderkey
 def timeline_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/timeline_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh timeline per run
+    path = scratch(sf_dir, "timeline")
     for ts, batch in _timeline_commits(orders):
         commit_append(spark, batch, path, ts)
     state = read_as_of(spark, path, ["o_orderkey"], "o_orderdate", as_of=2)
@@ -227,9 +219,7 @@ def _compacted_timeline(spark: SparkSession, sf_dir: str, tag2: str) -> str:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/timeline_{tag2}_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh timeline per run
+    path = scratch(sf_dir, f"timeline_{tag2}")
     for ts, batch in _timeline_commits(orders):
         commit_append(spark, batch, path, ts)
     compact_timeline(spark, path, ["o_orderkey"], "o_orderdate", up_to=2)
@@ -354,8 +344,7 @@ def clustered_scan_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import cluster_zorder, write_clustered
 
     orders = load_table(spark, sf_dir, "orders")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/zorder_{tag}"
+    path = scratch(sf_dir, "zorder")
     write_clustered(
         cluster_zorder(orders, "o_totalprice", "o_custkey", 16), path
     )
@@ -405,8 +394,7 @@ def zorder_nd_scan_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import cluster_zorder_nd, write_clustered
 
     orders = load_table(spark, sf_dir, "orders")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/zorder_nd_{tag}"
+    path = scratch(sf_dir, "zorder_nd")
     write_clustered(
         cluster_zorder_nd(
             orders, ["o_totalprice", "o_custkey", "o_orderdate"], 16
@@ -459,9 +447,7 @@ def incremental_join_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
     )
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/join_state_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh state per run
+    path = scratch(sf_dir, "join_state")
     cut = F.lit("1995-06-01 00:00:00").cast("timestamp")
     o_batches = (o.filter(F.col("o_orderdate") < cut), o.filter(F.col("o_orderdate") >= cut))
     c_batches = (c.filter(F.col("o_custkey") % 2 == 0), c.filter(F.col("o_custkey") % 2 == 1))
@@ -503,9 +489,7 @@ def compacted_scan_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.maintenance import compact_parquet
 
     ev = load_table(spark, sf_dir, "events").select("event_type", "value")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/compact_{tag}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(sf_dir, "compact")
     ev.repartition(64).write.mode("overwrite").parquet(path)  # small-file debris
     n_before, n_after = compact_parquet(
         spark, path, target_bytes_per_file=8 * 1024 * 1024

@@ -21,7 +21,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,7 +33,7 @@ from ..operators.multimodal import (
     spread_payload_rows,
 )
 from ..sources import load_table
-from .registry import query
+from .registry import query, scratch
 
 # --------------------------------------------------------------------------
 # Keyed upsert with precombine (reference :179-194, :241-256, DDL :92-96).
@@ -223,8 +222,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream must agree exactly — the engine's batch/streaming-parity
     contract (streaming/windows.py holds the operator library)."""
     ev = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_events_{tag}"
+    stage = scratch(sf_dir, "stream_tumbling")
     ev.write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(ev.schema).parquet(stage)
     agg = (
@@ -237,7 +235,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_value_cents"),
         )
     )
-    qname = f"stream_tumbling_{tag}"
+    qname = os.path.basename(stage)
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -755,14 +753,13 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
         "event_id", "user_id", "ts", "event_type"
     )
     doubled = ev.unionByName(ev)  # every event arrives twice
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_dedup_{tag}"
+    stage = scratch(sf_dir, "stream_dedup")
     doubled.write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(doubled.schema).parquet(stage)
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    qname = f"stream_dedup_{tag}"
+    qname = os.path.basename(stage)
     q = (
         deduped.writeStream.format("memory")
         .queryName(qname)
@@ -795,11 +792,10 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..streaming.stateful import user_running_stats
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_state_{tag}"
+    stage = scratch(sf_dir, "stream_state")
     ev.coalesce(1).write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(ev.schema).parquet(stage)
-    qname = f"stream_state_{tag}"
+    qname = os.path.basename(stage)
     q = (
         user_running_stats(stream)
         .writeStream.format("memory")
@@ -838,8 +834,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin (window_sliding_event_counts), executed as a REAL stream and
     checked against the same expansion oracle."""
     ev = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_events_{tag}"
+    stage = scratch(sf_dir, "stream_sliding")
     ev.write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(ev.schema).parquet(stage)
     agg = (
@@ -852,7 +847,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_value_cents"),
         )
     )
-    qname = f"stream_sliding_{tag}"
+    qname = os.path.basename(stage)
     q = (
         agg.writeStream.format("memory")
         .queryName(qname)
@@ -896,8 +891,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import interval_join
 
     ev = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_ssj_{tag}"
+    stage = scratch(sf_dir, "stream_ssj")
     ev.coalesce(1).write.mode("overwrite").parquet(stage)
     schema = ev.schema
     clicks = (
@@ -929,7 +923,7 @@ def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_time="purchase_ts",
         upper="1 HOUR",
     )
-    qname = f"stream_ssj_{tag}"
+    qname = os.path.basename(stage)
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -1074,13 +1068,9 @@ ORDER BY o_orderkey, o_orderstatus
 """,
 )
 def upsert_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     cols = ["o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/part_upsert_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh table per run
+    path = scratch(sf_dir, "part_upsert")
     upsert_parquet_partitioned(
         spark, orders, path, ["o_orderkey"], "o_orderdate", "o_orderstatus"
     )
@@ -1158,16 +1148,12 @@ ORDER BY o_orderkey
 """,
 )
 def upsert_file_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..operators.clustering import cluster_linear, write_clustered
     from ..operators.merge import upsert_parquet_indexed
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/idx_upsert_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh table per run
+    path = scratch(sf_dir, "idx_upsert")
     write_clustered(cluster_linear(orders, ["o_orderkey"], 16), path)
     updates = (
         orders.filter(F.col("o_orderkey") % 9 == 0)
@@ -1238,15 +1224,11 @@ ORDER BY o_orderkey
 """,
 )
 def upsert_bloom_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..operators.merge import upsert_parquet_bloom_indexed
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/bloom_upsert_{tag}"
-    shutil.rmtree(path, ignore_errors=True)  # fresh table per run
+    path = scratch(sf_dir, "bloom_upsert")
     orders.repartition(16, F.col("o_orderkey")).write.mode("overwrite").parquet(path)
     updates = (
         orders.filter(F.col("o_orderkey") % 9 == 0)
@@ -1309,8 +1291,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy((F.col("c_custkey") % 100).alias("user_id"))
         .agg(F.min("c_mktsegment").alias("segment"))
     )
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_enrich_{tag}"
+    stage = scratch(sf_dir, "stream_enrich")
     ev.write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(ev.schema).parquet(stage)
     enriched = (
@@ -1323,7 +1304,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_value_cents"),
         )
     )
-    qname = f"stream_enrich_{tag}"
+    qname = os.path.basename(stage)
     q = (
         enriched.writeStream.format("memory")
         .queryName(qname)
@@ -1389,9 +1370,8 @@ def _dpp_tables(spark: SparkSession, sf_dir: str):
     """Stage the date-partitioned fact + calendar dim layouts (shared by
     the query above and the plan-shape test)."""
     ev = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    fact_path = f"/root/repo/.scratch/dpp_fact_{tag}"
-    dim_path = f"/root/repo/.scratch/dpp_dim_{tag}"
+    fact_path = scratch(sf_dir, "dpp_fact")
+    dim_path = scratch(sf_dir, "dpp_dim")
     fact = ev.select(
         "event_id", "value", F.to_date("ts").alias("event_date")
     )
@@ -1472,14 +1452,13 @@ def streaming_chained_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged, max_ts = _with_future_sentinels(
         spark, ev, [(-1, -1, "sentinel", 10)]
     )
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_chain_{tag}"
+    stage = scratch(sf_dir, "stream_chain")
     staged.coalesce(1).write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(staged.schema).parquet(stage)
     rollup = chained_window_rollup(stream).filter(
         F.col("w_start") <= F.lit(max_ts)
     )
-    qname = f"stream_chain_{tag}"
+    qname = os.path.basename(stage)
     q = (
         rollup.writeStream.format("memory")
         .queryName(qname)
@@ -1521,8 +1500,7 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     staged, _ = _with_future_sentinels(
         spark, ev, [(-1, -1, "click", 10), (-2, -2, "purchase", 10)]
     )
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_ssj_outer_{tag}"
+    stage = scratch(sf_dir, "stream_ssj_outer")
     staged.coalesce(1).write.mode("overwrite").parquet(stage)
     schema = staged.schema
     clicks = (
@@ -1555,7 +1533,7 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         upper="1 HOUR",
         how="left_outer",
     )
-    qname = f"stream_ssj_outer_{tag}"
+    qname = os.path.basename(stage)
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -1618,8 +1596,6 @@ ORDER BY o_orderkey
 """,
 )
 def wap_publish_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil as _shutil
-
     from ..operators.wap import wap_upsert
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
@@ -1653,9 +1629,7 @@ def wap_publish_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return dup.unionByName(nn)
 
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/wap_{tag}"
-    _shutil.rmtree(path, ignore_errors=True)  # fresh table per run
+    path = scratch(sf_dir, "wap")
     # Seed commit (no audit needed for the bootstrap), then the audited
     # batch publish.
     wap_upsert(
@@ -2105,8 +2079,7 @@ def streaming_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.windows import interval_join
 
     ev = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_ssjs_{tag}"
+    stage = scratch(sf_dir, "stream_ssjs")
     ev.coalesce(1).write.mode("overwrite").parquet(stage)
     schema = ev.schema
     clicks = (
@@ -2137,7 +2110,7 @@ def streaming_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         upper="1 HOUR",
         how="left_semi",
     )
-    qname = f"stream_ssjs_{tag}"
+    qname = os.path.basename(stage)
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -2238,8 +2211,7 @@ def streaming_interval_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged, _ = _with_future_sentinels(
         spark, ev, [(-1, -1, "purchase", 10), (-2, -1, "click", 10)]
     )
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    stage = f"/root/repo/.scratch/stream_ssja_{tag}"
+    stage = scratch(sf_dir, "stream_ssja")
     staged.coalesce(1).write.mode("overwrite").parquet(stage)
     schema = staged.schema
     clicks = (
@@ -2270,7 +2242,7 @@ def streaming_interval_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         upper="1 HOUR",
         how="left_anti",
     )
-    qname = f"stream_ssja_{tag}"
+    qname = os.path.basename(stage)
     q = (
         joined.writeStream.format("memory")
         .queryName(qname)
@@ -2334,9 +2306,7 @@ def vacuum_scan_invariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"]
     orders = load_table(spark, sf_dir, "orders").select(*cols)
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/vacuum_tbl_{tag}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(sf_dir, "vacuum_tbl")
     write_clustered(cluster_linear(orders, ["o_orderkey"], 8), path)
     updates = (
         orders.filter(F.col("o_orderkey") % 9 == 0)
@@ -2409,10 +2379,9 @@ ORDER BY event_type, bar_ts
 def streaming_ohlc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.maintenance import merge_ohlc
     from ..streaming.windows import foreach_batch_ohlc_append
-    from .lifecycle_plans import _scratch
 
     ev = load_table(spark, sf_dir, "events")
-    state = _scratch(sf_dir, "strm_ohlc_state")
+    state = scratch(sf_dir, "strm_ohlc_state")
     for run, batch in enumerate(
         (
             ev.filter(F.col("event_id") % 2 == 0),
@@ -2420,8 +2389,8 @@ def streaming_ohlc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         start=1,
     ):
-        stage = _scratch(sf_dir, f"strm_ohlc_b{run}")
-        chk = _scratch(sf_dir, f"strm_ohlc_chk{run}")
+        stage = scratch(sf_dir, f"strm_ohlc_b{run}")
+        chk = scratch(sf_dir, f"strm_ohlc_chk{run}")
         batch.write.mode("overwrite").parquet(stage)
         q = (
             spark.readStream.schema(ev.schema)
@@ -2531,8 +2500,7 @@ def hidden_partition_day_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/hidden_part_{tag}"
+    path = scratch(sf_dir, "hidden_part")
     write_hidden_partitioned(
         ev, path, source_col="ts", transform=hidden_day
     )
@@ -2575,8 +2543,6 @@ GROUP BY event_type ORDER BY event_type
 """,
 )
 def partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..sources.writers import (
         evolve_partition_spec,
         hidden_day,
@@ -2584,9 +2550,7 @@ def partition_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/spec_evo_{tag}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(sf_dir, "spec_evo")
     # Spec v0: pre-evolution history, unpartitioned.
     ev.filter(F.col("event_id") % 2 == 0).write.parquet(f"{path}/spec0")
     # Evolution point: future writes land day-partitioned.

@@ -12,6 +12,11 @@ Spark plan and the oracle SQL; nondeterministic columns never hashed.
 
 from __future__ import annotations
 
+import atexit
+import os
+import re
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +40,42 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
         return fn
 
     return deco
+
+
+# One scratch root per process, made on first use under $TMPDIR and
+# removed when that process exits: runs that share a host (a test run
+# and a bench, two checkouts) never see each other's tables.
+_scratch_root: str | None = None
+
+
+def _tag(sf_dir: str) -> str:
+    return re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
+
+
+def scratch(sf_dir: str, name: str) -> str:
+    """Path ``{name}_{tag}`` for a query's run state over ``sf_dir``
+    (tag = the sf-dir basename). Whatever a previous call left there is
+    deleted, so every run starts fresh."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="spark_graft_scratch_")
+        atexit.register(shutil.rmtree, _scratch_root, ignore_errors=True)
+    path = os.path.join(_scratch_root, f"{name}_{_tag(sf_dir)}")
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def fresh_table(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Drop the managed table ``{name}_{tag}`` and return its name."""
+    tbl = f"{name}_{_tag(sf_dir)}"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    # A fresh session's in-memory catalog does not know about a previous
+    # run's managed-table directory, so DROP alone leaves the location
+    # behind and saveAsTable then fails with LOCATION_ALREADY_EXISTS.
+    wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    wh = re.sub(r"^file:/*", "/", wh)
+    shutil.rmtree(os.path.join(wh, tbl), ignore_errors=True)
+    return tbl
 
 
 # The driver's correctness gate checks the FIRST 50 entries of ``queries()``

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity
 from ..sources import load_table
-from .registry import query
+from .registry import query, scratch
 
 def _cos2(x: str, y: str) -> str:
     """Pairwise round-4 cosine between two DuckDB list columns,
@@ -945,14 +945,9 @@ def ivf_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probe an IVF index after base load + insert batch + list-moving
     update batch, all through ivf_upsert; results must equal a full
     rebuild of the final state (the oracle computes exactly that)."""
-    import os
-    import re as _re
-    import shutil
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    tag = _re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/ivf_index_{tag}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(sf_dir, "ivf_index")
 
     base = emb.filter(F.col("vec_id") % 4 != 3)
     centroids = similarity.ivf_centroids(

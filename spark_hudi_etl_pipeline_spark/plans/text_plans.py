@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text
 from ..sources import load_table
-from .registry import query
+from .registry import query, scratch
 
 _TOKS = r"string_split_regex(trim(text), '\s+')"
 _LOWER_TOKS = r"string_split_regex(trim(lower(text)), '\s+')"
@@ -1134,10 +1134,8 @@ FROM q GROUP BY source ORDER BY source
 def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from .lifecycle_plans import _scratch
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    stage = _scratch(sf_dir, "stream_docs")  # fresh-per-run scratch dir
+    stage = scratch(sf_dir, "stream_docs")
     tag = os.path.basename(stage)
     d.write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(d.schema).parquet(stage)
@@ -1405,10 +1403,9 @@ def inverted_index_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted term-clustered posting index — the query scan touches the
     three posting lists, not the corpus."""
     from ..operators.clustering import cluster_linear, write_clustered
-    from .lifecycle_plans import _scratch
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    path = _scratch(sf_dir, "inv_index")
+    path = scratch(sf_dir, "inv_index")
     postings = (
         d.select(
             "doc_id",

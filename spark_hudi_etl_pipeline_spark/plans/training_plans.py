@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as textfns
 from ..sources import load_table
-from .registry import query
+from .registry import query, scratch
 
 _TOKS = r"string_split_regex(trim(lower(text)), '\s+')"
 
@@ -3880,8 +3880,6 @@ def events_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("streaming_decontaminate_gate", oracle=_BLOOM_GATE_ORACLE)
 def streaming_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .lifecycle_plans import _scratch
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", _tokens().alias("t")
     )
@@ -3901,9 +3899,9 @@ def streaming_decontaminate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") % 29 != 0)
         .select("doc_id", "source", "text")
     )
-    stage = _scratch(sf_dir, "strm_decon")
-    vpath = _scratch(sf_dir, "strm_decon_verdicts")
-    chk = _scratch(sf_dir, "strm_decon_chk")
+    stage = scratch(sf_dir, "strm_decon")
+    vpath = scratch(sf_dir, "strm_decon_verdicts")
+    chk = scratch(sf_dir, "strm_decon_chk")
     corpus_docs.repartition(4).write.mode("overwrite").parquet(stage)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -4000,9 +3998,6 @@ def decontaminated_stats_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts), and each batch's kept-doc token stats fold into the
     materialized per-source summary via refresh_aggregate_parquet. The
     returned state must equal the oracle's one-shot gated GROUP BY."""
-    import os as _os
-    import re as _re
-    import shutil as _shutil
 
     from ..operators.maintenance import refresh_aggregate_parquet
 
@@ -4015,9 +4010,7 @@ def decontaminated_stats_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     bloom = _bloom_positions(bench)
-    tag = _re.sub(r"\W", "_", _os.path.basename(sf_dir.rstrip("/")))
-    path = f"/root/repo/.scratch/decon_stats_{tag}"
-    _shutil.rmtree(path, ignore_errors=True)  # fresh state per run
+    path = scratch(sf_dir, "decon_stats")
     # ONE gate pass over both batches (r14, guide §6): the gate is
     # per-doc stateless, so gating the halves separately produced
     # identical verdicts while scanning the documents file twice (the

@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
-from .registry import query
+from .registry import query, scratch
 
 
 def _event_doc() -> Column:
@@ -166,10 +166,9 @@ def events_variant_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     ingest path: parse once at write, every reader gets typed access
     with no re-parse). The re-read scan prunes to (day, doc): the wide
     base columns never leave the footer."""
-    from .lifecycle_plans import _scratch
 
     e = load_table(spark, sf_dir, "events")
-    staged = _scratch(sf_dir, "variant_events")
+    staged = scratch(sf_dir, "variant_events")
     (
         e.filter(F.col("event_type") == "click")
         .select(

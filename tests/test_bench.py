@@ -45,3 +45,37 @@ def test_prev_snapshot_skips_a_snapshot_of_head(tmp_path):
     )
     _commit(tmp_path, "next change", "three")
     assert bench._prev_snapshot(str(tmp_path))[0] == r2
+
+
+def test_tier_table_pins_core19_and_tier_keys():
+    core = [q for q, tier in bench.TIERS if tier == "core19"]
+    assert core == [
+        "q1_pricing_summary",
+        "q3_shipping_priority",
+        "q5_regional_revenue",
+        "q9_profit_by_nation_year",
+        "window_running_customer_spend",
+        "events_sessionize",
+        "events_json_extract",
+        "upsert_precombine",
+        "asof_purchase_prior_click",
+        "window_tumbling_event_stats",
+        "dedup_minhash_lsh",
+        "dedup_simhash",
+        "knn_bruteforce_cosine",
+        "text_quality_scores",
+        "text_repetition_filters",
+        "pack_sequences_token_budget",
+        "rolling_7d_active_users",
+        "validate_constraints",
+        "pagerank_cust_supp_top20",
+    ]
+    assert bench.HEADLINE[:19] == core
+    assert len(bench.HEADLINE) == len(set(bench.HEADLINE)) == 46
+    secs = bench.tier_secs({q: 1.0 for q in bench.HEADLINE})
+    assert list(secs) == [
+        "core19_sec", "lifecycle_sec", "curation_sec", "timeseries_sec",
+        "modal_sec", "behavior_sec", "r12_sec", "r13_sec", "r14_sec",
+    ]
+    assert secs["core19_sec"] == 19.0
+    assert sum(secs.values()) == 46.0

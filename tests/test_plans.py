@@ -274,8 +274,9 @@ def test_plan_shapes_match_golden(spark):
       intended plan change."""
     import json
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
     from plan_audit import GOLDEN_PATH, snapshot_all
 
     assert len(QUERIES) >= 29

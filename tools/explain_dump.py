@@ -15,8 +15,10 @@ import contextlib
 import io
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 
 def main() -> None:
@@ -32,7 +34,7 @@ def main() -> None:
 
     spark = get_spark_session("explain-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR", "/root/repo/plans/r14")
+    out_dir = os.environ.get("SPARK_GRAFT_PLANS_DIR", str(REPO / "plans" / "r14"))
     os.makedirs(out_dir, exist_ok=True)
 
     def _pagerank_iteration_lazy(spark, sf_dir):

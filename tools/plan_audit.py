@@ -12,8 +12,10 @@ a reviewable artifact. Usage:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from spark_hudi_etl_pipeline_spark.pipeline.costlog import (  # noqa: E402
     plan_text,
@@ -21,7 +23,7 @@ from spark_hudi_etl_pipeline_spark.pipeline.costlog import (  # noqa: E402
 )
 
 
-GOLDEN_PATH = "/root/repo/tools/plan_golden.json"
+GOLDEN_PATH = str(REPO / "tools" / "plan_golden.json")
 
 
 def snapshot_all(spark, sf_dir: str, *, with_columns: bool = False):
@@ -167,9 +169,9 @@ def main() -> None:
         "TakeOrdered-first) with their oracle hashes unchanged.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
-        f.write("\n".join(lines))
-    print("wrote /root/repo/PLANS.md")
+    out = REPO / "PLANS.md"
+    out.write_text("\n".join(lines))
+    print(f"wrote {out}")
 
 
 if __name__ == "__main__":
