@@ -32,6 +32,7 @@ from pyspark.sql.types import (
 from .pipeline import bootstrap, runlog
 from .pipeline.runner import PipelineConfig, PipelineResult, run_pipeline as _run
 from .session import get_spark_session  # noqa: F401  (re-export, reference R1)
+from .session import local_frame
 
 
 def create_database_and_table(
@@ -123,7 +124,7 @@ def create_sample_data_for_testing(spark: SparkSession) -> DataFrame:
         ("2", "user_456", now, "purchase", "mobile", "app", 25.99, 200),
         ("3", "user_789", now, "view", "web", "firefox", 0.0, 150),
     ]
-    return spark.createDataFrame(rows, SAMPLE_SCHEMA)
+    return local_frame(spark, rows, SAMPLE_SCHEMA)
 
 
 __all__ = [

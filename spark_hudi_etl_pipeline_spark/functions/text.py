@@ -249,13 +249,29 @@ def portable_hash60(col: str | Column) -> Column:
     return F.conv(F.substring(F.md5(_col(col)), 1, 15), 16, 10).cast("long")
 
 
+def _let(bound_expr, body):
+    """Catalyst let-binding idiom: evaluate ``bound_expr`` exactly once
+    per row and feed the value to ``body``. ``transform`` binds its
+    lambda variable to the evaluated element, so wrapping the expression
+    in a 1-element array gives sharing that survives CollapseProject —
+    without it, downstream projections inline (and re-execute) the whole
+    subtree at every use site."""
+    return F.transform(F.array(bound_expr), body)[0]
+
+
 def shingles(col: str | Column, k: int = 5) -> Column:
     """Word k-shingles of the normalized text → array<string>; the input
     unit for MinHash/Jaccard dedup. Documents shorter than ``k`` words
-    yield a single shingle of the whole text."""
-    toks = F.split(normalize(col), " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n <= k, F.array(F.array_join(toks, " "))).otherwise(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
-    )
+    yield a single shingle of the whole text. The token array is bound
+    once with :func:`_let`: inlined, the per-position lambda would redo
+    the regex normalization of the whole text at every position, which
+    made shingling quadratic in the document length."""
+
+    def body(toks: Column) -> Column:
+        n = F.size(toks)
+        idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+        return F.when(n <= k, F.array(F.array_join(toks, " "))).otherwise(
+            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
+        )
+
+    return _let(F.split(normalize(col), " "), body)

@@ -28,6 +28,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 #: End-of-word marker (the classic BPE sentinel: final symbols merge
 #: differently from word-internal ones).
 EOW = "</w>"
@@ -131,7 +133,8 @@ def bpe_train(
 def merge_table(spark, merges: list[tuple[str, str]]) -> DataFrame:
     """The learned merge list as a DataFrame artifact (rank, left,
     right, merged) — what gets persisted/broadcast to encoders."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, l, r, l + r) for i, (l, r) in enumerate(merges)],
         "rank int, left string, right string, merged string",
     )

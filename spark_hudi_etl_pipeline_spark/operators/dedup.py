@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text
+from ..functions.text import _let
 
 MERSENNE_PRIME_31 = (1 << 31) - 1  # 2147483647
 
@@ -196,16 +197,6 @@ def shingle_hashes(text_col, k: int = 5):
     return F.transform(
         sh, lambda s: F.pmod(text.portable_hash60(s), F.lit(MERSENNE_PRIME_31))
     )
-
-
-def _let(bound_expr, body):
-    """Catalyst let-binding idiom: evaluate ``bound_expr`` exactly once
-    per row and feed the value to ``body``. ``transform`` binds its
-    lambda variable to the evaluated element, so wrapping the expression
-    in a 1-element array gives sharing that survives CollapseProject —
-    without it, downstream projections inline (and re-execute) the whole
-    subtree at every use site."""
-    return F.transform(F.array(bound_expr), body)[0]
 
 
 def barrier_col(df: DataFrame, name: str, expr) -> DataFrame:

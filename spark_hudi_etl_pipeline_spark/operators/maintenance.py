@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def read_state_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     """Read accumulated state at ``path``, or None iff the path does not
@@ -207,7 +209,7 @@ def percentiles_from_histogram(
         "cum", F.sum("cnt").over(Window.orderBy("bin"))
     ).crossJoin(
         F.broadcast(
-            state.sparkSession.createDataFrame([(q,) for q in qs], "q double")
+            local_frame(state.sparkSession, [(q,) for q in qs], "q double")
         )
     )
     total = state.select(F.sum("cnt")).collect()[0][0]

@@ -39,6 +39,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 PRECOMBINE_TIEBREAK = "__precombine_rn"
 
 
@@ -778,7 +780,8 @@ def _range_probe_files(
         if b[key][0] is not None
     ]
     key_type = batch.schema[key].dataType.simpleString()
-    files_df = spark.createDataFrame(
+    files_df = local_frame(
+        spark,
         [(b["file"], b[key][0], b[key][1]) for b in bounds],
         f"file string, lo {key_type}, hi {key_type}",
     )
@@ -992,9 +995,7 @@ def _table_bloom_words(spark, path: str, key: str, files: list[str] | None = Non
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
         F.col(key),
     )
-    markers = spark.createDataFrame(
-        [(f,) for f in files], "file string"
-    ).select(
+    markers = local_frame(spark, [(f,) for f in files], "file string").select(
         "file",
         F.lit(-1).cast("int").alias("word_idx"),
         F.lit(0).cast("long").alias("word"),
@@ -1098,7 +1099,8 @@ def read_point_lookup(
     _, live_files = table_live_files(path)
     if not live_files:
         raise FileNotFoundError(f"no data files at {path!r}")
-    probe_df = spark.createDataFrame(
+    probe_df = local_frame(
+        spark,
         [(v,) for v in values],
         spark.read.parquet(os.path.join(path, live_files[0])).select(key).schema,
     )
@@ -1193,7 +1195,7 @@ def _table_rli(spark, path: str, key: str, files: list[str]) -> DataFrame:
         F.col(key),
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
     )
-    markers = spark.createDataFrame([(f,) for f in files], "file string").select(
+    markers = local_frame(spark, [(f,) for f in files], "file string").select(
         F.lit(None).cast(src.schema[key].dataType).alias(key), "file"
     )
     return rows.unionByName(markers)

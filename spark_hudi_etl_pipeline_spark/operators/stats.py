@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..session import local_frame
 from .clustering import file_column_bounds
 from .merge import table_live_files
 
@@ -92,7 +93,7 @@ def _harvest_stats_df(
             tuple([b["file"], b["rows"]] + [v for c in cols for v in b[c]])
             for b in bounds
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
 
     field_names = [f.name for f in schema.fields]
 
@@ -116,7 +117,7 @@ def _harvest_stats_df(
 
     nparts = max(1, min(len(names) // 8, spark.sparkContext.defaultParallelism))
     return (
-        spark.createDataFrame([(n,) for n in names], "file string")
+        local_frame(spark, [(n,) for n in names], "file string")
         .repartition(nparts)
         .mapInPandas(harvest, schema)
     )
@@ -343,7 +344,8 @@ def update_table_stats(spark: SparkSession, path: str, cols: list[str]) -> int:
     new_files = sorted(set(live) - known)
     kept = [r for r in existing if r["file"] in set(live)]
     schema = _stats_schema(spark, path, live[0], cols)
-    kept_df = spark.createDataFrame(
+    kept_df = local_frame(
+        spark,
         [tuple(r[f.name] for f in schema.fields) for r in kept], schema
     )
     out = kept_df

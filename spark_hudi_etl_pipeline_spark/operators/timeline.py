@@ -55,6 +55,7 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .merge import merge_upsert
 
 COMMIT_COL = "commit_ts"
@@ -627,9 +628,7 @@ def timeline_history(spark, path: str) -> DataFrame:
         else:
             action = "commit"
         rows.append((t, action, t in pins))
-    return spark.createDataFrame(
-        rows, "instant long, action string, savepointed boolean"
-    )
+    return local_frame(spark, rows, "instant long, action string, savepointed boolean")
 
 
 def maybe_compact(

@@ -23,8 +23,8 @@ attributes cost PER QUERY, Spark-first:
   cost log even when the wall is noisy.
 
 One row per profiled run is upserted into a keyed parquet cost table
-through the same manifest-committed writer as the reference-schema audit
-log (runlog.py), key ``(query_name, created_at)``.
+through the same in-place, non-atomic writer as the reference-schema
+audit log (runlog.py, ``upsert_parquet``), key ``(query_name, created_at)``.
 
 Scale: everything recorded here is planning-scale (a handful of scalars
 per run); the only corpus-scale work is the profiled query itself, which
@@ -52,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.merge import upsert_parquet
+from ..session import local_frame
 from .runlog import now_ms
 
 COST_SCHEMA = StructType(
@@ -189,10 +190,12 @@ def profile_run(
 def write_cost_entry(
     spark: SparkSession, cost_path: str, entry: dict[str, object]
 ) -> None:
-    """Upsert one attribution row, keyed ``(query_name, created_at)`` —
-    the same manifest-committed keyed writer as the audit log."""
+    """Upsert one attribution row, keyed ``(query_name, created_at)``,
+    through the same writer as the audit log: :func:`upsert_parquet`,
+    which rewrites the whole table in place. That write is not atomic —
+    a crash during it can leave the cost table partly written."""
     row = [tuple(entry[f.name] for f in COST_SCHEMA.fields)]
-    batch = spark.createDataFrame(row, COST_SCHEMA)
+    batch = local_frame(spark, row, COST_SCHEMA)
     upsert_parquet(
         spark,
         batch,

@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.merge import upsert_parquet
+from ..session import local_frame
 
 #: Reference log schema (pipeline_architecture.py:166-175), verbatim.
 LOG_SCHEMA = StructType(
@@ -84,7 +85,7 @@ def write_log_entry(
             now_ms(),
         )
     ]
-    batch = spark.createDataFrame(row, LOG_SCHEMA)
+    batch = local_frame(spark, row, LOG_SCHEMA)
     upsert_parquet(
         spark,
         batch,

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import load_table
 from .registry import query
 
@@ -522,7 +523,7 @@ ORDER BY band
 )
 def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(PRICE_BANDS, "band string, lo double, hi double")
+    bands = local_frame(spark, PRICE_BANDS, "band string, lo double, hi double")
     return (
         o.join(
             F.broadcast(bands),

@@ -39,6 +39,7 @@ from ..operators.timeline import (
     restore_to,
     savepoint,
 )
+from ..session import local_frame
 from ..sources import load_table
 from .registry import query, scratch
 
@@ -2016,7 +2017,7 @@ def branch_merge_isolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre_df = tagged_agg(
         read_table_at_catalog(spark, root, "orders_cow", path), "main_pre"
     )
-    main_pre = spark.createDataFrame(pre_df.collect(), pre_df.schema)
+    main_pre = local_frame(spark, pre_df.collect(), pre_df.schema)
     branch_read = tagged_agg(
         read_table_at_catalog(spark, root, "orders_cow", path, branch="restate"),
         "branch",

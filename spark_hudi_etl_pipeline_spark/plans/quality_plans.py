@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import load_table
 from .registry import query
 
@@ -908,7 +909,8 @@ def cost_attribution_rows_observed(spark: SparkSession, sf_dir: str) -> DataFram
         profile_run(spark, QUERIES[name](spark, sf_dir), name)
         for name in _COST_PROFILED
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(e["query_name"], e["rows_out"]) for e in entries],
         "query_name string, rows_out long",
     ).orderBy("query_name")

@@ -22,11 +22,13 @@ def spark():
         master="local[8]",
         extra_configs={
             "spark.sql.shuffle.partitions": "8",
-            # Match local[8]: the 'local' env profile pins 32, which
-            # makes every createDataFrame(list) parallelize into 32
-            # Python-backed partitions — each downstream task then pays
-            # a Python-worker round-trip (a 4-row crossJoin measured
-            # 33s from 32×32 such tasks).
+            # Match local[8]. Engine code builds its small frames with
+            # session.local_frame (a LocalTableScan, no Python worker),
+            # so it no longer depends on this pin. Frames the tests build
+            # themselves with createDataFrame(list) still do: the 'local'
+            # profile's 32 would parallelize each into 32 Python-backed
+            # partitions, and every downstream task pays a Python-worker
+            # round-trip (a 4-row crossJoin once took 33s that way).
             "spark.default.parallelism": "8",
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",

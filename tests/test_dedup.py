@@ -3,9 +3,12 @@ SimHash hamming properties, n-gram Jaccard, embedding near-dup."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
+from spark_hudi_etl_pipeline_spark.functions import text
 from spark_hudi_etl_pipeline_spark.operators import dedup
 
 DOCS = [
@@ -844,6 +847,30 @@ def test_prefix_length_covers_rounded_threshold(spark):
     )
     n = dedup._prefix_inverted_index(sh, 0.5).count()
     assert n == 20001 - 10000 + 1  # ceil(0.49995 * 20001) = 10000
+
+
+def test_shingles_time_is_linear_in_document_length(spark):
+    """Doubling a document's words may at most ~2.5× its shingling time.
+    Without the token array bound once, every shingle position re-ran
+    the regex normalization of the whole text: quadratic, ~4× per
+    doubling at these lengths. The text depends on a column so the
+    expression runs in a task instead of being constant-folded."""
+
+    def best_of(n_words: int) -> float:
+        doc = " ".join(f"Word{j}," for j in range(n_words))
+        df = spark.range(1).select(
+            F.concat(F.lit(doc), F.col("id").cast("string")).alias("t")
+        )
+        q = df.select(F.xxhash64(F.array_join(text.shingles("t"), "|")))
+        times = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            q.collect()
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    best_of(500)  # warm the code paths before timing
+    assert best_of(8000) <= 2.5 * best_of(4000)
 
 
 def test_ngram_jaccard_rounding_boundary_pair_not_missed(spark):
