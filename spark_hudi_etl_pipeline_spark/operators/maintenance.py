@@ -90,9 +90,11 @@ def refresh_aggregate_parquet(
     count_alias: str = "n_rows",
 ) -> DataFrame:
     """Materializing incremental refresh: fold ``batch``'s partial state
-    into the summary table at ``path`` (read-modify-write like
-    operators/merge.upsert_parquet; a Hudi/Delta connector would make
-    the commit transactional). Returns the post-refresh state."""
+    into the summary table at ``path``: read-modify-write, overwritten
+    in place after a ``localCheckpoint``, so not atomic (unlike the
+    manifest commit of operators/merge.upsert_parquet; a Hudi/Delta
+    connector would make it transactional). Returns the post-refresh
+    state."""
     state = aggregate_state(batch, keys, sums, count_alias=count_alias)
     existing = read_state_if_exists(spark, path)
     merged = merge_aggregate_state(existing, state, keys).localCheckpoint(eager=True)

@@ -23,17 +23,22 @@ Scale design (100 TB table, small incremental batch):
 - The merge join is an outer join table⋈batch on the key. With the table
   bucketed/clustered by key (how you'd lay out a 100 TB keyed table),
   Catalyst plans a broadcast join of the batch against bucketed scans —
-  no table-side shuffle. COW file rewrite then touches only the files
-  whose key ranges intersect the batch (what Hudi's index does); the
-  parquet fallback here rewrites the table, which is correct-but-O(table)
-  — exactly why production deployments flip on the Hudi connector, and
-  why `merge_upsert` is also exposed as a pure DataFrame transform so the
+  no table-side shuffle.
+- Every keyed upsert sink here commits the same way: stage the merged
+  files, move them in, publish one manifest (:func:`_commit_staged`).
+  Readers see the old table or the new one, never a mix. The sinks
+  differ only in which live files they treat as affected:
+  :func:`upsert_parquet` rewrites all of them (correct but O(table)),
+  the range-, bloom- and record-indexed writers only those whose index
+  says they may hold a batch key (what Hudi's index does).
+  ``merge_upsert`` is also exposed as a pure DataFrame transform, so the
   sink choice is orthogonal.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, Window
@@ -102,18 +107,6 @@ def align_schemas(
         *[F.col(c) for c in skip if c in batch.columns],
     )
     return existing2, batch2
-
-
-def _write_parquet_counted(merged: DataFrame, path: str) -> int:
-    """Overwrite-write ``merged`` to ``path`` and return its row count,
-    counted by an Observation ON THE WRITE JOB itself — a trailing
-    ``merged.count()`` on a lazy merge replays the whole precombine/
-    merge pipeline a second time (r13 optimization round)."""
-    obs = Observation()
-    merged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(path)
-    return int(obs.get["n"])
 
 
 def merge_upsert(
@@ -371,38 +364,25 @@ def upsert_parquet(
     *,
     delete_col: str | None = None,
     evolve_schema: bool = False,
-    partial_update: bool = False,
 ) -> int:
-    """Materializing upsert sink (reference R7 write_hudi_table,
-    :238-260, re-expressed): merge ``batch`` into the parquet table at
-    ``path``; returns rows written. Read-modify-write: the merge is
-    materialized with ``localCheckpoint`` and then overwrites the table
-    directory in place. That overwrite is not atomic — parquet has no
-    transaction log, so a crash during the write can leave the table
-    partly written. The crash-safe path is the manifest-committed
-    writers (:func:`upsert_parquet_indexed`,
-    :func:`upsert_parquet_bloom_indexed`,
-    :func:`upsert_parquet_record_indexed`), whose commit point is one
-    manifest publish (Hudi/Delta would make this a real ACID commit —
-    connector passthrough point).
+    """Keyed upsert sink (reference R7 write_hudi_table, :238-260,
+    re-expressed): merge ``batch`` into the parquet table at ``path``;
+    returns rows written. A copy-on-write rewrite of every live file —
+    O(table), no index pruning — committed like every keyed upsert here
+    by one manifest publish (:func:`_commit_staged`), so a crash leaves
+    readers of :func:`read_indexed_table` on the previous version. The
+    rewrite is coalesced to ⌈bytes read ÷
+    ``spark.sql.files.maxPartitionBytes``⌉ files, so repeated small
+    upserts do not grow the table by a file each.
 
     ``evolve_schema=True`` = Hudi ``hoodie.schema.on.read.enable``
     passthrough semantics: the table schema widens to the batch's new
     columns (see :func:`align_schemas`).
     """
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:  # first write: path absent
-        existing = None
-    merged = merge_upsert(
-        existing, batch, keys, precombine,
-        delete_col=delete_col, evolve_schema=evolve_schema,
-        partial_update=partial_update,
-    )
-    if existing is not None:
-        # Materialize the merge before overwriting the files we read.
-        merged = merged.localCheckpoint(eager=True)
-    return _write_parquet_counted(merged, path)
+    return _indexed_upsert(
+        spark, batch, path, keys, precombine,
+        delete_col=delete_col, index=_ALL_FILES, evolve_schema=evolve_schema,
+    ).rows_written
 
 
 def _dynamic_overwrite(spark, df: DataFrame, path: str, partition_col: str) -> None:
@@ -433,7 +413,11 @@ def _upsert_partitioned(
     ``tableops.upsert_parquet_partitioned_global`` (``True``). They
     differ only in the merge key (``keys + [partition_col]`` or
     ``keys``) and in the partitions they touch: the batch's own, plus,
-    with the global index, those currently holding a batch key."""
+    with the global index, those currently holding a batch key.
+
+    Unlike the flat keyed sinks, these are not manifest-committed: the
+    dynamic overwrite replaces each touched partition directory in
+    place, so a crash during it can leave a partition partly written."""
     import os
     import shutil
 
@@ -548,8 +532,9 @@ def upsert_parquet_partitioned(
 
 
 # ---------------------------------------------------------------------------
-# Manifest commit protocol (shared by the range-, bloom- and
-# record-indexed COW writers, the clustering service and operators/wap.py):
+# Manifest commit protocol (shared by every flat keyed upsert sink —
+# upsert_parquet, the range-, bloom- and record-indexed writers and
+# operators/wap.py — and by the clustering service):
 # the commit point is publishing manifest version N+1 — a
 # single new immutable object — never a directory mutation.
 #
@@ -674,15 +659,20 @@ def read_indexed_table(spark, path: str) -> DataFrame:
 def _commit_staged(
     path: str, staged: DataFrame, version: int, kept: list[str],
     *, clean: bool = True,
+    before_publish: Callable[[list[str]], None] | None = None,
 ) -> tuple[list[str], int]:
-    """Shared commit tail: write ``staged`` to a staging directory under
-    the table (rows counted by an Observation on that write job — the
-    write doubles as materialization of a merge that reads the files it
-    replaces), move the part files in under unique names (pre-commit —
-    invisible until referenced), publish manifest ``version`` over
-    ``kept`` + the new files (THE commit point), then best-effort-clean
-    files the new manifest no longer references. Returns (new file
-    basenames, rows written)."""
+    """The one commit of every keyed upsert sink: write ``staged`` to a
+    staging directory under the table (rows counted by an Observation on
+    that write job — the write doubles as materialization of a merge
+    that reads the files it replaces), move the part files in under
+    unique names (pre-commit — invisible until referenced), run
+    ``before_publish`` on the candidate live set (the WAP audit hook),
+    publish manifest ``version`` over ``kept`` + the new files (THE
+    commit point), then best-effort-clean files the new manifest no
+    longer references. If anything before the publish, the hook or the
+    publish itself raises, the moved files are removed and the error
+    propagates: the table stays on its previous version. Returns (new
+    file basenames, rows written)."""
     import glob
     import os
     import shutil
@@ -691,17 +681,31 @@ def _commit_staged(
     staging = f"{path}/.staging-{uuid.uuid4().hex}"
     moved = []
     try:
-        n_written = _write_parquet_counted(staged, staging)
-        for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
-            dest = os.path.join(
-                path, f"part-upsert-{uuid.uuid4().hex}-{i:05d}.parquet"
-            )
-            shutil.move(f, dest)
-            moved.append(os.path.basename(dest))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-    live = sorted(set(kept) | set(moved))
-    _manifest_publish(path, live, version)  # ← commit point
+        try:
+            obs = Observation()
+            staged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(staging)
+            n_written = int(obs.get["n"])
+            for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
+                dest = os.path.join(
+                    path, f"part-upsert-{uuid.uuid4().hex}-{i:05d}.parquet"
+                )
+                shutil.move(f, dest)
+                moved.append(os.path.basename(dest))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        live = sorted(set(kept) | set(moved))
+        if before_publish is not None:
+            before_publish(live)
+        _manifest_publish(path, live, version)  # ← commit point
+    except BaseException:
+        for f in moved:  # never referenced by a manifest
+            try:
+                os.remove(os.path.join(path, f))
+            except OSError:
+                pass
+        raise
     # Post-commit cleaner (Hudi's hoodie.clean.automatic): replaced files
     # are unreferenced by the new manifest; removing them is best-effort
     # hygiene, not correctness — a crash here leaves orphans that every
@@ -771,21 +775,23 @@ def _range_probe_files(
     """SIMPLE-index lookup: the ``files`` whose footer ``[min, max]``
     range of ``key`` holds a batch key. A broadcast range join of the
     file-bounds relation (tiny, footer-only reads) against the batch's
-    distinct keys — only file NAMES reach the driver."""
+    distinct keys — only file NAMES reach the driver. A file with rows
+    but no bounds (Spark writes no min/max for string values over
+    ~4 KiB) may hold any key, so it is always affected."""
     from .clustering import file_column_bounds
 
-    bounds = [
-        b
-        for b in file_column_bounds(path, [key], files=files)
-        if b[key][0] is not None
-    ]
+    bounds = file_column_bounds(path, [key], files=files)
+    unbounded = [b["file"] for b in bounds if b["rows"] and b[key][0] is None]
+    ranged = [b for b in bounds if b[key][0] is not None]
+    if not ranged:
+        return unbounded
     key_type = batch.schema[key].dataType.simpleString()
     files_df = local_frame(
         spark,
-        [(b["file"], b[key][0], b[key][1]) for b in bounds],
+        [(b["file"], b[key][0], b[key][1]) for b in ranged],
         f"file string, lo {key_type}, hi {key_type}",
     )
-    return [
+    return unbounded + [
         r["file"]
         for r in (
             batch.select(F.col(key).alias("__bk"))
@@ -801,37 +807,54 @@ def _range_probe_files(
     ]
 
 
+#: ``index`` choices of :func:`_indexed_upsert` besides a sidecar kind.
+_RANGE_INDEX = "range"  # parquet footer key ranges (Hudi SIMPLE)
+_ALL_FILES = "all"  # no pruning: every live file is affected
+
+
+def _coalesce_rewrite(
+    spark, merged: DataFrame, path: str, files: list[str], batch: DataFrame
+) -> DataFrame:
+    """``merged`` coalesced to ⌈bytes the full rewrite reads ÷
+    ``spark.sql.files.maxPartitionBytes``⌉ partitions: the ``files`` it
+    replaces plus Catalyst's size estimate of the batch. Without it each
+    small file is its own scan partition (``openCostInBytes``) and every
+    commit adds a file. A batch of unknown size (estimate Long.MaxValue,
+    e.g. an RDD-backed frame) leaves the partitioning as it is."""
+    import os
+
+    size = sum(os.path.getsize(os.path.join(path, f)) for f in files) + int(
+        batch._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    )
+    n = -(-size // spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+    return merged.coalesce(n) if n < 2**31 else merged
+
+
 def _indexed_upsert(
     spark,
     batch: DataFrame,
     path: str,
-    key: str,
+    keys: list[str],
     precombine: str,
     *,
     delete_col: str | None,
-    index: _SidecarIndex | None,
+    index: _SidecarIndex | str,
     clean: bool = True,
     base_version: int | None = None,
+    evolve_schema: bool = False,
+    before_publish: Callable[[list[str]], None] | None = None,
 ) -> IndexedUpsertResult:
-    """Shared body of the manifest-committed indexed writers: first
-    write, live (or ``base_version``) file set, affected-file lookup,
-    merge against the affected files only, stage → manifest commit →
-    clean, then sidecar maintenance. ``index=None`` is the SIMPLE
-    key-range index (parquet footers, no sidecar); otherwise ``index``
-    names the sidecar kind (bloom or record-level)."""
+    """Shared body of every flat keyed upsert sink: live (or
+    ``base_version``) file set, affected-file lookup, merge against the
+    affected files only, :func:`_commit_staged` (the first write too),
+    then sidecar maintenance. ``index`` picks the affected files:
+    :data:`_ALL_FILES` (all of them — :func:`upsert_parquet` and WAP),
+    :data:`_RANGE_INDEX` (parquet footers, no sidecar) or a sidecar kind
+    (bloom or record-level). The indexes look up ``keys[0]`` only, a
+    sound superset for composite keys; the merge uses every key.
+    ``evolve_schema`` rewrites every file, so only :data:`_ALL_FILES`
+    takes it."""
     import os
-
-    def write_sidecar(rel: DataFrame) -> None:
-        rel.write.mode("overwrite").parquet(os.path.join(path, index.dirname))
-
-    if not os.path.isdir(path):
-        merged = merge_upsert(None, batch, [key], precombine, delete_col=delete_col)
-        n = _write_parquet_counted(merged, path)
-        version, live = table_live_files(path)
-        _manifest_publish(path, live, version + 1)
-        if index is not None:
-            write_sidecar(index.build(spark, path, key, live))
-        return IndexedUpsertResult(n, version + 1)
 
     version, live_files = table_live_files(path)
     if base_version is not None and base_version != version:
@@ -840,39 +863,47 @@ def _indexed_upsert(
         # non-latest base it would delete files other versions (other
         # branch heads) still reference. Never clean on a branched write.
         clean = False
-    if index is None:
-        affected = _range_probe_files(spark, path, key, live_files, batch)
+    rel = None
+    if not live_files or index == _ALL_FILES:
+        affected = live_files
+    elif index == _RANGE_INDEX:
+        affected = _range_probe_files(spark, path, keys[0], live_files, batch)
     else:
         rel = _valid_sidecar(spark, path, live_files, index.dirname)
         if rel is None:
-            rel = index.build(spark, path, key, live_files)  # cold (re)build
+            rel = index.build(spark, path, keys[0], live_files)  # cold (re)build
         # Materialize now (metadata-scale): the commit below deletes data
         # files and overwrites the sidecar this lazy plan reads from.
         rel = rel.localCheckpoint(eager=True)
-        affected = index.probe(rel, batch, key)
+        affected = index.probe(rel, batch, keys[0])
     existing_sub = (
         spark.read.parquet(*[os.path.join(path, f) for f in affected])
         if affected
         else None
     )
     merged = merge_upsert(
-        existing_sub, batch, [key], precombine, delete_col=delete_col
+        existing_sub, batch, keys, precombine,
+        delete_col=delete_col, evolve_schema=evolve_schema,
     )
+    if index == _ALL_FILES and affected:
+        merged = _coalesce_rewrite(spark, merged, path, affected, batch)
     kept = [f for f in live_files if f not in set(affected)]
     moved, n_written = _commit_staged(
-        path, merged, version + 1, kept, clean=clean
+        path, merged, version + 1, kept,
+        clean=clean, before_publish=before_publish,
     )
-    if index is not None:
+    if isinstance(index, _SidecarIndex):
         # Post-commit incremental index maintenance: drop replaced files'
         # rows, add the new files' rows — O(commit), never O(table). A
         # crash before this write is healed by the manifest-mismatch
         # cold rebuild.
-        kept_rel = rel.filter(~F.col("file").isin(affected))
-        write_sidecar(
-            kept_rel.unionByName(index.build(spark, path, key, moved))
-            if moved
-            else kept_rel
-        )
+        parts = [] if rel is None else [rel.filter(~F.col("file").isin(affected))]
+        if moved:
+            parts.append(index.build(spark, path, keys[0], moved))
+        if parts:
+            reduce(DataFrame.unionByName, parts).write.mode("overwrite").parquet(
+                os.path.join(path, index.dirname)
+            )
     return IndexedUpsertResult(n_written, version + 1)
 
 
@@ -928,8 +959,8 @@ def upsert_parquet_indexed(
     each other: each merges from its own pinned snapshot.
     """
     return _indexed_upsert(
-        spark, batch, path, key, precombine,
-        delete_col=delete_col, index=None, clean=clean,
+        spark, batch, path, [key], precombine,
+        delete_col=delete_col, index=_RANGE_INDEX, clean=clean,
         base_version=base_version,
     )
 
@@ -1117,19 +1148,16 @@ def read_point_lookup(
     elif words is not None:
         candidates = _bloom_probe_files(words, probe_df, key)
     else:
-        bounds = [
-            b
+        # A file with rows but no footer bounds may hold any value.
+        candidates = [
+            b["file"]
             for b in file_column_bounds(path, [key], files=live_files)
-            if b[key][0] is not None
+            if b["rows"]
+            and (
+                b[key][0] is None
+                or any(b[key][0] <= v <= b[key][1] for v in values)
+            )
         ]
-        if bounds:
-            candidates = [
-                b["file"]
-                for b in bounds
-                if any(b[key][0] <= v <= b[key][1] for v in values)
-            ]
-        else:
-            candidates = list(live_files)
     reader = spark.read.parquet(
         *[os.path.join(path, f) for f in (candidates or [live_files[0]])]
     )
@@ -1174,7 +1202,7 @@ def upsert_parquet_bloom_indexed(
     index rebuild.
     """
     return _indexed_upsert(
-        spark, batch, path, key, precombine,
+        spark, batch, path, [key], precombine,
         delete_col=delete_col, index=_BLOOM_INDEX,
     ).rows_written
 
@@ -1253,7 +1281,7 @@ def upsert_parquet_record_indexed(
     Returns rows written.
     """
     return _indexed_upsert(
-        spark, batch, path, key, precombine,
+        spark, batch, path, [key], precombine,
         delete_col=delete_col, index=_RECORD_INDEX,
     ).rows_written
 

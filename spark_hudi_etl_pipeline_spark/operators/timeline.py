@@ -10,8 +10,8 @@ Hudi at all). This module provides the same capabilities engine-side:
 - **Write path (MOR-flavored)**: each upsert batch is an immutable commit
   appended as its own hive partition ``commit_ts=N/`` — an O(batch)
   append that never touches earlier commits (no read-modify-write, no
-  table rewrite; contrast ``merge.upsert_parquet`` which is the COW
-  path).
+  table rewrite; contrast ``merge.upsert_parquet``, the COW path, which
+  rewrites the table and commits it by one manifest publish).
 - **Read path (merge-on-read)**: table state *as of* commit T is
   reconstructed by folding all commits ≤ T. The fold is ONE window over
   the pruned union — the ``commit_ts <= T`` predicate is a partition

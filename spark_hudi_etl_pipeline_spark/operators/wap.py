@@ -4,10 +4,10 @@ The pattern (popularized by Netflix on Iceberg; Hudi ships it as
 pre-commit validators — reference README's quality aspirations made
 real): a batch's merged result is STAGED as uncommitted data files,
 AUDITED in place, and only PUBLISHED — one atomic manifest write, the
-same `_manifest/vN.json` protocol as the indexed COW writers in
-operators/merge.py — when every check passes. A failing audit aborts
-with the live table untouched; readers can never observe unaudited
-rows because the staged files are unreferenced until the publish.
+same commit as every keyed upsert sink (``merge._commit_staged``) —
+when every check passes. A failing audit aborts with the live table
+untouched; readers can never observe unaudited rows because the staged
+files are unreferenced until the publish.
 
 Scale: the audit runs on the staged candidate as a normal Spark job
 (one pass for the default constraint report), the publish is one
@@ -17,21 +17,12 @@ files — all O(batch) beyond the audit scan itself.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
-from .merge import (
-    _manifest_publish,
-    align_schemas,
-    merge_upsert,
-    read_indexed_table,
-    table_live_files,
-)
+from .merge import _ALL_FILES, _indexed_upsert
 
 
 #: Max violation rows collected to the driver on audit failure — the
@@ -64,7 +55,9 @@ def wap_upsert(
     audit: Callable[[DataFrame], DataFrame] | None = None,
     evolve_schema: bool = False,
 ) -> int:
-    """Keyed upsert committed through write→audit→publish.
+    """Keyed upsert committed through write→audit→publish: the full
+    copy-on-write rewrite of :func:`~.merge.upsert_parquet`, with the
+    audit run between moving the new files in and publishing them.
 
     ``audit``: callable mapping the CANDIDATE table state (a DataFrame
     over the staged-but-unpublished files) to a DataFrame of violation
@@ -74,48 +67,15 @@ def wap_upsert(
 
     Returns the newly published manifest version.
     """
-    version, live = table_live_files(path)
-    state = read_indexed_table(spark, path) if live else None
-    if state is not None and evolve_schema:
-        state, batch = align_schemas(state, batch)
-    merged = merge_upsert(state, batch, keys, precombine)
 
-    # WRITE: full COW rewrite into uncommitted files (unique names so a
-    # crashed attempt can never collide with a later one).
-    staging = os.path.join(path, f"_wap_staging-{uuid.uuid4().hex}")
-    merged.write.mode("overwrite").parquet(staging)
-    moved: list[str] = []
-    try:
-        for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
-            dest = os.path.join(
-                path, f"part-wap-{uuid.uuid4().hex}-{i:05d}.parquet"
-            )
-            shutil.move(f, dest)
-            moved.append(os.path.basename(dest))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-    # AUDIT the candidate exactly as readers would see it post-publish.
-    if audit is not None:
-        candidate = spark.read.parquet(
-            *[os.path.join(path, m) for m in moved]
-        )
+    def check(live: list[str]) -> None:
+        candidate = spark.read.parquet(*[os.path.join(path, f) for f in live])
         violations = audit(candidate).limit(AUDIT_SAMPLE_ROWS).collect()
         if violations:
-            for m in moved:  # abort: staged files were never referenced
-                try:
-                    os.remove(os.path.join(path, m))
-                except OSError:
-                    pass
             raise AuditFailure(violations)
 
-    # PUBLISH: one atomic manifest write — the commit point.
-    _manifest_publish(path, sorted(moved), version + 1)
-    # Post-commit cleaner: files the new manifest no longer references.
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        if os.path.basename(f) not in moved:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-    return version + 1
+    return _indexed_upsert(
+        spark, batch, path, keys, precombine,
+        delete_col=None, index=_ALL_FILES, evolve_schema=evolve_schema,
+        before_publish=check if audit is not None else None,
+    ).version

@@ -23,7 +23,7 @@ attributes cost PER QUERY, Spark-first:
   cost log even when the wall is noisy.
 
 One row per profiled run is upserted into a keyed parquet cost table
-through the same in-place, non-atomic writer as the reference-schema
+through the same manifest-committed writer as the reference-schema
 audit log (runlog.py, ``upsert_parquet``), key ``(query_name, created_at)``.
 
 Scale: everything recorded here is planning-scale (a handful of scalars
@@ -51,7 +51,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.merge import upsert_parquet
+from ..operators.merge import read_indexed_table, upsert_parquet
 from ..session import local_frame
 from .runlog import now_ms
 
@@ -191,9 +191,9 @@ def write_cost_entry(
     spark: SparkSession, cost_path: str, entry: dict[str, object]
 ) -> None:
     """Upsert one attribution row, keyed ``(query_name, created_at)``,
-    through the same writer as the audit log: :func:`upsert_parquet`,
-    which rewrites the whole table in place. That write is not atomic —
-    a crash during it can leave the cost table partly written."""
+    through the same writer as the audit log: :func:`upsert_parquet`, a
+    whole-table rewrite committed by one manifest publish — a crash
+    leaves :func:`cost_report` on the previous version."""
     row = [tuple(entry[f.name] for f in COST_SCHEMA.fields)]
     batch = local_frame(spark, row, COST_SCHEMA)
     upsert_parquet(
@@ -209,7 +209,7 @@ def cost_report(spark: SparkSession, cost_path: str) -> DataFrame:
     """Per-query rollup over the cost table: run count, wall stats, and
     the LATEST run's plan-shape counters (argmax by created_at — a plan
     regression shows as a counter change between report snapshots)."""
-    log = spark.read.parquet(cost_path)
+    log = read_indexed_table(spark, cost_path)
     w_latest = F.max(F.struct("created_at", "shuffle_exchanges")).alias("_l")
     return (
         log.groupBy("query_name")

@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.merge import upsert_parquet
+from ..operators.merge import read_indexed_table, upsert_parquet
 from ..session import local_frame
 
 #: Reference log schema (pipeline_architecture.py:166-175), verbatim.
@@ -72,7 +72,8 @@ def write_log_entry(
 ) -> None:
     """Append one audit row (reference create_log_entry, :150-199) via
     the keyed upsert sink — same composite key + precombine semantics as
-    the reference's Hudi log write (:179-194)."""
+    the reference's Hudi log write (:179-194), committed by one manifest
+    publish (read it back with ``read_indexed_table``)."""
     row = [
         (
             pipeline_name,
@@ -104,7 +105,7 @@ def get_last_run_timestamp(
     (:143-148)."""
     try:
         row = (
-            spark.read.parquet(log_path)
+            read_indexed_table(spark, log_path)
             .filter(
                 (F.col("pipeline_name") == pipeline_name)
                 & (F.col("status") == STATUS_SUCCESS)
@@ -128,7 +129,7 @@ def get_pipeline_status(
     """Status report (reference :337-369): runs in the lookback window,
     newest first, with epoch-ms columns rendered as timestamps."""
     cutoff_ms = now_ms() - days * 24 * 3600 * 1000
-    log = spark.read.parquet(log_path)
+    log = read_indexed_table(spark, log_path)
     if pipeline_name is not None:
         log = log.filter(F.col("pipeline_name") == pipeline_name)
     return (

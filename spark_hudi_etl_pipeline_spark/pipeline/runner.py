@@ -14,6 +14,12 @@ with the reference's defects fixed (SURVEY.md §3):
   up front;
 - predicates are bound Columns, not interpolated SQL strings.
 
+The target and the audit log are written by ``merge.upsert_parquet``, a
+copy-on-write rewrite committed by one manifest publish (the reference's
+Hudi COW commit, :179-194): a crash mid-run leaves both on their previous
+version, so the watermark never advances past data that did not land.
+Read them with ``merge.read_indexed_table``.
+
 Scale: the watermark predicate pushes into the source scan (incremental
 runs read only new files); the upsert merge broadcasts the batch against
 the keyed table (operators/merge.py) — nothing in the driver loop holds

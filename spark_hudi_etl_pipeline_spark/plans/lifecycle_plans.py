@@ -1544,7 +1544,7 @@ ORDER BY o_orderkey
 """,
 )
 def cdc_apply_downstream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.merge import upsert_parquet
+    from ..operators.merge import read_indexed_table, upsert_parquet
     from ..operators.timeline import timeline_cdc
 
     orders = load_table(spark, sf_dir, "orders").select(*ORDER_COLS)
@@ -1604,7 +1604,7 @@ def cdc_apply_downstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     upsert_parquet(spark, batch, ds, ["o_orderkey"], "v", delete_col="gone")
     return (
-        spark.read.parquet(ds)
+        read_indexed_table(spark, ds)
         .select(
             "o_orderkey",
             "o_orderstatus",

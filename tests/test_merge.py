@@ -10,8 +10,11 @@ from pyspark.sql import functions as F
 from spark_hudi_etl_pipeline_spark.operators.merge import (
     merge_upsert,
     precombine_batch,
+    read_indexed_table,
+    table_live_files,
     upsert_parquet,
 )
+from spark_hudi_etl_pipeline_spark.session import local_frame
 
 
 def rows_of(df):
@@ -85,6 +88,23 @@ def test_upsert_parquet_incremental_update(spark, tmp_table, schema):
         ("b", "v2", 2),
         ("c", "v1", 1),
     }
+
+
+def test_upsert_parquet_rewrite_does_not_add_a_file_per_batch(spark, tmp_table, schema):
+    """The full rewrite is coalesced to ceil(bytes / maxPartitionBytes)
+    files: ten small upserts leave one live file, and the cleaner leaves
+    no other data file in the directory."""
+    import glob
+    import os
+
+    for i in range(10):
+        batch = local_frame(spark, [(f"k{i}", "v", i)], schema)
+        upsert_parquet(spark, batch, tmp_table, keys=["k"], precombine="prec")
+    version, live = table_live_files(tmp_table)
+    assert version == 10 and len(live) == 1
+    on_disk = [os.path.basename(f) for f in glob.glob(f"{tmp_table}/*.parquet")]
+    assert on_disk == live
+    assert read_indexed_table(spark, tmp_table).count() == 10
 
 
 def test_merge_first_write(spark, schema):

@@ -257,6 +257,51 @@ def test_indexed_upsert_delete_records(spark, keyed_table):
     assert out.filter(F.col("k").isin([3, 42])).count() == 0
 
 
+
+def test_range_index_counts_files_without_footer_bounds(spark, tmp_path):
+    """Spark writes no footer min/max for string values over ~4 KiB, so a
+    file of such keys has no range. The range index must treat it as
+    affected, else updating one of its keys writes a duplicate row."""
+    from spark_hudi_etl_pipeline_spark.operators.clustering import (
+        file_column_bounds,
+    )
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_indexed_table,
+        table_live_files,
+    )
+
+    path = str(tmp_path / "long_keys")
+    schema = "k string, v string, prec long"
+    a, b = "a" * 5000, "b" * 5000
+    upsert_parquet_indexed(
+        spark, spark.createDataFrame([(a, "v1", 1), (b, "v1", 1)], schema),
+        path, "k", "prec",
+    )
+    _, live = table_live_files(path)
+    assert all(
+        bd["k"] == (None, None) for bd in file_column_bounds(path, ["k"], files=live)
+    )
+    upsert_parquet_indexed(
+        spark, spark.createDataFrame([(a, "v2", 2)], schema), path, "k", "prec"
+    )
+    got = sorted((r["k"][0], r["v"]) for r in read_indexed_table(spark, path).collect())
+    assert got == [("a", "v2"), ("b", "v1")]
+
+
+def test_point_lookup_keeps_files_without_footer_bounds(spark, tmp_path):
+    """The footer branch of read_point_lookup applies the same rule: a
+    file with rows but no bounds stays a candidate next to bounded ones."""
+    from spark_hudi_etl_pipeline_spark.operators.merge import read_point_lookup
+
+    path = str(tmp_path / "mixed_keys")
+    long_key = "z" * 5000
+    for k, v in (("short", "s"), (long_key, "l")):
+        spark.createDataFrame([(k, v)], "k string, v string").coalesce(1).write.mode(
+            "append"
+        ).parquet(path)
+    assert [r["v"] for r in read_point_lookup(spark, path, "k", [long_key]).collect()] == ["l"]
+    assert [r["v"] for r in read_point_lookup(spark, path, "k", ["short"]).collect()] == ["s"]
+
 # ---------------------------------------------------------------------------
 # Bloom-indexed upsert (upsert_parquet_bloom_indexed): per-file bloom
 # bitsets as the write index. Unlike the range index, pruning must

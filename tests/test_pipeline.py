@@ -99,6 +99,56 @@ def test_failure_logs_failed_and_reraises(spark, tmp_path):
     assert get_last_run_timestamp(spark, cfg.log_path, cfg.name) is None
 
 
+@pytest.mark.parametrize("failure", ["publish", "audit"])
+def test_failed_commit_leaves_previous_run_visible(spark, tmp_path, monkeypatch, failure):
+    """A run whose target commit fails after its files were moved in —
+    the manifest publish raises, or a WAP audit rejects the candidate —
+    leaves the target and the watermark as the previous run left them,
+    and no moved-in file behind."""
+    import glob
+    import os
+
+    from spark_hudi_etl_pipeline_spark.operators import merge
+    from spark_hudi_etl_pipeline_spark.operators.wap import AuditFailure, wap_upsert
+    from spark_hudi_etl_pipeline_spark.pipeline import runner
+
+    t0 = now_ms()
+    old_rows = [(1, "u1", t0 - 1000, "a")]
+    cfg = make_config(spark, tmp_path, old_rows)
+    run_pipeline(spark, cfg)
+
+    def state():
+        target = {tuple(r) for r in merge.read_indexed_table(spark, cfg.target_path).collect()}
+        files = sorted(glob.glob(os.path.join(cfg.target_path, "*.parquet")))
+        return target, files, get_last_run_timestamp(spark, cfg.log_path, cfg.name)
+
+    before = state()
+    assert before[2] is not None
+    if failure == "publish":
+        real = merge._manifest_publish
+
+        def publish(path, files, version):
+            if path == cfg.target_path:
+                raise OSError("injected crash before the manifest publish")
+            real(path, files, version)
+
+        monkeypatch.setattr(merge, "_manifest_publish", publish)
+        expected = OSError
+    else:
+        def audited(spark_, batch, path, keys, precombine):
+            return wap_upsert(spark_, batch, path, keys, precombine, audit=lambda c: c)
+
+        monkeypatch.setattr(runner, "upsert_parquet", audited)
+        expected = AuditFailure
+
+    cfg2 = make_config(spark, tmp_path, old_rows + [(2, "u2", now_ms() + 60_000, "b")])
+    with pytest.raises(expected):
+        run_pipeline(spark, cfg2)
+    assert state() == before
+    statuses = [r["status"] for r in get_pipeline_status(spark, cfg.log_path).collect()]
+    assert statuses == ["FAILED", "SUCCESS"]
+
+
 def test_watermark_missing_log_returns_none(spark, tmp_path):
     assert get_last_run_timestamp(spark, str(tmp_path / "nope"), "x") is None
 
