@@ -166,32 +166,10 @@ def quality_score_arrow(col: str | Column = "text") -> Column:
     return F.pandas_udf(score, "double")(_col(col))
 
 
-def language_id(col: str | Column) -> Column:
-    """Heuristic language ID: score = stopword hits per language, argmax
-    (ties → lexicographically first language; 'und' when nothing hits).
-
-    Expressed as a single codegen'd expression tree: one tokenize, one
-    filter+size per language, then a greatest/when cascade — i.e. a
-    map-only operator with no shuffle, linear scan at any scale.
-    """
-    toks = tokens(F.lower(_col(col)))
-
-    def hits(lang: str) -> Column:
-        stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        return F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
-
-    scored = [(lang, hits(lang)) for lang in sorted(STOPWORDS)]
-    best = F.greatest(*[s for _, s in scored])
-    result = F.lit("und")
-    # Reverse order + when-chain ⇒ first-listed language wins ties.
-    for lang, score in reversed(scored):
-        result = F.when((best > 0) & (score == best), F.lit(lang)).otherwise(result)
-    return result
-
-
 def language_id_arrow(col: str | Column = "text") -> Column:
-    """Arrow-vectorized twin of :func:`language_id` — identical values,
-    one Python pass per batch instead of 4× interpreted
+    """Heuristic language ID: stopword hits per language, argmax (ties →
+    lexicographically first language; 'und' when nothing hits). One
+    Python pass per batch instead of 4× interpreted
     filter/array_contains HOF chains (guide §4.2; same exactness
     conventions as :func:`quality_score_arrow`):
 
@@ -205,8 +183,9 @@ def language_id_arrow(col: str | Column = "text") -> Column:
       (``size(NULL)=NULL`` makes every when-condition NULL, so the
       cascade falls through to the literal default).
 
-    Bit-for-bit parity with the expression twin is asserted on
-    adversarial docs + the fixture corpus in tests/test_quality.py."""
+    Bit-for-bit parity with the expression twin (kept in
+    tests/test_quality.py as the oracle) is asserted on adversarial docs
+    + the fixture corpus."""
     import re as _re
 
     import pandas as pd

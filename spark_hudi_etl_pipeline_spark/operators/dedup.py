@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text
 from ..functions.text import _let
+from ..session import fan_out
 
 MERSENNE_PRIME_31 = (1 << 31) - 1  # 2147483647
 
@@ -291,76 +292,6 @@ def minhash_signature_arrow(num_hashes: int = 32, k: int = 5):
     return signature
 
 
-def _size_suffix_bytes(v: str) -> int:
-    """Parse a Spark size conf value ('134217728', '128m', '4MB') to bytes."""
-    s = v.strip().lower().removesuffix("b")
-    mult = 1
-    if s and s[-1] in "kmgt":
-        mult = 1024 ** ("kmgt".index(s[-1]) + 1)
-        s = s[:-1]
-    return int(float(s)) * mult
-
-
-def _estimated_scan_partitions(df: DataFrame, files: list[str]) -> int:
-    """Estimate how many partitions Spark's file-scan packing will plan
-    for ``files`` — replicating FilePartition.maxSplitBytes: splits are
-    packed by size toward maxPartitionBytes (floored at openCostInBytes,
-    scaled down when total/parallelism is smaller). Driver-side metadata
-    only (leaf-file sizes), no job, no plan-to-RDD conversion. Many tiny
-    files therefore estimate to FEW partitions — a raw file count would
-    report the opposite."""
-    import math
-    import os
-    from urllib.parse import unquote, urlparse
-
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    max_part = _size_suffix_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    )
-    open_cost = _size_suffix_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4m")
-    )
-    hconf = sc._jsc.hadoopConfiguration()
-    total = 0
-    for f in files:
-        parsed = urlparse(f)
-        if parsed.scheme in ("", "file"):
-            total += os.path.getsize(unquote(parsed.path))
-        else:
-            jp = sc._jvm.org.apache.hadoop.fs.Path(f)
-            total += jp.getFileSystem(hconf).getFileStatus(jp).getLen()
-    padded = total + len(files) * open_cost
-    bytes_per_core = padded // max(1, sc.defaultParallelism)
-    max_split = min(max_part, max(open_cost, bytes_per_core))
-    return max(1, math.ceil(padded / max(1, max_split)))
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition a CPU-bound stage to default parallelism when the
-    upstream scan plans fewer partitions than cores; no-op on a cluster
-    where scans already have enough splits.
-
-    Gated on min(file count, estimated planned scan partitions): a raw
-    file count alone would see a scan over many TINY files — which Spark
-    packs into few partitions — as "already parallel" and skip the
-    repartition, under-parallelizing exactly the case the fan-out exists
-    for. The estimate replays Spark's split packing from leaf-file sizes
-    (driver-side metadata, no job); ``df.rdd.getNumPartitions()`` would
-    be exact but forces a plan-to-RDD conversion per call. A non-file
-    source reports zero files and fans out — harmless for the
-    local-collection inputs that hits."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    threshold = max(2, target // 4)
-    files = df.inputFiles()
-    planned = len(files)
-    if planned >= threshold:  # many files may still pack into few splits
-        planned = min(planned, _estimated_scan_partitions(df, files))
-    if planned < threshold:
-        df = df.repartition(target)
-    return df
-
-
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -380,9 +311,8 @@ def lsh_candidate_pairs(
     """
     rows = num_hashes // bands
     sig_expr = minhash_signature_arrow(num_hashes, k)(F.col(text_col))
-    # The signature stage is CPU-bound; fan out under-parallel scans
-    # (measured locally: 2.2s → 0.9s).
-    df = _fan_out(df)
+    # The signature stage is CPU-bound Python: one task per core.
+    df = fan_out(df)
     # barrier_col: banding references the signature attribute through a
     # Generate boundary, so the shingle→minhash pipeline runs exactly
     # once per row (CollapseProject would otherwise inline it per band).
@@ -474,7 +404,7 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """``(id, sh, sz)``: distinct shingle set + size per document, one
     shingling pass (Generate barrier)."""
     sh = barrier_col(
-        _fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col))),
+        fan_out(df.select(F.col(id_col).alias("id"), F.col(text_col))),
         "sh",
         F.array_distinct(text.shingles(text_col, k)),
     )
@@ -726,7 +656,7 @@ def simhash_pairs(
     # reference the simhash attribute instead of CollapseProject inlining
     # (and re-running) tokenize+vote 5× per row.
     sh = barrier_col(
-        _fan_out(df.select(F.col(id_col), F.col(text_col))),
+        fan_out(df.select(F.col(id_col), F.col(text_col))),
         "simhash",
         simhash_expr(text_col),
     ).drop(text_col)
@@ -1561,7 +1491,7 @@ def minhash_store_ingest(
     exists = spark.catalog.tableExists(store_table)
     sig_udf = minhash_signature_arrow(num_hashes, k)
     docs = barrier_col(
-        _fan_out(batch.select(F.col(id_col), F.col(text_col))),
+        fan_out(batch.select(F.col(id_col), F.col(text_col))),
         "sig",
         sig_udf(F.col(text_col)),
     ).drop(text_col)

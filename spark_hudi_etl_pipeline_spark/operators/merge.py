@@ -549,7 +549,9 @@ def upsert_parquet_partitioned(
 # key (rename-free), which is exactly Hudi's .hoodie instant-file commit
 # and Delta's _delta_log JSON protocol. Pre-manifest tables (plain
 # directories) fall back to the directory listing and are migrated on
-# their first manifest commit.
+# their first manifest commit, which pins that listing (empty for a new
+# path) as a v0 guard before moving files in and drops the guard once
+# its own version is published.
 # ---------------------------------------------------------------------------
 
 _MANIFEST_DIR = "_manifest"  # underscore prefix: invisible to table scans
@@ -680,6 +682,7 @@ def _commit_staged(
 
     staging = f"{path}/.staging-{uuid.uuid4().hex}"
     moved = []
+    guard = None
     try:
         try:
             obs = Observation()
@@ -687,6 +690,13 @@ def _commit_staged(
                 "overwrite"
             ).parquet(staging)
             n_written = int(obs.get["n"])
+            if _manifest_latest(path) is None:
+                # First commit: pin the pre-commit state (the listing,
+                # empty for a new path) as v0 before anything moves in,
+                # so a crash before the publish leaves the moved files
+                # unreferenced for readers and vacuum_orphans.
+                _manifest_publish(path, table_live_files(path)[1], 0)
+                guard = os.path.join(path, _MANIFEST_DIR, "v0.json")
             for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
                 dest = os.path.join(
                     path, f"part-upsert-{uuid.uuid4().hex}-{i:05d}.parquet"
@@ -705,7 +715,9 @@ def _commit_staged(
                 os.remove(os.path.join(path, f))
             except OSError:
                 pass
+        _drop_guard(guard)  # the table stays as it was: no manifest
         raise
+    _drop_guard(guard)  # v{version} supersedes it; nothing pins v0
     # Post-commit cleaner (Hudi's hoodie.clean.automatic): replaced files
     # are unreferenced by the new manifest; removing them is best-effort
     # hygiene, not correctness — a crash here leaves orphans that every
@@ -721,6 +733,20 @@ def _commit_staged(
                 except OSError:
                     pass
     return moved, n_written
+
+
+def _drop_guard(guard: str | None) -> None:
+    """Remove the v0 guard manifest of a first commit, and the manifest
+    directory with it when that leaves it empty."""
+    import os
+
+    if guard is None:
+        return
+    try:
+        os.remove(guard)
+        os.rmdir(os.path.dirname(guard))  # fails unless empty
+    except OSError:
+        pass
 
 
 class IndexedUpsertResult(NamedTuple):

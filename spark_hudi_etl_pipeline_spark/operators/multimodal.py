@@ -525,27 +525,6 @@ def repartition_for_payloads(
     return df.repartition(n)
 
 
-def spread_payload_rows(df: DataFrame, spark) -> DataFrame:
-    """Spread payload rows across executor cores ONLY when the scan is
-    split-starved (fewer input splits than cores — e.g. a one-file
-    fixture). When the scan already carries ≥cores splits the df passes
-    through untouched: a Python-bound decode stage downstream pipelines
-    fine and an unconditional repartition would shuffle every payload
-    byte for nothing. At production scale the right knobs are input
-    splits (`spark.sql.files.maxPartitionBytes`) or the byte-budgeted
-    repartition_for_payloads — this helper only rescues tiny inputs.
-
-    MUST be called on the scan-side DataFrame, BEFORE any
-    shuffle-inducing op: the split probe reads the physical
-    partitioning of the whole upstream plan, so after a shuffle it
-    would see ``spark.sql.shuffle.partitions`` (usually ≥ cores) and
-    the rescue would silently never fire."""
-    cores = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
-        return df
-    return df.repartition(cores)
-
-
 #: Frame row produced by sample_frames: one row PER SAMPLED FRAME (1→N
 #: expansion inside mapInPandas — the shape video decode needs).
 FRAME_SCHEMA = StructType(

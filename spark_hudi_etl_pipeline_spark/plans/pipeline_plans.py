@@ -27,11 +27,8 @@ from pyspark.sql import functions as F
 
 from ..operators.latest import asof_join
 from ..operators.merge import merge_upsert, upsert_parquet_partitioned
-from ..operators.multimodal import (
-    attach_metadata,
-    decode_features,
-    spread_payload_rows,
-)
+from ..operators.multimodal import attach_metadata, decode_features
+from ..session import fan_out
 from ..sources import load_table
 from .registry import query, scratch
 
@@ -485,7 +482,7 @@ def image_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         media_type="image",
     )
-    m = spread_payload_rows(m, spark)
+    m = fan_out(m)
     hashes = decode_features(m).select(
         "media_id",
         F.expr("aggregate(features, 0L, (a, x) -> a + x) div 64").alias("avg"),
@@ -638,9 +635,9 @@ def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_type="video",
     )
     # the documents fixture is one parquet file -> one input split;
-    # spread_payload_rows rescues exactly that case and is a no-op on a
+    # fan_out rescues exactly that case and is a no-op on a
     # well-split scan (at real payload volume: repartition_for_payloads)
-    m = spread_payload_rows(m, spark)
+    m = fan_out(m)
     frames = sample_frames(m, n_frames=8)
     imgs = attach_metadata(
         frames.select(
@@ -1933,7 +1930,7 @@ def audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         media_type="audio",
     )
-    m = spread_payload_rows(m, spark)
+    m = fan_out(m)
     seg = (
         decode_features(m)
         .select(

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text
+from ..session import fan_out
 from ..sources import load_table
 from .registry import query, scratch
 
@@ -82,9 +83,10 @@ ORDER BY doc_id
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite heuristic quality score per document (length sweet-spot,
     punctuation, stopword ratio, mean token length)."""
-    d = load_table(spark, sf_dir, "documents")
     # Arrow twin (parity-asserted): the interpreted stopword/token HOF
-    # chain cost ~0.7 s/pass at sf0.1; one Python pass per batch instead
+    # chain cost ~0.7 s/pass at sf0.1; one Python pass per batch instead,
+    # fanned out to one task per core.
+    d = fan_out(load_table(spark, sf_dir, "documents"))
     return d.select(
         "doc_id", text.quality_score_arrow().alias("quality")
     ).orderBy("doc_id")

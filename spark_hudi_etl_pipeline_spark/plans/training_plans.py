@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as textfns
+from ..session import fan_out
 from ..sources import load_table
 from .registry import query, scratch
 
@@ -96,19 +97,18 @@ def text_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition metrics and a keep/drop gate.
 
     MAP-ONLY: every metric is a function of one document's own grams, so
-    nothing shuffles. Default path is the Arrow twin (counting grams in
-    one numpy/Counter pass per batch — Catalyst HOFs are interpreted, so
-    the expression form pays ~4× on the same rows; guide §4.2); the
-    expression twin remains for parity tests and Arrow-less deployments,
-    and both are bit-identical to the oracle (asserted at three fixture
-    scales in tests/test_training.py)."""
-    return repetition_metrics_arrow(load_table(spark, sf_dir, "documents"))
+    nothing shuffles but the fan-out to one task per core. Counting grams
+    in one Python/Counter pass per batch beats the interpreted Catalyst
+    HOF form ~4× on the same rows (guide §4.2); that expression form is
+    the parity oracle in tests/test_training.py."""
+    return repetition_metrics_arrow(fan_out(load_table(spark, sf_dir, "documents")))
 
 
 def repetition_metrics_arrow(docs: DataFrame) -> DataFrame:
-    """Arrow-vectorized twin of :func:`repetition_metrics` — identical
-    output, one Python/Counter pass per document batch instead of the
-    interpreted sort/run-length HOF pipeline.
+    """Per-document repetition metrics and the keep gate, one
+    Python/Counter pass per document batch instead of an interpreted
+    sort/run-length HOF pipeline (the expression twin in
+    tests/test_training.py, asserted bit-identical).
 
     Exactness contract (same conventions as
     ``operators/dedup.py::minhash_signature_arrow``, which is asserted
@@ -182,118 +182,6 @@ def repetition_metrics_arrow(docs: DataFrame) -> DataFrame:
             (F.col("m.top_bigram_frac") <= 0.2)
             & (F.col("m.dup_trigram_frac") <= 0.6)
             & (F.col("m.distinct_word_ratio") >= 0.3)
-        ).alias("keep"),
-    ).orderBy("doc_id")
-
-
-def repetition_metrics(docs: DataFrame) -> DataFrame:
-    """Expression twin of :func:`repetition_metrics_arrow`, the
-    DataFrame-level core of ``text_repetition_filters`` (kept as the
-    parity-test reference; ``tools/scale_probe.py --queries
-    text_repetition_filters`` times the Arrow path the query runs).
-
-    Per-k pipeline, all within the row: gram strings → xxhash64 codes
-    (8-byte comparisons instead of string compares; a collision would
-    need two distinct same-k grams INSIDE one document, P ≈ grams²/2⁶⁴ ≈
-    1e-15, and the string-gram oracle verifies none occurred at test
-    scale) → ``array_sort`` → run-length stats: equal grams are adjacent
-    after the sort, so run boundaries are the positions where a code
-    differs from its predecessor; run lengths are differences of
-    consecutive boundary positions. max run = top gram count, runs >1 =
-    duplicated grams, #runs = distinct grams.
-
-    Documents shorter than a gram size keep their row with NULL for that
-    metric (and a NULL ``keep`` gate → treated as not-keep); they are
-    never dropped or mis-shingled (see ``_gram_starts``)."""
-    d = docs.select("doc_id", _tokens().alias("t"))
-    n = F.size("t")
-
-    def gram_codes(k: int) -> F.Column:
-        if k == 1:
-            src = F.col("t")
-        else:
-            src = F.transform(
-                _gram_starts(n, k),
-                lambda i: F.concat_ws(" ", F.slice(F.col("t"), i, k)),
-            )
-        return F.array_sort(F.transform(src, lambda g: F.xxhash64(g)))
-
-    def let(expr: F.Column, body) -> F.Column:
-        """Expression-level let-binding: bind ``expr`` to a lambda
-        variable via transform-over-singleton so it is evaluated ONCE
-        per row. Without this, Catalyst inlines a sub-expression at
-        every reference site (CollapseProject has no common-
-        subexpression reuse across HOF lambdas), and the nested
-        sort/filter/zip pipeline below re-evaluates multiplicatively —
-        measured 140× slower."""
-        return F.element_at(F.transform(F.array(expr), body), 1)
-
-    def run_stats(sorted_codes: F.Column) -> F.Column:
-        """struct(total, n_runs, max_run, dup_total) from a sorted code
-        array — pure array expressions; every intermediate array is
-        let-bound so it is computed exactly once per row."""
-
-        def with_sorted(s: F.Column) -> F.Column:
-            total = F.size(s)
-            # 1-based boundary positions: first element, or code !=
-            # predecessor (equal codes are adjacent after the sort).
-            bnd_expr = F.filter(
-                F.sequence(F.lit(1), total),
-                lambda i: (i == F.lit(1))
-                | (F.element_at(s, i) != F.element_at(s, i - 1)),
-            )
-
-            def with_bounds(bnd: F.Column) -> F.Column:
-                n_runs = F.size(bnd)
-                # Run lengths: next boundary (or n+1) minus this boundary.
-                ends = F.concat(F.slice(bnd, 2, n_runs - 1), F.array(total + 1))
-                runs_expr = F.zip_with(bnd, ends, lambda b, e: e - b)
-
-                def with_runs(runs: F.Column) -> F.Column:
-                    return F.struct(
-                        total.alias("total"),
-                        n_runs.alias("n_runs"),
-                        F.array_max(runs).alias("max_run"),
-                        F.aggregate(
-                            runs,
-                            F.lit(0),
-                            lambda acc, r: acc + F.when(r > 1, r).otherwise(0),
-                        ).alias("dup_total"),
-                    )
-
-                return let(runs_expr, with_runs)
-
-            return F.when(total > 0, let(bnd_expr, with_bounds))
-
-        return let(sorted_codes, with_sorted)
-
-    stats = d.select(
-        "doc_id",
-        run_stats(gram_codes(1)).alias("s1"),
-        run_stats(gram_codes(2)).alias("s2"),
-        run_stats(gram_codes(3)).alias("s3"),
-    )
-    per_doc = stats.select(
-        "doc_id",
-        F.round(F.col("s2.max_run") / F.col("s2.total"), 6).alias(
-            "top_bigram_frac"
-        ),
-        F.round(F.col("s3.dup_total") / F.col("s3.total"), 6).alias(
-            "dup_trigram_frac"
-        ),
-        F.round(F.col("s1.n_runs") / F.col("s1.total"), 6).alias(
-            "distinct_word_ratio"
-        ),
-    )
-    return per_doc.select(
-        "doc_id",
-        "top_bigram_frac",
-        "dup_trigram_frac",
-        "distinct_word_ratio",
-        (
-            (F.col("top_bigram_frac") <= 0.2)
-            & (F.col("dup_trigram_frac") <= 0.6)
-            & (F.col("distinct_word_ratio") >= 0.3)
         ).alias("keep"),
     ).orderBy("doc_id")
 
@@ -1314,8 +1202,8 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.size("t")
     # Shingles travel as xxhash64 codes: the df-count shuffle and the
     # frequent-set broadcast carry 8 bytes per gram instead of ~50-char
-    # strings (same no-collision argument as repetition_metrics — the
-    # string-shingle oracle verifies it).
+    # strings (a collision needs two distinct grams inside one shuffle
+    # key, P ≈ grams²/2⁶⁴; the string-shingle oracle verifies none).
     sh = d.select(
         "doc_id",
         F.explode(

@@ -35,8 +35,9 @@ from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
 #: a ``local`` profile for in-process testing.
 ENV_CONFIGS: dict[str, dict[str, str]] = {
     "local": {
+        # No spark.default.parallelism: Spark's local default is the core
+        # count, so an RDD or a fan_out runs one wave of tasks.
         "spark.sql.shuffle.partitions": "32",
-        "spark.default.parallelism": "32",
     },
     "dev": {
         "spark.sql.shuffle.partitions": "10",
@@ -147,9 +148,9 @@ def local_frame(
     as a ``LocalTableScan``: the rows travel to the JVM as one Arrow table,
     so building and collecting the frame runs no Spark job and no Python
     worker. ``spark.createDataFrame(list)`` instead parallelizes the rows
-    into ``spark.default.parallelism`` Python-backed partitions (32 in the
-    ``local`` profile, 2,000 in ``prod``), and every downstream stage
-    pays one task per partition.
+    into ``spark.default.parallelism`` Python-backed partitions (the core
+    count in the ``local`` profile, 2,000 in ``prod``), and every
+    downstream stage pays one task per partition.
 
     ``rows`` are tuples or ``Row``s; ``schema`` is a ``StructType`` or a
     DDL string. Each row passes the same type check and conversion as
@@ -172,3 +173,57 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema)
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition a split-starved input (fewer input splits than
+    ``defaultParallelism``, e.g. a one-file fixture scan) round-robin to
+    ``defaultParallelism``, so the CPU-bound stage above it (an Arrow
+    UDF, a MinHash or SimHash signature, a payload decode) runs one task
+    per core. An input that already has a split per core passes through
+    as the same object: no shuffle of every row for nothing.
+
+    Every Python-worker task pays a fixed 0.15–0.4 s before it reads a
+    row, so the target is the core count (Spark's local default), never
+    more: 32 partitions on 4 cores are 8 waves of that fixed cost.
+
+    Splits are counted without a job. A file scan replays Spark's split
+    packing (``FilePartition.maxSplitBytes``) from leaf-file sizes, so a
+    scan over many tiny files, which Spark packs into few partitions,
+    still counts as starved. Any other source reports its RDD's
+    partition count. Call this on the scan side, before any shuffle:
+    after one, the count no longer describes the stage's input."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    files = df.inputFiles()
+    splits = _scan_splits(spark, files) if files else df.rdd.getNumPartitions()
+    return df if splits >= cores else df.repartition(cores)
+
+
+def _scan_splits(spark: SparkSession, files: list[str]) -> int:
+    """Partitions Spark's file scan plans for ``files``: each file is cut
+    into chunks of at most maxSplitBytes (maxPartitionBytes, shrunk
+    toward total ÷ parallelism, floored at openCostInBytes), and chunks
+    are packed together, each charged its size plus openCostInBytes."""
+    import math
+    from urllib.parse import unquote, urlparse
+
+    sc = spark.sparkContext
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    sizes = []
+    for f in files:
+        parsed = urlparse(f)
+        if parsed.scheme in ("", "file"):
+            sizes.append(os.path.getsize(unquote(parsed.path)))
+        else:
+            jp = sc._jvm.org.apache.hadoop.fs.Path(f)
+            hconf = sc._jsc.hadoopConfiguration()
+            sizes.append(jp.getFileSystem(hconf).getFileStatus(jp).getLen())
+    padded = sum(sizes) + len(sizes) * open_cost
+    max_split = min(
+        conf.filesMaxPartitionBytes(),
+        max(open_cost, padded // sc.defaultParallelism),
+    )
+    chunks = sum(math.ceil(s / max_split) for s in sizes)
+    return min(chunks, math.ceil(padded / max_split))

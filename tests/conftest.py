@@ -21,15 +21,10 @@ def spark():
         "spark-graft-tests",
         master="local[8]",
         extra_configs={
+            # spark.default.parallelism is left to Spark: local[8] makes
+            # it 8, one wave of tasks for createDataFrame(list) frames
+            # and for session.fan_out.
             "spark.sql.shuffle.partitions": "8",
-            # Match local[8]. Engine code builds its small frames with
-            # session.local_frame (a LocalTableScan, no Python worker),
-            # so it no longer depends on this pin. Frames the tests build
-            # themselves with createDataFrame(list) still do: the 'local'
-            # profile's 32 would parallelize each into 32 Python-backed
-            # partitions, and every downstream task pays a Python-worker
-            # round-trip (a 4-row crossJoin once took 33s that way).
-            "spark.default.parallelism": "8",
             "spark.ui.enabled": "false",
             "spark.ui.showConsoleProgress": "false",
         },

@@ -592,3 +592,69 @@ def test_retire_manifests_rules(spark, tmp_path):
     assert retire_manifests(path, pinned={2}) == [1, 3]
     mdir = os.path.join(path, "_manifest")
     assert sorted(os.listdir(mdir)) == ["v2.json", "v4.json"]
+
+
+_FIRST_COMMIT_CRASH = r"""
+import os, sys
+from spark_hudi_etl_pipeline_spark.operators import merge
+from spark_hudi_etl_pipeline_spark.session import get_spark_session
+
+spark = get_spark_session(
+    "first-commit-crash", master="local[1]",
+    extra_configs={"spark.ui.enabled": "false"},
+)
+publish = merge._manifest_publish
+
+def crash_on_commit(path, files, version):
+    if any(f.startswith("part-upsert-") for f in files):
+        os._exit(3)  # killed after the move, before the commit point
+    publish(path, files, version)
+
+merge._manifest_publish = crash_on_commit
+batch = spark.createDataFrame(
+    [(k, "new", 2) for k in range(3)], "k long, v string, prec long"
+)
+merge.upsert_parquet(spark, batch, sys.argv[1], ["k"], "prec")
+"""
+
+
+def test_first_commit_crash_exposes_nothing(spark, tmp_path):
+    """A process killed inside the publish of a table's FIRST manifest
+    commit (here: migrating a plain pre-manifest directory) must leave
+    the moved-in file unreferenced: readers keep the pre-commit rows,
+    vacuum_orphans reclaims the file, and a re-run commits the batch."""
+    import glob
+    import subprocess
+    import sys
+
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_indexed_table,
+        table_live_files,
+        upsert_parquet,
+        vacuum_orphans,
+    )
+
+    path = str(tmp_path / "t")
+    old = [(k, "old", 1) for k in range(3)]
+    spark.createDataFrame(old, KSCHEMA).coalesce(1).write.parquet(path)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _FIRST_COMMIT_CRASH, path],
+        capture_output=True, text=True, timeout=300, cwd=repo,
+        env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 3, proc.stderr[-2000:]
+    moved = {
+        os.path.basename(f)
+        for f in glob.glob(os.path.join(path, "part-upsert-*.parquet"))
+    }
+    assert moved  # the crash really came after the move
+    assert not moved & set(table_live_files(path)[1])
+    assert rows_of(read_indexed_table(spark, path)) == set(old)
+    assert set(vacuum_orphans(path, min_age_seconds=0)) == moved
+
+    batch = spark.createDataFrame([(k, "new", 2) for k in range(3)], KSCHEMA)
+    upsert_parquet(spark, batch, path, ["k"], "prec")
+    assert rows_of(read_indexed_table(spark, path)) == {
+        (k, "new", 2) for k in range(3)
+    }

@@ -9,6 +9,28 @@ from spark_hudi_etl_pipeline_spark.plans import QUERIES
 from tests.conftest import SF_SMALL
 
 
+def _language_id(col: str) -> F.Column:
+    """Expression reference for ``text.language_id_arrow``: stopword
+    hits per language (one tokenize, one filter+size per language), then
+    a when-cascade argmax — ties → first language in sorted order, no
+    hits → 'und'."""
+    from spark_hudi_etl_pipeline_spark.functions.text import STOPWORDS, tokens
+
+    toks = tokens(F.lower(F.col(col)))
+
+    def hits(lang: str) -> F.Column:
+        stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+        return F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
+
+    scored = [(lang, hits(lang)) for lang in sorted(STOPWORDS)]
+    best = F.greatest(*[s for _, s in scored])
+    result = F.lit("und")
+    # Reverse order + when-chain ⇒ first-listed language wins ties.
+    for lang, score in reversed(scored):
+        result = F.when((best > 0) & (score == best), F.lit(lang)).otherwise(result)
+    return result
+
+
 def test_constraints_clean_fixture(spark):
     rows = {r["check_name"]: r["n_violations"]
             for r in QUERIES["validate_constraints"](spark, SF_SMALL).collect()}
@@ -263,11 +285,11 @@ def test_language_id_arrow_parity(spark):
         ],
         ["doc_id", "text"],
     )
-    expr = d.select("doc_id", text.language_id("text").alias("p")).collect()
+    expr = d.select("doc_id", _language_id("text").alias("p")).collect()
     arrow = d.select("doc_id", text.language_id_arrow("text").alias("p")).collect()
     assert [tuple(r) for r in expr] == [tuple(r) for r in arrow]
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    e = docs.select("doc_id", text.language_id("text").alias("p")).orderBy("doc_id").collect()
+    e = docs.select("doc_id", _language_id("text").alias("p")).orderBy("doc_id").collect()
     a = docs.select("doc_id", text.language_id_arrow("text").alias("p")).orderBy("doc_id").collect()
     assert [tuple(r) for r in e] == [tuple(r) for r in a]

@@ -1,7 +1,8 @@
 """Round-10 analytics kernels: windowed sequential funnel, CUSUM
 change-point, winsorized robust stats — planted-evidence fixtures for
 exactly the cases the docstrings claim naive forms get wrong — plus
-the spread_payload_rows split-rescue unit test (r10 verdict ask #7).
+the split-rescue unit test of ``session.fan_out`` (the helper that
+replaced ``spread_payload_rows``).
 Cross-engine value parity is covered by the DuckDB oracles
 (tools/oracle_check.py)."""
 
@@ -148,17 +149,13 @@ def test_spread_payload_rows_rescues_only_split_starved(spark):
     """Split-starved scan (1 partition) → repartitioned to cores;
     a df already carrying ≥cores partitions passes through with its
     partitioning untouched (no shuffle inserted)."""
-    from spark_hudi_etl_pipeline_spark.operators.multimodal import (
-        spread_payload_rows,
-    )
+    from spark_hudi_etl_pipeline_spark.session import fan_out
 
     cores = spark.sparkContext.defaultParallelism
     starved = spark.range(100).coalesce(1)
     assert starved.rdd.getNumPartitions() == 1
-    assert (
-        spread_payload_rows(starved, spark).rdd.getNumPartitions() == cores
-    )
+    assert fan_out(starved).rdd.getNumPartitions() == cores
 
     wide = spark.range(1000).repartition(cores + 3)
-    out = spread_payload_rows(wide, spark)
+    out = fan_out(wide)
     assert out is wide  # passthrough, not merely same-count

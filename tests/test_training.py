@@ -12,6 +12,101 @@ from spark_hudi_etl_pipeline_spark.plans import QUERIES
 from tests.conftest import SF_SMALL
 
 
+def _repetition_metrics(docs):
+    """Expression reference for ``repetition_metrics_arrow``: per k, gram
+    strings → xxhash64 codes → ``array_sort`` → run-length stats (equal
+    grams are adjacent after the sort; max run = top gram count, runs > 1
+    = duplicated grams, #runs = distinct grams). Documents shorter than a
+    gram size get NULL for that metric (see ``_gram_starts``)."""
+    from spark_hudi_etl_pipeline_spark.functions.text import _let
+    from spark_hudi_etl_pipeline_spark.plans.training_plans import (
+        _gram_starts,
+        _tokens,
+    )
+
+    d = docs.select("doc_id", _tokens().alias("t"))
+    n = F.size("t")
+
+    def gram_codes(k: int) -> F.Column:
+        if k == 1:
+            src = F.col("t")
+        else:
+            src = F.transform(
+                _gram_starts(n, k),
+                lambda i: F.concat_ws(" ", F.slice(F.col("t"), i, k)),
+            )
+        return F.array_sort(F.transform(src, lambda g: F.xxhash64(g)))
+
+    def run_stats(sorted_codes: F.Column) -> F.Column:
+        """struct(total, n_runs, max_run, dup_total) from a sorted code
+        array; every intermediate array is let-bound (computed once per
+        row: inlined, the nested pipeline re-evaluates ~140× slower)."""
+
+        def with_sorted(s: F.Column) -> F.Column:
+            total = F.size(s)
+            # 1-based boundary positions: first element, or code !=
+            # predecessor (equal codes are adjacent after the sort).
+            bnd_expr = F.filter(
+                F.sequence(F.lit(1), total),
+                lambda i: (i == F.lit(1))
+                | (F.element_at(s, i) != F.element_at(s, i - 1)),
+            )
+
+            def with_bounds(bnd: F.Column) -> F.Column:
+                n_runs = F.size(bnd)
+                # Run lengths: next boundary (or n+1) minus this boundary.
+                ends = F.concat(F.slice(bnd, 2, n_runs - 1), F.array(total + 1))
+                runs_expr = F.zip_with(bnd, ends, lambda b, e: e - b)
+
+                def with_runs(runs: F.Column) -> F.Column:
+                    return F.struct(
+                        total.alias("total"),
+                        n_runs.alias("n_runs"),
+                        F.array_max(runs).alias("max_run"),
+                        F.aggregate(
+                            runs,
+                            F.lit(0),
+                            lambda acc, r: acc + F.when(r > 1, r).otherwise(0),
+                        ).alias("dup_total"),
+                    )
+
+                return _let(runs_expr, with_runs)
+
+            return F.when(total > 0, _let(bnd_expr, with_bounds))
+
+        return _let(sorted_codes, with_sorted)
+
+    stats = d.select(
+        "doc_id",
+        run_stats(gram_codes(1)).alias("s1"),
+        run_stats(gram_codes(2)).alias("s2"),
+        run_stats(gram_codes(3)).alias("s3"),
+    )
+    per_doc = stats.select(
+        "doc_id",
+        F.round(F.col("s2.max_run") / F.col("s2.total"), 6).alias(
+            "top_bigram_frac"
+        ),
+        F.round(F.col("s3.dup_total") / F.col("s3.total"), 6).alias(
+            "dup_trigram_frac"
+        ),
+        F.round(F.col("s1.n_runs") / F.col("s1.total"), 6).alias(
+            "distinct_word_ratio"
+        ),
+    )
+    return per_doc.select(
+        "doc_id",
+        "top_bigram_frac",
+        "dup_trigram_frac",
+        "distinct_word_ratio",
+        (
+            (F.col("top_bigram_frac") <= 0.2)
+            & (F.col("dup_trigram_frac") <= 0.6)
+            & (F.col("distinct_word_ratio") >= 0.3)
+        ).alias("keep"),
+    ).orderBy("doc_id")
+
+
 def test_chunks_reconstruct_documents(spark):
     """Concatenating a doc's chunks in order reproduces its normalized
     token stream exactly — no token lost, duplicated, or reordered."""
@@ -247,14 +342,14 @@ def test_repetition_metrics_short_docs(spark):
     """Docs shorter than the gram size must not crash (Spark sequence()
     reverses on stop<start) and yield NULL metrics, not bogus grams."""
     from spark_hudi_etl_pipeline_spark.plans.training_plans import (
-        repetition_metrics,
+        repetition_metrics_arrow,
     )
 
     d = spark.createDataFrame(
         [(1, "solo"), (2, "two words"), (3, "a b c d e")],
         ["doc_id", "text"],
     )
-    rows = {r["doc_id"]: r for r in repetition_metrics(d).collect()}
+    rows = {r["doc_id"]: r for r in repetition_metrics_arrow(d).collect()}
     assert set(rows) == {1, 2, 3}
     assert rows[1]["top_bigram_frac"] is None       # no bigrams
     assert rows[1]["dup_trigram_frac"] is None      # no trigrams
@@ -587,7 +682,6 @@ def test_repetition_metrics_arrow_parity(spark):
     \\s, space-only trim), same gram counting, same HALF_UP round(6) —
     including short docs (NULL metrics), null text, and repeated grams."""
     from spark_hudi_etl_pipeline_spark.plans.training_plans import (
-        repetition_metrics,
         repetition_metrics_arrow,
     )
 
@@ -605,13 +699,13 @@ def test_repetition_metrics_arrow_parity(spark):
         ],
         ["doc_id", "text"],
     )
-    expr_rows = [tuple(r) for r in repetition_metrics(d).collect()]
+    expr_rows = [tuple(r) for r in _repetition_metrics(d).collect()]
     arrow_rows = [tuple(r) for r in repetition_metrics_arrow(d).collect()]
     assert expr_rows == arrow_rows
 
     from spark_hudi_etl_pipeline_spark.sources import load_table
 
     docs = load_table(spark, SF_SMALL, "documents")
-    assert [tuple(r) for r in repetition_metrics(docs).collect()] == [
+    assert [tuple(r) for r in _repetition_metrics(docs).collect()] == [
         tuple(r) for r in repetition_metrics_arrow(docs).collect()
     ]
