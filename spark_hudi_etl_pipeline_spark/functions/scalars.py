@@ -45,9 +45,3 @@ def epoch_ms_to_timestamp(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.timestamp_millis(c.cast("long"))
 
-
-def now_epoch_ms() -> Column:
-    """C7 — engine-side equivalent of the reference's driver-side
-    ``int(time.time()*1000)`` (:154): computed on the JVM, no driver math.
-    """
-    return F.unix_millis(F.current_timestamp())

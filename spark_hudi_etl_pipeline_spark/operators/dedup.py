@@ -3,8 +3,9 @@ Phase 4): exact, fingerprint, MinHash+LSH, SimHash, n-gram Jaccard, and
 embedding-cosine near-dup.
 
 All operators are pure DataFrame transforms built from Catalyst
-expressions (no Python UDFs): hashing is ``xxhash64``/``md5``, set math
-is higher-order array functions, candidate generation is LSH band
+expressions, except the MinHash signature (one Arrow UDF,
+:func:`minhash_signature_arrow`): hashing is ``xxhash64``/``md5``, set
+math is higher-order array functions, candidate generation is LSH band
 bucketing — the standard web-scale dedup pipeline shape (shingle →
 minhash → band → bucket-join → verify), which is how you avoid the O(n²)
 pair blowup at 100 TB:
@@ -186,20 +187,6 @@ def fingerprint_store_ingest(
 # --------------------------------------------------------------------------
 
 
-def shingle_hashes(text_col, k: int = 5):
-    """Column expr: distinct word-k-shingles → 31-bit hash values.
-
-    Base hash is the engine-portable md5-60bit family
-    (:func:`..functions.text.portable_hash60`), so MinHash signatures —
-    and therefore LSH banding — are bit-identical in DuckDB: the
-    candidate-pair pipeline is value-checkable by an exact SQL oracle
-    rather than rows-only."""
-    sh = F.array_distinct(text.shingles(text_col, k))
-    return F.transform(
-        sh, lambda s: F.pmod(text.portable_hash60(s), F.lit(MERSENNE_PRIME_31))
-    )
-
-
 def barrier_col(df: DataFrame, name: str, expr) -> DataFrame:
     """Attach ``expr`` as column ``name`` behind an optimization barrier.
 
@@ -212,51 +199,24 @@ def barrier_col(df: DataFrame, name: str, expr) -> DataFrame:
     return df.select("*", F.explode(F.array(expr)).alias(name))
 
 
-def minhash_signature(text_col, num_hashes: int = 32, k: int = 5):
-    """Column expr: MinHash signature (array<bigint>, length
-    ``num_hashes``) via seeded universal hashing
-    ``min((a_i * h + b_i) mod p)`` over the shingle hash set.
-
-    Single-pass: one ``aggregate`` over the shingle hashes updates all
-    ``num_hashes`` minima per element (the shingle pipeline executes once
-    per row, not once per permutation). All arithmetic stays < 2^62 so it
-    is safe under ANSI overflow checks.
-    """
-    hashes = shingle_hashes(text_col, k)
-    coeffs = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in MINHASH_COEFFS[:num_hashes]
-        ]
-    )
-    init = F.array_repeat(F.lit(MERSENNE_PRIME_31).cast("long"), num_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            coeffs,
-            lambda m, c: F.least(
-                m, F.pmod(c["a"] * h + c["b"], F.lit(MERSENNE_PRIME_31))
-            ),
-        ),
-    )
-
-
 def minhash_signature_arrow(num_hashes: int = 32, k: int = 5):
-    """Arrow-vectorized MinHash signature UDF — the hot-path twin of
-    :func:`minhash_signature`.
+    """Arrow-vectorized MinHash signature UDF: array<bigint> of length
+    ``num_hashes``, ``min((a_i * h + b_i) mod p)`` over the doc's
+    distinct word-k-shingle hashes with the seeded MINHASH_COEFFS.
 
     Catalyst higher-order functions are interpreted (no whole-stage
-    codegen), which makes the pure-expression signature ~10× slower than
+    codegen), which made the pure-expression signature ~10× slower than
     this numpy formulation (measured: 6.6s vs 0.66s for 5k docs); at
-    100 TB the signature scan is the dominant cost, so the Arrow path is
-    the default. Same shingling semantics as functions.text.shingles
-    (Java-regex-compatible ASCII normalize), same md5-60bit portable
-    base hash as :func:`shingle_hashes`, same seeded universal-hash
-    coefficients — the two implementations produce BIT-IDENTICAL
-    signatures (asserted in tests/test_dedup.py), so either path
-    hash-matches the DuckDB oracle.
+    100 TB the signature scan is the dominant cost. Same shingling
+    semantics as functions.text.shingles (Java-regex-compatible ASCII
+    normalize) and the md5-60bit portable base hash
+    (:func:`..functions.text.portable_hash60`), so signatures — and
+    therefore LSH banding — are bit-identical in DuckDB: the
+    candidate-pair pipeline is value-checkable by an exact SQL oracle.
+    The Catalyst-expression form is kept as the reference oracle in
+    ``tests/test_dedup.py`` (``_minhash_signature``), which asserts
+    BIT-IDENTICAL signatures. All arithmetic stays < 2^62, safe under
+    ANSI overflow checks.
     """
     import hashlib
 
@@ -954,101 +914,27 @@ def connected_components(
     *,
     id_col: str = "id",
     max_iterations: int = 20,
-    algorithm: str = "star",
 ) -> DataFrame:
     """Label every node with the minimum id reachable through the
     (undirected) edge set — the canonical-representative step that turns
     near-dup PAIRS into a keep/drop decision per document.
 
-    ``edges`` must have columns (id_a, id_b). Two interchangeable
-    engines (identical output — the component-minimum label):
-
-    - ``algorithm="star"`` (default): alternating large-star/small-star
-      (Kiveris et al., "Connected Components in MapReduce and Beyond").
-      Each round rewires every node toward its neighborhood minimum, so
-      the edge relation converges to per-component stars in
-      O(log n) rounds REGARDLESS of graph diameter — the cluster-scale
-      choice when near-dup graphs chain (a path of k pairwise-similar
-      docs has diameter k).
-    - ``algorithm="label_prop"``: iterative min-label propagation with
-      pointer jumping — O(log diameter) rounds, one (node, label) state
-      table; marginally cheaper per round on the tiny-clique graphs
-      fuzzy dedup usually produces (diameter ≤ 2-3 ⇒ 2-3 rounds).
-
-    Both shuffle on node/edge ids only, AQE-coalesced, with per-round
-    checkpoints truncating lineage so round N's plan doesn't replay
-    rounds 1..N-1.
+    ``edges`` must have columns (id_a, id_b). The engine is alternating
+    large-star/small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", :func:`_cc_star`): each round rewires every
+    node toward its neighborhood minimum, so the edge relation converges
+    to per-component stars in O(log n) rounds REGARDLESS of graph
+    diameter — near-dup graphs chain (a path of k pairwise-similar docs
+    has diameter k). It shuffles on node/edge ids only, AQE-coalesced,
+    with per-round checkpoints truncating lineage so round N's plan
+    doesn't replay rounds 1..N-1.
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
     ``max_iterations`` — a silently-unconverged labeling would hand back
     WRONG canonical ids, which is worse than failing.
     """
-    if algorithm == "star":
-        labels, _rounds = _cc_star(nodes, edges, id_col, max_iterations)
-        return labels
-    if algorithm != "label_prop":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    sym = edges.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")
-    ).localCheckpoint(eager=True)
-    sym = sym.localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max_iterations):
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        updated = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-            # checkpoint BEFORE the self-join below, or the neighbor
-            # aggregation would execute twice per round (once per side).
-            .localCheckpoint(eager=True)
-        )
-        # Pointer jumping: adopt the label OF my current label — each
-        # round the pointer chain halves, so a path graph converges in
-        # O(log diameter) rounds instead of O(diameter).
-        as_parent = updated.select(
-            F.col("node").alias("p_node"), F.col("label").alias("p_label")
-        )
-        updated = (
-            updated.join(as_parent, updated.label == as_parent.p_node, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), on="node")
-            .filter(F.col("u.label") != F.col("l.label"))
-            .limit(1)
-            .count()
-        )
-        labels = updated
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations; raise max_iterations (labels would be wrong)"
-        )
-    return labels.select(F.col("node").alias(id_col), F.col("label").alias("canonical_id"))
+    labels, _rounds = _cc_star(nodes, edges, id_col, max_iterations)
+    return labels
 
 
 #: Above this cluster count semantic_dedup switches from flat n·k

@@ -566,60 +566,76 @@ class ConcurrentCommitError(RuntimeError):
     from a stale table version."""
 
 
-def _manifest_latest(path: str) -> tuple[int, list[str]] | None:
-    """Latest committed (version, live data files) at ``path``, or None
-    for pre-manifest tables. Metadata-scale: one small JSON read."""
-    import json
+def _json_versions(vdir: str) -> list[int]:
+    """Sorted versions ``N`` of the committed ``vN.json`` records in
+    ``vdir`` (empty when it does not exist) — the version listing of
+    both the per-table manifests and the ``operators/txn.py`` catalogs.
+    In-flight ``.vN-*.tmp`` files are not committed records."""
     import os
 
-    mdir = os.path.join(path, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return None
-    versions = sorted(
+    if not os.path.isdir(vdir):
+        return []
+    return sorted(
         int(f[1:-5])
-        for f in os.listdir(mdir)
+        for f in os.listdir(vdir)
         if f.startswith("v") and f.endswith(".json")
     )
-    if not versions:
-        return None
-    v = versions[-1]
-    with open(os.path.join(mdir, f"v{v}.json")) as fh:
-        return v, json.load(fh)["files"]
 
 
-def _manifest_publish(path: str, files: list[str], version: int) -> None:
-    """Atomically publish manifest ``version`` referencing ``files`` —
-    the commit point: everything before it is invisible to readers,
-    everything after it is cleanup.
+def _publish_json(vdir: str, version: int, rec: dict, conflict: str) -> None:
+    """Atomically publish ``rec`` as ``vdir/v{version}.json`` — the
+    commit point of a manifest or catalog version: everything before it
+    is invisible to readers, everything after it is cleanup.
 
     The publish is a CREATE-IF-ABSENT, not a blind rename: ``os.link``
     fails with EEXIST when another writer already claimed this version,
-    which is exactly optimistic concurrency control — each manifest
-    version can be won by ONE writer, the loser gets
-    :class:`ConcurrentCommitError` and must retry its merge from the new
-    latest manifest (its affected-file analysis is stale). On an object
-    store the same CAS is a conditional PUT (`If-None-Match: *`); Hudi's
-    OCC takes a lock around its instant-file creation for stores without
-    one."""
+    which is exactly optimistic concurrency control — each version can
+    be won by ONE writer, the loser gets :class:`ConcurrentCommitError`
+    (message ``conflict``) and must retry from the new latest version
+    (its analysis is stale). On an object store the same CAS is a
+    conditional PUT (`If-None-Match: *`); Hudi's OCC takes a lock around
+    its instant-file creation for stores without one."""
     import json
     import os
     import uuid
 
-    mdir = os.path.join(path, _MANIFEST_DIR)
-    os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".v{version}-{uuid.uuid4().hex}.tmp")
+    os.makedirs(vdir, exist_ok=True)
+    tmp = os.path.join(vdir, f".v{version}-{uuid.uuid4().hex}.tmp")
     with open(tmp, "w") as fh:
-        json.dump({"version": version, "files": sorted(files)}, fh)
+        json.dump(rec, fh)
     try:
-        os.link(tmp, os.path.join(mdir, f"v{version}.json"))
+        os.link(tmp, os.path.join(vdir, f"v{version}.json"))
     except FileExistsError:
-        raise ConcurrentCommitError(
-            f"manifest v{version} at {path!r} was published by a "
-            "concurrent writer; re-read the latest manifest and retry "
-            "the merge"
-        ) from None
+        raise ConcurrentCommitError(conflict) from None
     finally:
         os.unlink(tmp)
+
+
+def _manifest_latest(path: str) -> tuple[int, list[str]] | None:
+    """Latest committed (version, live data files) at ``path``, or None
+    for pre-manifest tables. Metadata-scale: one small JSON read."""
+    import os
+
+    versions = _json_versions(os.path.join(path, _MANIFEST_DIR))
+    if not versions:
+        return None
+    return versions[-1], manifest_files_at(path, versions[-1])
+
+
+def _manifest_publish(path: str, files: list[str], version: int) -> None:
+    """CAS-publish manifest ``version`` referencing ``files``
+    (:func:`_publish_json`); a concurrent writer that already claimed
+    ``version`` makes this raise :class:`ConcurrentCommitError`."""
+    import os
+
+    _publish_json(
+        os.path.join(path, _MANIFEST_DIR),
+        version,
+        {"version": version, "files": sorted(files)},
+        f"manifest v{version} at {path!r} was published by a "
+        "concurrent writer; re-read the latest manifest and retry "
+        "the merge",
+    )
 
 
 def manifest_files_at(path: str, version: int) -> list[str]:
@@ -1407,22 +1423,15 @@ def vacuum_orphans(
     alone entirely (nothing can be proven orphaned).
     """
     import glob
-    import json
     import os
     import time
 
-    mdir = os.path.join(path, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
+    versions = _json_versions(os.path.join(path, _MANIFEST_DIR))
+    if not versions:
         return []
     live_set: set[str] = set()
-    any_manifest = False
-    for mf in os.listdir(mdir):
-        if mf.startswith("v") and mf.endswith(".json"):
-            any_manifest = True
-            with open(os.path.join(mdir, mf)) as fh:
-                live_set.update(json.load(fh)["files"])
-    if not any_manifest:
-        return []
+    for v in versions:
+        live_set.update(manifest_files_at(path, v))
     now = time.time()
     removed = []
     for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
@@ -1463,13 +1472,7 @@ def retire_manifests(
     if keep_latest < 1:
         raise ValueError("keep_latest must be >= 1 (the table head)")
     mdir = os.path.join(path, _MANIFEST_DIR)
-    if not os.path.isdir(mdir):
-        return []
-    versions = sorted(
-        int(f[1:-5])
-        for f in os.listdir(mdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    versions = _json_versions(mdir)
     keep = set(versions[-keep_latest:]) | set(pinned)
     retired = []
     for v in versions:

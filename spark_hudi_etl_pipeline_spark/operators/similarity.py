@@ -7,15 +7,17 @@ Two tiers, per the build plan (SURVEY.md §7 Phase 4):
   The correctness baseline, and genuinely the right plan whenever
   |queries| is small: one corpus scan, no shuffle of the corpus, cost
   |corpus|·|queries|·d map-side.
-- :func:`rp_lsh_ann` — approximate NN with seeded random-hyperplane
-  (sign) LSH: corpus is bucketed by sketch bits; queries probe their own
-  bucket (+ multi-probe neighbors at hamming distance 1), exact cosine
-  re-rank inside the probed buckets. At 100 TB the bucketed corpus is
-  written partitioned by sketch prefix, so a probe prunes to a few
-  partitions — an IVF-style index expressed as plain partition pruning.
+- :func:`rp_lsh_ann` — approximate NN with seeded integer (Rademacher)
+  random-hyperplane sign LSH: corpus is bucketed by sketch bits; queries
+  probe their own bucket + multi-probe neighbors at hamming distance 1,
+  exact cosine re-rank inside the probed buckets. At 100 TB the bucketed
+  corpus is written partitioned by sketch prefix, so a probe prunes to a
+  few partitions — an IVF-style index expressed as plain partition
+  pruning.
 
 Vector math is Catalyst higher-order functions (functions/vectors.py) —
-JVM-side, codegen'd, no UDF in either path.
+JVM-side; the one Python UDF is the LSH sketch's integer GEMM
+(:func:`rp_sketch_portable_arrow`).
 """
 
 from __future__ import annotations
@@ -185,11 +187,6 @@ def mmr_topk(
 # --------------------------------------------------------------------------
 
 
-def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> list[list[float]]:
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
-
-
 # -- SQL-string literal renderers ------------------------------------------
 # Building literal arrays as F.array(*[F.lit(v), ...]) costs one py4j
 # round-trip PER ELEMENT (~2.5 ms each): the 8×16×8 PQ codebook alone was
@@ -251,46 +248,24 @@ def _rademacher_planes(dim: int, n_bits: int, seed: int = 101) -> list[list[int]
     ]
 
 
-def quantize_embedding(vec_col):
-    """array<float> → array<long>: half-up fixed-point at EMB_QUANT.
-    floor(x*Q + 0.5) is the same IEEE-double op sequence in Spark,
-    numpy, and DuckDB, so quantized values are bit-identical."""
-    return F.transform(
-        vec_col,
-        lambda x: F.floor(x.cast("double") * EMB_QUANT + F.lit(0.5)).cast("long"),
-    )
-
-
-def rp_sketch_portable(vec_col, dim: int, n_bits: int = 8, seed: int = 101):
-    """Column expr: PORTABLE sign-LSH sketch — bit i = (q(v) · s_i > 0)
-    for seeded Rademacher plane s_i over the quantized embedding. Pure
-    integer arithmetic end-to-end ⇒ bit-reproducible in DuckDB (exact
-    oracle for knn_lsh_ann in plans/similarity_plans.py)."""
-    planes = _rademacher_planes(dim, n_bits, seed)
-    q = quantize_embedding(vec_col)
-    sketch = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        # one JVM-parsed literal array per plane, not dim py4j lit calls
-        signs = F.expr(_sql_arr_l(plane))
-        d = F.aggregate(
-            F.zip_with(q, signs, lambda e, s: e * s),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        sketch = sketch + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sketch
-
-
 def rp_sketch_portable_arrow(dim: int, n_bits: int = 8, seed: int = 101):
-    """Arrow twin of :func:`rp_sketch_portable` — integer GEMM, so it is
-    BIT-IDENTICAL to the expression path (no float sign-boundary drift),
-    unlike the Gaussian float pair rp_sketch/rp_sketch_arrow."""
+    """PORTABLE sign-LSH sketch UDF: an int in [0, 2^n_bits) whose bit i
+    is (q(v) · s_i > 0) for seeded Rademacher plane s_i over the
+    half-up quantized embedding q(v) = floor(v·EMB_QUANT + 0.5). One
+    integer GEMM per batch — no float sign-boundary drift, so bucket
+    assignments are bit-reproducible in DuckDB (exact oracle for
+    knn_lsh_ann in plans/similarity_plans.py). The Catalyst-expression
+    form is kept as the reference oracle in ``tests/test_similarity.py``
+    (``_rp_sketch_portable``), which asserts bit-identical sketches."""
     import numpy as np
     import pandas as pd
 
     planes = np.array(_rademacher_planes(dim, n_bits, seed), dtype=np.int64)
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
+    # No type hints: this module uses `from __future__ import annotations`,
+    # which stringifies them; pyspark can't resolve the local `pd` name at
+    # decoration time. Hint-free functions take the scalar eval path.
     def sketch(vecs):
         m = np.array(vecs.tolist(), dtype=np.float64)
         q = np.floor(m * EMB_QUANT + 0.5).astype(np.int64)
@@ -298,19 +273,6 @@ def rp_sketch_portable_arrow(dim: int, n_bits: int = 8, seed: int = 101):
         return pd.Series((bits * weights).sum(axis=1).astype(np.int64))
 
     return F.pandas_udf(sketch, "long")
-
-
-def rp_sketch(vec_col, dim: int, n_bits: int = 8, seed: int = 42):
-    """Column expr: sign-LSH sketch — an int in [0, 2^n_bits) whose bit i
-    is sign(v · r_i) for seeded Gaussian hyperplane r_i. Deterministic
-    (fixed seed) so corpus and queries sketch identically."""
-    planes = _hyperplanes(dim, n_bits, seed)
-    sketch = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit_plane = F.expr(_sql_arr_d(plane))
-        d = vectors.dot(vec_col, lit_plane)
-        sketch = sketch + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sketch
 
 
 def rp_lsh_ann(
@@ -323,29 +285,22 @@ def rp_lsh_ann(
     dim: int = 64,
     n_bits: int = 8,
     k: int = 10,
-    multiprobe: bool = True,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate top-k: compare each query only against corpus vectors
     whose LSH sketch matches one of the query's probe sketches (own
-    bucket + all hamming-1 neighbors when ``multiprobe``).
+    bucket + all hamming-1 neighbors — multi-probe).
 
     Plan shape: corpus sketching is map-only; the join key is the sketch
     (2^n_bits distinct values), so the probe is a bucket join touching
     ~(1+n_bits)/2^n_bits of the corpus per query instead of all of it;
     exact cosine + window re-rank inside the candidates.
 
-    ``portable=True`` sketches with the integer Rademacher family
-    (:func:`rp_sketch_portable_arrow`) instead of Gaussian floats —
-    same recall characteristics, but bucket assignments are
-    bit-reproducible in DuckDB, which is what upgrades knn_lsh_ann
-    from rows-only to an exact-oracle query.
+    Both sides sketch with the integer Rademacher family
+    (:func:`rp_sketch_portable_arrow`), so bucket assignments are
+    bit-reproducible in DuckDB — which makes knn_lsh_ann an
+    exact-oracle query rather than rows-only.
     """
-    sketch_udf = (
-        rp_sketch_portable_arrow(dim, n_bits)
-        if portable
-        else rp_sketch_arrow(dim, n_bits)
-    )
+    sketch_udf = rp_sketch_portable_arrow(dim, n_bits)
     c = corpus.select(
         F.col(corpus_id).alias("cid"),
         F.col(vec_col).alias("cv"),
@@ -356,13 +311,10 @@ def rp_lsh_ann(
         F.col(vec_col).alias("qv"),
         sketch_udf(F.col(vec_col)).alias("qsketch"),
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("qsketch"),
-            *[F.col("qsketch").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)],
-        )
-    else:
-        probes = F.array(F.col("qsketch"))
+    probes = F.array(
+        F.col("qsketch"),
+        *[F.col("qsketch").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)],
+    )
     q_probe = F.broadcast(
         q.select("qid", "qv", F.explode(probes).alias("bucket"))
     )
@@ -739,30 +691,6 @@ def ivf_upsert(
     )
 
 
-def rp_sketch_arrow(dim: int, n_bits: int = 8, seed: int = 42):
-    """Arrow-vectorized twin of :func:`rp_sketch`: one GEMM against the
-    hyperplane matrix per batch instead of n_bits interpreted dot
-    products per row. Sign decisions at numerically-zero projections can
-    differ from the expression twin (summation order), so corpus and
-    queries must use the SAME implementation — which rp_lsh_ann
-    guarantees by sketching both sides through one code path."""
-    import numpy as np
-    import pandas as pd
-
-    planes = np.array(_hyperplanes(dim, n_bits, seed), dtype=np.float64)
-    weights = (1 << np.arange(n_bits)).astype(np.int64)
-
-    # No type hints: this module uses `from __future__ import annotations`,
-    # which stringifies them; pyspark can't resolve the local `pd` name at
-    # decoration time. Hint-free functions take the scalar eval path.
-    def sketch(vecs):
-        m = np.array(vecs.tolist(), dtype=np.float64)
-        bits = (m @ planes.T) > 0
-        return pd.Series((bits * weights).sum(axis=1).astype(np.int64))
-
-    return F.pandas_udf(sketch, "long")
-
-
 # --------------------------------------------------------------------------
 # Product quantization (PQ)
 # --------------------------------------------------------------------------
@@ -800,18 +728,6 @@ def pq_codebook(
         ]
         for s in range(n_sub)
     ]
-
-
-def _sq_dist_expr(vec_col: str, base: int, codeword: list[float]):
-    """Σ_j (vec[base+j] − c_j)² as a fixed left-to-right chain of
-    correctly-rounded double ops — bit-identical in any engine that
-    evaluates the same chain."""
-    total = None
-    for j, c in enumerate(codeword):
-        d = F.col(vec_col).getItem(base + j).cast("double") - F.lit(float(c))
-        term = d * d
-        total = term if total is None else total + term
-    return total
 
 
 def pq_encode(

@@ -53,12 +53,13 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 
 from .merge import (
     ConcurrentCommitError,
+    _json_versions,
+    _publish_json,
     manifest_files_at,
     upsert_parquet_indexed,
 )
@@ -86,13 +87,7 @@ def _catalog_read(root: str, branch: str = _MAIN) -> tuple[int, dict]:
     """Latest committed (catalog version, full catalog record) on
     ``branch``, or ``(0, {})`` for a fresh catalog. Metadata-scale."""
     cdir = _branch_dir(root, branch)
-    if not os.path.isdir(cdir):
-        return 0, {}
-    versions = sorted(
-        int(f[1:-5])
-        for f in os.listdir(cdir)
-        if f.startswith("v") and f.endswith(".json")
-    )
+    versions = _json_versions(cdir)
     if not versions:
         return 0, {}
     v = versions[-1]
@@ -116,27 +111,21 @@ def _catalog_publish(
     fork: dict | None = None,
 ) -> None:
     """CAS-publish catalog ``version`` on ``branch`` — the transaction's
-    single atomic commit point (same CREATE-IF-ABSENT protocol as the
-    per-table manifest publish; conditional PUT on an object store).
+    single atomic commit point (the per-table manifest publish's
+    CREATE-IF-ABSENT helper, ``merge._publish_json``; a conditional PUT
+    on an object store).
     ``fork`` (branch creation only) records the three-way-merge base:
     the source branch, its version, and its table pins at fork time."""
-    cdir = _branch_dir(root, branch)
-    os.makedirs(cdir, exist_ok=True)
     rec: dict = {"version": version, "tables": tables}
     if fork is not None:
         rec["fork"] = fork
-    tmp = os.path.join(cdir, f".v{version}-{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(rec, fh)
-    try:
-        os.link(tmp, os.path.join(cdir, f"v{version}.json"))
-    except FileExistsError:
-        raise ConcurrentCommitError(
-            f"catalog {branch!r} v{version} at {root!r} was published by "
-            "a concurrent transaction; re-read the catalog and retry"
-        ) from None
-    finally:
-        os.unlink(tmp)
+    _publish_json(
+        _branch_dir(root, branch),
+        version,
+        rec,
+        f"catalog {branch!r} v{version} at {root!r} was published by "
+        "a concurrent transaction; re-read the catalog and retry",
+    )
 
 
 def read_table_at_catalog(
@@ -323,10 +312,8 @@ def catalog_pinned_versions(root: str) -> dict[str, set[int]]:
         ]
     pinned: dict[str, set[int]] = {}
     for d in branch_dirs:
-        for f in os.listdir(d):
-            if not (f.startswith("v") and f.endswith(".json")):
-                continue
-            with open(os.path.join(d, f)) as fh:
+        for v in _json_versions(d):
+            with open(os.path.join(d, f"v{v}.json")) as fh:
                 rec = json.load(fh)
             for tables in (rec.get("tables", {}),
                            rec.get("fork", {}).get("tables", {})):

@@ -234,7 +234,6 @@ def knn_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=64,
         n_bits=8,
         k=5,
-        portable=True,
     )
 
 
@@ -1506,7 +1505,7 @@ def ann_recall_lsh_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("qid", "cid")
     ann = similarity.rp_lsh_ann(
         emb, queries, corpus_id="vec_id", query_id="vec_id",
-        dim=64, n_bits=8, k=5, portable=True,
+        dim=64, n_bits=8, k=5,
     ).select("qid", "cid", F.lit(1).alias("hit"))
     return (
         exact.join(ann, on=["qid", "cid"], how="left")

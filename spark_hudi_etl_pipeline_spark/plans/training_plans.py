@@ -141,7 +141,7 @@ def repetition_metrics_arrow(docs: DataFrame) -> DataFrame:
     )
     # hint-free: `from __future__ import annotations` stringifies hints
     # and pyspark cannot resolve the local `pd` name at decoration time
-    # (same convention as operators/similarity.py::rp_sketch_arrow)
+    # (same convention as operators/similarity.py::rp_sketch_portable_arrow)
     def metrics(texts):
         tb, dt, dw = [], [], []
         for s in texts:

@@ -56,8 +56,10 @@ ENV_CONFIGS: dict[str, dict[str, str]] = {
 }
 
 #: Configs shared by every environment (reference :32-61 minus Hudi/S3
-#: exotica; Hudi catalog configs are applied only when the connector jars
-#: are actually on the classpath — see :func:`hudi_configs`).
+#: exotica: the session sets no Hudi catalog or extension configs, since
+#: the upsert path is the pure-Spark merge in :mod:`.operators.merge`;
+#: a Hudi write passes its options per write, see
+#: :func:`.operators.merge.hudi_writer_options`).
 BASE_CONFIGS: dict[str, str] = {
     # Adaptive Query Execution: runtime re-planning, small-partition
     # coalescing, automatic skew-join splitting (reference :32-33, :47).
@@ -84,20 +86,6 @@ BASE_CONFIGS: dict[str, str] = {
     # catalog layer (sources.catalog normalizes back to TimestampType).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
-
-
-def hudi_configs() -> dict[str, str]:
-    """Hudi catalog/extension configs (reference :38-39, :54-60).
-
-    Returned separately so they are applied only when the Hudi spark
-    bundle is on the classpath; the engine's primary upsert path is the
-    pure-Spark merge in :mod:`..operators.merge`, with Hudi as config
-    passthrough when available.
-    """
-    return {
-        "spark.sql.extensions": "org.apache.spark.sql.hudi.HoodieSparkSessionExtension",
-        "spark.sql.catalog.spark_catalog": "org.apache.spark.sql.hudi.catalog.HoodieCatalog",
-    }
 
 
 def get_spark_session(

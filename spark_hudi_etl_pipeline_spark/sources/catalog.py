@@ -12,8 +12,6 @@ store and the files being partitioned/clustered, not any query code.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 #: The driver-generated star schema + events/documents/embeddings
@@ -30,13 +28,6 @@ FIXTURE_TABLES: tuple[str, ...] = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table. Lazy; Catalyst prunes columns/predicates."""

@@ -1,6 +1,6 @@
-"""Property-based tests (Hypothesis) for connected components — both
-engines (alternating large-star/small-star, iterative label propagation)
-against a pure-Python union-find ground truth on random graphs.
+"""Property-based tests (Hypothesis) for connected components — the
+alternating large-star/small-star engine against a pure-Python
+union-find ground truth on random graphs.
 """
 
 from __future__ import annotations
@@ -28,8 +28,9 @@ _SETTINGS = settings(
 )
 
 
-def _union_find_labels(edges):
-    parent = list(range(_N))
+def _union_find_labels(edges, n: int = _N) -> dict[int, int]:
+    """node → minimum node id of its component, for nodes ``0..n-1``."""
+    parent = list(range(n))
 
     def find(x):
         while parent[x] != x:
@@ -41,31 +42,23 @@ def _union_find_labels(edges):
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    # Canonical = component minimum: root chains always end at the min
-    # because unions always parent the larger root under the smaller.
-    comp: dict[int, int] = {}
-    for x in range(_N):
-        r = find(x)
-        comp[x] = min(comp.get(r, r), r)
-    # find() with min-parenting already yields the min root, but make it
-    # explicit: minimum over the member set.
+    # Canonical = component minimum: min-parenting already makes the
+    # root the minimum, but take it explicitly over the member set.
     members: dict[int, list[int]] = {}
-    for x in range(_N):
+    for x in range(n):
         members.setdefault(find(x), []).append(x)
-    return {x: min(ms) for r, ms in members.items() for x in ms}
+    return {x: min(ms) for ms in members.values() for x in ms}
 
 
 @given(edges=EDGES)
 @_SETTINGS
-def test_cc_both_engines_match_union_find(spark, edges):
+def test_cc_matches_union_find(spark, edges):
     nodes = spark.createDataFrame([(i,) for i in range(_N)], "id long")
     e = spark.createDataFrame(edges, "id_a long, id_b long") if edges else (
         spark.createDataFrame([], "id_a long, id_b long")
     )
-    expected = _union_find_labels(edges)
-    for algo in ("star", "label_prop"):
-        got = {
-            r["id"]: r["canonical_id"]
-            for r in connected_components(nodes, e, algorithm=algo).collect()
-        }
-        assert got == expected, f"{algo} diverged from union-find"
+    got = {
+        r["id"]: r["canonical_id"]
+        for r in connected_components(nodes, e).collect()
+    }
+    assert got == _union_find_labels(edges)

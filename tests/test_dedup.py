@@ -343,13 +343,15 @@ def test_semantic_dedup_default_uses_auto_k(spark):
     assert {r["vec_id"] for r in explicit.filter("keep").collect()} == kept
 
 
-def test_cc_star_matches_label_prop_on_random_graphs(spark):
-    """Both CC engines produce the identical component-minimum labels."""
+def test_cc_star_matches_union_find_on_random_graphs(spark):
+    """The star engine's labels equal a union-find's component minima on
+    a sparse random graph (many singleton and small components)."""
     import random
 
     from spark_hudi_etl_pipeline_spark.operators.dedup import (
         connected_components,
     )
+    from tests.test_cc_properties import _union_find_labels
 
     rng = random.Random(13)
     n = 200
@@ -359,16 +361,10 @@ def test_cc_star_matches_label_prop_on_random_graphs(spark):
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
     e = spark.createDataFrame(edges, "id_a long, id_b long")
     star = {
-        (r["id"], r["canonical_id"])
-        for r in connected_components(nodes, e, algorithm="star").collect()
+        r["id"]: r["canonical_id"]
+        for r in connected_components(nodes, e).collect()
     }
-    lp = {
-        (r["id"], r["canonical_id"])
-        for r in connected_components(
-            nodes, e, algorithm="label_prop"
-        ).collect()
-    }
-    assert star == lp
+    assert star == _union_find_labels(edges, n)
 
 
 def test_cc_star_rounds_logarithmic_on_path_graph(spark):
@@ -632,15 +628,46 @@ def test_fingerprint_store_legacy_schema_migrates(spark):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def _shingle_hashes(text_col, k: int = 5):
+    """Column expr: distinct word-k-shingles → 31-bit hash values over
+    the engine-portable md5-60bit base hash."""
+    sh = F.array_distinct(text.shingles(text_col, k))
+    return F.transform(
+        sh,
+        lambda s: F.pmod(
+            text.portable_hash60(s), F.lit(dedup.MERSENNE_PRIME_31)
+        ),
+    )
+
+
+def _minhash_signature(text_col, num_hashes: int = 32, k: int = 5):
+    """Reference oracle for ``dedup.minhash_signature_arrow``: the same
+    signature as one Catalyst ``aggregate`` over the shingle hashes,
+    updating all ``num_hashes`` minima of ``(a_i * h + b_i) mod p`` per
+    element. All arithmetic stays < 2^62 (ANSI-overflow safe)."""
+    p = F.lit(dedup.MERSENNE_PRIME_31)
+    coeffs = F.array(
+        *[
+            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+            for a, b in dedup.MINHASH_COEFFS[:num_hashes]
+        ]
+    )
+    init = F.array_repeat(p.cast("long"), num_hashes)
+    return F.aggregate(
+        _shingle_hashes(text_col, k),
+        init,
+        lambda acc, h: F.zip_with(
+            acc, coeffs, lambda m, c: F.least(m, F.pmod(c["a"] * h + c["b"], p))
+        ),
+    )
+
+
 def test_minhash_arrow_and_expression_signatures_identical(spark):
-    """The Arrow hot path and the Catalyst expression path share the
+    """The Arrow hot path and the Catalyst expression oracle share the
     md5-60bit portable base hash and MINHASH_COEFFS — signatures must be
     BIT-IDENTICAL (this is what makes dedup_minhash_lsh oracle-checkable
-    regardless of which path runs)."""
-    from pyspark.sql import functions as F
-
+    by an exact SQL oracle)."""
     from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        minhash_signature,
         minhash_signature_arrow,
     )
 
@@ -655,7 +682,7 @@ def test_minhash_arrow_and_expression_signatures_identical(spark):
     )
     out = df.select(
         "doc_id",
-        minhash_signature("text", 32, 5).alias("expr_sig"),
+        _minhash_signature("text", 32, 5).alias("expr_sig"),
         minhash_signature_arrow(32, 5)(F.col("text")).alias("arrow_sig"),
     ).collect()
     for r in out:

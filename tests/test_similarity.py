@@ -803,14 +803,44 @@ def test_int8_quantization_bounds(spark):
         assert r["max_abs_err"] == 0.0
 
 
+def _quantize_embedding(vec_col):
+    """array<float> → array<long>: half-up fixed-point at EMB_QUANT.
+    floor(x*Q + 0.5) is the same IEEE-double op sequence in Spark,
+    numpy, and DuckDB, so quantized values are bit-identical."""
+    return F.transform(
+        vec_col,
+        lambda x: F.floor(
+            x.cast("double") * similarity.EMB_QUANT + F.lit(0.5)
+        ).cast("long"),
+    )
+
+
+def _rp_sketch_portable(vec_col, dim: int, n_bits: int = 8, seed: int = 101):
+    """Reference oracle for ``similarity.rp_sketch_portable_arrow``:
+    bit i = (q(v) · s_i > 0) for seeded Rademacher plane s_i over the
+    quantized embedding, as Catalyst integer arithmetic end-to-end."""
+    q = _quantize_embedding(vec_col)
+    sketch = F.lit(0).cast("long")
+    for i, plane in enumerate(similarity._rademacher_planes(dim, n_bits, seed)):
+        # one JVM-parsed literal array per plane, not dim py4j lit calls
+        signs = F.expr(similarity._sql_arr_l(plane))
+        d = F.aggregate(
+            F.zip_with(q, signs, lambda e, s: e * s),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc + x,
+        )
+        sketch = sketch + F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0))
+    return sketch
+
+
 def test_portable_sketch_paths_identical_and_recall(spark, emb):
-    """The portable Rademacher sketch's expression and Arrow paths are
-    bit-identical (integer arithmetic end-to-end — this is what makes
-    knn_lsh_ann oracle-checkable), and the portable ANN keeps the same
-    practical recall floor as the Gaussian family."""
+    """The portable Rademacher sketch's expression oracle and Arrow path
+    are bit-identical (integer arithmetic end-to-end — this is what
+    makes knn_lsh_ann oracle-checkable), and the ANN over it keeps a
+    practical recall floor."""
     both = emb.select(
         "vec_id",
-        similarity.rp_sketch_portable("embedding", 64, 8).alias("expr_b"),
+        _rp_sketch_portable("embedding", 64, 8).alias("expr_b"),
         similarity.rp_sketch_portable_arrow(64, 8)(F.col("embedding")).alias(
             "arrow_b"
         ),
@@ -824,7 +854,7 @@ def test_portable_sketch_paths_identical_and_recall(spark, emb):
     )
     ann = similarity.rp_lsh_ann(
         emb, queries, corpus_id="vec_id", query_id="vec_id",
-        dim=64, n_bits=8, k=5, portable=True,
+        dim=64, n_bits=8, k=5,
     )
     exact_set = {(r["qid"], r["cid"]) for r in exact.collect()}
     ann_set = {(r["qid"], r["cid"]) for r in ann.collect()}
