@@ -35,15 +35,10 @@ from .session import get_spark_session  # noqa: F401  (re-export, reference R1)
 from .session import local_frame
 
 
-def create_database_and_table(
-    spark: SparkSession,
-    *,
-    database: str = "pipeline_layer",
-    log_table: str = "pipeline_layer.pipeline_log",
-) -> None:
-    """Reference R2 (:69-122): idempotent database + audit-table DDL."""
-    bootstrap.create_database(spark, database)
-    bootstrap.create_pipeline_log_table(spark, log_table)
+def create_database_and_table(spark: SparkSession) -> None:
+    """Reference R2 (:69-122): idempotent DDL of the ``pipeline_layer``
+    database and its ``pipeline_log`` audit table."""
+    bootstrap.create_pipeline_log_table(spark)
 
 
 def get_last_run_timestamp(

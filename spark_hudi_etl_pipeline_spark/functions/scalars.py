@@ -22,9 +22,10 @@ def surrogate_key() -> Column:
     return F.expr("uuid()")
 
 
-def parse_compact_timestamp(col: str | Column, fmt: str = COMPACT_TS_FORMAT) -> Column:
+def parse_compact_timestamp(col: str | Column) -> Column:
     """C2 — ``to_timestamp(col, 'yyyyMMddHHmmss')`` (reference :124-126)."""
-    return F.to_timestamp(F.col(col) if isinstance(col, str) else col, fmt)
+    c = F.col(col) if isinstance(col, str) else col
+    return F.to_timestamp(c, COMPACT_TS_FORMAT)
 
 
 def processing_date() -> Column:

@@ -75,11 +75,11 @@ def punct_ratio(col: str | Column) -> Column:
     return punct / F.greatest(F.length(c), F.lit(1))
 
 
-def stopword_ratio(col: str | Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang`` (quality signal:
+def stopword_ratio(col: str | Column) -> Column:
+    """Fraction of tokens that are English stopwords (quality signal:
     natural prose has a stable stopword ratio; boilerplate/code does not).
     """
-    stop = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
+    stop = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     toks = tokens(F.lower(_col(col)))
     hits = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
     return hits / F.greatest(F.size(toks), F.lit(1))
@@ -93,31 +93,16 @@ def mean_token_length(col: str | Column) -> Column:
     return total / F.greatest(F.size(toks), F.lit(1))
 
 
-def quality_score(col: str | Column) -> Column:
-    """Composite [0,1] quality score: length sweet-spot, low punctuation,
-    healthy stopword ratio, sane mean token length. Weights are the usual
-    heuristic-filter shape (Gopher/C4-style rules re-expressed as one
-    soft score)."""
-    c = _col(col)
-    n = F.length(c)
-    len_ok = F.when((n >= 50) & (n <= 20000), F.lit(1.0)).otherwise(
-        F.when(n < 50, n / F.lit(50.0)).otherwise(F.lit(20000.0) / n)
-    )
-    punct_ok = F.lit(1.0) - F.least(punct_ratio(c) * 4, F.lit(1.0))
-    stop = stopword_ratio(c)
-    stop_ok = F.when(stop >= 0.05, F.lit(1.0)).otherwise(stop / F.lit(0.05))
-    mtl = mean_token_length(c)
-    mtl_ok = F.when((mtl >= 2.5) & (mtl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.4))
-    return F.round(
-        len_ok * 0.3 + punct_ok * 0.2 + stop_ok * 0.3 + mtl_ok * 0.2, 6
-    )
+def quality_score_arrow() -> Column:
+    """Composite [0,1] quality score of the ``text`` column: length
+    sweet-spot, low punctuation, healthy stopword ratio, sane mean token
+    length. Weights are the usual heuristic-filter shape (Gopher/C4-style
+    rules re-expressed as one soft score).
 
-
-def quality_score_arrow(col: str | Column = "text") -> Column:
-    """Arrow-vectorized twin of :func:`quality_score` — identical values,
-    one Python pass per batch instead of the interpreted stopword-filter
-    / token-aggregate HOF chain (guide §4.2; same exactness conventions
-    as ``plans/training_plans.py::repetition_metrics_arrow``):
+    A pandas UDF: one Python pass per batch instead of the interpreted
+    stopword-filter / token-aggregate HOF chain of the expression form
+    (guide §4.2; same exactness conventions as
+    ``plans/training_plans.py::repetition_metrics_arrow``):
 
     - ``length()`` counts codepoints → Python ``len``;
     - Spark ``trim`` strips ASCII spaces only → ``strip(' ')``; Java
@@ -129,9 +114,9 @@ def quality_score_arrow(col: str | Column = "text") -> Column:
       (``BigDecimal.valueOf`` = shortest-round-trip decimal, HALF_UP) via
       ``Decimal(repr(x)).quantize``.
 
-    Takes the text column like :func:`quality_score` (defaults to
-    ``text``). Bit-for-bit parity with the expression twin is asserted
-    at three fixture scales in tests/test_quality.py."""
+    Bit-for-bit parity with the expression form (kept in
+    tests/test_quality.py as the oracle) is asserted on adversarial docs
+    + the fixture corpus."""
     import re as _re
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -163,7 +148,7 @@ def quality_score_arrow(col: str | Column = "text") -> Column:
     def score(texts):
         return pd.Series([_score(s) for s in texts], dtype="float64")
 
-    return F.pandas_udf(score, "double")(_col(col))
+    return F.pandas_udf(score, "double")(F.col("text"))
 
 
 def language_id_arrow(col: str | Column = "text") -> Column:

@@ -123,22 +123,19 @@ def cluster_zorder(
     return cluster_zorder_nd(df, [xcol, ycol], n_files)
 
 
-def cluster_zorder_nd(
-    df: DataFrame, cols: list[str], n_files: int, *, bits: int | None = None
-) -> DataFrame:
+def cluster_zorder_nd(df: DataFrame, cols: list[str], n_files: int) -> DataFrame:
     """N-dimensional z-order clustering (Hudi's clustering service
     accepts N sort columns): order by the round-robin Morton code of the
     columns' quantile codes, range-split into ``n_files`` files.
 
-    Bits per dimension default to ``min(8, 62 // N)`` — the full 256
+    Bits per dimension are ``min(8, 62 // N)`` — the full 256
     buckets/dim through 7 dims, degrading gracefully beyond (coarser
     boxes, never overflow). The curse of dimensionality is real: each
     added dimension halves per-dimension skipping power, so 2-4 columns
     is the sweet spot — but the operator no longer caps at 2."""
     if not cols or len(set(cols)) != len(cols):
         raise ValueError(f"cols must be non-empty and distinct: {cols}")
-    if bits is None:
-        bits = min(_BITS, 62 // len(cols))
+    bits = min(_BITS, 62 // len(cols))
     coded = quantile_codes(df, cols, bits=bits)
     code_cols = [f"__code_{c}" for c in cols]
     zv = zorder_value_nd([F.col(c) for c in code_cols], bits=bits)

@@ -43,15 +43,22 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 ]
 
 
+#: Catalog-table buckets of the incremental dedup stores
+#: (:func:`fingerprint_store_ingest`, :func:`minhash_store_ingest`): each
+#: store is bucketed on its probe key, so a batch probe reads it bucket by
+#: bucket and the corpus-sized store is never reshuffled.
+STORE_BUCKETS = 32
+
+
 # --------------------------------------------------------------------------
 # Exact dedup
 # --------------------------------------------------------------------------
 
 
-def exact_dedup(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal — hash groupBy under the hood
-    (``dropDuplicates``), partial-agg'd map-side before the shuffle."""
-    return df.dropDuplicates(cols) if cols else df.dropDuplicates()
+def exact_dedup(df: DataFrame) -> DataFrame:
+    """Exact duplicate removal over all columns — hash groupBy under the
+    hood (``dropDuplicates``), partial-agg'd map-side before the shuffle."""
+    return df.dropDuplicates()
 
 
 def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -66,9 +73,6 @@ def fingerprint_store_ingest(
     batch: DataFrame,
     store_table: str,
     *,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
-    n_buckets: int = 32,
     batch_id: str | None = None,
 ) -> DataFrame:
     """Incremental exact dedup against a persisted fingerprint store —
@@ -77,7 +81,8 @@ def fingerprint_store_ingest(
     NEW batch against an append-only store instead of re-deduping the
     whole corpus.
 
-    The store is a catalog table bucketed by ``fp_col`` holding one row
+    ``batch`` carries ``doc_id`` and its fingerprint ``fp``. The store is
+    a catalog table bucketed by ``fp`` (``STORE_BUCKETS``) holding one row
     per fingerprint ever ingested, ``(fp, first_id)`` with ``first_id``
     = the id that introduced it (ingestion order; smaller id wins within
     a batch). Ingesting a batch:
@@ -117,9 +122,9 @@ def fingerprint_store_ingest(
     from ..sources.writers import write_bucketed
 
     spark = batch.sparkSession
-    id_type = batch.schema[id_col].dataType
+    id_type = batch.schema["doc_id"].dataType
     exists = spark.catalog.tableExists(store_table)
-    within = batch.groupBy(fp_col).agg(F.min(id_col).alias("_batch_first"))
+    within = batch.groupBy("fp").agg(F.min("doc_id").alias("_batch_first"))
     if exists:
         store_df = spark.table(store_table)
         # Migration path: stores created before src_batch tracking lack
@@ -132,11 +137,11 @@ def fingerprint_store_ingest(
             else F.lit(None).cast("string")
         )
         store = store_df.select(
-            fp_col,
+            "fp",
             F.col("first_id").alias("_store_first"),
             src_batch.alias("_store_batch"),
         )
-        probed = within.join(store, fp_col, "left")
+        probed = within.join(store, "fp", "left")
     else:
         # Seed path: type the null literals to the REAL store schema —
         # a hardcoded long would make canonical_id's type flip between
@@ -146,7 +151,7 @@ def fingerprint_store_ingest(
         ).withColumn("_store_batch", F.lit(None).cast("string"))
     probed = probed.localCheckpoint(eager=True)  # pre-append snapshot
     new_fps = probed.filter(F.col("_store_first").isNull()).select(
-        F.col(fp_col),
+        F.col("fp"),
         F.col("_batch_first").alias("first_id"),
         F.lit(batch_id).cast("string").alias("src_batch"),
     )
@@ -157,8 +162,8 @@ def fingerprint_store_ingest(
     write_bucketed(
         new_fps,
         store_table,
-        bucket_cols=[fp_col],
-        n_buckets=n_buckets,
+        bucket_cols=["fp"],
+        n_buckets=STORE_BUCKETS,
         mode="append" if exists else "overwrite",
     )
     hit = F.col("_store_first").isNotNull()
@@ -170,13 +175,13 @@ def fingerprint_store_ingest(
     # Foreign store hit ⇒ dup of the store's first_id. Same-batch hit
     # (a replay) ⇒ first-occurrence semantics against the RECORDED
     # first_id. No hit ⇒ within-batch first occurrence wins.
-    return batch.join(probed, fp_col).select(
-        id_col,
-        fp_col,
+    return batch.join(probed, "fp").select(
+        "doc_id",
+        "fp",
         F.coalesce("_store_first", "_batch_first").alias("canonical_id"),
-        F.when(hit & same_batch, F.col(id_col) != F.col("_store_first"))
+        F.when(hit & same_batch, F.col("doc_id") != F.col("_store_first"))
         .when(hit, F.lit(True))
-        .otherwise(F.col(id_col) > F.col("_batch_first"))
+        .otherwise(F.col("doc_id") > F.col("_batch_first"))
         .cast("int")
         .alias("is_dup"),
     )
@@ -967,7 +972,6 @@ def semantic_dedup(
     n_clusters: int | None = None,
     target_cluster_size: int = 512,
     threshold: float = 0.9,
-    max_iterations: int = 20,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, find cosine
@@ -1040,10 +1044,7 @@ def semantic_dedup(
         assigned, id_col, "__v", threshold=threshold, block_col="cluster_id"
     )
     comp = connected_components(
-        assigned.select(id_col),
-        pairs.select("id_a", "id_b"),
-        id_col=id_col,
-        max_iterations=max_iterations,
+        assigned.select(id_col), pairs.select("id_a", "id_b"), id_col=id_col
     )
     return (
         assigned.select(id_col, "cluster_id")
@@ -1255,7 +1256,6 @@ def edit_distance_pairs(
     *,
     max_edits: int = 4,
     block_tokens: int = 5,
-    max_block: int = 1000,
 ) -> DataFrame:
     """Typo-level near-dup pairs: threshold-bounded Levenshtein within
     HEAD blocks — docs sharing the md5 fingerprint of their first
@@ -1268,8 +1268,8 @@ def edit_distance_pairs(
     a doc whose typo falls inside the head lands in a different block
     and is missed, the standard recall/cost trade of blocked linkage
     (same contract as ``embedding_neardup_pairs``'s block_col).
-    ``max_block`` drops degenerate blocks (boilerplate openings) so one
-    hot block cannot go quadratic. The Levenshtein itself is
+    Blocks of more than 1,000 docs (boilerplate openings) are dropped so
+    one hot block cannot go quadratic. The Levenshtein itself is
     threshold-bounded (O(max_edits·len) banded DP, not O(len²)), and
     only intra-block pairs are ever scored — never all pairs.
 
@@ -1295,7 +1295,7 @@ def edit_distance_pairs(
         t.withColumn(
             "__bn", F.count(F.lit(1)).over(Window.partitionBy("__head"))
         )
-        .filter(F.col("__bn") <= max_block)
+        .filter(F.col("__bn") <= 1000)
         .drop("__bn")
     )
     a = small.select(
@@ -1326,13 +1326,7 @@ def minhash_store_ingest(
     batch: DataFrame,
     store_table: str,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    k: int = 5,
     threshold: float = 0.5,
-    n_buckets: int = 32,
     batch_id: str | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup detection against a persisted MinHash band
@@ -1341,8 +1335,12 @@ def minhash_store_ingest(
     batch against an append-only store of band buckets, never
     re-signing or re-pairing the corpus.
 
-    Store: a catalog table bucketed by ``bkey`` with one row per
-    (band, band-key, doc): ``(band, bkey, doc_id, sig, src_batch)``,
+    ``batch`` carries ``doc_id`` and ``text``. Signatures are 32 MinHash
+    values over 5-word shingles, cut into 8 bands of 4.
+
+    Store: a catalog table bucketed by ``bkey`` (``STORE_BUCKETS``) with
+    one row per (band, band-key, doc):
+    ``(band, bkey, doc_id, sig, src_batch)``,
     where ``bkey`` is the band's signature slice joined to a string
     (portable: the DuckDB oracle recomputes it) and ``sig`` is the full
     signature (kept so verification never re-reads stored documents).
@@ -1354,8 +1352,8 @@ def minhash_store_ingest(
        batch-side exchange matches the store's bucket layout, the
        corpus-sized store never reshuffles; candidates verify with the
        ESTIMATED Jaccard (matching signature positions / num_hashes —
-       the standard MinHash estimator, ±O(1/√num_hashes)); verdict per
-       batch doc = lowest-id store match above ``threshold``;
+       the standard MinHash estimator, ±O(1/√32)); verdict per batch
+       doc = lowest-id store match above ``threshold``;
     3. append the bands of NON-matching docs only (the store stays
        canonical: near-copies of stored content never join it).
 
@@ -1364,7 +1362,7 @@ def minhash_store_ingest(
     crashed-after-append run re-ingests with identical verdicts and the
     append deduplicates by doc identity (the store does not grow).
 
-    Returns (id_col, is_neardup, match_id, est_jaccard). Within-batch
+    Returns (doc_id, is_neardup, match_id, est_jaccard). Within-batch
     near-dups are out of scope by contract — run
     :func:`minhash_dedup_pairs` on the batch first (same split as the
     fingerprint store, which resolves within-batch EXACT dups only
@@ -1373,14 +1371,13 @@ def minhash_store_ingest(
     from ..sources.writers import write_bucketed
 
     spark = batch.sparkSession
+    num_hashes, bands = 32, 8
     rows = num_hashes // bands
     exists = spark.catalog.tableExists(store_table)
-    sig_udf = minhash_signature_arrow(num_hashes, k)
+    sig_udf = minhash_signature_arrow(num_hashes, 5)
     docs = barrier_col(
-        fan_out(batch.select(F.col(id_col), F.col(text_col))),
-        "sig",
-        sig_udf(F.col(text_col)),
-    ).drop(text_col)
+        fan_out(batch.select("doc_id", "text")), "sig", sig_udf(F.col("text"))
+    ).drop("text")
     docs = docs.localCheckpoint(eager=True)  # sign once, feed all uses
     band_structs = F.array(
         *[
@@ -1398,8 +1395,8 @@ def minhash_store_ingest(
         ]
     )
     batch_bands = docs.select(
-        F.col(id_col), F.col("sig"), F.explode(band_structs).alias("bb")
-    ).select(id_col, "sig", "bb.band", "bb.bkey")
+        F.col("doc_id"), F.col("sig"), F.explode(band_structs).alias("bb")
+    ).select("doc_id", "sig", "bb.band", "bb.bkey")
     if exists:
         store = spark.table(store_table)
         same_batch = (
@@ -1426,39 +1423,39 @@ def minhash_store_ingest(
             / F.lit(float(num_hashes))
         )
         matches = (
-            probe.select(F.col(id_col), "_store_id", est.alias("_est"))
+            probe.select(F.col("doc_id"), "_store_id", est.alias("_est"))
             .filter(F.col("_est") >= threshold)
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(
                 F.min(
                     F.struct(F.col("_store_id").alias("m"), F.col("_est").alias("e"))
                 ).alias("best")
             )
             .select(
-                id_col,
+                "doc_id",
                 F.col("best.m").alias("match_id"),
                 F.round(F.col("best.e"), 4).alias("est_jaccard"),
             )
         )
-        verdict = docs.select(id_col).join(matches, on=id_col, how="left")
+        verdict = docs.select("doc_id").join(matches, on="doc_id", how="left")
     else:
-        id_type = batch.schema[id_col].dataType
+        id_type = batch.schema["doc_id"].dataType
         verdict = docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit(None).cast(id_type).alias("match_id"),
             F.lit(None).cast("double").alias("est_jaccard"),
         )
     verdict = verdict.select(
-        id_col,
+        "doc_id",
         F.col("match_id").isNotNull().cast("int").alias("is_neardup"),
         "match_id",
         "est_jaccard",
     ).localCheckpoint(eager=True)  # pre-append snapshot
-    novel = verdict.filter(F.col("is_neardup") == 0).select(id_col)
-    new_rows = batch_bands.join(F.broadcast(novel), on=id_col).select(
+    novel = verdict.filter(F.col("is_neardup") == 0).select("doc_id")
+    new_rows = batch_bands.join(F.broadcast(novel), on="doc_id").select(
         "band",
         "bkey",
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         "sig",
         F.lit(batch_id).cast("string").alias("src_batch"),
     )
@@ -1473,7 +1470,7 @@ def minhash_store_ingest(
         new_rows,
         store_table,
         bucket_cols=["bkey"],
-        n_buckets=n_buckets,
+        n_buckets=STORE_BUCKETS,
         mode="append" if exists else "overwrite",
     )
     return verdict

@@ -232,8 +232,6 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     keys: list[str],
-    *,
-    change_col: str = "change_type",
 ) -> DataFrame:
     """Key-level CDC between two snapshots: one row per changed key with
     ``change_type`` ∈ {'insert', 'update', 'delete'}. Unchanged keys are
@@ -256,13 +254,13 @@ def snapshot_diff(
     joined = o.join(n, on=keys, how="full_outer")
     return (
         joined.withColumn(
-            change_col,
+            "change_type",
             F.when(F.col("__in_old").isNull(), "insert")
             .when(F.col("__in_new").isNull(), "delete")
             .when(~F.col("__old").eqNullSafe(F.col("__new")), "update"),
         )
-        .filter(F.col(change_col).isNotNull())
-        .select(*keys, change_col)
+        .filter(F.col("change_type").isNotNull())
+        .select(*keys, "change_type")
     )
 
 
@@ -360,15 +358,9 @@ def compaction_plan(
     )
 
 
-def ohlc_partial(
-    df: DataFrame,
-    *,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    val_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Per-(type, day) OHLC partial state over ``df`` — the mergeable
+def ohlc_partial(df: DataFrame) -> DataFrame:
+    """Per-(event_type, day) OHLC partial state over the events shape
+    ``df`` (``event_type``, ``ts``, ``value``, ``event_id``) — the mergeable
     form: open/close travel WITH their arg keys (zero-padded
     epoch-μs‖id, globally unique, so any later merge re-derives the
     true first/last event deterministically under any batch split),
@@ -380,25 +372,23 @@ def ohlc_partial(
     and '-' sorts before digits) — rows outside that domain raise
     rather than silently corrupting the open/close selection."""
     in_domain = (
-        (F.col(id_col) >= 0)
-        & (F.col(id_col) < F.lit(1_000_000_000_000))
-        & (F.unix_micros(ts_col) >= 0)
+        (F.col("event_id") >= 0)
+        & (F.col("event_id") < F.lit(1_000_000_000_000))
+        & (F.unix_micros("ts") >= 0)
     )
     ok = F.when(
         in_domain,
         F.concat(
-            F.lpad(F.unix_micros(ts_col).cast("string"), 20, "0"),
-            F.lpad(F.col(id_col).cast("string"), 12, "0"),
+            F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
+            F.lpad(F.col("event_id").cast("string"), 12, "0"),
         ),
     ).otherwise(
         F.raise_error(
             F.concat(
-                F.lit(
-                    f"ohlc_partial: ({id_col}, {ts_col}) = ("
-                ),
-                F.col(id_col).cast("string"),
+                F.lit("ohlc_partial: (event_id, ts) = ("),
+                F.col("event_id").cast("string"),
                 F.lit(", "),
-                F.col(ts_col).cast("string"),
+                F.col("ts").cast("string"),
                 F.lit(
                     ") outside the order-key domain: id must be in "
                     "[0, 10^12) and ts at/after the epoch for the "
@@ -409,9 +399,9 @@ def ohlc_partial(
     )
     return (
         df.select(
-            F.col(type_col).alias("event_type"),
-            F.date_trunc("day", ts_col).alias("bar_ts"),
-            F.col(val_col).alias("value"),
+            "event_type",
+            F.date_trunc("day", "ts").alias("bar_ts"),
+            "value",
             ok.alias("ok"),
         )
         .groupBy("event_type", "bar_ts")
@@ -489,15 +479,9 @@ def content_checksum(
     return staged.agg(*aggs)
 
 
-def twap_daily(
-    df: DataFrame,
-    *,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    val_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Per-(type, day) TIME-WEIGHTED average — the companion to the
+def twap_daily(df: DataFrame) -> DataFrame:
+    """Per-(event_type, day) TIME-WEIGHTED average of ``value`` over the
+    events shape ``df`` (``ts``, ``event_id``) — the companion to the
     OHLC bars: each observation holds until the next one, so its weight
     is its duration, not its count (a price quoted for 23 hours must
     not be averaged 1:1 against one quoted for a minute). The last
@@ -518,11 +502,11 @@ def twap_daily(
     # then reuses one hash exchange for both (keying the window on the
     # raw date_trunc expression plans a second, redundant shuffle).
     keyed = df.select(
-        F.col(type_col).alias("event_type"),
-        F.date_trunc("day", ts_col).cast("date").alias("bar_ts"),
-        F.floor(F.col(val_col) * 100 + F.lit(0.5)).cast("long").alias("__cents"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__us"),
-        F.col(id_col).alias("__id"),
+        "event_type",
+        F.date_trunc("day", "ts").cast("date").alias("bar_ts"),
+        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("__cents"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("__us"),
+        F.col("event_id").alias("__id"),
     )
     w = (
         Window.partitionBy("event_type", "bar_ts")

@@ -385,18 +385,6 @@ def upsert_parquet(
     ).rows_written
 
 
-def _dynamic_overwrite(spark, df: DataFrame, path: str, partition_col: str) -> None:
-    """Write ``df`` replacing only the hive partitions it contains rows
-    for (``partitionOverwriteMode=dynamic``), restoring the session's
-    prior mode afterwards."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
 def _upsert_partitioned(
     spark,
     batch: DataFrame,
@@ -472,7 +460,12 @@ def _upsert_partitioned(
         F.count(F.lit(1)).alias("n"),
         F.collect_set(partition_col).alias("parts"),
     )
-    _dynamic_overwrite(spark, observed, path, partition_col)
+    # Dynamic overwrite replaces only the partitions this write has rows
+    # for. It is set per write, so other queries on the shared session
+    # keep their own overwrite mode.
+    observed.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(path)
     # Partitions emptied by moves/deletes produce no output rows, so the
     # dynamic overwrite never visits them — drop them as the commit step
     # (Hudi records this tombstone in the timeline).
@@ -1300,8 +1293,6 @@ def upsert_parquet_record_indexed(
     path: str,
     key: str,
     precombine: str,
-    *,
-    delete_col: str | None = None,
 ) -> int:
     """Record-level-indexed COW upsert — Hudi 1.0's RECORD_INDEX
     (``hoodie.index.type=RECORD_INDEX``): an EXACT key→file mapping in a
@@ -1324,7 +1315,7 @@ def upsert_parquet_record_indexed(
     """
     return _indexed_upsert(
         spark, batch, path, [key], precombine,
-        delete_col=delete_col, index=_RECORD_INDEX,
+        delete_col=None, index=_RECORD_INDEX,
     ).rows_written
 
 

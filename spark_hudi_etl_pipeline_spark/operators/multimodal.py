@@ -422,8 +422,8 @@ def unsupported_decoder(payload: bytes, meta: dict[str, Any]) -> dict[str, Any]:
     )
 
 
-def attach_metadata(df: DataFrame, *, media_type: str, payload_col: str = "payload") -> DataFrame:
-    """Build the typed metadata struct from the payload column (cheap,
+def attach_metadata(df: DataFrame, *, media_type: str) -> DataFrame:
+    """Build the typed metadata struct from the ``payload`` column (cheap,
     JVM-side: length; real ingest fills codec/dims from container headers)."""
     return df.withColumn(
         "meta",
@@ -433,7 +433,7 @@ def attach_metadata(df: DataFrame, *, media_type: str, payload_col: str = "paylo
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
             F.lit(None).cast("long").alias("duration_ms"),
-            F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
+            F.length(F.col("payload")).cast("long").alias("n_bytes"),
         ),
     )
 
@@ -478,9 +478,7 @@ def probe_metadata(media: DataFrame) -> DataFrame:
     return media.mapInPandas(probe, schema=schema)
 
 
-def decode_features(
-    media: DataFrame, *, batch_hint_rows: int = 64
-) -> DataFrame:
+def decode_features(media: DataFrame) -> DataFrame:
     """Decode/feature-extract every media row via Arrow-batched
     ``mapInPandas`` (iterator→iterator: constant memory per task).
 

@@ -45,11 +45,9 @@ def hash_split(
     df: DataFrame,
     key: str,
     splits: dict[str, float],
-    *,
-    split_col: str = "split",
 ) -> DataFrame:
-    """Assign every row to exactly one named split (e.g. train/valid/test)
-    by hash of ``key``. ``splits`` maps name -> fraction; fractions must
+    """Assign every row to exactly one named split (e.g. train/valid/test),
+    in column ``split``, by hash of ``key``. ``splits`` maps name -> fraction; fractions must
     sum to ~1 (the last split absorbs rounding remainder)."""
     total = sum(splits.values())
     if not 0.999 <= total <= 1.001:
@@ -65,7 +63,7 @@ def hash_split(
     expr = (
         F.lit(names[-1]) if expr is None else expr.otherwise(names[-1])
     )
-    return df.withColumn(split_col, expr)
+    return df.withColumn("split", expr)
 
 
 def hash_stratified_sample(
@@ -73,16 +71,14 @@ def hash_stratified_sample(
     key: str,
     strata: str,
     fractions: dict[str, float],
-    *,
-    default: float = 0.0,
 ) -> DataFrame:
     """Keep a per-stratum fraction of rows, deterministically by hash of
     ``key`` (the reproducible form of ``sampleBy``): strata not listed in
-    ``fractions`` fall back to ``default``. A pure filter — no shuffle,
+    ``fractions`` are dropped. A pure filter — no shuffle,
     pushdown-friendly, and re-running on appended data never flips the
     membership of an already-sampled row."""
     bucket = hash_bucket(F.col(key))
-    threshold: Column = F.lit(hex_threshold(default))
+    threshold: Column = F.lit(hex_threshold(0.0))
     for value, frac in fractions.items():
         threshold = (
             F.when(F.col(strata) == value, hex_threshold(frac)).otherwise(threshold)
@@ -96,7 +92,6 @@ def weighted_pps_sample(
     weight_col: str,
     *,
     divisor: int,
-    ipw_col: str = "ipw_q",
 ) -> DataFrame:
     """Deterministic Poisson probability-proportional-to-size sample:
     row included with p = min(1, weight / divisor), decided by PURE
@@ -107,7 +102,7 @@ def weighted_pps_sample(
     so the sample's TOKEN budget, not its row count, tracks the corpus).
 
     Included rows carry the inverse-probability weight
-    ``ipw_col = floor(1e6 · max(1, divisor/weight))`` (fixed-point, the
+    ``ipw_q = floor(1e6 · max(1, divisor/weight))`` (fixed-point, the
     exact-integer Horvitz-Thompson correction a downstream aggregate
     multiplies by to stay unbiased).
 
@@ -122,7 +117,7 @@ def weighted_pps_sample(
     w = F.col(weight_col).cast("long")
     kept = df.filter(u16 * F.lit(int(divisor)) < w * F.lit(65536))
     return kept.withColumn(
-        ipw_col,
+        "ipw_q",
         F.when(w >= divisor, F.lit(1_000_000))
         .otherwise(F.floor(F.lit(divisor * 1_000_000) / w))
         .cast("long"),
@@ -135,14 +130,12 @@ def epoch_shuffle(
     *,
     epoch: int,
     shards: int,
-    shard_col: str = "shard",
-    pos_col: str = "pos",
 ) -> DataFrame:
     """Deterministic per-epoch global shuffle into training shards — the
     "shuffle the corpus before each epoch" primitive, as a pure function
     of (key, epoch) instead of an RNG: h = 32-bit md5 of
-    ``epoch:<epoch>:<key>``; shard = h mod ``shards``; position within
-    shard = rank of (h, key). Every epoch re-derives a fresh
+    ``epoch:<epoch>:<key>``; ``shard`` = h mod ``shards``; ``pos`` within
+    the shard = rank of (h, key). Every epoch re-derives a fresh
     near-uniform permutation (the salt changes the hash), any worker can
     recompute its shard independently, and re-runs are bit-identical on
     any engine or partitioning.
@@ -170,10 +163,10 @@ def epoch_shuffle(
         10,
     ).cast("long")
     out = df.withColumn("_h", u32).withColumn(
-        shard_col, F.pmod(F.col("_h"), F.lit(int(shards))).cast("long")
+        "shard", F.pmod(F.col("_h"), F.lit(int(shards))).cast("long")
     )
-    w = Window.partitionBy(shard_col).orderBy(F.col("_h"), F.col(key_col))
-    return out.withColumn(pos_col, F.row_number().over(w)).drop("_h")
+    w = Window.partitionBy("shard").orderBy(F.col("_h"), F.col(key_col))
+    return out.withColumn("pos", F.row_number().over(w)).drop("_h")
 
 
 def stratum_equalized_sample(
@@ -183,7 +176,6 @@ def stratum_equalized_sample(
     *,
     target: int,
     salt: str = "",
-    ipw_col: str = "ipw_q",
 ) -> DataFrame:
     """Density-equalizing Poisson sample: every stratum contributes
     ~``target`` rows in expectation, p = min(1, target/|stratum|) — the
@@ -196,7 +188,7 @@ def stratum_equalized_sample(
     bit-identical on any engine, partitioning, or run, and re-running on
     appended data never flips an already-sampled row (its stratum size
     changes p for NEW draws only if the caller recomputes sizes — the
-    audit trail is the ``ipw_col`` carried on each kept row:
+    audit trail is the ``ipw_q`` carried on each kept row:
     ``(|stratum| · 1e6) div target`` for sampled strata, 1e6 where the
     stratum was kept whole — the exact-integer Horvitz-Thompson weight).
 
@@ -225,7 +217,7 @@ def stratum_equalized_sample(
         .filter(u16 * F.col("_csize") < F.lit(int(target) * 65536))
     )
     return kept.withColumn(
-        ipw_col,
+        "ipw_q",
         F.when(F.col("_csize") <= target, F.lit(1_000_000))
         .otherwise(F.expr(f"(_csize * 1000000) div {int(target)}"))
         .cast("long"),

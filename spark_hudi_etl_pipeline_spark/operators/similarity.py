@@ -248,7 +248,7 @@ def _rademacher_planes(dim: int, n_bits: int, seed: int = 101) -> list[list[int]
     ]
 
 
-def rp_sketch_portable_arrow(dim: int, n_bits: int = 8, seed: int = 101):
+def rp_sketch_portable_arrow(dim: int, n_bits: int = 8):
     """PORTABLE sign-LSH sketch UDF: an int in [0, 2^n_bits) whose bit i
     is (q(v) · s_i > 0) for seeded Rademacher plane s_i over the
     half-up quantized embedding q(v) = floor(v·EMB_QUANT + 0.5). One
@@ -260,7 +260,7 @@ def rp_sketch_portable_arrow(dim: int, n_bits: int = 8, seed: int = 101):
     import numpy as np
     import pandas as pd
 
-    planes = np.array(_rademacher_planes(dim, n_bits, seed), dtype=np.int64)
+    planes = np.array(_rademacher_planes(dim, n_bits), dtype=np.int64)
     weights = (1 << np.arange(n_bits)).astype(np.int64)
 
     # No type hints: this module uses `from __future__ import annotations`,
@@ -585,17 +585,17 @@ def ivf_write_partitioned(
     path: str,
     *,
     corpus_id: str,
-    vec_col: str = "embedding",
     n_centroids: int = 16,
 ) -> DataFrame:
     """Materialize the IVF index AS A LAYOUT: the corpus written
     hive-partitioned by ``centroid_id`` (one directory per inverted
     list). Returns the centroid table the probe side must reuse."""
     centroids = ivf_centroids(
-        corpus, corpus_id=corpus_id, vec_col=vec_col, n_centroids=n_centroids
+        corpus, corpus_id=corpus_id, vec_col="embedding", n_centroids=n_centroids
     )
     lists = ivf_assign(
-        corpus, centroids, id_col=corpus_id, vec_col=vec_col, out_vec="cv", nprobe=1
+        corpus, centroids, id_col=corpus_id, vec_col="embedding", out_vec="cv",
+        nprobe=1,
     ).select(F.col(corpus_id).alias("cid"), "cv", "centroid_id")
     lists.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
     return centroids
@@ -643,7 +643,6 @@ def ivf_upsert(
     centroids: DataFrame,
     *,
     corpus_id: str,
-    vec_col: str = "embedding",
     seq: int,
 ) -> int:
     """Incremental IVF index maintenance — the lakehouse-native ANN
@@ -678,7 +677,7 @@ def ivf_upsert(
     from .tableops import upsert_parquet_partitioned_global
 
     lists = ivf_assign(
-        batch, centroids, id_col=corpus_id, vec_col=vec_col, out_vec="cv",
+        batch, centroids, id_col=corpus_id, vec_col="embedding", out_vec="cv",
         nprobe=1,
     ).select(
         F.col(corpus_id).alias("cid"),
@@ -695,30 +694,35 @@ def ivf_upsert(
 # Product quantization (PQ)
 # --------------------------------------------------------------------------
 
+#: PQ layout of the 64-dim embeddings: PQ_SUBSPACES sub-vectors of
+#: PQ_DIM // PQ_SUBSPACES dims, each coded as one of PQ_CODES codewords
+#: (a nibble), so a vector is 8 codes at rest instead of 64 doubles. The
+#: PQ queries' SQL oracles replay exactly this layout.
+PQ_DIM = 64
+PQ_SUBSPACES = 8
+PQ_CODES = 16
+
 
 def pq_codebook(
     emb: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    n_sub: int = 8,
-    n_codes: int = 16,
 ) -> list[list[list[float]]]:
-    """Seed-free PQ codebook: per subspace, the ``n_codes`` codewords are
-    the sub-vectors of the ``n_codes`` lowest-id vectors (the same
+    """Seed-free PQ codebook: per subspace, the ``PQ_CODES`` codewords are
+    the sub-vectors of the ``PQ_CODES`` lowest-id vectors (the same
     deterministic construction as the IVF centroids — no RNG, so every
     downstream stage is value-checkable against a SQL oracle; swap in
     per-subspace k-means updates for production recall).
 
     Returns ``codebook[s][k][j]`` as plain doubles. Driver-side collect
-    is ``n_codes`` rows — metadata-scale, the standard broadcast-dim
+    is ``PQ_CODES`` rows — metadata-scale, the standard broadcast-dim
     pattern."""
-    sub_dim = dim // n_sub
+    sub_dim = PQ_DIM // PQ_SUBSPACES
     rows = (
         emb.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
         .orderBy("i")
-        .limit(n_codes)
+        .limit(PQ_CODES)
         .collect()
     )
     return [
@@ -726,7 +730,7 @@ def pq_codebook(
             [float(r["v"][s * sub_dim + j]) for j in range(sub_dim)]
             for r in rows
         ]
-        for s in range(n_sub)
+        for s in range(PQ_SUBSPACES)
     ]
 
 
@@ -735,9 +739,8 @@ def pq_encode(
     codebook: list[list[list[float]]],
     *,
     vec_col: str = "embedding",
-    out_prefix: str = "pq",
 ) -> DataFrame:
-    """Attach per-subspace PQ codes as ``{out_prefix}_0 … _{n_sub-1}``.
+    """Attach per-subspace PQ codes as ``pq_0 … pq_{n_sub-1}``.
 
     Pure map-side expressions — the codebook is inlined as literal
     arrays (n_sub × n_codes × sub_dim doubles, a few KB), the corpus is
@@ -765,7 +768,7 @@ def pq_encode(
             f"0.0D, (acc, x) -> acc + x) as d, k as k))"
         )
         cols.append(
-            F.expr(f"array_min({cands}).k").alias(f"{out_prefix}_{s}")
+            F.expr(f"array_min({cands}).k").alias(f"pq_{s}")
         )
     return df.select("*", *cols)
 
@@ -773,7 +776,6 @@ def pq_encode(
 def _sql_adc_struct(
     qid: int,
     tbl: list[list[float]],
-    code_prefix: str,
     probe_list: list[int] | None,
 ) -> str:
     """One per-query ADC struct as a SQL fragment: the fixed
@@ -782,7 +784,7 @@ def _sql_adc_struct(
     the optional probe-list array. The qid literal mirrors F.lit(int):
     int32 when it fits, else bigint — so output schemas are unchanged."""
     terms = [
-        f"element_at({_sql_arr_d(row)}, `{code_prefix}_{s}` + 1)"
+        f"element_at({_sql_arr_d(row)}, `pq_{s}` + 1)"
         for s, row in enumerate(tbl)
     ]
     chain = terms[0]
@@ -823,8 +825,6 @@ def pq_adc_topk(
     queries: list[tuple[int, list[float]]],
     codebook: list[list[list[float]]],
     *,
-    id_col: str = "vec_id",
-    code_prefix: str = "pq",
     k: int = 5,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: per query, the
@@ -838,16 +838,12 @@ def pq_adc_topk(
 
     Output: (qid, cid, adist_q, rank) — adist floor-quantized at 1e-6 so
     the value is integer-stable across engines."""
-    n_sub = len(codebook)
-
-    per_query = []
-    for qid, qvec in queries:
-        tbl = _adc_table(qvec, codebook)
-        per_query.append(
-            _sql_adc_struct(int(qid), tbl, code_prefix, probe_list=None)
-        )
+    per_query = [
+        _sql_adc_struct(int(qid), _adc_table(qvec, codebook), probe_list=None)
+        for qid, qvec in queries
+    ]
     scored = coded.select(
-        F.col(id_col).alias("cid"),
+        F.col("vec_id").alias("cid"),
         F.explode(F.expr("array(" + ",".join(per_query) + ")")).alias("q"),
     ).select("q.qid", "cid", "q.ad")
     w = Window.partitionBy("qid").orderBy(F.asc("ad"), F.asc("cid"))
@@ -928,7 +924,7 @@ def ivfpq_adc_topk(
     for qid in sorted(qvecs):
         tbl = _adc_table(qvecs[qid], cb)
         per_query.append(
-            _sql_adc_struct(int(qid), tbl, "pq", probe_list=sorted(probes[qid]))
+            _sql_adc_struct(int(qid), tbl, probe_list=sorted(probes[qid]))
         )
     scored = (
         coded.select(
@@ -1104,8 +1100,6 @@ def hard_negative_pairs(
     df: DataFrame,
     codebook: list[list[list[float]]],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_subspaces: int | None = None,
     target_block: int = 64,
     lo: float = 0.05,
@@ -1150,16 +1144,16 @@ def hard_negative_pairs(
             and block_subspaces < len(codebook)
         ):
             block_subspaces += 1
-    coded = pq_encode(df.select(id_col, vec_col), codebook)
+    coded = pq_encode(df.select("vec_id", "embedding"), codebook)
     blocks = [f"pq_{s}" for s in range(block_subspaces)]
     a = coded.select(
-        F.col(id_col).alias("anchor_id"),
-        F.col(vec_col).alias("__va"),
+        F.col("vec_id").alias("anchor_id"),
+        F.col("embedding").alias("__va"),
         *[F.col(b).alias(f"__a_{b}") for b in blocks],
     )
     b = coded.select(
-        F.col(id_col).alias("negative_id"),
-        F.col(vec_col).alias("__vb"),
+        F.col("vec_id").alias("negative_id"),
+        F.col("embedding").alias("__vb"),
         *[F.col(c).alias(f"__b_{c}") for c in blocks],
     )
     cond = F.col("anchor_id") != F.col("negative_id")
@@ -1264,12 +1258,10 @@ def label_centroid_assign(
     )
 
 
-def sq8_stats(
-    df: DataFrame, *, vec_col: str = "embedding", dim: int = 64
-) -> tuple[list[float], list[float]]:
-    """Per-dimension corpus [min, max] for SQ8 affine quantization,
-    collected driver-side as 2·dim doubles (planning-scale state, the
-    centroid-broadcast convention). min/max of doubles is exact — no
+def sq8_stats(df: DataFrame, *, dim: int = 64) -> tuple[list[float], list[float]]:
+    """Per-dimension corpus [min, max] of ``embedding`` for SQ8 affine
+    quantization, collected driver-side as 2·dim doubles (planning-scale
+    state, the centroid-broadcast convention). min/max of doubles is exact — no
     accumulation-order hazard — so the stats are engine-invariant."""
     # One wide aggregate instead of posexplode + groupBy(dim): the old
     # shape materialized n·dim exploded rows and shuffled the per-dim
@@ -1284,11 +1276,10 @@ def sq8_stats(
     # 0.0 fallback below), and the ValueError text documents dim > actual
     # length as supported. NULL out-of-bounds + null-ignoring min/max
     # reproduce that behavior exactly.
-    vref = "`" + vec_col.replace("`", "``") + "`"
-    over_len = F.expr(f"max(size({vref}))")
+    over_len = F.expr("max(size(embedding))")
     aggs = [
         F.expr(
-            f"{fn}(cast(try_element_at({vref}, {i + 1}) as double))"
+            f"{fn}(cast(try_element_at(embedding, {i + 1}) as double))"
         ).alias(f"{fn[:2]}_{i}")
         for i in range(dim)
         for fn in ("min", "max")
@@ -1308,9 +1299,6 @@ def sq8_rerank_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    corpus_id: str = "vec_id",
-    query_id: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     shortlist: int = 20,
     k: int = 10,
@@ -1334,7 +1322,7 @@ def sq8_rerank_topk(
     the stage-1 shortlist rank kept for recall auditing; ties break on
     corpus id in both stages.
     """
-    mn, mx = sq8_stats(corpus, vec_col=vec_col, dim=dim)
+    mn, mx = sq8_stats(corpus, dim=dim)
     mns = F.expr(_sql_arr_d(mn))
     mxs = F.expr(_sql_arr_d(mx))
 
@@ -1349,10 +1337,10 @@ def sq8_rerank_topk(
         lo, hi = F.element_at(mns, i + 1), F.element_at(mxs, i + 1)
         return lo + (c + 128).cast("double") * (hi - lo) / 255.0
 
-    recon = F.transform(F.transform(F.col(vec_col), _code), _recon)
-    c_sq8 = corpus.select(F.col(corpus_id).alias("cid"), recon.alias("rv"))
+    recon = F.transform(F.transform(F.col("embedding"), _code), _recon)
+    c_sq8 = corpus.select(F.col("vec_id").alias("cid"), recon.alias("rv"))
     q = F.broadcast(
-        queries.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv"))
+        queries.select(F.col("vec_id").alias("qid"), F.col("embedding").alias("qv"))
     )
     approx = c_sq8.crossJoin(q).select(
         "qid", "cid", F.round(vectors.cosine("rv", "qv"), 4).alias("approx_cos")
@@ -1364,7 +1352,7 @@ def sq8_rerank_topk(
         .select("qid", "cid", "arnk")
     )
     fetched = corpus.select(
-        F.col(corpus_id).alias("cid"), F.col(vec_col).alias("cv")
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     ).join(F.broadcast(cand), "cid")
     rer = fetched.join(q, "qid").select(
         "qid", "cid", "arnk", F.round(vectors.cosine("cv", "qv"), 4).alias("cosine")
@@ -1378,20 +1366,14 @@ def sq8_rerank_topk(
     )
 
 
-def quantize_embeddings_int8(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
+def quantize_embeddings_int8(df: DataFrame) -> DataFrame:
     """Scalar quantization to int8 (the FAISS SQ8 layout, the affine
     per-dimension complement to :func:`pq_encode`'s codebook route):
     each dimension maps through its own corpus-wide [min, max] to a
     −128…127 code, 4 bytes→1 byte per component with NO training step.
 
-    Two passes, both scale-safe: (1) per-dim min/max — one posexplode +
-    ``dim``-group aggregate, collected driver-side as 2·dim doubles
+    Two passes, both scale-safe: (1) per-dim min/max over the 64
+    dimensions — one aggregate, collected driver-side as 2·64 doubles
     (the centroid-broadcast pattern; min/max of doubles is exact, no
     accumulation-order hazard); (2) map-only encode with the stats
     inlined as literal arrays — the corpus is scanned once, nothing
@@ -1399,7 +1381,7 @@ def quantize_embeddings_int8(
     reconstruction and per-vector max |error|: the quantization-error
     audit a release gate checks before swapping the fp32 column out.
     """
-    mn, mx = sq8_stats(df, vec_col=vec_col, dim=dim)
+    mn, mx = sq8_stats(df)
     mns = F.expr(_sql_arr_d(mn))
     mxs = F.expr(_sql_arr_d(mx))
 
@@ -1411,9 +1393,9 @@ def quantize_embeddings_int8(
         return F.when(hi == lo, F.lit(0).cast("long")).otherwise(raw)
 
     coded = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.transform(F.col(vec_col), _code).alias("codes"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        F.transform(F.col("embedding"), _code).alias("codes"),
     )
 
     def _recon(c, i):
@@ -1421,12 +1403,12 @@ def quantize_embeddings_int8(
         return lo + (c + 128).cast("double") * (hi - lo) / 255.0
 
     return coded.select(
-        id_col,
+        "vec_id",
         "codes",
         F.aggregate(
             F.zip_with(
                 F.transform(F.col("codes"), _recon),
-                F.col(vec_col),
+                F.col("embedding"),
                 lambda r, x: F.abs(r - x.cast("double")),
             ),
             F.lit(0.0),

@@ -70,9 +70,8 @@ def salted_join(
     on: list[str],
     *,
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join with the big side salted and the small side replicated
+    """Inner equi-join with the big side salted and the small side replicated
     ``n_salts``× — spreads each hot key over n_salts reducers.
 
     Prefer ``F.broadcast(small)`` when the small side fits in memory;
@@ -83,4 +82,4 @@ def salted_join(
     replicated = small.withColumn(
         SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
     )
-    return salted_big.join(replicated, on=[*on, SALT_COL], how=how).drop(SALT_COL)
+    return salted_big.join(replicated, on=[*on, SALT_COL]).drop(SALT_COL)

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .clustering import cluster_linear
-from .merge import _dynamic_overwrite, _upsert_partitioned
+from .merge import _upsert_partitioned
 
 
 def insert_overwrite(
@@ -61,10 +61,9 @@ def insert_overwrite(
 
     obs = Observation()
     observed = batch.observe(obs, F.count(F.lit(1)).alias("n"))
-    if not os.path.isdir(path):
-        observed.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    else:
-        _dynamic_overwrite(spark, observed, path, partition_col)
+    observed.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(path)
     # counted on the write job itself — a trailing .count() would
     # re-run the batch plan (r13 optimization round)
     return int(obs.get["n"])

@@ -219,73 +219,71 @@ def txn_commit(
     return cv + 1
 
 
-def create_branch(root: str, name: str, from_branch: str = _MAIN) -> int:
-    """Fork ``name`` off ``from_branch``'s latest committed state —
+def create_branch(root: str, name: str) -> int:
+    """Fork ``name`` off ``main``'s latest committed state —
     a Nessie/Iceberg-REST style zero-copy ref: the new branch's v1
-    carries the source's table pins plus a ``fork`` record (source
+    carries main's table pins plus a ``fork`` record (source
     branch, version, pins) that later serves as the three-way-merge
     base. Metadata-only; no data file is touched. CAS on the branch's
     v1 arbitrates duplicate creation."""
     if name == _MAIN:
         raise ValueError("'main' always exists; it cannot be created")
-    sv, stables = catalog_latest(root, from_branch)
+    sv, stables = catalog_latest(root, _MAIN)
     if sv == 0:
-        raise KeyError(
-            f"cannot branch off empty catalog {from_branch!r} at {root!r}"
-        )
+        raise KeyError(f"cannot branch off empty catalog {_MAIN!r} at {root!r}")
     _catalog_publish(
         root,
         dict(stables),
         1,
         branch=name,
-        fork={"branch": from_branch, "version": sv, "tables": dict(stables)},
+        fork={"branch": _MAIN, "version": sv, "tables": dict(stables)},
     )
     return 1
 
 
-def merge_branch(root: str, src: str, into: str = _MAIN) -> int:
-    """Merge branch ``src`` into ``into`` with a TABLE-granularity
+def merge_branch(root: str, src: str) -> int:
+    """Merge branch ``src`` into ``main`` with a TABLE-granularity
     three-way merge against the fork-point pins (Nessie's default
     content-unaware semantics):
 
     - table changed only on ``src``   → take src's pin (fast-forward)
-    - table changed only on ``into``  → keep into's pin
+    - table changed only on ``main``  → keep main's pin
     - both changed to the SAME pin    → either
     - both changed, different pins    → :class:`BranchMergeConflict`
 
-    The result is ONE new CAS'd catalog version on ``into`` — the merge
+    The result is ONE new CAS'd catalog version on ``main`` — the merge
     itself is a transaction, all-tables-or-nothing. Metadata-only:
     no data file moves (both branches' manifests already reference the
-    shared file pool). Returns the new ``into`` version."""
+    shared file pool). Returns the new ``main`` version."""
     sv, srec = _catalog_read(root, src)
     if sv == 0:
         raise KeyError(f"branch {src!r} does not exist at {root!r}")
     # The fork record rides the branch's v1 (creation commit) only.
     with open(os.path.join(_branch_dir(root, src), "v1.json")) as fh:
         fork = json.load(fh).get("fork")
-    if fork is None or fork["branch"] != into:
+    if fork is None or fork["branch"] != _MAIN:
         raise ValueError(
-            f"branch {src!r} did not fork off {into!r}; three-way merge "
+            f"branch {src!r} did not fork off {_MAIN!r}; three-way merge "
             "base unavailable"
         )
     base = {k: int(v) for k, v in fork["tables"].items()}
     src_tables = {k: int(v) for k, v in srec.get("tables", {}).items()}
-    dv, dst_tables = catalog_latest(root, into)
+    dv, dst_tables = catalog_latest(root)
     merged: dict[str, int] = {}
     for t in sorted(set(base) | set(src_tables) | set(dst_tables)):
         b, s, d = base.get(t), src_tables.get(t), dst_tables.get(t)
         if s == b:
-            pick = d  # src untouched → whatever into has now
+            pick = d  # src untouched → whatever main has now
         elif d == b or s == d:
             pick = s  # only src moved it (or both agree)
         else:
             raise BranchMergeConflict(
                 f"table {t!r} changed on both {src!r} (v{b}->v{s}) and "
-                f"{into!r} (v{b}->v{d}) since the fork; rebase {src!r}"
+                f"{_MAIN!r} (v{b}->v{d}) since the fork; rebase {src!r}"
             )
         if pick is not None:
             merged[t] = pick
-    _catalog_publish(root, merged, dv + 1, branch=into)  # ← commit point
+    _catalog_publish(root, merged, dv + 1, branch=_MAIN)  # ← commit point
     return dv + 1
 
 
@@ -326,7 +324,6 @@ def catalog_reclaim(
     root: str,
     table_paths: dict[str, str],
     *,
-    keep_latest: int = 1,
     min_age_seconds: float = 24 * 3600.0,
 ) -> dict[str, tuple[list[int], list[str]]]:
     """The complete, safe reclamation pass for a catalog-managed table
@@ -347,9 +344,7 @@ def catalog_reclaim(
     pinned = catalog_pinned_versions(root)
     out: dict[str, tuple[list[int], list[str]]] = {}
     for name, path in table_paths.items():
-        retired = retire_manifests(
-            path, pinned=pinned.get(name, set()), keep_latest=keep_latest
-        )
+        retired = retire_manifests(path, pinned=pinned.get(name, set()))
         removed = vacuum_orphans(path, min_age_seconds=min_age_seconds)
         out[name] = (retired, removed)
     return out

@@ -53,7 +53,6 @@ def wap_upsert(
     precombine: str,
     *,
     audit: Callable[[DataFrame], DataFrame] | None = None,
-    evolve_schema: bool = False,
 ) -> int:
     """Keyed upsert committed through write→audit→publish: the full
     copy-on-write rewrite of :func:`~.merge.upsert_parquet`, with the
@@ -76,6 +75,6 @@ def wap_upsert(
 
     return _indexed_upsert(
         spark, batch, path, keys, precombine,
-        delete_col=None, index=_ALL_FILES, evolve_schema=evolve_schema,
+        delete_col=None, index=_ALL_FILES,
         before_publish=check if audit is not None else None,
     ).version

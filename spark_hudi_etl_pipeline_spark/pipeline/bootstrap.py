@@ -18,17 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-#: Audit log schema per reference :100-117 (FIXTURES.md §A2).
-PIPELINE_LOG_COLUMNS = """
-  pipeline_name STRING,
-  last_run_timestamp BIGINT,
-  current_run_timestamp BIGINT,
-  status STRING,
-  records_processed INT,
-  processing_time_seconds DOUBLE,
-  error_message STRING,
-  created_at BIGINT
-"""
+from .runlog import LOG_SCHEMA
 
 
 def create_database(spark: SparkSession, name: str) -> None:
@@ -66,10 +56,15 @@ def create_pipeline_log_table(
     db = table.split(".", 1)[0] if "." in table else None
     if db:
         create_database(spark, db)
+    # The DDL columns are the audit log's write schema (reference
+    # :100-117, FIXTURES.md §A2).
+    columns = ", ".join(
+        f"{f.name} {f.dataType.simpleString().upper()}" for f in LOG_SCHEMA
+    )
     create_keyed_table(
         spark,
         table,
-        PIPELINE_LOG_COLUMNS,
+        columns,
         primary_key="pipeline_name,created_at",
         precombine_field="created_at",
         **kw,

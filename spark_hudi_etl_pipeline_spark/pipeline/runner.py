@@ -29,7 +29,7 @@ more than the watermark scalar.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -57,11 +57,9 @@ class PipelineConfig:
     precombine_field: str = "load_timestamp"
     #: non-null guard column (reference :218); None disables.
     not_null_col: str | None = None
-    #: business-logic hook (reference process_data, :233-236).
+    #: business-logic hook (reference process_data, :233-236); runs after
+    #: the processing_date / load_timestamp stamps (reference :235-236).
     transform: Callable[[DataFrame], DataFrame] | None = None
-    #: stamp processing_date / load_timestamp metadata (reference :235-236).
-    stamp_metadata: bool = True
-    order_by: list[str] = field(default_factory=list)
     #: opt-in per-run cost attribution (pipeline/costlog.py): when set,
     #: the run's observed rows, wall, job/task footprint, and plan-shape
     #: counters are upserted here keyed (pipeline name, run timestamp).
@@ -83,7 +81,9 @@ def extract_incremental(
     """Extract with optional watermark predicate (reference :201-231):
     full load when ``watermark_ms`` is None, else only rows strictly
     newer than the watermark. The predicate is a bound Column that
-    Catalyst pushes into the scan."""
+    Catalyst pushes into the scan. The reference's sort of the extract
+    (:226) is not reproduced: a global sort before a keyed upsert is
+    wasted work at scale (SURVEY.md §7 risk register)."""
     df = config.source(spark)
     if config.not_null_col:
         df = df.filter(F.col(config.not_null_col).isNotNull())
@@ -96,11 +96,6 @@ def extract_incremental(
             else F.lit(watermark_ms)
         )
         df = df.filter(col > boundary)
-    if config.order_by:
-        # Reference sorts extract output (:226); kept opt-in because a
-        # global sort before a keyed upsert is wasted work at scale
-        # (SURVEY.md §7 risk register) — default is no order_by.
-        df = df.orderBy(*config.order_by)
     return df
 
 
@@ -126,9 +121,7 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineResult:
         spark.sparkContext.setJobGroup(cost_group, f"pipeline run {config.name}")
     try:
         watermark = runlog.get_last_run_timestamp(spark, config.log_path, config.name)
-        batch = extract_incremental(config, spark, watermark)
-        if config.stamp_metadata:
-            batch = stamp_metadata(batch)
+        batch = stamp_metadata(extract_incremental(config, spark, watermark))
         if config.transform is not None:
             batch = config.transform(batch)
         shape = None
@@ -232,7 +225,6 @@ def run_with_retries(
     config: PipelineConfig,
     *,
     max_attempts: int = 3,
-    backoff_seconds: float = 0.0,
 ) -> PipelineResult:
     """Bounded-retry wrapper around :func:`run_pipeline` — the reference
     README's "error handling and retry logic" (README.md:208) made real.
@@ -243,16 +235,15 @@ def run_with_retries(
     batch twice converges to the same table — tested in
     ``test_merge_properties``). Every failed attempt still writes its
     FAILED runlog row, so the monitoring surface sees each attempt.
-    Raises the final error when ``max_attempts`` are exhausted."""
+    Attempts follow each other without a pause. Raises the final error
+    when ``max_attempts`` are exhausted."""
     if max_attempts < 1:
         raise ValueError("max_attempts must be >= 1")
     last_exc: Exception | None = None
-    for attempt in range(max_attempts):
+    for _ in range(max_attempts):
         try:
             return run_pipeline(spark, config)
         except Exception as exc:  # noqa: BLE001 — retry any run failure
             last_exc = exc
-            if attempt + 1 < max_attempts and backoff_seconds > 0:
-                time.sleep(backoff_seconds * (2**attempt))
     assert last_exc is not None
     raise last_exc

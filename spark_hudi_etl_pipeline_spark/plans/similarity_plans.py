@@ -593,12 +593,16 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _pq_sq_chain(s: int, sub_dim: int = 8) -> str:
+#: Dims per PQ subspace (8), as ``similarity.pq_codebook`` cuts them.
+_PQ_SUB_DIM = similarity.PQ_DIM // similarity.PQ_SUBSPACES
+
+
+def _pq_sq_chain(s: int) -> str:
     """Σ_j (e.embedding[i] − cw.cv[i])² as the same left-to-right double
     chain the Spark expression evaluates."""
     terms = []
-    for j in range(sub_dim):
-        i = s * sub_dim + j + 1  # DuckDB lists are 1-based
+    for j in range(_PQ_SUB_DIM):
+        i = s * _PQ_SUB_DIM + j + 1  # DuckDB lists are 1-based
         x = (
             f"(CAST(e.embedding[{i}] AS DOUBLE) - "
             f"CAST(cw.cv[{i}] AS DOUBLE))"
@@ -653,11 +657,11 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-def _pq_q_chain(s: int, sub_dim: int = 8) -> str:
+def _pq_q_chain(s: int) -> str:
     """Query-side distance chain (q.embedding vs cw.cv), same form."""
     terms = []
-    for j in range(sub_dim):
-        i = s * sub_dim + j + 1
+    for j in range(_PQ_SUB_DIM):
+        i = s * _PQ_SUB_DIM + j + 1
         x = (
             f"(CAST(q.embedding[{i}] AS DOUBLE) - "
             f"CAST(cw.cv[{i}] AS DOUBLE))"

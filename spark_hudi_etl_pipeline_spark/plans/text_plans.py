@@ -595,8 +595,9 @@ def text_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the standard "oversample high-quality data" curation step, as one
 # declarative plan. Membership is a pure function of the row (md5 bucket,
 # engine-portable), so the sample is stable under repartition/append.
-# The ntile ranks by the ROUNDED score (what quality_score emits) with a
-# doc_id tie-break — both engines order identical values identically.
+# The ntile ranks by the ROUNDED score (what quality_score_arrow emits)
+# with a doc_id tie-break — both engines order identical values
+# identically.
 # --------------------------------------------------------------------------
 
 
@@ -654,8 +655,8 @@ def sample_by_quality_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.sampling import hash_bucket, hex_threshold
 
-    d = load_table(spark, sf_dir, "documents")
-    scored = d.select("doc_id", text.quality_score("text").alias("quality"))
+    d = fan_out(load_table(spark, sf_dir, "documents"))
+    scored = d.select("doc_id", text.quality_score_arrow().alias("quality"))
     # Materialize the scored projection once: it feeds both the local
     # window and the bin counts, and the quality score is a regex-heavy
     # scan worth paying exactly once (3 narrow columns at rest).
@@ -1136,14 +1137,16 @@ FROM q GROUP BY source ORDER BY source
 def streaming_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
+    # Fanned out before staging, so the stage holds at least a file per
+    # core and the micro-batch runs the Arrow UDF one task per core.
+    d = fan_out(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", "source", "text"
+    )
     stage = scratch(sf_dir, "stream_docs")
     tag = os.path.basename(stage)
     d.write.mode("overwrite").parquet(stage)
     stream = spark.readStream.schema(d.schema).parquet(stage)
-    scored = stream.select(
-        "source", text.quality_score("text").alias("quality")
-    )
+    scored = stream.select("source", text.quality_score_arrow().alias("quality"))
     agg = scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.when(F.col("quality") >= 0.5, 1).otherwise(0)).alias("n_kept"),

@@ -28,8 +28,8 @@ from .registry import query, scratch
 _TOKS = r"string_split_regex(trim(lower(text)), '\s+')"
 
 
-def _tokens(col: str = "text") -> F.Column:
-    return F.split(F.trim(F.lower(col)), r"\s+")
+def _tokens() -> F.Column:
+    return F.split(F.trim(F.lower("text")), r"\s+")
 
 
 def _gram_starts(n: F.Column, k: int) -> F.Column:

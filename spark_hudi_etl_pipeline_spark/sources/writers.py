@@ -45,15 +45,13 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, *, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Directory-partitioned parquet: one directory per distinct value
-    combination. Filters on ``partition_cols`` become PartitionFilters
+def write_partitioned(df: DataFrame, path: str, *, partition_cols: list[str]) -> None:
+    """Directory-partitioned parquet, overwriting ``path``: one directory
+    per distinct value combination. Filters on ``partition_cols`` become PartitionFilters
     (pruned before any file is opened). Keep partition cardinality
     bounded (≲ 10⁴ directories) — high-cardinality keys belong in
     bucketing, not partitioning."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
@@ -83,21 +81,25 @@ def hidden_bucket(col, n: int):
     return F.pmod(F.xxhash64(col), F.lit(n))
 
 
+#: Internal partition column of a hidden-partitioned layout; readers
+#: derive filters on it and drop it from their result.
+_HIDDEN_PART_COL = "__p"
+
+
 def write_hidden_partitioned(
     df: DataFrame,
     path: str,
     *,
     source_col: str,
     transform,
-    part_col: str = "__p",
     mode: str = "overwrite",
 ) -> None:
     """Iceberg-style HIDDEN partitioning: persist ``df`` partitioned by
-    ``transform(source_col)`` under the internal column ``part_col``.
-    The data columns are unchanged — the layout is metadata the reader
-    exploits, not schema the user sees."""
-    out = df.withColumn(part_col, transform(df[source_col]))
-    out.write.mode(mode).partitionBy(part_col).parquet(path)
+    ``transform(source_col)`` under the internal column
+    ``__p``. The data columns are unchanged — the layout is
+    metadata the reader exploits, not schema the user sees."""
+    out = df.withColumn(_HIDDEN_PART_COL, transform(df[source_col]))
+    out.write.mode(mode).partitionBy(_HIDDEN_PART_COL).parquet(path)
 
 
 def read_hidden_day_range(
@@ -107,11 +109,10 @@ def read_hidden_day_range(
     source_col: str,
     lo,
     hi,
-    part_col: str = "__p",
 ) -> DataFrame:
     """Read a day-hidden-partitioned table with a ``source_col`` range
     predicate [lo, hi): the reader DERIVES the partition filter
-    (``part_col`` between date(lo) and date(hi)) from the raw-column
+    (``__p`` between date(lo) and date(hi)) from the raw-column
     bounds, so the scan prunes directories (PartitionFilters — asserted
     in tests) while the row-level predicate still applies exactly. The
     caller never references the partition column; it is dropped from
@@ -121,13 +122,13 @@ def read_hidden_day_range(
     df = spark.read.parquet(path)
     lo_c, hi_c = F.lit(lo).cast("timestamp"), F.lit(hi).cast("timestamp")
     pruned = df.filter(
-        (F.col(part_col) >= lo_c.cast("date"))
-        & (F.col(part_col) <= hi_c.cast("date"))
+        (F.col(_HIDDEN_PART_COL) >= lo_c.cast("date"))
+        & (F.col(_HIDDEN_PART_COL) <= hi_c.cast("date"))
     )
     exact = pruned.filter(
         (F.col(source_col) >= lo_c) & (F.col(source_col) < hi_c)
     )
-    return exact.drop(part_col)
+    return exact.drop(_HIDDEN_PART_COL)
 
 
 def evolve_partition_spec(
@@ -137,7 +138,6 @@ def evolve_partition_spec(
     *,
     source_col: str,
     transform,
-    part_col: str = "__p",
 ) -> None:
     """Iceberg PARTITION EVOLUTION: change a table's partition spec for
     FUTURE writes without rewriting history. Spec-v0 data stays where it
@@ -151,7 +151,6 @@ def evolve_partition_spec(
         f"{path}/spec1",
         source_col=source_col,
         transform=transform,
-        part_col=part_col,
         mode="append",
     )
 
@@ -163,7 +162,6 @@ def read_evolved_day_range(
     source_col: str,
     lo,
     hi,
-    part_col: str = "__p",
 ) -> DataFrame:
     """Range-read a spec-evolved table: spec-v1 directories prune via
     the derived partition filter (read_hidden_day_range), spec-v0 data
@@ -185,8 +183,7 @@ def read_evolved_day_range(
     if os.path.isdir(os.path.join(path, "spec1")):
         parts.append(
             read_hidden_day_range(
-                spark, f"{path}/spec1", source_col=source_col,
-                lo=lo, hi=hi, part_col=part_col,
+                spark, f"{path}/spec1", source_col=source_col, lo=lo, hi=hi
             )
         )
     if not parts:

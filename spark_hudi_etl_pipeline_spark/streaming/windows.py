@@ -79,18 +79,13 @@ def tumbling_window_counts(
     )
 
 
-def sliding_window_counts(
-    events: DataFrame,
-    *,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Overlapping (sliding) windows — each event contributes to
-    window/slide windows; watermark bounds the open set."""
+def sliding_window_counts(events: DataFrame) -> DataFrame:
+    """Overlapping (sliding) 1-hour windows every 15 minutes — each event
+    contributes to 4 windows; a 30-minute watermark bounds the open
+    set."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("win"))
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("window_start"),
@@ -125,17 +120,12 @@ def session_window_stats(
     )
 
 
-def stream_dedup(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    *,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Exactly-once-per-key within the watermark horizon
+def stream_dedup(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
+    """Exactly-once-per-key within a 30-minute watermark horizon
     (``dropDuplicatesWithinWatermark``): the streaming form of the
     precombine/upsert dedup — state for a key is dropped once the
     watermark passes it, so state is bounded by horizon × arrival rate."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         keys or ["event_id"]
     )
 
@@ -193,35 +183,29 @@ def interval_join(
     return l.join(r, on & bound, how)
 
 
-def chained_window_rollup(
-    events: DataFrame,
-    *,
-    fine: str = "1 hour",
-    coarse: str = "4 hours",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def chained_window_rollup(events: DataFrame) -> DataFrame:
     """Two chained stateful aggregations in ONE streaming query
     (Spark 3.4+ multiple-stateful-operator support): per-type counts in
-    fine tumbling windows, then a coarse rollup over the finalized fine
-    windows via ``window_time`` — the streaming form of an hourly→daily
-    rollup cube. Each stage's state is bounded by its own watermark
-    horizon; the fine aggregate also shrinks what the coarse stage
-    shuffles by |types|×(coarse/fine) versus re-aggregating raw events.
+    1-hour tumbling windows, then a 4-hour rollup over the finalized
+    hourly windows via ``window_time`` — the streaming form of an
+    hourly→daily rollup cube. Each stage's state is bounded by the
+    30-minute watermark horizon; the fine aggregate also shrinks what the
+    coarse stage shuffles by |types|×4 versus re-aggregating raw events.
 
     ``value`` is summed as DECIMAL(18,2) (the fixture values are exactly
     2-decimal) so partial-aggregation order can never move the result —
     output is integer cents.
     """
     fine_agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", fine).alias("w1"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w1"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("sv"),
         )
     )
     return (
-        fine_agg.groupBy(F.window(F.window_time("w1"), coarse).alias("w2"))
+        fine_agg.groupBy(F.window(F.window_time("w1"), "4 hours").alias("w2"))
         .agg(
             F.count(F.lit(1)).alias("n_type_hours"),
             F.sum("n_events").alias("n_events"),
@@ -290,8 +274,6 @@ def foreach_batch_dedup_store(
     store_table: str,
     verdict_path: str | None = None,
     *,
-    id_col: str = "doc_id",
-    fp_col: str = "fp",
     run_tag: str = "run",
 ):
     """foreachBatch sink: incremental dedup of each micro-batch against
@@ -318,11 +300,7 @@ def foreach_batch_dedup_store(
         if batch_df.isEmpty():
             return
         verdicts = fingerprint_store_ingest(
-            batch_df,
-            store_table,
-            id_col=id_col,
-            fp_col=fp_col,
-            batch_id=f"{run_tag}-{batch_id}",
+            batch_df, store_table, batch_id=f"{run_tag}-{batch_id}"
         )
         if verdict_path is not None:
             verdicts.write.mode("append").parquet(verdict_path)
@@ -364,9 +342,6 @@ def foreach_batch_minhash_store(
     store_table: str,
     verdict_path: str | None = None,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
     run_tag: str = "run",
 ):
     """foreachBatch sink: incremental NEAR-dup detection of each
@@ -389,12 +364,7 @@ def foreach_batch_minhash_store(
         if batch_df.isEmpty():
             return
         verdicts = minhash_store_ingest(
-            batch_df,
-            store_table,
-            id_col=id_col,
-            text_col=text_col,
-            threshold=threshold,
-            batch_id=f"{run_tag}-{batch_id}",
+            batch_df, store_table, batch_id=f"{run_tag}-{batch_id}"
         )
         if verdict_path is not None:
             verdicts.write.mode("append").parquet(verdict_path)

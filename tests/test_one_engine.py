@@ -1,24 +1,37 @@
-"""One engine per operator: the package keeps no second implementation
-of a function that only parity tests run, and no option that picks
-between engines. Reference implementations that tests compare against
-live in the tests (e.g. ``tests/test_dedup.py::_minhash_signature``)."""
+"""One engine per operator, one value per unused knob: the package keeps
+no second implementation of a function that only parity tests run, no
+option that picks between engines, and no defaulted parameter that no
+caller sets. Reference implementations that tests compare against live
+in the tests (e.g. ``tests/test_dedup.py::_minhash_signature``)."""
 
 from __future__ import annotations
 
 import ast
+import dataclasses
 import inspect
+from collections import Counter, defaultdict
 from pathlib import Path
 
 from spark_hudi_etl_pipeline_spark.operators.dedup import connected_components
 from spark_hudi_etl_pipeline_spark.operators.similarity import rp_lsh_ann
+from spark_hudi_etl_pipeline_spark.pipeline.runner import PipelineConfig
 
-PKG = Path(__file__).resolve().parent.parent / "spark_hudi_etl_pipeline_spark"
+REPO = Path(__file__).resolve().parent.parent
+PKG = REPO / "spark_hudi_etl_pipeline_spark"
 
 #: Expression twins a registered query still runs beside their Arrow form.
-#: ``text.quality_score``: ``sample_by_quality_bucket`` and
-#: ``streaming_quality_filter`` (plans/text_plans.py) run the expression
-#: form, and it has not been A/B'd against ``quality_score_arrow`` there.
-_TWINS_IN_USE = {"quality_score"}
+_TWINS_IN_USE: set[str] = set()
+
+#: Defaulted parameters no call site passes that stay settable anyway:
+#: deployment settings and credentials, which a deployment sets and no
+#: code in this repository does.
+_SETTINGS = {
+    # Deployment profile; also read from SPARK_GRAFT_ENV.
+    ("get_spark_session", "env"),
+    # The secret per-release noise seed of a production release; the
+    # registered query runs the public demo seed its oracle pins.
+    ("dp_noisy_counts_release", "release_seed"),
+}
 
 
 def test_no_function_beside_its_arrow_twin():
@@ -40,3 +53,60 @@ def test_operators_take_no_engine_selecting_parameter():
         "corpus", "queries", "corpus_id", "query_id", "vec_col",
         "dim", "n_bits", "k",
     ]
+
+
+def _parsed(paths):
+    return [(p, ast.parse(p.read_text())) for p in paths]
+
+
+def test_every_defaulted_parameter_is_passed_somewhere():
+    """A defaulted parameter that no call site passes, by keyword or by
+    position, has one value in use: it is a constant. Calls are matched
+    by the callee's name; a ``*args``/``**kwargs`` call passes
+    everything, and names defined twice in the package are skipped."""
+    package = _parsed(PKG.rglob("*.py"))
+    callers = package + _parsed([
+        *(REPO / "tools").rglob("*.py"), REPO / "bench.py",
+        *(REPO / "perfbench").rglob("*.py"), *(REPO / "tests").rglob("*.py"),
+    ])
+    defs = [
+        (path, node)
+        for path, tree in package
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    n_defs = Counter(node.name for _, node in defs)
+    keywords, n_positional, star = defaultdict(set), defaultdict(int), set()
+    for _, tree in callers:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                star.add(name)
+            keywords[name] |= {k.arg for k in call.keywords}
+            n_positional[name] = max(n_positional[name], len(call.args))
+    unpassed = []
+    for path, fn in defs:
+        if n_defs[fn.name] > 1 or fn.name in star:
+            continue
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        implicit = 1 if positional and positional[0].arg in ("self", "cls") else 0
+        first_default = len(positional) - len(a.defaults)
+        for i, arg in enumerate(positional[first_default:], first_default):
+            if i - implicit >= n_positional[fn.name] and arg.arg not in keywords[fn.name]:
+                unpassed.append((fn.name, arg.arg, path.name, fn.lineno))
+        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+            if default is not None and arg.arg not in keywords[fn.name]:
+                unpassed.append((fn.name, arg.arg, path.name, fn.lineno))
+    assert [u for u in unpassed if u[:2] not in _SETTINGS] == []
+    assert {u[:2] for u in unpassed} == _SETTINGS
+
+
+def test_pipeline_config_has_no_unset_fields():
+    names = {f.name for f in dataclasses.fields(PipelineConfig)}
+    assert not names & {"order_by", "stamp_metadata"}

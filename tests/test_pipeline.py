@@ -202,6 +202,10 @@ def test_bootstrap_idempotent(spark):
             "status", "records_processed", "processing_time_seconds",
             "error_message", "created_at",
         ]
+        from spark_hudi_etl_pipeline_spark.pipeline.runlog import LOG_SCHEMA
+
+        types = [f.dataType for f in spark.table("pipeline_layer.pipeline_log").schema]
+        assert types == [f.dataType for f in LOG_SCHEMA]
         props = {
             r["key"]: r["value"]
             for r in spark.sql(

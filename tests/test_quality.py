@@ -228,6 +228,31 @@ def test_l_diversity_blocks_homogeneous_classes(spark):
         l_diversity_gate(df, ["seg"], "dx", 0)
 
 
+def _quality_score(col: str) -> F.Column:
+    """Expression reference for ``text.quality_score_arrow``: length
+    sweet-spot, low punctuation, healthy stopword ratio, sane mean token
+    length, weighted 0.3/0.2/0.3/0.2 and rounded to 6 digits."""
+    from spark_hudi_etl_pipeline_spark.functions.text import (
+        mean_token_length,
+        punct_ratio,
+        stopword_ratio,
+    )
+
+    c = F.col(col)
+    n = F.length(c)
+    len_ok = F.when((n >= 50) & (n <= 20000), F.lit(1.0)).otherwise(
+        F.when(n < 50, n / F.lit(50.0)).otherwise(F.lit(20000.0) / n)
+    )
+    punct_ok = F.lit(1.0) - F.least(punct_ratio(c) * 4, F.lit(1.0))
+    stop = stopword_ratio(c)
+    stop_ok = F.when(stop >= 0.05, F.lit(1.0)).otherwise(stop / F.lit(0.05))
+    mtl = mean_token_length(c)
+    mtl_ok = F.when((mtl >= 2.5) & (mtl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.4))
+    return F.round(
+        len_ok * 0.3 + punct_ok * 0.2 + stop_ok * 0.3 + mtl_ok * 0.2, 6
+    )
+
+
 def test_quality_score_arrow_parity(spark):
     """The Arrow twin (r13 default path of text_quality_scores) must be
     bit-identical to the expression form — length sweet-spot edges,
@@ -251,12 +276,12 @@ def test_quality_score_arrow_parity(spark):
         ],
         ["doc_id", "text"],
     )
-    expr = d.select("doc_id", text.quality_score("text").alias("q")).collect()
+    expr = d.select("doc_id", _quality_score("text").alias("q")).collect()
     arrow = d.select("doc_id", text.quality_score_arrow().alias("q")).collect()
     assert [tuple(r) for r in expr] == [tuple(r) for r in arrow]
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    e = docs.select("doc_id", text.quality_score("text").alias("q")).orderBy("doc_id").collect()
+    e = docs.select("doc_id", _quality_score("text").alias("q")).orderBy("doc_id").collect()
     a = docs.select("doc_id", text.quality_score_arrow().alias("q")).orderBy("doc_id").collect()
     assert [tuple(r) for r in e] == [tuple(r) for r in a]
 

@@ -833,11 +833,11 @@ def _rp_sketch_portable(vec_col, dim: int, n_bits: int = 8, seed: int = 101):
     return sketch
 
 
-def test_portable_sketch_paths_identical_and_recall(spark, emb):
+def test_portable_sketch_paths_identical(spark, emb):
     """The portable Rademacher sketch's expression oracle and Arrow path
     are bit-identical (integer arithmetic end-to-end — this is what
-    makes knn_lsh_ann oracle-checkable), and the ANN over it keeps a
-    practical recall floor."""
+    makes knn_lsh_ann oracle-checkable). The ANN's recall over this
+    sketch is test_ann_recall_vs_bruteforce."""
     both = emb.select(
         "vec_id",
         _rp_sketch_portable("embedding", 64, 8).alias("expr_b"),
@@ -847,18 +847,3 @@ def test_portable_sketch_paths_identical_and_recall(spark, emb):
     ).collect()
     assert all(r["expr_b"] == r["arrow_b"] for r in both)
     assert {r["expr_b"] for r in both} != {both[0]["expr_b"]}  # not degenerate
-
-    queries = emb.filter(F.col("vec_id") < 20)
-    exact = similarity.topk_cosine(
-        emb, queries, corpus_id="vec_id", query_id="vec_id", k=5
-    )
-    ann = similarity.rp_lsh_ann(
-        emb, queries, corpus_id="vec_id", query_id="vec_id",
-        dim=64, n_bits=8, k=5,
-    )
-    exact_set = {(r["qid"], r["cid"]) for r in exact.collect()}
-    ann_set = {(r["qid"], r["cid"]) for r in ann.collect()}
-    recall = len(exact_set & ann_set) / len(exact_set)
-    assert recall >= 0.25, f"portable ANN recall {recall} below floor"
-    for qid in range(20):
-        assert (qid, qid) in ann_set
