@@ -85,9 +85,7 @@ def merge_pair_fold(sym: str | Column, left: str, right: str) -> Column:
     return F.aggregate(col, F.array().cast("array<string>"), fold)
 
 
-def bpe_train(
-    word_freqs: DataFrame, n_merges: int, *, min_freq: int = 2
-) -> list[tuple[str, str]]:
+def bpe_train(word_freqs: DataFrame, n_merges: int) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from a (word, freq) dictionary.
 
     Per iteration: adjacent-pair counts (freq-weighted) → top-1 by
@@ -96,7 +94,7 @@ def bpe_train(
     depth stays O(1), and the top-1 is a TakeOrderedAndProject — only
     ONE pair row ever reaches the driver per merge (the merge list
     itself is the tokenizer artifact, inherently driver-scale). Stops
-    early when the best pair drops below ``min_freq`` (nothing left
+    early when the best pair occurs fewer than twice (nothing left
     worth merging)."""
     wf = word_freqs.select(
         _chars_with_eow("word").alias("sym"), "freq"
@@ -120,7 +118,7 @@ def bpe_train(
             .limit(1)
             .collect()
         )
-        if not best or best[0]["n"] < min_freq:
+        if not best or best[0]["n"] < 2:
             break
         left, right = best[0]["l"], best[0]["r"]
         merges.append((left, right))

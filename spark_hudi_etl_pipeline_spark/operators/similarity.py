@@ -236,12 +236,12 @@ def _sql_arr_l(vals) -> str:
 EMB_QUANT = 1_000_000
 
 
-def _rademacher_planes(dim: int, n_bits: int, seed: int = 101) -> list[list[int]]:
-    """Seeded ±1 hyperplanes. For sign-LSH, Rademacher entries are a
-    standard drop-in for Gaussians (Achlioptas-style sparse/signed
+def _rademacher_planes(dim: int, n_bits: int) -> list[list[int]]:
+    """Seeded (101) ±1 hyperplanes. For sign-LSH, Rademacher entries are
+    a standard drop-in for Gaussians (Achlioptas-style sparse/signed
     projections preserve the collision-probability ∝ angle property);
     integer entries are what make the sketch portable."""
-    rng = random.Random(seed)
+    rng = random.Random(101)
     return [
         [1 if rng.random() < 0.5 else -1 for _ in range(dim)]
         for _ in range(n_bits)
@@ -585,13 +585,13 @@ def ivf_write_partitioned(
     path: str,
     *,
     corpus_id: str,
-    n_centroids: int = 16,
 ) -> DataFrame:
     """Materialize the IVF index AS A LAYOUT: the corpus written
     hive-partitioned by ``centroid_id`` (one directory per inverted
-    list). Returns the centroid table the probe side must reuse."""
+    list, 16 lists, :func:`ivf_ann`'s default). Returns the centroid
+    table the probe side must reuse."""
     centroids = ivf_centroids(
-        corpus, corpus_id=corpus_id, vec_col="embedding", n_centroids=n_centroids
+        corpus, corpus_id=corpus_id, vec_col="embedding", n_centroids=16
     )
     lists = ivf_assign(
         corpus, centroids, id_col=corpus_id, vec_col="embedding", out_vec="cv",
@@ -1174,9 +1174,7 @@ def hard_negative_pairs(
     )
 
 
-def label_centroid_assign(
-    emb: DataFrame, *, vec_col: str = "embedding"
-) -> DataFrame:
+def label_centroid_assign(emb: DataFrame) -> DataFrame:
     """k-means E-step against the per-label mean centroids: every vector
     to its highest-cosine label centroid (ties → lowest label).
 
@@ -1194,7 +1192,7 @@ def label_centroid_assign(
     """
     sv = F.floor(F.col("v").cast("double") * 1000000).cast("long")
     cent = (
-        emb.select("label", F.posexplode(vec_col).alias("dim_idx", "v"))
+        emb.select("label", F.posexplode("embedding").alias("dim_idx", "v"))
         .groupBy("label", "dim_idx")
         .agg(F.sum(sv).alias("s"), F.count(F.lit(1)).alias("n"))
         .select(
@@ -1216,13 +1214,15 @@ def label_centroid_assign(
         )
     )
     dot = F.aggregate(
-        F.zip_with(vec_col, "c", lambda a, b: a.cast("double") * b.cast("double")),
+        F.zip_with(
+            "embedding", "c", lambda a, b: a.cast("double") * b.cast("double")
+        ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
     vnorm = F.sqrt(
         F.aggregate(
-            F.transform(vec_col, lambda x: x.cast("double") * x.cast("double")),
+            F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
@@ -1236,7 +1236,7 @@ def label_centroid_assign(
         ).cast("double")
     )
     scored = (
-        emb.select("vec_id", F.col("label").alias("orig_label"), vec_col)
+        emb.select("vec_id", F.col("label").alias("orig_label"), "embedding")
         .crossJoin(F.broadcast(carr))
         .select(
             "vec_id",

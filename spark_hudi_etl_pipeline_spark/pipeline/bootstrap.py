@@ -7,8 +7,7 @@ Without the Hudi bundle those TBLPROPERTIES are inert strings, so the
 fallback DDL here uses ``USING PARQUET`` and records the key/precombine
 contract in table properties anyway — `operators/merge.py` enforces the
 semantics at write time, which is where they live in the fallback
-architecture. With the bundle on the classpath, pass ``provider="hudi"``
-and the same DDL becomes a real Hudi table (connector passthrough).
+architecture.
 
 Everything is `IF NOT EXISTS`-idempotent: re-running bootstrap on a live
 deployment is a no-op, the reference's operational contract.
@@ -21,53 +20,21 @@ from pyspark.sql import SparkSession
 from .runlog import LOG_SCHEMA
 
 
-def create_database(spark: SparkSession, name: str) -> None:
-    """Reference :73-74."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {quoted(name)}")
-
-
-def create_keyed_table(
-    spark: SparkSession,
-    table: str,
-    columns_ddl: str,
-    *,
-    primary_key: str,
-    precombine_field: str,
-    provider: str = "parquet",
-    location: str | None = None,
-) -> None:
-    """Reference :78-97 / :100-117 — keyed table with the upsert contract
-    declared in TBLPROPERTIES. ``provider="hudi"`` reproduces the
-    reference DDL verbatim when the connector is present."""
-    loc = f" LOCATION '{location}'" if location else ""
-    spark.sql(
-        f"CREATE TABLE IF NOT EXISTS {quoted(table)} ({columns_ddl}) "
-        f"USING {provider}{loc} "
-        f"TBLPROPERTIES (type = 'cow', primaryKey = '{primary_key}', "
-        f"preCombineField = '{precombine_field}')"
-    )
-
-
-def create_pipeline_log_table(
-    spark: SparkSession, table: str = "pipeline_layer.pipeline_log", **kw
-) -> None:
-    """Reference :100-117: composite key (pipeline_name, created_at),
-    precombine on created_at."""
-    db = table.split(".", 1)[0] if "." in table else None
-    if db:
-        create_database(spark, db)
+def create_pipeline_log_table(spark: SparkSession) -> None:
+    """Reference :73-74 and :100-117: the ``pipeline_layer`` database and
+    its ``pipeline_log`` audit table, composite key (pipeline_name,
+    created_at), precombine on created_at."""
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {quoted('pipeline_layer')}")
     # The DDL columns are the audit log's write schema (reference
     # :100-117, FIXTURES.md §A2).
     columns = ", ".join(
         f"{f.name} {f.dataType.simpleString().upper()}" for f in LOG_SCHEMA
     )
-    create_keyed_table(
-        spark,
-        table,
-        columns,
-        primary_key="pipeline_name,created_at",
-        precombine_field="created_at",
-        **kw,
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {quoted('pipeline_layer.pipeline_log')} "
+        f"({columns}) USING parquet "
+        "TBLPROPERTIES (type = 'cow', primaryKey = 'pipeline_name,created_at', "
+        "preCombineField = 'created_at')"
     )
 
 

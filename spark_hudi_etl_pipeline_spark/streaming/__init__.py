@@ -5,7 +5,6 @@ from .windows import (
     foreach_batch_upsert,
     interval_join,
     session_window_stats,
-    sliding_window_counts,
     stream_dedup,
     tumbling_window_counts,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "foreach_batch_upsert",
     "interval_join",
     "session_window_stats",
-    "sliding_window_counts",
     "stream_dedup",
     "tumbling_window_counts",
 ]

@@ -79,22 +79,6 @@ def tumbling_window_counts(
     )
 
 
-def sliding_window_counts(events: DataFrame) -> DataFrame:
-    """Overlapping (sliding) 1-hour windows every 15 minutes — each event
-    contributes to 4 windows; a 30-minute watermark bounds the open
-    set."""
-    return (
-        events.withWatermark("ts", "30 minutes")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "n_events",
-        )
-    )
-
-
 def session_window_stats(
     events: DataFrame,
     *,

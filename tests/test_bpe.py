@@ -92,8 +92,9 @@ def test_train_matches_reference(spark):
 def test_train_min_freq_stops_early(spark):
     df = spark.createDataFrame([(0, "ab ab cd")], "id long, text string")
     wf = word_frequencies(df, "text")
-    # Only pairs within 'ab' (freq 2) reach min_freq; 'cd' pairs are freq 1.
-    merges = bpe_train(wf, 50, min_freq=2)
+    # Only pairs within 'ab' (freq 2) reach bpe_train's floor of 2; 'cd'
+    # pairs are freq 1.
+    merges = bpe_train(wf, 50)
     ref = _ref_train({"ab": 2, "cd": 1}, 50, min_freq=2)
     assert merges == ref
     assert 0 < len(merges) < 50

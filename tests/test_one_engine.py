@@ -63,11 +63,14 @@ def test_every_defaulted_parameter_is_passed_somewhere():
     """A defaulted parameter that no call site passes, by keyword or by
     position, has one value in use: it is a constant. Calls are matched
     by the callee's name; a ``*args``/``**kwargs`` call passes
-    everything, and names defined twice in the package are skipped."""
+    everything, and names defined twice in the package are skipped. A
+    test argument written as the default itself passes nothing: it
+    reaches no path the default does not."""
     package = _parsed(PKG.rglob("*.py"))
-    callers = package + _parsed([
+    tests = _parsed((REPO / "tests").rglob("*.py"))
+    others = _parsed([
         *(REPO / "tools").rglob("*.py"), REPO / "bench.py",
-        *(REPO / "perfbench").rglob("*.py"), *(REPO / "tests").rglob("*.py"),
+        *(REPO / "perfbench").rglob("*.py"),
     ])
     defs = [
         (path, node)
@@ -76,19 +79,19 @@ def test_every_defaulted_parameter_is_passed_somewhere():
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
     ]
     n_defs = Counter(node.name for _, node in defs)
-    keywords, n_positional, star = defaultdict(set), defaultdict(int), set()
-    for _, tree in callers:
-        for call in ast.walk(tree):
-            if not isinstance(call, ast.Call):
-                continue
-            f = call.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if any(isinstance(a, ast.Starred) for a in call.args) or any(
-                k.arg is None for k in call.keywords
-            ):
-                star.add(name)
-            keywords[name] |= {k.arg for k in call.keywords}
-            n_positional[name] = max(n_positional[name], len(call.args))
+    calls, star = defaultdict(list), set()
+    for group in (package + others, tests):
+        for _, tree in group:
+            for call in ast.walk(tree):
+                if not isinstance(call, ast.Call):
+                    continue
+                f = call.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                    k.arg is None for k in call.keywords
+                ):
+                    star.add(name)
+                calls[name].append((call, group is tests))
     unpassed = []
     for path, fn in defs:
         if n_defs[fn.name] > 1 or fn.name in star:
@@ -96,13 +99,29 @@ def test_every_defaulted_parameter_is_passed_somewhere():
         a = fn.args
         positional = a.posonlyargs + a.args
         implicit = 1 if positional and positional[0].arg in ("self", "cls") else 0
-        first_default = len(positional) - len(a.defaults)
-        for i, arg in enumerate(positional[first_default:], first_default):
-            if i - implicit >= n_positional[fn.name] and arg.arg not in keywords[fn.name]:
-                unpassed.append((fn.name, arg.arg, path.name, fn.lineno))
-        for arg, default in zip(a.kwonlyargs, a.kw_defaults):
-            if default is not None and arg.arg not in keywords[fn.name]:
-                unpassed.append((fn.name, arg.arg, path.name, fn.lineno))
+        defaults = dict(
+            zip([p.arg for p in positional[len(positional) - len(a.defaults):]],
+                a.defaults)
+        )
+        defaults |= {
+            p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+        }
+        passed = set()
+        for call, in_tests in calls[fn.name]:
+            given = {
+                positional[i].arg: v
+                for i, v in enumerate(call.args, implicit)
+                if i < len(positional)
+            }
+            given |= {k.arg: k.value for k in call.keywords}
+            passed |= {
+                n for n, v in given.items()
+                if n in defaults
+                and not (in_tests and ast.dump(v) == ast.dump(defaults[n]))
+            }
+        unpassed += [
+            (fn.name, n, path.name, fn.lineno) for n in defaults if n not in passed
+        ]
     assert [u for u in unpassed if u[:2] not in _SETTINGS] == []
     assert {u[:2] for u in unpassed} == _SETTINGS
 

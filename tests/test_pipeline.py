@@ -194,8 +194,8 @@ def test_bootstrap_idempotent(spark):
     from spark_hudi_etl_pipeline_spark.pipeline import bootstrap
 
     try:
-        bootstrap.create_pipeline_log_table(spark, "pipeline_layer.pipeline_log")
-        bootstrap.create_pipeline_log_table(spark, "pipeline_layer.pipeline_log")
+        bootstrap.create_pipeline_log_table(spark)
+        bootstrap.create_pipeline_log_table(spark)
         cols = [f.name for f in spark.table("pipeline_layer.pipeline_log").schema.fields]
         assert cols == [
             "pipeline_name", "last_run_timestamp", "current_run_timestamp",

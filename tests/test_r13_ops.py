@@ -211,7 +211,7 @@ def test_cluster_balanced_sample_equalizes_label_mix(spark):
     rows = [(i, _vec(1.0, float(i % 7) / 100.0), 0) for i in range(300)]
     rows += [(300 + i, _vec(-1.0, 5.0 + i), 1) for i in range(10)]
     emb = spark.createDataFrame(rows, EMB_SCHEMA)
-    asg = label_centroid_assign(emb, vec_col="embedding").select(
+    asg = label_centroid_assign(emb).select(
         "vec_id", "assigned_label"
     )
     kept = stratum_equalized_sample(

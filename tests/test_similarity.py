@@ -164,9 +164,7 @@ def test_ivf_partitioned_layout_prunes_and_matches(spark, tmp_path):
     emb = load_table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     path = str(tmp_path / "ivf")
-    centroids = ivf_write_partitioned(
-        spark, emb, path, corpus_id="vec_id", n_centroids=16
-    )
+    centroids = ivf_write_partitioned(spark, emb, path, corpus_id="vec_id")
     got = ivf_ann_partitioned(
         spark, path, queries, centroids, query_id="vec_id", nprobe=2, k=5
     )
@@ -815,13 +813,13 @@ def _quantize_embedding(vec_col):
     )
 
 
-def _rp_sketch_portable(vec_col, dim: int, n_bits: int = 8, seed: int = 101):
+def _rp_sketch_portable(vec_col, dim: int, n_bits: int = 8):
     """Reference oracle for ``similarity.rp_sketch_portable_arrow``:
     bit i = (q(v) · s_i > 0) for seeded Rademacher plane s_i over the
     quantized embedding, as Catalyst integer arithmetic end-to-end."""
     q = _quantize_embedding(vec_col)
     sketch = F.lit(0).cast("long")
-    for i, plane in enumerate(similarity._rademacher_planes(dim, n_bits, seed)):
+    for i, plane in enumerate(similarity._rademacher_planes(dim, n_bits)):
         # one JVM-parsed literal array per plane, not dim py4j lit calls
         signs = F.expr(similarity._sql_arr_l(plane))
         d = F.aggregate(
