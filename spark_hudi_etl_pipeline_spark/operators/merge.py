@@ -535,6 +535,16 @@ def upsert_parquet_partitioned(
 #     → publish _manifest/vN+1.json        ← THE atomic commit point
 #     → best-effort clean of replaced files (post-commit, a cleaner's job)
 #
+# Each manifest record is ``{"version", "files"}``; a commit through
+# :func:`_commit_staged` also records the staged ``schema`` (readers
+# pass it to ``spark.read.schema`` instead of inferring it from a
+# footer, which costs a Spark job) and the caller's ``meta`` (small
+# driver-side state carried from commit to commit, as Hudi keeps the
+# writer schema and the source checkpoint in a commit's extra metadata:
+# the audit log's watermark, for one). A record without them (a
+# pre-manifest listing, a record published directly) reads with an
+# inferred schema and no metadata.
+#
 # Readers resolve the live file set from the LATEST manifest, so a crash
 # at any point leaves them on version N (old complete state) or N+1 (new
 # complete state) — never a torn mix. On POSIX the publish is an atomic
@@ -615,8 +625,11 @@ def _manifest_latest(path: str) -> tuple[int, list[str]] | None:
     return versions[-1], manifest_files_at(path, versions[-1])
 
 
-def _manifest_publish(path: str, files: list[str], version: int) -> None:
-    """CAS-publish manifest ``version`` referencing ``files``
+def _manifest_publish(
+    path: str, files: list[str], version: int, extra: dict | None = None
+) -> None:
+    """CAS-publish manifest ``version`` referencing ``files``, with the
+    ``extra`` record fields (``schema``, ``meta``: see the block above)
     (:func:`_publish_json`); a concurrent writer that already claimed
     ``version`` makes this raise :class:`ConcurrentCommitError`."""
     import os
@@ -624,66 +637,99 @@ def _manifest_publish(path: str, files: list[str], version: int) -> None:
     _publish_json(
         os.path.join(path, _MANIFEST_DIR),
         version,
-        {"version": version, "files": sorted(files)},
+        {**(extra or {}), "version": version, "files": sorted(files)},
         f"manifest v{version} at {path!r} was published by a "
         "concurrent writer; re-read the latest manifest and retry "
         "the merge",
     )
 
 
-def manifest_files_at(path: str, version: int) -> list[str]:
-    """Live data files of a SPECIFIC committed manifest version — the
-    read side of version pinning (catalog pins in ``operators/txn.py``,
-    branch heads, time travel over manifests). Metadata-scale."""
+def manifest_record_at(path: str, version: int) -> dict:
+    """The committed manifest record of ``version``: ``version``,
+    ``files`` and, when the commit recorded them, ``schema`` and
+    ``meta``. Metadata-scale: one small JSON read."""
     import json
     import os
 
     mf = os.path.join(path, _MANIFEST_DIR, f"v{version}.json")
     with open(mf) as fh:
-        return json.load(fh)["files"]
+        return json.load(fh)
+
+
+def manifest_files_at(path: str, version: int) -> list[str]:
+    """Live data files of a SPECIFIC committed manifest version — the
+    read side of version pinning (catalog pins in ``operators/txn.py``,
+    branch heads, time travel over manifests). Metadata-scale."""
+    return manifest_record_at(path, version)["files"]
+
+
+def table_record(path: str) -> dict:
+    """The latest manifest record at ``path``, or ``{"version": 0,
+    "files": <directory listing>}`` for pre-manifest tables."""
+    import glob
+    import os
+
+    versions = _json_versions(os.path.join(path, _MANIFEST_DIR))
+    if versions:
+        return manifest_record_at(path, versions[-1])
+    return {
+        "version": 0,
+        "files": sorted(
+            os.path.basename(f) for f in glob.glob(os.path.join(path, "*.parquet"))
+        ),
+    }
 
 
 def table_live_files(path: str) -> tuple[int, list[str]]:
     """(manifest version, live data files) — latest manifest when one
     exists, else (0, directory listing) for pre-manifest tables."""
-    import glob
+    rec = table_record(path)
+    return rec["version"], rec["files"]
+
+
+def _read_files(spark, path: str, rec: dict, files: list[str]) -> DataFrame:
+    """Scan ``files`` of the table at ``path`` with the schema that
+    manifest record ``rec`` holds; a record without one (pre-manifest
+    listings, records published outside :func:`_commit_staged`) leaves
+    Spark to infer it from a footer, a one-task job."""
     import os
 
-    m = _manifest_latest(path)
-    if m is not None:
-        return m
-    return 0, sorted(
-        os.path.basename(f) for f in glob.glob(os.path.join(path, "*.parquet"))
-    )
+    from pyspark.sql.types import StructType
+
+    reader = spark.read
+    if "schema" in rec:
+        reader = reader.schema(StructType.fromJson(rec["schema"]))
+    return reader.parquet(*[os.path.join(path, f) for f in files])
 
 
 def read_indexed_table(spark, path: str) -> DataFrame:
     """Manifest-consistent read of an indexed COW table: only files the
     latest committed manifest references are scanned, so readers never
     observe a torn commit (orphaned pre-crash files are invisible)."""
-    import os
-
-    _, files = table_live_files(path)
-    return spark.read.parquet(*[os.path.join(path, f) for f in files])
+    rec = table_record(path)
+    return _read_files(spark, path, rec, rec["files"])
 
 
 def _commit_staged(
     path: str, staged: DataFrame, version: int, kept: list[str],
     *, clean: bool = True,
     before_publish: Callable[[list[str]], None] | None = None,
+    meta: dict | None = None,
 ) -> tuple[list[str], int]:
-    """The one commit of every keyed upsert sink: write ``staged`` to a
-    staging directory under the table (rows counted by an Observation on
-    that write job — the write doubles as materialization of a merge
-    that reads the files it replaces), move the part files in under
-    unique names (pre-commit — invisible until referenced), run
-    ``before_publish`` on the candidate live set (the WAP audit hook),
-    publish manifest ``version`` over ``kept`` + the new files (THE
-    commit point), then best-effort-clean files the new manifest no
-    longer references. If anything before the publish, the hook or the
-    publish itself raises, the moved files are removed and the error
-    propagates: the table stays on its previous version. Returns (new
-    file basenames, rows written)."""
+    """The one commit of every keyed upsert sink and of the audit-log
+    appends: write ``staged`` to a staging directory under the table
+    (rows counted by an Observation on that write job — the write
+    doubles as materialization of a merge that reads the files it
+    replaces), move the part files in under unique names (pre-commit —
+    invisible until referenced), run ``before_publish`` on the candidate
+    live set (the WAP audit hook), publish manifest ``version`` over
+    ``kept`` + the new files with ``staged``'s schema and the caller's
+    ``meta`` (THE commit point), then best-effort-clean the files of
+    version ``version - 1`` the new manifest no longer references. If
+    anything before the publish, the hook or the publish itself raises,
+    the moved files are removed and the error propagates: the table
+    stays on its previous version. Returns (new file basenames, rows
+    written)."""
     import glob
     import os
     import shutil
@@ -717,7 +763,10 @@ def _commit_staged(
         live = sorted(set(kept) | set(moved))
         if before_publish is not None:
             before_publish(live)
-        _manifest_publish(path, live, version)  # ← commit point
+        record = {"schema": staged.schema.jsonValue()}
+        if meta is not None:
+            record["meta"] = meta
+        _manifest_publish(path, live, version, record)  # ← commit point
     except BaseException:
         for f in moved:  # never referenced by a manifest
             try:
@@ -726,21 +775,29 @@ def _commit_staged(
                 pass
         _drop_guard(guard)  # the table stays as it was: no manifest
         raise
-    _drop_guard(guard)  # v{version} supersedes it; nothing pins v0
-    # Post-commit cleaner (Hudi's hoodie.clean.automatic): replaced files
-    # are unreferenced by the new manifest; removing them is best-effort
-    # hygiene, not correctness — a crash here leaves orphans that every
-    # manifest-based read ignores. clean=False preserves files referenced
-    # by OLDER manifest versions — required when a catalog pins an earlier
-    # version (operators/txn.py); those tables are reclaimed by the
-    # retention-aware orphan vacuum instead.
+    # Post-commit cleaner (Hudi's hoodie.clean.automatic): the files this
+    # commit replaced — listed by version - 1, not by this one — are
+    # unreferenced now; removing them is best-effort hygiene, not
+    # correctness — a crash here leaves orphans that every manifest-based
+    # read ignores. O(commit), never a directory scan: another unlisted
+    # file may be one a concurrent writer has moved in but not yet
+    # published (crash orphans are vacuum_orphans' job).
+    # clean=False preserves files referenced by OLDER manifest versions —
+    # required when a catalog pins an earlier version (operators/txn.py);
+    # those tables are reclaimed by the retention-aware orphan vacuum
+    # instead.
+    replaced: list[str] = []
     if clean:
-        for f in glob.glob(os.path.join(path, "*.parquet")):
-            if os.path.basename(f) not in live:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+        try:
+            replaced = sorted(set(manifest_files_at(path, version - 1)) - set(live))
+        except OSError:
+            pass  # version - 1 retired meanwhile: leave it to the vacuum
+    _drop_guard(guard)  # v{version} supersedes it; nothing pins v0
+    for f in replaced:
+        try:
+            os.remove(os.path.join(path, f))
+        except OSError:
+            pass
     return moved, n_written
 
 
@@ -891,12 +948,15 @@ def _indexed_upsert(
     takes it."""
     import os
 
-    version, live_files = table_live_files(path)
+    rec = table_record(path)
+    version, live_files = rec["version"], rec["files"]
     if base_version is not None and base_version != version:
-        live_files = manifest_files_at(path, base_version)
-        # The post-commit cleaner keys off the NEW manifest alone; with a
-        # non-latest base it would delete files other versions (other
-        # branch heads) still reference. Never clean on a branched write.
+        rec = manifest_record_at(path, base_version)
+        live_files = rec["files"]
+        # The post-commit cleaner deletes what the version before the new
+        # one lists and the new one does not; with a non-latest base that
+        # is another branch head, whose files are still referenced. Never
+        # clean on a branched write.
         clean = False
     rel = None
     if not live_files or index == _ALL_FILES:
@@ -911,11 +971,7 @@ def _indexed_upsert(
         # files and overwrites the sidecar this lazy plan reads from.
         rel = rel.localCheckpoint(eager=True)
         affected = index.probe(rel, batch, keys[0])
-    existing_sub = (
-        spark.read.parquet(*[os.path.join(path, f) for f in affected])
-        if affected
-        else None
-    )
+    existing_sub = _read_files(spark, path, rec, affected) if affected else None
     merged = merge_upsert(
         existing_sub, batch, keys, precombine,
         delete_col=delete_col, evolve_schema=evolve_schema,

@@ -22,9 +22,9 @@ attributes cost PER QUERY, Spark-first:
   regression (a new Exchange, a lost PushedFilters) shows up in the
   cost log even when the wall is noisy.
 
-One row per profiled run is upserted into a keyed parquet cost table
-through the same manifest-committed writer as the reference-schema
-audit log (runlog.py, ``upsert_parquet``), key ``(query_name, created_at)``.
+One row per profiled run is appended to a parquet cost table through
+the same append commit as the reference-schema audit log
+(``runlog.append_entry``), key ``(query_name, created_at)``.
 
 Scale: everything recorded here is planning-scale (a handful of scalars
 per run); the only corpus-scale work is the profiled query itself, which
@@ -51,9 +51,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.merge import read_indexed_table, upsert_parquet
-from ..session import local_frame
-from .runlog import now_ms
+from ..operators.merge import read_indexed_table
+from .runlog import append_entry, now_ms
 
 COST_SCHEMA = StructType(
     [
@@ -190,19 +189,13 @@ def profile_run(
 def write_cost_entry(
     spark: SparkSession, cost_path: str, entry: dict[str, object]
 ) -> None:
-    """Upsert one attribution row, keyed ``(query_name, created_at)``,
-    through the same writer as the audit log: :func:`upsert_parquet`, a
-    whole-table rewrite committed by one manifest publish — a crash
-    leaves :func:`cost_report` on the previous version."""
-    row = [tuple(entry[f.name] for f in COST_SCHEMA.fields)]
-    batch = local_frame(spark, row, COST_SCHEMA)
-    upsert_parquet(
-        spark,
-        batch,
-        cost_path,
-        keys=["query_name", "created_at"],
-        precombine="created_at",
-    )
+    """Append one attribution row, keyed ``(query_name, created_at)``,
+    through the audit log's append commit (``runlog.append_entry``): one
+    staged write and one manifest publish, no read of the table, and a
+    ``created_at`` one past the query's previous row when ``entry``'s
+    would repeat it — a crash leaves :func:`cost_report` on the previous
+    version."""
+    append_entry(spark, cost_path, COST_SCHEMA, entry, "query_name")
 
 
 def cost_report(spark: SparkSession, cost_path: str) -> DataFrame:

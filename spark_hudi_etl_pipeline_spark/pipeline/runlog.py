@@ -3,19 +3,24 @@
 Reproduces the reference's self-logging design (pipeline_architecture.py
 :100-117 DDL, :150-199 create_log_entry, :128-148 get_last_run_timestamp,
 :337-369 get_pipeline_status): every run writes one row — status, counts,
-duration, error — into a keyed table that doubles as the watermark store.
-Composite key (pipeline_name, created_at), precombine created_at, epoch-ms
-BIGINT timestamps, exactly the reference's schema (FIXTURES.md §A2).
+duration, error — into an append-only log that doubles as the watermark
+store. Composite key (pipeline_name, created_at), epoch-ms BIGINT
+timestamps, exactly the reference's schema (FIXTURES.md §A2).
 
 Differences from the reference (deliberate, SURVEY.md §3):
-- single ``first()`` instead of ``count()`` + ``collect()`` (one job, not
-  two) for the watermark lookup;
+- each row is an append commit (:func:`append_entry`): the row is staged
+  and published next to the live files, with no read of the log, and
+  the key stays unique without one (the manifest record keeps the last
+  ``created_at`` per pipeline);
+- the same record keeps each pipeline's watermark, so the watermark
+  lookup is one driver-side JSON read, not a Spark job;
 - bound Column predicates instead of f-string SQL interpolation;
 - timestamps rendered with ``timestamp_millis`` (proper TimestampType)
   rather than FROM_UNIXTIME strings.
 
-Scale: the log grows by one row per run — intrinsically tiny next to the
-data; the watermark lookup is a filtered TakeOrderedAndProject.
+Scale: the log grows by one row, and one file, per run — intrinsically
+tiny next to the data; every :data:`LOG_MAX_FILES` runs one append
+compacts it into a single file.
 """
 
 from __future__ import annotations
@@ -33,7 +38,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.merge import read_indexed_table, upsert_parquet
+from ..operators.merge import (
+    _commit_staged,
+    read_indexed_table,
+    table_record,
+    upsert_parquet,  # noqa: F401 — perfbench/workloads.py wraps it by name
+)
 from ..session import local_frame
 
 #: Reference log schema (pipeline_architecture.py:166-175), verbatim.
@@ -54,8 +64,50 @@ STATUS_SUCCESS = "SUCCESS"
 STATUS_FAILED = "FAILED"
 
 
+#: Live files at which an append rewrites the log into one file (Hudi's
+#: small-file handling). Each append adds a file, and every scan of the
+#: log opens each one; at 64, one run in 64 pays a rewrite of the log,
+#: a few KB per 64 rows, and a status read opens at most 64 files.
+LOG_MAX_FILES = 64
+
+
 def now_ms() -> int:
     return int(time.time() * 1000)
+
+
+def append_entry(
+    spark: SparkSession,
+    path: str,
+    schema: StructType,
+    entry: dict,
+    group: str,
+    *,
+    watermark: int | None = None,
+) -> None:
+    """Append ``entry`` — one row of ``schema`` keyed ``(entry[group],
+    created_at)`` — to the log at ``path`` as one manifest commit: the
+    row is staged and published next to the live files, so the only
+    Spark job is the staged write. The key stays unique without reading
+    the log: the manifest record's ``meta`` keeps the last ``created_at``
+    per group, and the row takes ``max(entry["created_at"], last + 1)``.
+    ``watermark`` (a SUCCESS run's ``current_run_timestamp``) raises the
+    group's watermark in the same record. Once the log has
+    :data:`LOG_MAX_FILES` live files, this commit rewrites them and the
+    row into one file."""
+    rec = table_record(path)
+    meta = rec.get("meta", {})
+    key = entry[group]
+    last = meta.get("created_at", {})
+    entry = {**entry, "created_at": max(entry["created_at"], last.get(key, -1) + 1)}
+    meta = {**meta, "created_at": {**last, key: entry["created_at"]}}
+    if watermark is not None:
+        marks = meta.get("watermark", {})
+        meta["watermark"] = {**marks, key: max(marks.get(key, watermark), watermark)}
+    staged = local_frame(spark, [tuple(entry[f.name] for f in schema.fields)], schema)
+    kept = rec["files"]
+    if len(kept) >= LOG_MAX_FILES:
+        staged, kept = read_indexed_table(spark, path).unionByName(staged).coalesce(1), []
+    _commit_staged(path, staged, rec["version"] + 1, kept, meta=meta)
 
 
 def write_log_entry(
@@ -70,52 +122,49 @@ def write_log_entry(
     processing_time_seconds: float | None = None,
     error_message: str | None = None,
 ) -> None:
-    """Append one audit row (reference create_log_entry, :150-199) via
-    the keyed upsert sink — same composite key + precombine semantics as
-    the reference's Hudi log write (:179-194), committed by one manifest
-    publish (read it back with ``read_indexed_table``)."""
-    row = [
-        (
-            pipeline_name,
-            last_run_timestamp,
-            current_run_timestamp,
-            status,
-            records_processed,
-            float(processing_time_seconds) if processing_time_seconds is not None else None,
-            error_message,
-            now_ms(),
-        )
-    ]
-    batch = local_frame(spark, row, LOG_SCHEMA)
-    upsert_parquet(
+    """Append one audit row (reference create_log_entry, :150-199) as an
+    append commit (:func:`append_entry`) keyed ``(pipeline_name,
+    created_at)``, ``created_at`` the current epoch-ms or one past the
+    pipeline's previous row, so two rows in one millisecond both stay.
+    A SUCCESS row also advances the pipeline's watermark in the commit's
+    record. Read the log back with ``read_indexed_table``."""
+    append_entry(
         spark,
-        batch,
         log_path,
-        keys=["pipeline_name", "created_at"],
-        precombine="created_at",
+        LOG_SCHEMA,
+        {
+            "pipeline_name": pipeline_name,
+            "last_run_timestamp": last_run_timestamp,
+            "current_run_timestamp": current_run_timestamp,
+            "status": status,
+            "records_processed": records_processed,
+            "processing_time_seconds": (
+                float(processing_time_seconds)
+                if processing_time_seconds is not None
+                else None
+            ),
+            "error_message": error_message,
+            "created_at": now_ms(),
+        },
+        "pipeline_name",
+        watermark=current_run_timestamp if status == STATUS_SUCCESS else None,
     )
 
 
 def get_last_run_timestamp(
     spark: SparkSession, log_path: str, pipeline_name: str
 ) -> int | None:
-    """Watermark read (reference :128-148): most recent SUCCESS run's
-    ``current_run_timestamp``; ``None`` on first run OR on any error —
-    error ⇒ full reload is the reference's deliberate recovery semantic
-    (:143-148)."""
+    """Watermark read (reference :128-148): the largest
+    ``current_run_timestamp`` of the pipeline's SUCCESS rows, as the log's
+    latest manifest record keeps it — one JSON read on the driver, no
+    Spark job. ``None`` on first run OR on any error — error ⇒ full
+    reload is the reference's deliberate recovery semantic (:143-148).
+    A log without the record's watermark (written before the log kept
+    one) reads as ``None`` too: one full load, which the keyed target
+    upsert makes idempotent."""
     try:
-        row = (
-            read_indexed_table(spark, log_path)
-            .filter(
-                (F.col("pipeline_name") == pipeline_name)
-                & (F.col("status") == STATUS_SUCCESS)
-            )
-            .orderBy(F.desc("current_run_timestamp"))
-            .select("current_run_timestamp")
-            .first()
-        )
-        return int(row[0]) if row is not None else None
-    except Exception:
+        return int(table_record(log_path)["meta"]["watermark"][pipeline_name])
+    except (OSError, ValueError, KeyError):
         return None
 
 

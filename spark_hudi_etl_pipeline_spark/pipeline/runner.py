@@ -7,18 +7,21 @@ short-circuit → transform hook (metadata stamping + user business logic)
 → keyed upsert write → audit log row; FAILED row + re-raise on error —
 with the reference's defects fixed (SURVEY.md §3):
 
-- the extract is materialized ONCE (cache → count → write) instead of
-  the reference's double computation (:283 count + :297 write re-scan);
+- the extract is materialized ONCE — one eager local checkpoint whose
+  Observation counts the rows, then the write reads the checkpoint —
+  instead of the reference's double computation (:283 count + :297
+  write re-scan);
 - the error path cannot raise UnboundLocalError when failure precedes
   the watermark read (:318-330 latent bug): all state is initialized
   up front;
 - predicates are bound Columns, not interpolated SQL strings.
 
-The target and the audit log are written by ``merge.upsert_parquet``, a
-copy-on-write rewrite committed by one manifest publish (the reference's
-Hudi COW commit, :179-194): a crash mid-run leaves both on their previous
-version, so the watermark never advances past data that did not land.
-Read them with ``merge.read_indexed_table``.
+The target is written by ``merge.upsert_parquet``, a copy-on-write
+rewrite committed by one manifest publish (the reference's Hudi COW
+commit, :179-194), and the audit log by an append commit of the same
+protocol whose manifest record carries the watermark: a crash mid-run
+leaves both on their previous version, so the watermark never advances
+past data that did not land. Read them with ``merge.read_indexed_table``.
 
 Scale: the watermark predicate pushes into the source scan (incremental
 runs read only new files); the upsert merge broadcasts the batch against
@@ -32,7 +35,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import scalars
@@ -128,36 +131,38 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineResult:
         if config.cost_log_path is not None:
             from .costlog import plan_shape
 
-            shape = plan_shape(batch)  # pre-cache: the real extract plan
-        # Single materialization: cache once, count from the cache, feed
-        # the same cache to the merge (fixes the reference's double scan).
-        batch = batch.cache()
-        try:
-            records = batch.count()
-            if records == 0:
-                # Empty-batch short-circuit (reference :285-293): log
-                # SUCCESS(0) and keep the previous watermark semantics by
-                # still advancing current_run_timestamp (matches :288).
-                runlog.write_log_entry(
-                    spark,
-                    config.log_path,
-                    pipeline_name=config.name,
-                    status=runlog.STATUS_SUCCESS,
-                    current_run_timestamp=run_ts,
-                    last_run_timestamp=watermark,
-                    records_processed=0,
-                    processing_time_seconds=time.time() - start,
-                )
-                return PipelineResult(runlog.STATUS_SUCCESS, 0, watermark, time.time() - start)
-            upsert_parquet(
+            shape = plan_shape(batch)  # pre-checkpoint: the real extract plan
+        # Single materialization: one job checkpoints the batch and its
+        # Observation counts the rows; the merge reads the checkpoint
+        # (fixes the reference's double scan). A cache() + count() would
+        # take three jobs: the cache build and count's two stages.
+        obs = Observation()
+        batch = batch.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
+        records = int(obs.get["n"])
+        if records == 0:
+            # Empty-batch short-circuit (reference :285-293): log
+            # SUCCESS(0) and keep the previous watermark semantics by
+            # still advancing current_run_timestamp (matches :288).
+            runlog.write_log_entry(
                 spark,
-                batch,
-                config.target_path,
-                keys=config.record_keys,
-                precombine=config.precombine_field,
+                config.log_path,
+                pipeline_name=config.name,
+                status=runlog.STATUS_SUCCESS,
+                current_run_timestamp=run_ts,
+                last_run_timestamp=watermark,
+                records_processed=0,
+                processing_time_seconds=time.time() - start,
             )
-        finally:
-            batch.unpersist()
+            return PipelineResult(runlog.STATUS_SUCCESS, 0, watermark, time.time() - start)
+        upsert_parquet(
+            spark,
+            batch,
+            config.target_path,
+            keys=config.record_keys,
+            precombine=config.precombine_field,
+        )
         duration = time.time() - start
         runlog.write_log_entry(
             spark,

@@ -1,5 +1,5 @@
 """Sources & sinks: fixture catalog, parquet readers/writers."""
 
-from .catalog import FIXTURE_TABLES, load_table, load_tables, register_views
+from .catalog import FIXTURE_TABLES, load_table
 
-__all__ = ["FIXTURE_TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["FIXTURE_TABLES", "load_table"]

@@ -3,11 +3,11 @@
 
 The reference reads catalog-managed Hudi tables via ``spark.sql("… FROM
 db.tbl")``. In this harness the same tables are parquet files under a
-scale-factor directory; ``register_views`` gives every query the identical
-``FROM name`` surface. A parquet scan through Catalyst gets predicate
-pushdown, column pruning, and (on partitioned layouts) partition pruning
-for free — at 100 TB the only change is the path pointing at an object
-store and the files being partitioned/clustered, not any query code.
+scale-factor directory, and ``load_table`` reads one by name. A parquet
+scan through Catalyst gets predicate pushdown, column pruning, and (on
+partitioned layouts) partition pruning for free — at 100 TB the only
+change is the path pointing at an object store and the files being
+partitioned/clustered, not any query code.
 """
 
 from __future__ import annotations
@@ -94,13 +94,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in FIXTURE_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every fixture as a temp view so SQL-surface queries can use
-    the reference's ``FROM table`` form (reference :217, :357)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

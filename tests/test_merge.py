@@ -12,6 +12,7 @@ from spark_hudi_etl_pipeline_spark.operators.merge import (
     precombine_batch,
     read_indexed_table,
     table_live_files,
+    table_record,
     upsert_parquet,
 )
 from spark_hudi_etl_pipeline_spark.session import local_frame
@@ -19,6 +20,21 @@ from spark_hudi_etl_pipeline_spark.session import local_frame
 
 def rows_of(df):
     return {tuple(r) for r in df.collect()}
+
+
+def assert_recorded_schema(spark, path):
+    """A manifest-table read takes its schema from the manifest record;
+    that schema must be the one Spark infers from the live files: names,
+    types and nullability."""
+    import os
+
+    assert "schema" in table_record(path)
+    files = [os.path.join(path, f) for f in table_live_files(path)[1]]
+    inferred = spark.read.parquet(*files).schema
+    recorded = read_indexed_table(spark, path).schema
+    assert [(f.name, f.dataType, f.nullable) for f in recorded] == [
+        (f.name, f.dataType, f.nullable) for f in inferred
+    ]
 
 
 @pytest.fixture()
@@ -76,6 +92,7 @@ def test_upsert_parquet_converges_on_rerun(spark, tmp_table, schema):
     n2 = upsert_parquet(spark, batch, tmp_table, keys=["k"], precombine="prec")
     assert n1 == n2 == 2
     assert rows_of(spark.read.parquet(tmp_table)) == {("a", "v1", 1), ("b", "v1", 1)}
+    assert_recorded_schema(spark, tmp_table)
 
 
 def test_upsert_parquet_incremental_update(spark, tmp_table, schema):
@@ -88,6 +105,7 @@ def test_upsert_parquet_incremental_update(spark, tmp_table, schema):
         ("b", "v2", 2),
         ("c", "v1", 1),
     }
+    assert_recorded_schema(spark, tmp_table)
 
 
 def test_upsert_parquet_rewrite_does_not_add_a_file_per_batch(spark, tmp_table, schema):
@@ -105,6 +123,7 @@ def test_upsert_parquet_rewrite_does_not_add_a_file_per_batch(spark, tmp_table, 
     on_disk = [os.path.basename(f) for f in glob.glob(f"{tmp_table}/*.parquet")]
     assert on_disk == live
     assert read_indexed_table(spark, tmp_table).count() == 10
+    assert_recorded_schema(spark, tmp_table)
 
 
 def test_merge_first_write(spark, schema):
@@ -168,6 +187,7 @@ def test_upsert_parquet_delete_col(spark, tmp_path):
     b2 = spark.createDataFrame([(1, "-", 20, True)], "k int, v string, pc int, del boolean")
     n = upsert_parquet(spark, b2, path, ["k"], "pc", delete_col="del")
     assert n == 0
+    assert_recorded_schema(spark, path)
 
 
 def test_partial_update_fills_nulls_from_existing(spark):
@@ -243,6 +263,54 @@ def test_manifest_publish_is_compare_and_swap(spark, tmp_path):
         _manifest_publish(path, ["a.parquet", "c.parquet"], 2)
     # The winner's manifest is untouched by the failed publish.
     assert _manifest_latest(path) == (2, ["a.parquet", "b.parquet"])
+
+
+def test_cleaner_spares_a_concurrent_writers_moved_in_file(spark, tmp_path, monkeypatch):
+    """Writer B moves its file in right after writer A's publish, and
+    publishes after A's post-commit cleaner has run. The cleaner deletes
+    only the files A's commit replaced, so B's publish succeeds and the
+    table holds both writers' rows."""
+    import threading
+
+    from spark_hudi_etl_pipeline_spark.operators import merge
+
+    path = str(tmp_path / "t")
+    schema = "k string, v string, prec long"
+
+    def write(rows):
+        upsert_parquet(spark, local_frame(spark, rows, schema), path, ["k"], "prec")
+
+    write([("a", "v0", 0)])
+    real = merge._manifest_publish
+    writer_a = threading.current_thread()
+    b_moved_in, a_done = threading.Event(), threading.Event()
+    b_errors: list[BaseException] = []
+
+    def writer_b():
+        try:
+            write([("b", "v1", 1)])
+        except BaseException as exc:
+            b_errors.append(exc)
+            b_moved_in.set()
+
+    b = threading.Thread(target=writer_b)
+
+    def publish(path_, files, version, extra=None):
+        if threading.current_thread() is writer_a:
+            real(path_, files, version, extra)  # A's commit point
+            b.start()  # B reads A's version, stages and moves its file in
+            assert b_moved_in.wait(timeout=300)
+        else:
+            b_moved_in.set()
+            assert a_done.wait(timeout=300)  # A's cleaner has run
+            real(path_, files, version, extra)
+
+    monkeypatch.setattr(merge, "_manifest_publish", publish)
+    write([("a", "v1", 1)])
+    a_done.set()
+    b.join(timeout=300)
+    assert not b.is_alive() and not b_errors
+    assert rows_of(read_indexed_table(spark, path)) == {("a", "v1", 1), ("b", "v1", 1)}
 
 
 def test_merge_into_all_three_arms(spark):

@@ -437,13 +437,16 @@ def test_manifest_commit_crash_never_torn(spark, scattered_table):
     """Crash-between-stage-and-commit: data files that were moved in but
     never referenced by a published manifest are invisible to readers —
     a reader sees the complete old state or the complete new state,
-    never a mix. The next successful commit also cleans the orphans."""
+    never a mix. The next successful commit leaves the orphan alone (only
+    age tells it from a concurrent writer's moved-in file), and
+    vacuum_orphans reclaims it."""
     import os
     import shutil
 
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_indexed_table,
         table_live_files,
+        vacuum_orphans,
     )
 
     batch = spark.createDataFrame([(3, "v3-new", 2)], KSCHEMA)
@@ -466,14 +469,17 @@ def test_manifest_commit_crash_never_torn(spark, scattered_table):
     assert after_crash == before
     assert table_live_files(scattered_table)[0] == v_before
 
-    # The next successful commit supersedes the orphan and cleans it.
+    # The next successful commit supersedes the orphan; the vacuum
+    # reclaims it.
     batch2 = spark.createDataFrame([(4, "v4-new", 3)], KSCHEMA)
     upsert_parquet_indexed(spark, batch2, scattered_table, "k", "prec")
     final = {(r["k"], r["v"]) for r in read_indexed_table(spark, scattered_table).collect()}
     assert (3, "v3-new") in final and (4, "v4-new") in final
     assert not any(v == "TORN" for _, v in final)
-    assert not os.path.exists(orphan)  # cleaner removed the orphan
-    # Directory read and manifest read agree after the clean commit.
+    assert os.path.exists(orphan)  # the commit's cleaner leaves it
+    assert vacuum_orphans(scattered_table, min_age_seconds=0) == [os.path.basename(orphan)]
+    assert not os.path.exists(orphan)
+    # Directory read and manifest read agree after the vacuum.
     dir_read = {(r["k"], r["v"]) for r in spark.read.parquet(scattered_table).collect()}
     assert dir_read == final
 
@@ -605,10 +611,10 @@ spark = get_spark_session(
 )
 publish = merge._manifest_publish
 
-def crash_on_commit(path, files, version):
+def crash_on_commit(path, files, version, extra=None):
     if any(f.startswith("part-upsert-") for f in files):
         os._exit(3)  # killed after the move, before the commit point
-    publish(path, files, version)
+    publish(path, files, version, extra)
 
 merge._manifest_publish = crash_on_commit
 batch = spark.createDataFrame(

@@ -127,10 +127,10 @@ def test_failed_commit_leaves_previous_run_visible(spark, tmp_path, monkeypatch,
     if failure == "publish":
         real = merge._manifest_publish
 
-        def publish(path, files, version):
+        def publish(path, files, version, extra=None):
             if path == cfg.target_path:
                 raise OSError("injected crash before the manifest publish")
-            real(path, files, version)
+            real(path, files, version, extra)
 
         monkeypatch.setattr(merge, "_manifest_publish", publish)
         expected = OSError
@@ -188,14 +188,123 @@ def test_rerun_convergence_upsert(spark, tmp_path):
     assert sorted(ids) == sorted(set(ids)), "upsert must not duplicate keys"
 
 
+def _jobs_in(spark, fn):
+    """(fn's result, Spark jobs fn ran), counted from the status tracker
+    under a job group of its own."""
+    import uuid
+
+    from spark_hudi_etl_pipeline_spark.pipeline.costlog import job_footprint
+
+    sc = spark.sparkContext
+    group = f"jobs:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, job_footprint(sc, group)[0]
+
+
+#: Spark jobs of a one-row incremental run_pipeline batch: one observed
+#: checkpoint of the batch, five for the target upsert (its adaptive
+#: query stages and its staged write) and the audit row's staged write.
+#: The watermark and both tables' schemas come from manifest records on
+#: the driver, and the audit row reads nothing.
+INCREMENTAL_RUN_MAX_JOBS = 7
+
+
+def test_incremental_run_job_budget(spark, tmp_path):
+    t0 = now_ms()
+    old_rows = [(1, "u1", t0 - 1000, "a"), (2, "u2", t0 - 500, "b")]
+    run_pipeline(spark, make_config(spark, tmp_path, old_rows))
+    cfg = make_config(spark, tmp_path, old_rows + [(3, "u3", now_ms() + 60_000, "c")])
+    res, jobs = _jobs_in(spark, lambda: run_pipeline(spark, cfg))
+    assert res.status == "SUCCESS" and res.records_processed == 1
+    assert jobs <= INCREMENTAL_RUN_MAX_JOBS
+
+
+def test_watermark_read_runs_no_job(spark, tmp_path):
+    cfg = make_config(spark, tmp_path, [(1, "u1", now_ms() - 10, "a")])
+    r = run_pipeline(spark, cfg)
+    wm, jobs = _jobs_in(spark, lambda: get_last_run_timestamp(spark, cfg.log_path, cfg.name))
+    assert jobs == 0
+    rows = spark.read.parquet(cfg.log_path).collect()
+    assert wm == rows[0]["current_run_timestamp"] and r.status == "SUCCESS"
+
+
+def test_log_rows_in_one_millisecond_both_stay(spark, tmp_path, monkeypatch):
+    """The log key (pipeline_name, created_at) stays unique without a
+    read of the log: a second row in the same millisecond takes the
+    next one."""
+    from spark_hudi_etl_pipeline_spark.operators.merge import read_indexed_table
+    from spark_hudi_etl_pipeline_spark.pipeline import runlog
+
+    monkeypatch.setattr(runlog, "now_ms", lambda: 1_700_000_000_000)
+    path = str(tmp_path / "log")
+    for ts in (10, 20):
+        runlog.write_log_entry(
+            spark, path, pipeline_name="p", status="SUCCESS", current_run_timestamp=ts
+        )
+    rows = read_indexed_table(spark, path).orderBy("created_at").collect()
+    assert [r["current_run_timestamp"] for r in rows] == [10, 20]
+    assert rows[0]["created_at"] < rows[1]["created_at"]
+
+
+def test_failed_run_does_not_advance_watermark(spark, tmp_path):
+    cfg = make_config(spark, tmp_path, [(1, "u1", now_ms() - 1000, "a")])
+    run_pipeline(spark, cfg)
+    before = get_last_run_timestamp(spark, cfg.log_path, cfg.name)
+
+    def bad(df):
+        raise RuntimeError("boom")
+
+    cfg_bad = make_config(spark, tmp_path, [(2, "u2", now_ms() + 60_000, "b")], transform=bad)
+    with pytest.raises(RuntimeError):
+        run_pipeline(spark, cfg_bad)
+    assert get_last_run_timestamp(spark, cfg.log_path, cfg.name) == before
+    statuses = [r["status"] for r in get_pipeline_status(spark, cfg.log_path).collect()]
+    assert statuses == ["FAILED", "SUCCESS"]
+
+
+def test_log_compacts_at_its_file_bound(spark, tmp_path):
+    """LOG_MAX_FILES + 1 appends: the last one rewrites the log into one
+    file, keeping every row, every pipeline's watermark and the last
+    created_at (the next row still takes a fresh key)."""
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_indexed_table,
+        table_live_files,
+    )
+    from spark_hudi_etl_pipeline_spark.pipeline import runlog
+
+    path = str(tmp_path / "log")
+    n = runlog.LOG_MAX_FILES + 1
+    for i in range(n):
+        runlog.write_log_entry(
+            spark, path, pipeline_name=f"p{i % 2}",
+            status="FAILED" if i == n - 2 else "SUCCESS", current_run_timestamp=i,
+        )
+    assert len(table_live_files(path)[1]) < runlog.LOG_MAX_FILES
+    rows = read_indexed_table(spark, path).collect()
+    assert sorted(r["current_run_timestamp"] for r in rows) == list(range(n))
+    assert len({(r["pipeline_name"], r["created_at"]) for r in rows}) == n
+    # n - 1 = 64 is p0's last SUCCESS; n - 2 = 63, p1's last row, FAILED.
+    assert get_last_run_timestamp(spark, path, "p0") == n - 1
+    assert get_last_run_timestamp(spark, path, "p1") == n - 4
+    last = max(r["created_at"] for r in rows if r["pipeline_name"] == "p0")
+    runlog.write_log_entry(
+        spark, path, pipeline_name="p0", status="SUCCESS", current_run_timestamp=n
+    )
+    assert max(r["created_at"] for r in read_indexed_table(spark, path).collect()) > last
+
+
 def test_bootstrap_idempotent(spark):
     """R2: CREATE DATABASE/TABLE IF NOT EXISTS — re-running is a no-op;
     the upsert contract lands in table properties."""
-    from spark_hudi_etl_pipeline_spark.pipeline import bootstrap
+    from spark_hudi_etl_pipeline_spark import api
 
     try:
-        bootstrap.create_pipeline_log_table(spark)
-        bootstrap.create_pipeline_log_table(spark)
+        api.create_database_and_table(spark)
+        api.create_database_and_table(spark)
         cols = [f.name for f in spark.table("pipeline_layer.pipeline_log").schema.fields]
         assert cols == [
             "pipeline_name", "last_run_timestamp", "current_run_timestamp",
