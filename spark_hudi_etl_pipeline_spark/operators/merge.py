@@ -614,17 +614,6 @@ def _publish_json(vdir: str, version: int, rec: dict, conflict: str) -> None:
         os.unlink(tmp)
 
 
-def _manifest_latest(path: str) -> tuple[int, list[str]] | None:
-    """Latest committed (version, live data files) at ``path``, or None
-    for pre-manifest tables. Metadata-scale: one small JSON read."""
-    import os
-
-    versions = _json_versions(os.path.join(path, _MANIFEST_DIR))
-    if not versions:
-        return None
-    return versions[-1], manifest_files_at(path, versions[-1])
-
-
 def _manifest_publish(
     path: str, files: list[str], version: int, extra: dict | None = None
 ) -> None:
@@ -745,7 +734,7 @@ def _commit_staged(
                 "overwrite"
             ).parquet(staging)
             n_written = int(obs.get["n"])
-            if _manifest_latest(path) is None:
+            if not _json_versions(os.path.join(path, _MANIFEST_DIR)):
                 # First commit: pin the pre-commit state (the listing,
                 # empty for a new path) as v0 before anything moves in,
                 # so a crash before the publish leaves the moved files

@@ -136,6 +136,14 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineResult:
         # Observation counts the rows; the merge reads the checkpoint
         # (fixes the reference's double scan). A cache() + count() would
         # take three jobs: the cache build and count's two stages.
+        # Trade-off, the one the merge helpers' checkpoints accept too:
+        # nothing unpersists the checkpoint, so its blocks stay on the
+        # executors until the ContextCleaner collects the RDD after a
+        # driver GC, and a local checkpoint has no lineage to recompute
+        # from, so losing an executor during the upsert fails the run.
+        # That failure logs FAILED with the watermark unmoved, and
+        # run_with_retries reruns the batch against the idempotent
+        # keyed upsert.
         obs = Observation()
         batch = batch.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
             eager=True

@@ -249,7 +249,6 @@ def test_manifest_publish_is_compare_and_swap(spark, tmp_path):
 
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         ConcurrentCommitError,
-        _manifest_latest,
         _manifest_publish,
     )
 
@@ -262,7 +261,7 @@ def test_manifest_publish_is_compare_and_swap(spark, tmp_path):
     with pytest.raises(ConcurrentCommitError, match="concurrent writer"):
         _manifest_publish(path, ["a.parquet", "c.parquet"], 2)
     # The winner's manifest is untouched by the failed publish.
-    assert _manifest_latest(path) == (2, ["a.parquet", "b.parquet"])
+    assert table_live_files(path) == (2, ["a.parquet", "b.parquet"])
 
 
 def test_cleaner_spares_a_concurrent_writers_moved_in_file(spark, tmp_path, monkeypatch):

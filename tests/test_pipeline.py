@@ -269,7 +269,9 @@ def test_failed_run_does_not_advance_watermark(spark, tmp_path):
 def test_log_compacts_at_its_file_bound(spark, tmp_path):
     """LOG_MAX_FILES + 1 appends: the last one rewrites the log into one
     file, keeping every row, every pipeline's watermark and the last
-    created_at (the next row still takes a fresh key)."""
+    created_at (the next row still takes a fresh key). A read of the log
+    at its bound runs no more jobs than one of a single file: the bound
+    stays within the paths Spark lists without a parallel-listing job."""
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_indexed_table,
         table_live_files,
@@ -279,15 +281,20 @@ def test_log_compacts_at_its_file_bound(spark, tmp_path):
     path = str(tmp_path / "log")
     n = runlog.LOG_MAX_FILES + 1
     for i in range(n):
+        if i == n - 1:
+            _, jobs_at_bound = _jobs_in(
+                spark, lambda: read_indexed_table(spark, path).collect()
+            )
         runlog.write_log_entry(
             spark, path, pipeline_name=f"p{i % 2}",
             status="FAILED" if i == n - 2 else "SUCCESS", current_run_timestamp=i,
         )
     assert len(table_live_files(path)[1]) < runlog.LOG_MAX_FILES
-    rows = read_indexed_table(spark, path).collect()
+    rows, jobs_compacted = _jobs_in(spark, lambda: read_indexed_table(spark, path).collect())
+    assert jobs_at_bound == jobs_compacted
     assert sorted(r["current_run_timestamp"] for r in rows) == list(range(n))
     assert len({(r["pipeline_name"], r["created_at"]) for r in rows}) == n
-    # n - 1 = 64 is p0's last SUCCESS; n - 2 = 63, p1's last row, FAILED.
+    # n - 1 (even: p0) is p0's last SUCCESS; n - 2, p1's last row, FAILED.
     assert get_last_run_timestamp(spark, path, "p0") == n - 1
     assert get_last_run_timestamp(spark, path, "p1") == n - 4
     last = max(r["created_at"] for r in rows if r["pipeline_name"] == "p0")

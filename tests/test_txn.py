@@ -214,9 +214,9 @@ def test_txn_pins_the_version_its_own_upsert_published(spark, cat, monkeypatch):
     manifest version the upsert itself returned (r7 ADVICE, txn.py:220)."""
     import spark_hudi_etl_pipeline_spark.operators.txn as txn_mod
     from spark_hudi_etl_pipeline_spark.operators.merge import (
-        _manifest_latest,
         _manifest_publish,
         manifest_files_at,
+        table_live_files,
     )
 
     root, a, b = cat
@@ -235,7 +235,7 @@ def test_txn_pins_the_version_its_own_upsert_published(spark, cat, monkeypatch):
     u = spark.createDataFrame([(2, "mine", 20)], SCHEMA)
     txn_commit(spark, root, [("ta", a, u, "k", "prec")])
     _, tables = catalog_latest(root)
-    latest_v, _ = _manifest_latest(a)
+    latest_v, _ = table_live_files(a)
     assert tables["ta"] == latest_v - 1  # pinned OUR publish, not the interloper's
 
 
