@@ -718,6 +718,11 @@ def embedding_neardup_pairs(
     to the unblocked formulation (and its SQL oracle). Without
     ``block_col`` this is the exact O(n²) verify, acceptable only for
     small n.
+
+    The pairs come unordered: a caller that wants them sorted and used
+    ``block_col`` sorts a checkpoint of them, since a global sort
+    samples its range bounds by re-running its child, the per-block
+    Python GEMM included.
     """
     from ..functions import vectors
 
@@ -751,7 +756,6 @@ def embedding_neardup_pairs(
             F.round(vectors.cosine("v_a", "v_b"), 4).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
-        .orderBy("id_a", "id_b")
     )
 
 

@@ -1202,18 +1202,21 @@ def read_point_lookup(
     ranges), and the bare ``_bloom`` sidecar is deliberately NOT
     consulted: it holds record-key bits, and probing it with another
     column's values would yield bloom false NEGATIVES — silently missing
-    rows, not just weaker pruning."""
-    import os
+    rows, not just weaker pruning.
 
+    The probe key's type and the reader's schema come from the
+    manifest's recorded ``schema``; a record without one falls back to
+    footer inference (a one-task job each)."""
     from .clustering import file_column_bounds
 
-    _, live_files = table_live_files(path)
+    rec = table_record(path)
+    live_files = rec["files"]
     if not live_files:
         raise FileNotFoundError(f"no data files at {path!r}")
     probe_df = local_frame(
         spark,
         [(v,) for v in values],
-        spark.read.parquet(os.path.join(path, live_files[0])).select(key).schema,
+        _read_files(spark, path, rec, live_files[:1]).select(key).schema,
     )
     # Exact record-level index first (primary lookups only — the RLI
     # maps the RECORD key): no false positives, minimal file set.
@@ -1238,9 +1241,7 @@ def read_point_lookup(
                 or any(b[key][0] <= v <= b[key][1] for v in values)
             )
         ]
-    reader = spark.read.parquet(
-        *[os.path.join(path, f) for f in (candidates or [live_files[0]])]
-    )
+    reader = _read_files(spark, path, rec, candidates or [live_files[0]])
     out = reader.filter(F.col(key).isin(values))
     # Empty candidate set: the filter on one real file yields the right
     # (empty) result with the table's schema.

@@ -86,7 +86,8 @@ def plan_text(df: DataFrame) -> tuple[str, str]:
 def summarize(simple: str, formatted: str) -> dict[str, object]:
     """Scale-critical physical-plan counters from :func:`plan_text`:
     join strategies, exchanges, pushed filters, per-scan projected
-    column widths, top-k and Arrow stages. The one plan-shape
+    column widths, top-k, Arrow stages and Python stages a global
+    sort re-runs to sample (:func:`_python_resampled`). The one plan-shape
     extraction behind PLANS.md, the plan golden and the cost table."""
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", formatted)
     pushed_n = sum(len([p for p in grp.split(",") if p.strip()]) for grp in pushed)
@@ -105,7 +106,40 @@ def summarize(simple: str, formatted: str) -> dict[str, object]:
         "scan_col_widths": scan_widths,
         "take_ordered": simple.count("TakeOrderedAndProject"),
         "arrow_eval": simple.count("ArrowEvalPython") + simple.count("MapInPandas"),
+        "python_resampled": _python_resampled(simple),
     }
+
+
+_PYTHON_NODE = re.compile(r"\w*(?:Python|InPandas|InArrow)")
+
+
+def _python_resampled(simple: str) -> int:
+    """Range exchanges whose sampled subtree holds a Python eval node.
+
+    A range exchange samples its bounds by running its child once more
+    before the shuffle runs it, so a Python stage in that child (up to
+    the next exchange, whose output is materialized once) sends every
+    row through Python twice. Nodes are read off the plan tree's
+    indentation: a node's subtree is the lines below it indented
+    deeper."""
+    lines = simple.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    found = 0
+    for i, line in enumerate(lines):
+        if not line[depth[i]:].startswith("Exchange rangepartitioning"):
+            continue
+        cut = None  # depth of a nested exchange whose subtree is skipped
+        for j in range(i + 1, len(lines)):
+            if depth[j] <= depth[i]:
+                break
+            if cut is not None and depth[j] > cut:
+                continue
+            node = lines[j][depth[j]:]
+            cut = depth[j] if "Exchange" in node.split(" ", 1)[0] else None
+            if cut is None and _PYTHON_NODE.match(node):
+                found += 1
+                break
+    return found
 
 
 def plan_shape(df: DataFrame) -> dict[str, int]:

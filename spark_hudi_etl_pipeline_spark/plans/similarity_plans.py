@@ -252,12 +252,20 @@ ORDER BY id_a, id_b
 def embedding_neardup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs blocked by ``label`` (the
     cluster-id/LSH-bucket stand-in): comparisons happen only within a
-    block, which is what bounds pair count at scale."""
+    block, which is what bounds pair count at scale.
+
+    The per-block GEMM creates the pair keys, so no fan-out can sort its
+    input by them: the pairs are checkpointed, and the sort samples its
+    range bounds from the stored pairs instead of re-running the GEMM."""
     from ..operators import dedup
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return dedup.embedding_neardup_pairs(
-        emb, "vec_id", "embedding", threshold=0.2, block_col="label"
+    return (
+        dedup.embedding_neardup_pairs(
+            emb, "vec_id", "embedding", threshold=0.2, block_col="label"
+        )
+        .localCheckpoint(eager=True)
+        .orderBy("id_a", "id_b")
     )
 
 

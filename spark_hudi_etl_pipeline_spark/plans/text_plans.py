@@ -83,13 +83,16 @@ ORDER BY doc_id
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite heuristic quality score per document (length sweet-spot,
     punctuation, stopword ratio, mean token length)."""
-    # Arrow twin (parity-asserted): the interpreted stopword/token HOF
-    # chain cost ~0.7 s/pass at sf0.1; one Python pass per batch instead,
-    # fanned out to one task per core.
-    d = fan_out(load_table(spark, sf_dir, "documents"))
+    # One Arrow UDF pass per batch (parity-asserted against the expression
+    # form kept in tests/test_quality.py, whose interpreted stopword/token
+    # HOF chain cost ~0.7 s/pass at sf0.1). The scan is range-partitioned
+    # by doc_id, one task per core, and sorted within partitions after
+    # the UDF: an orderBy over the UDF's output would sample its range
+    # bounds by running the UDF a second time.
+    d = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
     return d.select(
         "doc_id", text.quality_score_arrow().alias("quality")
-    ).orderBy("doc_id")
+    ).sortWithinPartitions("doc_id")
 
 
 # --------------------------------------------------------------------------

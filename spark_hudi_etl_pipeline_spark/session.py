@@ -163,13 +163,27 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
-def fan_out(df: DataFrame) -> DataFrame:
-    """Repartition a split-starved input (fewer input splits than
-    ``defaultParallelism``, e.g. a one-file fixture scan) round-robin to
-    ``defaultParallelism``, so the CPU-bound stage above it (an Arrow
-    UDF, a MinHash or SimHash signature, a payload decode) runs one task
-    per core. An input that already has a split per core passes through
-    as the same object: no shuffle of every row for nothing.
+def fan_out(df: DataFrame, *order: str) -> DataFrame:
+    """Spread a scan over one task per core before the CPU-bound stage
+    above it (an Arrow UDF, a MinHash or SimHash signature, a payload
+    decode).
+
+    Unordered (no ``order``): a split-starved input (fewer input splits
+    than ``defaultParallelism``, e.g. a one-file fixture scan) is
+    repartitioned round-robin to ``defaultParallelism``; an input that
+    already has a split per core passes through as the same object: no
+    shuffle of every row for nothing.
+
+    Ordered (``order`` names the output's key columns, which the stage
+    passes through): the input is range-partitioned by ``order`` into
+    ``max(splits, defaultParallelism)`` partitions, so the stage's
+    output, sorted within partitions (``sortWithinPartitions(*order)``),
+    is in global order. Use it instead of an ``orderBy`` after the
+    stage: a global sort samples its range bounds by re-running its
+    child, so every row would go through Python twice. The trade-off:
+    the range exchange shuffles every input row, even on a scan that
+    needs no fan-out, and its sample re-reads the scan (JVM work, no
+    Python).
 
     Every Python-worker task pays a fixed 0.15–0.4 s before it reads a
     row, so the target is the core count (Spark's local default), never
@@ -185,6 +199,8 @@ def fan_out(df: DataFrame) -> DataFrame:
     cores = spark.sparkContext.defaultParallelism
     files = df.inputFiles()
     splits = _scan_splits(spark, files) if files else df.rdd.getNumPartitions()
+    if order:
+        return df.repartitionByRange(max(splits, cores), *order)
     return df if splits >= cores else df.repartition(cores)
 
 

@@ -13,6 +13,23 @@ SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 
+def jobs_in(spark, fn):
+    """(fn's result, Spark jobs fn ran), counted from the status tracker
+    under a job group of its own."""
+    import uuid
+
+    from spark_hudi_etl_pipeline_spark.pipeline.costlog import job_footprint
+
+    sc = spark.sparkContext
+    group = f"jobs:{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, job_footprint(sc, group)[0]
+
+
 @pytest.fixture(scope="session")
 def spark():
     from spark_hudi_etl_pipeline_spark.session import get_spark_session

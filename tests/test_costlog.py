@@ -89,3 +89,55 @@ def test_run_pipeline_cost_attribution_opt_in(spark, tmp_path):
     assert row["rows_out"] == 2
     assert row["n_jobs"] >= 1 and row["n_tasks"] >= 1
     assert row["wall_sec"] > 0
+
+
+def test_python_resampled_counts_python_under_a_range_exchange():
+    """A range exchange samples by re-running its child up to the next
+    exchange: a Python node there counts, one behind a nested exchange
+    (materialized once) or below a fan-out's exchange does not."""
+    resorted = """AdaptiveSparkPlan isFinalPlan=false
++- Sort [doc_id#0L ASC NULLS FIRST], true, 0
+   +- Exchange rangepartitioning(doc_id#0L ASC NULLS FIRST, 32), ENSURE_REQUIREMENTS, [plan_id=20]
+      +- Project [doc_id#0L, pythonUDF0#8 AS quality#6]
+         +- ArrowEvalPython [score(text#1)#5], [pythonUDF0#8], 200
+            +- FileScan parquet [doc_id#0L,text#1]
+"""
+    fanned = """AdaptiveSparkPlan isFinalPlan=false
++- Sort [doc_id#0L ASC NULLS FIRST], false, 0
+   +- Project [doc_id#0L, pythonUDF0#8 AS quality#6]
+      +- ArrowEvalPython [score(text#1)#5], [pythonUDF0#8], 200
+         +- Exchange rangepartitioning(doc_id#0L ASC NULLS FIRST, 4), REPARTITION_BY_NUM, [plan_id=15]
+            +- FileScan parquet [doc_id#0L,text#1]
+"""
+    behind_shuffle = """AdaptiveSparkPlan isFinalPlan=false
++- Sort [k#1L ASC NULLS FIRST], true, 0
+   +- Exchange rangepartitioning(k#1L ASC NULLS FIRST, 32), ENSURE_REQUIREMENTS, [plan_id=9]
+      +- BroadcastHashJoin [k#1L], [k#2L], Inner, BuildRight, false
+         :- HashAggregate(keys=[k#1L], functions=[])
+         :  +- Exchange hashpartitioning(k#1L, 32), ENSURE_REQUIREMENTS, [plan_id=5]
+         :     +- MapInPandas decode(k#1L)#3, [k#1L], false
+         :        +- FileScan parquet [k#1L]
+         +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, true]),false), [plan_id=7]
+            +- FlatMapGroupsInPandas [k#2L], f(k#2L)#4, [k#2L]
+               +- FileScan parquet [k#2L]
+"""
+    # The grouped Python stage's output is already hash-partitioned by
+    # the join key, so it runs in the sampled stage, beside the shuffle.
+    beside = """AdaptiveSparkPlan isFinalPlan=false
++- Sort [k#1L ASC NULLS FIRST], true, 0
+   +- Exchange rangepartitioning(k#1L ASC NULLS FIRST, 32), ENSURE_REQUIREMENTS, [plan_id=9]
+      +- SortMergeJoin [k#1L], [k#2L], Inner
+         :- Sort [k#1L ASC NULLS FIRST], false, 0
+         :  +- Exchange hashpartitioning(k#1L, 32), ENSURE_REQUIREMENTS, [plan_id=5]
+         :     +- MapInPandas decode(k#1L)#3, [k#1L], false
+         :        +- FileScan parquet [k#1L]
+         +- Sort [k#2L ASC NULLS FIRST], false, 0
+            +- FlatMapGroupsInPandas [k#2L], f(k#2L)#4, [k#2L]
+               +- Sort [k#2L ASC NULLS FIRST], false, 0
+                  +- Exchange hashpartitioning(k#2L, 32), ENSURE_REQUIREMENTS, [plan_id=7]
+                     +- FileScan parquet [k#2L]
+"""
+    assert costlog.summarize(resorted, "")["python_resampled"] == 1
+    assert costlog.summarize(fanned, "")["python_resampled"] == 0
+    assert costlog.summarize(behind_shuffle, "")["python_resampled"] == 0
+    assert costlog.summarize(beside, "")["python_resampled"] == 1

@@ -35,6 +35,7 @@ from spark_hudi_etl_pipeline_spark.operators.timeline import (
     savepoint,
     savepoints,
 )
+from tests.conftest import jobs_in
 
 KEYS = ["k"]
 PRE = "v"
@@ -399,6 +400,23 @@ def test_point_lookup_missing_key_empty(spark, tmp_table):
     out = read_point_lookup(spark, tmp_table, "k", [999999])
     assert out.count() == 0
     assert out.columns == ["k", "v"]
+
+
+def test_point_lookup_job_budget(spark, tmp_table):
+    """The probe key's type and the reader's schema come from the
+    manifest's recorded schema, not from footer-inference jobs: a 2-key
+    probe of a bloom-indexed table runs at most 7 jobs before its
+    collect (9 when both were inferred from the first live file)."""
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_point_lookup,
+        upsert_parquet_bloom_indexed,
+    )
+
+    df = spark.range(0, 1000).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    upsert_parquet_bloom_indexed(spark, df, tmp_table, "k", "v")
+    out, jobs = jobs_in(spark, lambda: read_point_lookup(spark, tmp_table, "k", [5, 777]))
+    assert jobs <= 7
+    assert sorted(tuple(r) for r in out.collect()) == [(5, 5), (777, 777)]
 
 
 # -------------------------------------------- streaming timeline ingest

@@ -15,6 +15,7 @@ from spark_hudi_etl_pipeline_spark.pipeline import (
 )
 from spark_hudi_etl_pipeline_spark.pipeline.runlog import now_ms
 from spark_hudi_etl_pipeline_spark.pipeline.runner import scheduled_run
+from tests.conftest import jobs_in
 
 SCHEMA = "record_id long, entity_id string, created_at long, payload string"
 
@@ -188,23 +189,6 @@ def test_rerun_convergence_upsert(spark, tmp_path):
     assert sorted(ids) == sorted(set(ids)), "upsert must not duplicate keys"
 
 
-def _jobs_in(spark, fn):
-    """(fn's result, Spark jobs fn ran), counted from the status tracker
-    under a job group of its own."""
-    import uuid
-
-    from spark_hudi_etl_pipeline_spark.pipeline.costlog import job_footprint
-
-    sc = spark.sparkContext
-    group = f"jobs:{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, job_footprint(sc, group)[0]
-
-
 #: Spark jobs of a one-row incremental run_pipeline batch: one observed
 #: checkpoint of the batch, five for the target upsert (its adaptive
 #: query stages and its staged write) and the audit row's staged write.
@@ -218,7 +202,7 @@ def test_incremental_run_job_budget(spark, tmp_path):
     old_rows = [(1, "u1", t0 - 1000, "a"), (2, "u2", t0 - 500, "b")]
     run_pipeline(spark, make_config(spark, tmp_path, old_rows))
     cfg = make_config(spark, tmp_path, old_rows + [(3, "u3", now_ms() + 60_000, "c")])
-    res, jobs = _jobs_in(spark, lambda: run_pipeline(spark, cfg))
+    res, jobs = jobs_in(spark, lambda: run_pipeline(spark, cfg))
     assert res.status == "SUCCESS" and res.records_processed == 1
     assert jobs <= INCREMENTAL_RUN_MAX_JOBS
 
@@ -226,7 +210,7 @@ def test_incremental_run_job_budget(spark, tmp_path):
 def test_watermark_read_runs_no_job(spark, tmp_path):
     cfg = make_config(spark, tmp_path, [(1, "u1", now_ms() - 10, "a")])
     r = run_pipeline(spark, cfg)
-    wm, jobs = _jobs_in(spark, lambda: get_last_run_timestamp(spark, cfg.log_path, cfg.name))
+    wm, jobs = jobs_in(spark, lambda: get_last_run_timestamp(spark, cfg.log_path, cfg.name))
     assert jobs == 0
     rows = spark.read.parquet(cfg.log_path).collect()
     assert wm == rows[0]["current_run_timestamp"] and r.status == "SUCCESS"
@@ -282,7 +266,7 @@ def test_log_compacts_at_its_file_bound(spark, tmp_path):
     n = runlog.LOG_MAX_FILES + 1
     for i in range(n):
         if i == n - 1:
-            _, jobs_at_bound = _jobs_in(
+            _, jobs_at_bound = jobs_in(
                 spark, lambda: read_indexed_table(spark, path).collect()
             )
         runlog.write_log_entry(
@@ -290,7 +274,7 @@ def test_log_compacts_at_its_file_bound(spark, tmp_path):
             status="FAILED" if i == n - 2 else "SUCCESS", current_run_timestamp=i,
         )
     assert len(table_live_files(path)[1]) < runlog.LOG_MAX_FILES
-    rows, jobs_compacted = _jobs_in(spark, lambda: read_indexed_table(spark, path).collect())
+    rows, jobs_compacted = jobs_in(spark, lambda: read_indexed_table(spark, path).collect())
     assert jobs_at_bound == jobs_compacted
     assert sorted(r["current_run_timestamp"] for r in rows) == list(range(n))
     assert len({(r["pipeline_name"], r["created_at"]) for r in rows}) == n

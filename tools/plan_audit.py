@@ -60,6 +60,22 @@ def write_golden(sf_dir: str) -> None:
     print(f"wrote {GOLDEN_PATH} ({len(snap)} queries)")
 
 
+_HEADER = [
+    "| query | BHJ | SMJ | BNLJ | shuffles | bcasts | pushed | scan widths | top-k "
+    "| arrow | py resampled |",
+    "|---|---|---|---|---|---|---|---|---|---|---|",
+]
+
+
+def _row(name: str, s: dict) -> str:
+    return (
+        f"| {name} | {s['broadcast_hash_join']} | {s['sort_merge_join']} | "
+        f"{s['bnl_join']} | {s['shuffle_exchange']} | {s['broadcast_exchange']} | "
+        f"{s['pushed_filters']} | {s['scan_col_widths']} | {s['take_ordered']} | "
+        f"{s['arrow_eval']} | {s['python_resampled']} |"
+    )
+
+
 def main() -> None:
     from bench import HEADLINE
 
@@ -77,19 +93,13 @@ def main() -> None:
         "join strategies chosen, shuffle/broadcast exchange counts, predicates",
         "pushed into the parquet scan, per-scan projected column widths (column",
         "pruning evidence), TakeOrderedAndProject (top-k without global sort),",
-        "Arrow/Pandas stages in the final plan.",
+        "Arrow/Pandas stages in the final plan, and range exchanges whose sampled",
+        "subtree holds a Python stage (every row through Python twice; must be 0).",
         "",
-        "| query | BHJ | SMJ | BNLJ | shuffles | bcasts | pushed | scan widths | top-k | arrow |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        *_HEADER,
     ]
     for name in HEADLINE:
-        s = summarize(*plan_text(QUERIES[name](spark, sf_dir)))
-        lines.append(
-            f"| {name} | {s['broadcast_hash_join']} | {s['sort_merge_join']} | "
-            f"{s['bnl_join']} | {s['shuffle_exchange']} | {s['broadcast_exchange']} | "
-            f"{s['pushed_filters']} | {s['scan_col_widths']} | {s['take_ordered']} | "
-            f"{s['arrow_eval']} |"
-        )
+        lines.append(_row(name, summarize(*plan_text(QUERIES[name](spark, sf_dir)))))
     training = [
         q
         for q in (
@@ -123,17 +133,10 @@ def main() -> None:
         "",
         "## Training-data tier",
         "",
-        "| query | BHJ | SMJ | BNLJ | shuffles | bcasts | pushed | scan widths | top-k | arrow |",
-        "|---|---|---|---|---|---|---|---|---|---|",
+        *_HEADER,
     ]
     for name in training:
-        s = summarize(*plan_text(QUERIES[name](spark, sf_dir)))
-        lines.append(
-            f"| {name} | {s['broadcast_hash_join']} | {s['sort_merge_join']} | "
-            f"{s['bnl_join']} | {s['shuffle_exchange']} | {s['broadcast_exchange']} | "
-            f"{s['pushed_filters']} | {s['scan_col_widths']} | {s['take_ordered']} | "
-            f"{s['arrow_eval']} |"
-        )
+        lines.append(_row(name, summarize(*plan_text(QUERIES[name](spark, sf_dir)))))
     lines += [
         "",
         "Notes:",
