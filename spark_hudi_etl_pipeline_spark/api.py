@@ -37,7 +37,10 @@ from .session import local_frame
 
 def create_database_and_table(spark: SparkSession) -> None:
     """Reference R2 (:69-122): idempotent DDL of the ``pipeline_layer``
-    database and its ``pipeline_log`` audit table."""
+    database and its ``pipeline_log`` audit table. The runs' audit log is
+    the manifest-committed table at ``PipelineConfig.log_path``, not this
+    catalog table (see ``pipeline/bootstrap.py``): read it with
+    :func:`get_pipeline_status`."""
     bootstrap.create_pipeline_log_table(spark)
 
 
@@ -83,8 +86,12 @@ def get_pipeline_status(
     days: int = 7,
     show: bool = True,
 ) -> DataFrame:
-    """Reference R9 (:337-369): lookback status report; ``show=True``
-    prints it like the reference's ``.show(truncate=False)`` (:362)."""
+    """Reference R9 (:337-369): lookback status report over the audit
+    log, the manifest-committed table at ``log_path`` (a run's
+    ``PipelineConfig.log_path``) that ``run_pipeline`` appends to — the
+    catalog table ``create_database_and_table`` makes is never written.
+    ``show=True`` prints it like the reference's
+    ``.show(truncate=False)`` (:362)."""
     report = runlog.get_pipeline_status(
         spark, log_path, pipeline_name=pipeline_name, days=days
     )

@@ -151,9 +151,10 @@ def quality_score_arrow() -> Column:
     return F.pandas_udf(score, "double")(F.col("text"))
 
 
-def language_id_arrow(col: str | Column = "text") -> Column:
-    """Heuristic language ID: stopword hits per language, argmax (ties →
-    lexicographically first language; 'und' when nothing hits). One
+def language_id_arrow() -> Column:
+    """Heuristic language ID of ``text``: stopword hits per language,
+    argmax (ties → lexicographically first language; 'und' when nothing
+    hits). One
     Python pass per batch instead of 4× interpreted
     filter/array_contains HOF chains (guide §4.2; same exactness
     conventions as :func:`quality_score_arrow`):
@@ -194,7 +195,7 @@ def language_id_arrow(col: str | Column = "text") -> Column:
     def lid(texts):
         return pd.Series([_lid(s) for s in texts], dtype="object")
 
-    return F.pandas_udf(lid, "string")(_col(col))
+    return F.pandas_udf(lid, "string")(F.col("text"))
 
 
 def fingerprint(col: str | Column) -> Column:

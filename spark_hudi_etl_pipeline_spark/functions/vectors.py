@@ -32,19 +32,3 @@ def cosine(a: str | Column, b: str | Column) -> Column:
     """Cosine similarity; 0.0 for zero-norm inputs instead of NaN."""
     denom = norm(a) * norm(b)
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
-
-
-def l2_distance(a: str | Column, b: str | Column) -> Column:
-    diff = F.zip_with(
-        _col(a), _col(b), lambda x, y: (x.cast("double") - y.cast("double")) ** 2
-    )
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x))
-
-
-def unit_normalize(a: str | Column) -> Column:
-    """Scale to unit L2 norm (zero vectors pass through unchanged), so
-    downstream cosine reduces to a plain dot product."""
-    n = norm(a)
-    return F.when(n == 0, _col(a).cast("array<double>")).otherwise(
-        F.transform(_col(a), lambda x: x.cast("double") / n)
-    )

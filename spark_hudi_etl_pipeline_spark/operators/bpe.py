@@ -13,9 +13,9 @@ Scale shape — the part that matters at 100 TB:
   pair-count aggregation + a top-1 (TakeOrderedAndProject) + a map-only
   greedy fold over the symbol arrays — all JVM expressions, no Python
   in the loop. One small shuffle per merge.
-- :func:`bpe_encode` is map-only over the corpus (Arrow-batched pandas
-  UDF implementing the standard lowest-rank-first merge loop — a data-
-  dependent while-loop no built-in expresses).
+- encoding (``plans/bpe_plans.py::bpe_tokens``) is map-only over the
+  corpus: one :func:`merge_pair_fold` per merge in rank order, all JVM
+  higher-order expressions.
 
 Determinism: pair ties break lexicographically (classic BPE leaves ties
 unspecified), so the merge list is a pure function of the corpus and
@@ -24,7 +24,6 @@ both the trainer and the pytest pure-Python reference agree exactly.
 
 from __future__ import annotations
 
-import pandas as pd  # module-level: pandas_udf type hints resolve here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -35,14 +34,14 @@ from ..session import local_frame
 EOW = "</w>"
 
 
-def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, freq) over whitespace-split lowercased text — the one
+def word_frequencies(df: DataFrame) -> DataFrame:
+    """(word, freq) over whitespace-split lowercased ``text`` — the one
     corpus-scale aggregation; everything downstream runs on this
     dictionary."""
     return (
         df.select(
             F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
             ).alias("word")
         )
         .filter(F.col("word") != "")
@@ -135,54 +134,4 @@ def merge_table(spark, merges: list[tuple[str, str]]) -> DataFrame:
         spark,
         [(i, l, r, l + r) for i, (l, r) in enumerate(merges)],
         "rank int, left string, right string, merged string",
-    )
-
-
-def bpe_encode(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    merges: list[tuple[str, str]],
-) -> DataFrame:
-    """Encode text with a learned merge list: per word, repeatedly merge
-    the adjacent pair with the LOWEST merge rank until none applies (the
-    standard BPE encode loop). Map-only over the corpus; the merge list
-    ships in the task closure (tokenizer artifacts are kilobytes —
-    the same way real tokenizers deploy). Arrow-batched pandas UDF: the
-    rank-priority while-loop is data-dependent and has no built-in
-    equivalent. Returns (id, n_tokens, tokens) with tokens
-    space-joined (symbols never contain spaces: words are split on
-    whitespace first)."""
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    def encode_word(word: str) -> list[str]:
-        sym = list(word) + [EOW]
-        while len(sym) > 1:
-            pairs = [(sym[i], sym[i + 1]) for i in range(len(sym) - 1)]
-            ranked = [(ranks[p], i) for i, p in enumerate(pairs) if p in ranks]
-            if not ranked:
-                break
-            _, i = min(ranked)
-            sym = sym[:i] + [sym[i] + sym[i + 1]] + sym[i + 2 :]
-        return sym
-
-    @F.pandas_udf("string")
-    def encode(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks: list[str] = []
-            for w in (text or "").lower().split():
-                toks.extend(encode_word(w))
-            out.append(" ".join(toks))
-        return pd.Series(out)
-
-    # One UDF evaluation per row; the token count is derived JVM-side
-    # (symbols never contain spaces, so the space-join is invertible).
-    return df.select(F.col(id_col), encode(F.col(text_col)).alias("tokens")).select(
-        id_col,
-        F.when(F.col("tokens") == "", 0)
-        .otherwise(F.size(F.split("tokens", " ")))
-        .alias("n_tokens"),
-        "tokens",
     )

@@ -76,13 +76,6 @@ def quantile_codes(
     return coded
 
 
-def zorder_value(xcode: Column, ycode: Column, *, bits: int = _BITS) -> Column:
-    """Interleave two ``bits``-bit codes into a Morton (z-order) value:
-    bit i of x lands at position 2i, bit i of y at 2i+1. Pure integer
-    shift/mod expressions — whole-stage codegen, no UDF."""
-    return zorder_value_nd([xcode, ycode], bits=bits)
-
-
 def zorder_value_nd(codes: list[Column], *, bits: int = _BITS) -> Column:
     """Round-robin bit interleave of N ``bits``-bit codes into one Morton
     value: bit i of dimension j lands at position i*N + j, so every

@@ -49,24 +49,16 @@ MINHASH_COEFFS: list[tuple[int, int]] = [
 #: bucket and the corpus-sized store is never reshuffled.
 STORE_BUCKETS = 32
 
+#: MinHash-LSH shape of :func:`minhash_dedup_pairs` and
+#: :func:`minhash_store_ingest`: ``MINHASH_HASHES`` signature values cut
+#: into ``MINHASH_BANDS`` bands.
+MINHASH_HASHES = 32
+MINHASH_BANDS = 8
+
 
 # --------------------------------------------------------------------------
 # Exact dedup
 # --------------------------------------------------------------------------
-
-
-def exact_dedup(df: DataFrame) -> DataFrame:
-    """Exact duplicate removal over all columns — hash groupBy under the
-    hood (``dropDuplicates``), partial-agg'd map-side before the shuffle."""
-    return df.dropDuplicates()
-
-
-def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Normalized-text dedup: md5 fingerprint of canonicalized text, keep
-    the smallest id per fingerprint (deterministic keeper)."""
-    fp = df.select(F.col(id_col), text.fingerprint(text_col).alias("fp"))
-    keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col))
-    return df.join(keep, on=id_col, how="left_semi")
 
 
 def fingerprint_store_ingest(
@@ -324,18 +316,17 @@ def minhash_dedup_pairs(
     text_col: str,
     *,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
     k: int = 5,
 ) -> DataFrame:
-    """Near-duplicate pairs: LSH candidates verified with the exact
-    shingle-set Jaccard (array_intersect/array_union) ≥ ``threshold``.
+    """Near-duplicate pairs: LSH candidates (``MINHASH_HASHES`` values in
+    ``MINHASH_BANDS`` bands) verified with the exact shingle-set Jaccard
+    (array_intersect/array_union) ≥ ``threshold``.
     Verification touches only candidate pairs — never all pairs — and
     shingle sets are computed only for docs that appear in a candidate
     pair (semi-join prefilter), so the expensive second shingling pass
     scales with collisions, not corpus size."""
     cands = lsh_candidate_pairs(
-        df, id_col, text_col, num_hashes=num_hashes, bands=bands, k=k
+        df, id_col, text_col, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS, k=k
     )
     # Candidate pairs are consumed twice (prefilter + verify join) and are
     # small by construction (bounded by bucket collisions) — materialize
@@ -503,20 +494,13 @@ def ngram_jaccard_pairs(
     )
 
 
-def containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    threshold: float = 0.8,
-    k: int = 5,
-) -> DataFrame:
-    """Directional shingle CONTAINMENT pairs — |A∩B| / |A| (and / |B|) —
+def containment_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Directional 5-shingle CONTAINMENT pairs — |A∩B| / |A| (and / |B|) —
     the asymmetric dual of :func:`ngram_jaccard_pairs`. Catches
     subset-duplication Jaccard misses: a short document quoted whole
     inside a long one has containment ≈ 1 but Jaccard ≈ |A|/|B| (tiny).
 
-    A pair is emitted when EITHER direction reaches ``threshold``, i.e.
+    A pair is emitted when EITHER direction reaches t = 0.8, i.e.
     ``|A∩B| ≥ ⌈t·min(|A|,|B|)⌉`` — so the prefix bound holds for the
     SMALLER document only, and candidate generation is the ASYMMETRIC
     prefix join: the smaller side's prefix (exact at ``t`` by the same
@@ -526,8 +510,8 @@ def containment_pairs(
     document-frequency order), so its join contribution is linear in
     corpus size, not quadratic. Verification is exact array
     intersection."""
-    sh = _shingled(df, id_col, text_col, k)
-    prefix = _prefix_inverted_index(sh, threshold)
+    sh = _shingled(df, id_col, text_col, 5)
+    prefix = _prefix_inverted_index(sh, 0.8)
     inv = sh.select("id", "sz", F.explode("sh").alias("shingle"))
     cands = (
         prefix.alias("a")
@@ -552,7 +536,7 @@ def containment_pairs(
             F.round(F.col("common") / F.col("sz_a"), 4).alias("cont_a_q"),
             F.round(F.col("common") / F.col("sz_b"), 4).alias("cont_b_q"),
         )
-        .filter(F.greatest("cont_a_q", "cont_b_q") >= threshold)
+        .filter(F.greatest("cont_a_q", "cont_b_q") >= 0.8)
         .orderBy("id_a", "id_b")
     )
 
@@ -600,11 +584,6 @@ def simhash_expr(text_col):
             lambda acc, x: acc.bitwiseOR(x),
         ),
     )
-
-
-def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document 60-bit SimHash (see :func:`simhash_expr`)."""
-    return df.select(F.col(id_col), simhash_expr(text_col).alias("simhash"))
 
 
 def simhash_pairs(
@@ -1062,34 +1041,32 @@ def semantic_dedup(
     )
 
 
-def ngram_novelty(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5
-) -> DataFrame:
-    """Per-document n-gram novelty: of the doc's distinct word-k-shingles,
-    the fraction first owned by the doc itself (ownership = min id over
-    the corpus), as a 1e6 fixed-point integer. Near-copies of earlier
-    docs score ~0; originals score 1e6.
+def ngram_novelty(df: DataFrame) -> DataFrame:
+    """Per-document n-gram novelty over ``(doc_id, text)``: of the doc's
+    distinct word-5-shingles, the fraction first owned by the doc itself
+    (ownership = min id over the corpus), as a 1e6 fixed-point integer.
+    Near-copies of earlier docs score ~0; originals score 1e6.
 
     Scale: shingles shuffle as xxhash64 codes, never strings; the
     ownership groupBy and the join back share one hash partitioning on
     the code, and the per-doc count is the only other shuffle — nothing
     all-pairs, state O(distinct shingles)."""
     sh = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(text.shingles(text_col, k))).alias("shingle"),
-    ).select(F.col(id_col), F.xxhash64("shingle").alias("g"))
-    owner = sh.groupBy("g").agg(F.min(id_col).alias("first_doc"))
+        F.col("doc_id"),
+        F.explode(F.array_distinct(text.shingles("text", 5))).alias("shingle"),
+    ).select(F.col("doc_id"), F.xxhash64("shingle").alias("g"))
+    owner = sh.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     return (
         sh.join(owner, "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
-            F.sum((F.col("first_doc") == F.col(id_col)).cast("long")).alias(
+            F.sum((F.col("first_doc") == F.col("doc_id")).cast("long")).alias(
                 "n_novel"
             ),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_shingles",
             "n_novel",
             F.expr("(1000000 * n_novel) DIV n_shingles").alias("novelty_q"),
@@ -1105,34 +1082,37 @@ def ngram_novelty(
 # — the case whole-document fingerprints and shingle-Jaccard both miss).
 # --------------------------------------------------------------------------
 
+#: Span shape of :func:`shared_window_pairs`: ``SPAN_WINDOW``-char spans
+#: sampled every ``SPAN_STRIDE`` chars; a span shared by more than
+#: ``SPAN_MAX_BUCKET`` docs is dropped.
+SPAN_WINDOW = 64
+SPAN_STRIDE = 32
+SPAN_MAX_BUCKET = 64
+
 
 def shared_window_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    *,
-    window: int = 64,
-    stride: int = 32,
-    max_bucket: int = 64,
 ) -> DataFrame:
-    """Pairs of documents sharing at least one exact ``window``-char
-    normalized span sampled every ``stride`` chars, with the number of
-    distinct shared spans per pair.
+    """Pairs of documents sharing at least one exact ``SPAN_WINDOW``-char
+    normalized span sampled every ``SPAN_STRIDE`` chars, with the number
+    of distinct shared spans per pair.
 
     Shape (the same no-O(n²) discipline as LSH banding): window hashing
     is MAP-ONLY inside the row (Column.substr with computed offsets —
     one normalize pass, no per-window row until the explode); the only
     shuffle keys are (window-hash) for the inverted-index self-join,
     whose output is bounded by true collisions; buckets over
-    ``max_bucket`` docs (degenerate content — empty/boilerplate spans)
+    ``SPAN_MAX_BUCKET`` docs (degenerate content — empty/boilerplate spans)
     are dropped so one hot span cannot go quadratic, exactly like the
     LSH bucket cap.
 
     Stride sampling trades recall for cost: a shared span ≥
-    ``window + stride`` chars is ALWAYS caught when the copies align on
-    the stride grid (prefix/suffix copies do); arbitrary-offset copies
-    need stride=1 (the rolling-hash/suffix-array regime — same plan,
-    ``window``× more candidate rows). Production pipelines run
+    ``SPAN_WINDOW + SPAN_STRIDE`` chars is ALWAYS caught when the copies
+    align on the stride grid (prefix/suffix copies do); arbitrary-offset
+    copies need stride=1 (the rolling-hash/suffix-array regime — same
+    plan, ``SPAN_WINDOW``× more candidate rows). Production pipelines run
     stride=window/2 first and escalate survivors.
     """
     from ..functions import text
@@ -1144,8 +1124,8 @@ def shared_window_pairs(
     # bound needs no rounding, and the short-doc guard avoids Spark's
     # reversed-sequence surprise on stop < 1 (see _gram_starts).
     starts = F.when(
-        F.col("__len") >= window,
-        F.sequence(F.lit(1), F.col("__len") - window + 1, F.lit(stride)),
+        F.col("__len") >= SPAN_WINDOW,
+        F.sequence(F.lit(1), F.col("__len") - SPAN_WINDOW + 1, F.lit(SPAN_STRIDE)),
     ).otherwise(F.array().cast("array<int>"))
     wins = (
         norm.select(
@@ -1155,7 +1135,7 @@ def shared_window_pairs(
                     starts,
                     lambda i: F.md5(
                         F.col("__nt").substr(
-                            i.cast("int"), F.lit(window)
+                            i.cast("int"), F.lit(SPAN_WINDOW)
                         )
                     ),
                 )
@@ -1165,7 +1145,7 @@ def shared_window_pairs(
     )
     sized = wins.groupBy("wh").agg(F.count(F.lit(1)).alias("__bn"))
     bounded = wins.join(
-        F.broadcast(sized.filter(F.col("__bn") > max_bucket)),
+        F.broadcast(sized.filter(F.col("__bn") > SPAN_MAX_BUCKET)),
         "wh",
         "left_anti",
     )
@@ -1198,12 +1178,11 @@ def record_linkage(
     dirty_name: str,
     clean_name: str,
     block_cols: list[str],
-    max_distance: int = 2,
 ) -> DataFrame:
     """Best clean match per dirty record: candidates share the blocking
     key (equi-join — NEVER all-pairs; the block plays the role LSH bands
-    play in fuzzy dedup), are verified by Levenshtein distance ≤
-    ``max_distance`` (JVM built-in, integer-exact — the same function
+    play in fuzzy dedup), are verified by Levenshtein distance ≤ 2
+    (JVM built-in, integer-exact — the same function
     exists in DuckDB, so the whole pipeline is value-checkable), and the
     per-dirty-record winner is the minimum (distance, clean_id) — a
     deterministic argmin like every resolution step in this repo.
@@ -1237,7 +1216,7 @@ def record_linkage(
         F.asc("distance"), F.asc("__cid")
     )
     return (
-        cand.filter(F.col("distance") <= max_distance)
+        cand.filter(F.col("distance") <= 2)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select(
@@ -1252,18 +1231,18 @@ def record_linkage(
 # Blocked edit-distance (typo-level) dedup
 # --------------------------------------------------------------------------
 
+#: Head-block width of :func:`edit_distance_pairs`, in normalized tokens.
+EDIT_BLOCK_TOKENS = 5
+
 
 def edit_distance_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    *,
-    max_edits: int = 4,
-    block_tokens: int = 5,
 ) -> DataFrame:
     """Typo-level near-dup pairs: threshold-bounded Levenshtein within
     HEAD blocks — docs sharing the md5 fingerprint of their first
-    ``block_tokens`` normalized tokens. Complements the shingle family:
+    ``EDIT_BLOCK_TOKENS`` normalized tokens. Complements the shingle family:
     Jaccard barely moves under a 2-character typo (it perturbs only k
     shingles) while edit distance counts it exactly; conversely a
     reordered paragraph destroys edit distance but not Jaccard.
@@ -1274,15 +1253,15 @@ def edit_distance_pairs(
     (same contract as ``embedding_neardup_pairs``'s block_col).
     Blocks of more than 1,000 docs (boilerplate openings) are dropped so
     one hot block cannot go quadratic. The Levenshtein itself is
-    threshold-bounded (O(max_edits·len) banded DP, not O(len²)), and
-    only intra-block pairs are ever scored — never all pairs.
+    threshold-bounded (O(4·len) banded DP, not O(len²)), and only
+    intra-block pairs are ever scored — never all pairs.
 
-    Output: (id_a, id_b, edits), id_a < id_b, edits <= max_edits.
+    Output: (id_a, id_b, edits), id_a < id_b, edits <= 4.
     Exact DuckDB oracle in plans/dedup_plans.py (md5 blocking +
     levenshtein are engine-portable)."""
     norm = text.normalize(text_col)
     head = F.md5(
-        F.array_join(F.slice(F.split(norm, " "), 1, block_tokens), " ")
+        F.array_join(F.slice(F.split(norm, " "), 1, EDIT_BLOCK_TOKENS), " ")
     )
     t = df.select(
         F.col(id_col).alias("id"), norm.alias("__norm"), head.alias("__head")
@@ -1314,7 +1293,7 @@ def edit_distance_pairs(
         .select(
             "id_a",
             "id_b",
-            F.levenshtein("__na", "__nb", max_edits).alias("edits"),
+            F.levenshtein("__na", "__nb", 4).alias("edits"),
         )
         .filter(F.col("edits") >= 0)
         .orderBy("id_a", "id_b")
@@ -1330,7 +1309,6 @@ def minhash_store_ingest(
     batch: DataFrame,
     store_table: str,
     *,
-    threshold: float = 0.5,
     batch_id: str | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup detection against a persisted MinHash band
@@ -1357,7 +1335,7 @@ def minhash_store_ingest(
        corpus-sized store never reshuffles; candidates verify with the
        ESTIMATED Jaccard (matching signature positions / num_hashes —
        the standard MinHash estimator, ±O(1/√32)); verdict per batch
-       doc = lowest-id store match above ``threshold``;
+       doc = lowest-id store match at estimated Jaccard ≥ 0.5;
     3. append the bands of NON-matching docs only (the store stays
        canonical: near-copies of stored content never join it).
 
@@ -1375,7 +1353,7 @@ def minhash_store_ingest(
     from ..sources.writers import write_bucketed
 
     spark = batch.sparkSession
-    num_hashes, bands = 32, 8
+    num_hashes, bands = MINHASH_HASHES, MINHASH_BANDS
     rows = num_hashes // bands
     exists = spark.catalog.tableExists(store_table)
     sig_udf = minhash_signature_arrow(num_hashes, 5)
@@ -1428,7 +1406,7 @@ def minhash_store_ingest(
         )
         matches = (
             probe.select(F.col("doc_id"), "_store_id", est.alias("_est"))
-            .filter(F.col("_est") >= threshold)
+            .filter(F.col("_est") >= 0.5)
             .groupBy("doc_id")
             .agg(
                 F.min(

@@ -1,14 +1,14 @@
-"""Latest-per-key and as-of join operators.
+"""As-of join operators.
 
 Generalizations of the reference's watermark lookup (``ORDER BY … DESC
 LIMIT 1``, pipeline_architecture.py:136-137) per SURVEY.md §2.3/§2.5:
 the single-group top-1 becomes ``row_number() over (partition by key
-order by ts desc) = 1``, and the as-of join is its two-table form.
+order by ts desc) = 1`` (``merge.precombine_batch``), and the as-of join
+is its two-table form.
 
-Scale: latest_per_key is one shuffle on the key (AQE-skew-handled); the
-as-of join below is the union-window trick — a single shuffle on the join
-key, no range cross-product, which is what keeps it viable when both
-sides are 100 TB-class.
+Scale: the as-of join below is the union-window trick — a single shuffle
+on the join key, no range cross-product, which is what keeps it viable
+when both sides are 100 TB-class.
 """
 
 from __future__ import annotations
@@ -31,23 +31,6 @@ def _check_right_value_names(
             "on the right side before the as-of join (e.g. "
             ".withColumnRenamed) so the output names are unambiguous"
         )
-
-
-def latest_per_key(
-    df: DataFrame,
-    keys: list[str],
-    order_col: str,
-    tiebreak: list[str] | None = None,
-) -> DataFrame:
-    """One row per key: the row with the greatest ``order_col`` (then
-    ``tiebreak`` descending, for determinism)."""
-    ordering = [F.desc(order_col)] + [F.desc(c) for c in (tiebreak or [])]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def asof_join(

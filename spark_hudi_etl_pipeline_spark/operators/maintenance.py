@@ -304,12 +304,11 @@ def compaction_plan(
     files_df: DataFrame,
     *,
     partition_col: str = "partition",
-    file_col: str = "file",
-    bytes_col: str = "bytes",
     target_bytes: int = 128 * 1024 * 1024,
     small_file_limit: int | None = None,
 ) -> DataFrame:
-    """PLAN small-file compaction from a file-stats relation — the
+    """PLAN small-file compaction from a file-stats relation (columns
+    ``file`` and ``bytes`` beside ``partition_col``) — the
     metadata-scale scheduling step that precedes :func:`compact_parquet`
     (Hudi's schedule-compaction/clustering-plan split: planning reads
     only the file listing; execution rewrites data). Deterministic rule
@@ -334,23 +333,23 @@ def compaction_plan(
         small_file_limit = target_bytes // 2
     w = (
         Window.partitionBy(partition_col)
-        .orderBy(F.desc(bytes_col), F.asc(file_col))
+        .orderBy(F.desc("bytes"), F.asc("file"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    small = files_df.filter(F.col(bytes_col) < small_file_limit)
+    small = files_df.filter(F.col("bytes") < small_file_limit)
     binned = small.withColumn(
-        "__cum", F.sum(bytes_col).over(w)
+        "__cum", F.sum("bytes").over(w)
     ).withColumn(
         "bin_id",
-        F.expr(f"CAST((__cum - {bytes_col}) div {target_bytes} AS INT)"),
+        F.expr(f"CAST((__cum - bytes) div {target_bytes} AS INT)"),
     )
     return (
         binned.groupBy(partition_col, "bin_id")
         .agg(
             F.count(F.lit(1)).alias("n_files"),
-            F.sum(bytes_col).alias("bin_bytes"),
+            F.sum("bytes").alias("bin_bytes"),
             F.array_join(
-                F.array_sort(F.collect_list(file_col)), ","
+                F.array_sort(F.collect_list("file")), ","
             ).alias("files_csv"),
         )
         .filter(F.col("n_files") >= 2)

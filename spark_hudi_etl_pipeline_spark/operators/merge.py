@@ -1445,9 +1445,8 @@ def vacuum_orphans(
     versions (``operators/txn.py::read_table_at_catalog`` resolves
     through ``manifest_files_at``), and time travel reads them
     directly. A file referenced only by an old version is HISTORY, not
-    an orphan; reclaiming history is the cleaner's job (it retires the
-    old manifests first, at which point their exclusively-referenced
-    files genuinely become orphans for this vacuum).
+    an orphan: it becomes one only once that manifest version is gone
+    from disk.
 
     The age guard is the same safety rule as Delta's retention check:
     a CONCURRENT in-flight commit has already moved its staged files in
@@ -1483,41 +1482,3 @@ def vacuum_orphans(
         except OSError:
             pass
     return removed
-
-
-def retire_manifests(
-    path: str, *, pinned: set[int], keep_latest: int = 1
-) -> list[int]:
-    """The history CLEANER for manifest-committed tables — the step
-    between "older version" and "vacuumable orphan": delete manifest
-    versions that (a) are not in ``pinned`` (versions any catalog
-    version or branch still references — compute with
-    ``operators/txn.py::catalog_pinned_versions``; pass every
-    savepoint/time-travel target you want readable too) and (b) are not
-    among the newest ``keep_latest`` versions.
-
-    Only AFTER a manifest version is retired do the files it exclusively
-    referenced stop appearing in :func:`vacuum_orphans`'s live-set union
-    and become reclaimable. Retiring only metadata keeps the two steps
-    independently safe: a crash between them merely delays reclamation.
-
-    Returns the retired version numbers. The latest version is always
-    kept regardless of ``pinned``.
-    """
-    import os
-
-    if keep_latest < 1:
-        raise ValueError("keep_latest must be >= 1 (the table head)")
-    mdir = os.path.join(path, _MANIFEST_DIR)
-    versions = _json_versions(mdir)
-    keep = set(versions[-keep_latest:]) | set(pinned)
-    retired = []
-    for v in versions:
-        if v in keep:
-            continue
-        try:
-            os.remove(os.path.join(mdir, f"v{v}.json"))
-            retired.append(v)
-        except OSError:
-            pass
-    return retired

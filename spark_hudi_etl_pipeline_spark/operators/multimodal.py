@@ -2,21 +2,18 @@
 as opaque ``binary`` payloads with typed metadata, processed via
 Arrow-batched ``mapInPandas``.
 
-The Spark-side plumbing — schemas, batch iteration, partition sizing —
+The Spark-side plumbing — schemas and batch iteration —
 is real and tested. Decoding is real for the uncompressed raster
 formats a pure-Python/numpy decoder can own with no media libraries:
 **BMP (24-bit uncompressed)** and **PPM/PGM (P6/P5 binary)** — header
 parse, pixel decode (BMP bottom-up rows + 4-byte row padding, P6/P5
 maxval handling), and an exact integer 8×8 mean-pool feature grid.
 Compressed codecs (JPEG/PNG/video) still route to
-``deterministic_fake_decoder`` / ``unsupported_decoder``; a real
-deployment registers a PIL/ffmpeg decoder via ``register_decoder`` with
-the same signature and nothing else changes.
+``deterministic_fake_decoder``; a PIL/ffmpeg decoder would slot in
+beside the raster ones with the same ``(payload, meta) -> features``
+signature.
 
 Scale design:
-- media rows are large → ``repartition_for_payloads`` targets a bounded
-  per-partition byte budget so Arrow batches and executor memory stay
-  predictable regardless of corpus size;
 - ``mapInPandas`` streams record batches (iterator→iterator), so a task
   never holds its whole partition in memory;
 - metadata lives in a typed struct column next to the payload: filters
@@ -26,7 +23,7 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
@@ -79,17 +76,6 @@ FEATURE_SCHEMA = StructType(
         StructField("features", ArrayType(LongType()), True),
     ]
 )
-
-Decoder = Callable[[bytes, dict[str, Any]], dict[str, Any]]
-
-_DECODERS: dict[str, Decoder] = {}
-
-
-def register_decoder(media_type: str, decoder: Decoder) -> None:
-    """Plug a real decoder: ``decoder(payload, meta) -> feature dict``
-    with keys matching FEATURE_SCHEMA (minus media_id)."""
-    _DECODERS[media_type] = decoder
-
 
 # ---------------------------------------------------------------------------
 # Real raster decoders (pure Python/numpy — no media libraries).
@@ -178,49 +164,6 @@ def decode_bmp(payload: bytes) -> tuple[str, int, int, "np.ndarray"]:
     return "bmp", w, h, rows[:, :, ::-1].copy()  # BGR → RGB
 
 
-def encode_ppm(pixels: "np.ndarray") -> bytes:
-    """Encode H×W×3 uint8 pixels as binary PPM (P6) — fixture/resize
-    output format (exact round-trip with decode_ppm)."""
-    h, w, _ = pixels.shape
-    return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
-
-
-def encode_bmp(pixels: "np.ndarray") -> bytes:
-    """Encode H×W×3 uint8 RGB pixels as an uncompressed 24-bit BMP
-    (bottom-up, BGR, padded rows — exact round-trip with decode_bmp)."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = pixels.shape
-    stride = (w * 3 + 3) & ~3
-    raster = np.zeros((h, stride), dtype=np.uint8)
-    raster[:, : w * 3] = pixels[::-1, :, ::-1].reshape(h, w * 3)  # flip + RGB→BGR
-    data = raster.tobytes()
-    return (
-        struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-        + data
-    )
-
-
-def probe_image_header(payload: bytes) -> tuple[str, int, int] | None:
-    """Identify (codec, width, height) from header bytes alone — no
-    raster read. None when the payload is not a supported raster."""
-    import struct
-
-    try:
-        if payload[:2] in (b"P6", b"P5"):
-            codec, w, h, _, _ = _parse_pnm_header(payload)
-            return codec, w, h
-        if payload[:2] == b"BM" and len(payload) >= 26:
-            w, h_signed = struct.unpack_from("<ii", payload, 18)
-            return "bmp", w, abs(h_signed)
-    except (ValueError, struct.error):
-        return None
-    return None
-
-
 #: Feature grid side: features are an 8×8 = 64-cell exact mean-pool.
 FEATURE_GRID = 8
 
@@ -288,8 +231,9 @@ def image_decoder_or_fallback(payload: bytes, meta: dict[str, Any]) -> dict[str,
 
 
 def encode_wav(samples: "np.ndarray", sample_rate: int) -> bytes:
-    """Minimal RIFF/WAVE writer for 16-bit PCM test fixtures: ``samples``
-    is int16, shape (n,) mono or (n, channels)."""
+    """Minimal RIFF/WAVE writer for 16-bit PCM (the audio queries take
+    their WAV header from it): ``samples`` is int16, shape (n,) mono or
+    (n, channels)."""
     import struct
 
     import numpy as np
@@ -336,20 +280,6 @@ def decode_wav(payload: bytes) -> tuple[int, int, "np.ndarray"]:
         raise ValueError("only 16-bit PCM WAV is supported")
     s = np.frombuffer(data[: len(data) - (len(data) % (2 * n_ch))], dtype="<i2")
     return sample_rate, n_ch, s.reshape(-1, n_ch)
-
-
-def probe_audio_header(payload: bytes) -> tuple[str, int, int] | None:
-    """(codec, sample_rate, duration_ms) from the WAV header alone, or
-    None — the metadata-probe twin of ``probe_image_header``."""
-    import struct
-
-    try:
-        sample_rate, n_ch, samples = decode_wav(payload)
-    except (ValueError, struct.error):
-        return None
-    if sample_rate <= 0:
-        return None
-    return "pcm_s16le", sample_rate, samples.shape[0] * 1000 // sample_rate
 
 
 def audio_decoder(payload: bytes, meta: dict[str, Any]) -> dict[str, Any]:
@@ -414,14 +344,6 @@ def deterministic_fake_decoder(payload: bytes, meta: dict[str, Any]) -> dict[str
     }
 
 
-def unsupported_decoder(payload: bytes, meta: dict[str, Any]) -> dict[str, Any]:
-    """Explicit stub for codecs this container cannot decode."""
-    raise NotImplementedError(
-        "decoding this codec requires PIL/ffmpeg, not present in this "
-        "environment; register a real decoder with register_decoder()"
-    )
-
-
 def attach_metadata(df: DataFrame, *, media_type: str) -> DataFrame:
     """Build the typed metadata struct from the ``payload`` column (cheap,
     JVM-side: length; real ingest fills codec/dims from container headers)."""
@@ -438,54 +360,14 @@ def attach_metadata(df: DataFrame, *, media_type: str) -> DataFrame:
     )
 
 
-def probe_metadata(media: DataFrame) -> DataFrame:
-    """Fill ``meta.codec/width/height/duration_ms`` by REAL header
-    parsing across all three modalities — images (BMP/PPM/PGM
-    dimensions), audio (WAV sample-rate → duration), video (Y4M
-    geometry + frame count → duration) — payload bodies are never
-    interpreted beyond the headers/length arithmetic, so the probe is
-    cheap even for huge payloads; unrecognized payloads keep NULLs.
-    Same Arrow-batched iterator→iterator shape as decode_features."""
-    schema = media.schema
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = []
-            for meta, raw in zip(pdf["meta"], pdf["payload"]):
-                d = dict(meta) if isinstance(meta, dict) else meta._asdict()
-                payload = bytes(raw)
-                img = probe_image_header(payload)
-                if img is not None:
-                    d["codec"], d["width"], d["height"] = img
-                else:
-                    aud = probe_audio_header(payload)
-                    if aud is not None:
-                        d["codec"], _, d["duration_ms"] = aud
-                    else:
-                        vid = probe_video_header(payload)
-                        if vid is not None:
-                            (
-                                d["codec"],
-                                d["width"],
-                                d["height"],
-                                d["duration_ms"],
-                            ) = vid
-                metas.append(d)
-            out = pdf.copy()
-            out["meta"] = metas
-            yield out
-
-    return media.mapInPandas(probe, schema=schema)
-
-
 def decode_features(media: DataFrame) -> DataFrame:
     """Decode/feature-extract every media row via Arrow-batched
     ``mapInPandas`` (iterator→iterator: constant memory per task).
 
-    Uses the registered decoder for each row's ``meta.media_type``;
-    unregistered image types route through ``image_decoder_or_fallback``
-    (REAL decode for BMP/PPM/PGM rasters, checksum fallback otherwise),
-    other types through the deterministic fallback."""
+    Image rows route through ``image_decoder_or_fallback`` (REAL decode
+    for BMP/PPM/PGM rasters, checksum fallback otherwise), audio rows
+    through ``audio_decoder_or_fallback``, other types through the
+    deterministic fallback."""
     feature_cols = [f.name for f in FEATURE_SCHEMA.fields]
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -498,11 +380,10 @@ def decode_features(media: DataFrame) -> DataFrame:
                 pdf["media_id"], pdf["payload"], pdf["meta"]
             ):
                 mtype = meta["media_type"] if isinstance(meta, dict) else meta.media_type
-                default = {
+                decoder = {
                     "image": image_decoder_or_fallback,
                     "audio": audio_decoder_or_fallback,
                 }.get(mtype, deterministic_fake_decoder)
-                decoder = _DECODERS.get(mtype, default)
                 feats = decoder(bytes(payload), dict(meta) if isinstance(meta, dict) else meta._asdict())
                 rec = {"media_id": media_id}
                 for c in feature_cols[1:]:
@@ -511,16 +392,6 @@ def decode_features(media: DataFrame) -> DataFrame:
             yield pd.DataFrame(out, columns=feature_cols)
 
     return media.mapInPandas(decode_batches, schema=FEATURE_SCHEMA)
-
-
-def repartition_for_payloads(
-    df: DataFrame, *, total_bytes: int, target_partition_bytes: int = 128 << 20
-) -> DataFrame:
-    """Size partitions by payload volume, not row count: media rows are
-    MBs each, so row-count-based splits would blow executor memory at
-    scale. Caller supplies (estimated) total payload bytes."""
-    n = max(1, total_bytes // target_partition_bytes)
-    return df.repartition(n)
 
 
 #: Frame row produced by sample_frames: one row PER SAMPLED FRAME (1→N
@@ -542,24 +413,6 @@ def fake_frame_sampler(payload: bytes, n_frames: int) -> list[bytes]:
         return []
     step = max(1, len(payload) // n_frames)
     return [payload[i * step : i * step + step] for i in range(min(n_frames, len(payload)))]
-
-
-def encode_y4m(frames: "np.ndarray", *, fps: int = 25) -> bytes:
-    """Minimal YUV4MPEG2 (Y4M) writer for test fixtures: ``frames`` is
-    uint8, shape (n_frames, h, w) — the LUMA planes; chroma planes are
-    written neutral (128). h and w must be even (C420)."""
-    import numpy as np
-
-    f = np.asarray(frames, dtype=np.uint8)
-    n, h, w = f.shape
-    out = [f"YUV4MPEG2 W{w} H{h} F{fps}:1 Ip A1:1 C420\n".encode()]
-    chroma = np.full((h // 2) * (w // 2), 128, dtype=np.uint8).tobytes()
-    for i in range(n):
-        out.append(b"FRAME\n")
-        out.append(f[i].tobytes())
-        out.append(chroma)  # U
-        out.append(chroma)  # V
-    return b"".join(out)
 
 
 def decode_y4m(payload: bytes) -> tuple[int, int, int, list["np.ndarray"]]:
@@ -598,17 +451,6 @@ def decode_y4m(payload: bytes) -> tuple[int, int, int, list["np.ndarray"]]:
         frames.append(y.reshape(h, w))
         pos = start + frame_bytes
     return w, h, fps or 25, frames
-
-
-def probe_video_header(payload: bytes) -> tuple[str, int, int, int] | None:
-    """(codec, width, height, duration_ms) from a Y4M payload, or None.
-    Frame count comes from the byte length arithmetic — no pixel data is
-    interpreted."""
-    try:
-        w, h, fps, frames = decode_y4m(payload)
-    except ValueError:
-        return None
-    return "y4m_c420", w, h, len(frames) * 1000 // max(1, fps)
 
 
 def y4m_frame_sampler(payload: bytes, n_frames: int) -> list[bytes]:
@@ -660,44 +502,3 @@ def sample_frames(media: DataFrame, *, n_frames: int = 4) -> DataFrame:
             yield pd.DataFrame(out, columns=[f.name for f in FRAME_SCHEMA.fields])
 
     return media.mapInPandas(expand, schema=FRAME_SCHEMA)
-
-
-def resize_pixels(px: "np.ndarray", width: int, height: int) -> "np.ndarray":
-    """Nearest-neighbor resize (deterministic integer source indices
-    src = ⌊dst·src_size/dst_size⌋ — no interpolation-library variance)."""
-    import numpy as np
-
-    h, w, _ = px.shape
-    ys = (np.arange(height) * h) // height
-    xs = (np.arange(width) * w) // width
-    return px[ys][:, xs]
-
-
-def resize_images(media: DataFrame, *, width: int, height: int) -> DataFrame:
-    """Resize every image payload. Decodable rasters (BMP/PPM/PGM) get a
-    REAL decode → nearest-neighbor resize → PPM re-encode; payloads
-    without a pure-Python decode path keep the deterministic
-    truncate/pad stand-in (to width·height bytes) so mixed corpora
-    still flow. Schema/partitioning/batching are unchanged either way."""
-    target = width * height
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                if b[:2] in (b"BM", b"P6", b"P5"):
-                    try:
-                        _, _, _, px = (
-                            decode_bmp(b) if b[:2] == b"BM" else decode_ppm(b)
-                        )
-                        resized.append(encode_ppm(resize_pixels(px, width, height)))
-                        continue
-                    except ValueError:
-                        pass
-                resized.append(b[:target].ljust(target, b"\0"))
-            out = pdf.copy()
-            out["payload"] = resized
-            yield out
-
-    return media.mapInPandas(resize, schema=media.schema)

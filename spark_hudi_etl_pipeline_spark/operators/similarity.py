@@ -37,7 +37,6 @@ def topk_cosine(
     *,
     corpus_id: str,
     query_id: str,
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector.
@@ -46,9 +45,9 @@ def topk_cosine(
     by corpus id for determinism.
     """
     q = F.broadcast(
-        queries.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv"))
+        queries.select(F.col(query_id).alias("qid"), F.col("embedding").alias("qv"))
     )
-    c = corpus.select(F.col(corpus_id).alias("cid"), F.col(vec_col).alias("cv"))
+    c = corpus.select(F.col(corpus_id).alias("cid"), F.col("embedding").alias("cv"))
     scored = c.crossJoin(q).select(
         "qid", "cid", F.round(vectors.cosine("cv", "qv"), 4).alias("cosine")
     )
@@ -66,11 +65,9 @@ def radius_cosine(
     *,
     corpus_id: str,
     query_id: str,
-    vec_col: str = "embedding",
-    threshold: float = 0.35,
 ) -> DataFrame:
     """Range search: every (query, corpus) pair whose cosine reaches
-    ``threshold`` (applied to the round-4 similarity, so the cut is the
+    0.35 (applied to the round-4 similarity, so the cut is the
     same grid value both engines hash). Queries broadcast, the corpus
     never shuffles, and — unlike top-k — there is no per-query window:
     scan → broadcast-nested-loop → filter is map-only on the corpus
@@ -78,15 +75,21 @@ def radius_cosine(
     over the (threshold-bounded) RESULT, not the corpus. Output size is
     bounded by the threshold, not k."""
     q = F.broadcast(
-        queries.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv"))
+        queries.select(F.col(query_id).alias("qid"), F.col("embedding").alias("qv"))
     )
-    c = corpus.select(F.col(corpus_id).alias("cid"), F.col(vec_col).alias("cv"))
+    c = corpus.select(F.col(corpus_id).alias("cid"), F.col("embedding").alias("cv"))
     return (
         c.crossJoin(q)
         .select("qid", "cid", F.round(vectors.cosine("cv", "qv"), 4).alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= 0.35)
         .orderBy("qid", "cid")
     )
+
+
+#: MMR shape: ``MMR_K`` picks per query from the ``MMR_CANDIDATES``
+#: most relevant corpus vectors.
+MMR_K = 3
+MMR_CANDIDATES = 8
 
 
 def mmr_topk(
@@ -95,32 +98,27 @@ def mmr_topk(
     *,
     corpus_id: str,
     query_id: str,
-    vec_col: str = "embedding",
-    k: int = 3,
-    m: int = 8,
-    lam: float = 0.7,
-    mu: float = 0.3,
 ) -> DataFrame:
-    """Maximal-Marginal-Relevance re-ranked top-k: greedily pick, per
-    query, the candidate maximizing ``lam·rel − mu·max(sim to already
-    picked)`` from the m-candidate relevance short-list (self-matches
-    excluded). ``mu`` is passed explicitly rather than computed as
-    ``1 − lam`` so the double literal is bit-identical to the oracle's.
+    """Maximal-Marginal-Relevance re-ranked top-``MMR_K``: greedily pick,
+    per query, the candidate maximizing ``0.7·rel − 0.3·max(sim to
+    already picked)`` from the ``MMR_CANDIDATES`` relevance short-list
+    (self-matches excluded). 0.3 is written out rather than computed as
+    ``1 − 0.7`` so the double literal is bit-identical to the oracle's.
 
-    The greedy recursion is unrolled into k relational steps (window
-    argmax → broadcast the pick → score the survivors), so there is no
-    fold and no per-row Python; every step's frame is bounded by
-    |queries|·m. The expensive part — the m-candidate short-list — is
-    the same broadcast-queries scan as plain top-k, checkpointed once
-    and consumed by all k steps. All cosines round to 4 decimals BEFORE
+    The greedy recursion is unrolled into ``MMR_K`` relational steps
+    (window argmax → broadcast the pick → score the survivors), so there
+    is no fold and no per-row Python; every step's frame is bounded by
+    |queries|·``MMR_CANDIDATES``. The expensive part — the short-list —
+    is the same broadcast-queries scan as plain top-k, checkpointed once
+    and consumed by all steps. All cosines round to 4 decimals BEFORE
     any MMR arithmetic, and argmax ties break on the corpus id, so the
     selection is deterministic and engine-portable.
 
-    Output: (qid, mmr_rank 1..k, cid, rel)."""
+    Output: (qid, mmr_rank 1..MMR_K, cid, rel)."""
     q = F.broadcast(
-        queries.select(F.col(query_id).alias("qid"), F.col(vec_col).alias("qv"))
+        queries.select(F.col(query_id).alias("qid"), F.col("embedding").alias("qv"))
     )
-    c = corpus.select(F.col(corpus_id).alias("cid"), F.col(vec_col).alias("cv"))
+    c = corpus.select(F.col(corpus_id).alias("cid"), F.col("embedding").alias("cv"))
     scored = (
         c.crossJoin(q)
         .filter(F.col("cid") != F.col("qid"))
@@ -131,14 +129,14 @@ def mmr_topk(
     w_rel = Window.partitionBy("qid").orderBy(F.desc("rel"), F.asc("cid"))
     cand = (
         scored.withColumn("rnk", F.row_number().over(w_rel))
-        .filter(F.col("rnk") <= m)
+        .filter(F.col("rnk") <= MMR_CANDIDATES)
         .drop("rnk")
         .localCheckpoint(eager=True)
     )
     picks: list[DataFrame] = []
     cur = cand
     sim_cols: list[str] = []
-    for step in range(1, k + 1):
+    for step in range(1, MMR_K + 1):
         if not sim_cols:
             score = F.col("rel")
         else:
@@ -147,7 +145,7 @@ def mmr_topk(
                 if len(sim_cols) > 1
                 else F.col(sim_cols[0])
             )
-            score = F.lit(lam) * F.col("rel") - F.lit(mu) * worst
+            score = F.lit(0.7) * F.col("rel") - F.lit(0.3) * worst
         w_s = Window.partitionBy("qid").orderBy(score.desc(), F.asc("cid"))
         pick = (
             cur.withColumn("rn", F.row_number().over(w_s))
@@ -167,7 +165,7 @@ def mmr_topk(
                 F.col("pick_rel").alias("rel"),
             )
         )
-        if step < k:
+        if step < MMR_K:
             sim = f"sim{step}"
             cur = (
                 cur.join(F.broadcast(pick.drop("pick_rel")), "qid")
@@ -235,6 +233,11 @@ def _sql_arr_l(vals) -> str:
 #: the sign boundary. 64 dims × 10^6 × |e|≤O(10) stays far below 2^63.
 EMB_QUANT = 1_000_000
 
+#: Sketch shape of :func:`rp_lsh_ann`: the 64-dim embeddings hash to
+#: ``RP_BITS``-bit buckets (2^RP_BITS of them).
+RP_DIM = 64
+RP_BITS = 8
+
 
 def _rademacher_planes(dim: int, n_bits: int) -> list[list[int]]:
     """Seeded (101) ±1 hyperplanes. For sign-LSH, Rademacher entries are
@@ -281,9 +284,6 @@ def rp_lsh_ann(
     *,
     corpus_id: str,
     query_id: str,
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_bits: int = 8,
     k: int = 10,
 ) -> DataFrame:
     """Approximate top-k: compare each query only against corpus vectors
@@ -291,8 +291,8 @@ def rp_lsh_ann(
     bucket + all hamming-1 neighbors — multi-probe).
 
     Plan shape: corpus sketching is map-only; the join key is the sketch
-    (2^n_bits distinct values), so the probe is a bucket join touching
-    ~(1+n_bits)/2^n_bits of the corpus per query instead of all of it;
+    (2^RP_BITS distinct values), so the probe is a bucket join touching
+    ~(1+RP_BITS)/2^RP_BITS of the corpus per query instead of all of it;
     exact cosine + window re-rank inside the candidates.
 
     Both sides sketch with the integer Rademacher family
@@ -300,20 +300,20 @@ def rp_lsh_ann(
     bit-reproducible in DuckDB — which makes knn_lsh_ann an
     exact-oracle query rather than rows-only.
     """
-    sketch_udf = rp_sketch_portable_arrow(dim, n_bits)
+    sketch_udf = rp_sketch_portable_arrow(RP_DIM, RP_BITS)
     c = corpus.select(
         F.col(corpus_id).alias("cid"),
-        F.col(vec_col).alias("cv"),
-        sketch_udf(F.col(vec_col)).alias("bucket"),
+        F.col("embedding").alias("cv"),
+        sketch_udf(F.col("embedding")).alias("bucket"),
     )
     q = queries.select(
         F.col(query_id).alias("qid"),
-        F.col(vec_col).alias("qv"),
-        sketch_udf(F.col(vec_col)).alias("qsketch"),
+        F.col("embedding").alias("qv"),
+        sketch_udf(F.col("embedding")).alias("qsketch"),
     )
     probes = F.array(
         F.col("qsketch"),
-        *[F.col("qsketch").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)],
+        *[F.col("qsketch").bitwiseXOR(F.lit(1 << i)) for i in range(RP_BITS)],
     )
     q_probe = F.broadcast(
         q.select("qid", "qv", F.explode(probes).alias("bucket"))
@@ -332,6 +332,11 @@ def rp_lsh_ann(
 # --------------------------------------------------------------------------
 # IVF (inverted-file) ANN
 # --------------------------------------------------------------------------
+
+#: IVF shape of the written-index and IVF-PQ paths: ``IVF_LISTS``
+#: inverted lists, of which each query probes its ``IVF_NPROBE`` nearest.
+IVF_LISTS = 16
+IVF_NPROBE = 2
 
 
 def ivf_assign(
@@ -551,7 +556,6 @@ def ivf_ann(
     *,
     corpus_id: str,
     query_id: str,
-    vec_col: str = "embedding",
     n_centroids: int = 16,
     nprobe: int = 2,
     k: int = 10,
@@ -561,44 +565,22 @@ def ivf_ann(
     each query's ``nprobe`` nearest lists, exact cosine re-rank inside.
 
     At 100 TB the corpus is written partitioned by ``centroid_id``
-    (:func:`ivf_write_partitioned`), so a probe is partition pruning: it
+    (:func:`ivf_upsert`), so a probe is partition pruning: it
     reads nprobe/n_centroids of the data (the same IVF story as FAISS,
     expressed as a layout + bucket join) — see
     :func:`ivf_ann_partitioned` for that path, which this in-memory form
     must match row-for-row (asserted in tests/test_similarity.py).
     """
     centroids = ivf_centroids(
-        corpus, corpus_id=corpus_id, vec_col=vec_col, n_centroids=n_centroids
+        corpus, corpus_id=corpus_id, vec_col="embedding", n_centroids=n_centroids
     )
     c_lists = ivf_assign(
-        corpus, centroids, id_col=corpus_id, vec_col=vec_col, out_vec="cv", nprobe=1
+        corpus, centroids, id_col=corpus_id, vec_col="embedding", out_vec="cv", nprobe=1
     ).select(F.col(corpus_id).alias("cid"), "cv", "centroid_id")
     return _ivf_score_lists(
         c_lists, queries, centroids,
-        query_id=query_id, vec_col=vec_col, nprobe=nprobe, k=k,
+        query_id=query_id, vec_col="embedding", nprobe=nprobe, k=k,
     )
-
-
-def ivf_write_partitioned(
-    spark,
-    corpus: DataFrame,
-    path: str,
-    *,
-    corpus_id: str,
-) -> DataFrame:
-    """Materialize the IVF index AS A LAYOUT: the corpus written
-    hive-partitioned by ``centroid_id`` (one directory per inverted
-    list, 16 lists, :func:`ivf_ann`'s default). Returns the centroid
-    table the probe side must reuse."""
-    centroids = ivf_centroids(
-        corpus, corpus_id=corpus_id, vec_col="embedding", n_centroids=16
-    )
-    lists = ivf_assign(
-        corpus, centroids, id_col=corpus_id, vec_col="embedding", out_vec="cv",
-        nprobe=1,
-    ).select(F.col(corpus_id).alias("cid"), "cv", "centroid_id")
-    lists.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
-    return centroids
 
 
 def ivf_ann_partitioned(
@@ -608,22 +590,20 @@ def ivf_ann_partitioned(
     centroids: DataFrame,
     *,
     query_id: str,
-    vec_col: str = "embedding",
-    nprobe: int = 2,
     k: int = 10,
 ) -> DataFrame:
     """The scale path of :func:`ivf_ann`: probe a corpus materialized by
-    :func:`ivf_write_partitioned`. The probed list ids (≤ nprobe ×
+    :func:`ivf_upsert`. The probed list ids (≤ IVF_NPROBE ×
     |queries| values, metadata-scale) become a ``centroid_id IN (…)``
     filter that Catalyst turns into PartitionFilters — only the probed
-    list directories are ever scanned (asserted on inputFiles in
-    tests/test_similarity.py). Results are identical to the in-memory
+    list directories are ever scanned (asserted on the scan's
+    PartitionFilters in tests/test_similarity.py). Results are identical to the in-memory
     form: same centroids, same lists, same re-rank."""
     probe_ids = [
         r["centroid_id"]
         for r in ivf_assign(
-            queries, centroids, id_col=query_id, vec_col=vec_col, out_vec="qv",
-            nprobe=nprobe,
+            queries, centroids, id_col=query_id, vec_col="embedding", out_vec="qv",
+            nprobe=IVF_NPROBE,
         )
         .select("centroid_id")
         .distinct()
@@ -632,7 +612,7 @@ def ivf_ann_partitioned(
     c_lists = spark.read.parquet(path).filter(F.col("centroid_id").isin(probe_ids))
     return _ivf_score_lists(
         c_lists, queries, centroids,
-        query_id=query_id, vec_col=vec_col, nprobe=nprobe, k=k,
+        query_id=query_id, vec_col="embedding", nprobe=IVF_NPROBE, k=k,
     )
 
 
@@ -648,9 +628,10 @@ def ivf_upsert(
     """Incremental IVF index maintenance — the lakehouse-native ANN
     story (reference upsert semantics applied to the index, r5 verdict
     ask #4): assign only the NEW/UPDATED vectors to the EXISTING
-    centroid table and key-upsert them into the partitioned list layout
-    of :func:`ivf_write_partitioned`, instead of rebuilding the index
-    from scratch per batch.
+    centroid table and key-upsert them into the list layout that
+    :func:`ivf_ann_partitioned` probes (one ``centroid_id=`` directory
+    per inverted list), instead of rebuilding the index from scratch per
+    batch.
 
     Semantics: ``seq`` is the precombine version — a re-upserted id
     replaces its old row (latest batch wins); an updated embedding whose
@@ -703,14 +684,10 @@ PQ_SUBSPACES = 8
 PQ_CODES = 16
 
 
-def pq_codebook(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Seed-free PQ codebook: per subspace, the ``PQ_CODES`` codewords are
-    the sub-vectors of the ``PQ_CODES`` lowest-id vectors (the same
+def pq_codebook(emb: DataFrame) -> list[list[list[float]]]:
+    """Seed-free PQ codebook of ``emb``'s ``embedding`` column: per
+    subspace, the ``PQ_CODES`` codewords are the sub-vectors of the
+    ``PQ_CODES`` lowest-``vec_id`` vectors (the same
     deterministic construction as the IVF centroids — no RNG, so every
     downstream stage is value-checkable against a SQL oracle; swap in
     per-subspace k-means updates for production recall).
@@ -720,7 +697,7 @@ def pq_codebook(
     pattern."""
     sub_dim = PQ_DIM // PQ_SUBSPACES
     rows = (
-        emb.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
+        emb.select(F.col("vec_id").alias("i"), F.col("embedding").alias("v"))
         .orderBy("i")
         .limit(PQ_CODES)
         .collect()
@@ -860,27 +837,18 @@ def pq_adc_topk(
     )
 
 
-def ivfpq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    corpus_id: str = "vec_id",
-    query_id: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    nprobe: int = 2,
-    k: int = 5,
-) -> DataFrame:
-    """IVF-PQ approximate top-k — the two index tiers COMPOSED, which is
-    the billion-scale ANN layout (FAISS IndexIVFPQ expressed as Spark
-    relational ops): the corpus is assigned to ``n_centroids`` inverted
-    lists and PQ-encoded to ``n_sub`` nibble codes; each query probes
-    only its ``nprobe`` nearest lists and ranks candidates by ADC lookup
-    against its literal distance table.
+def ivfpq_adc_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """IVF-PQ approximate top-5 of ``queries`` over ``corpus`` (both keyed
+    by ``vec_id`` over ``embedding``) — the two index tiers COMPOSED,
+    which is the billion-scale ANN layout (FAISS IndexIVFPQ expressed as
+    Spark relational ops): the corpus is assigned to ``IVF_LISTS``
+    inverted lists and PQ-encoded to ``PQ_SUBSPACES`` nibble codes; each
+    query probes only its ``IVF_NPROBE`` nearest lists and ranks
+    candidates by ADC lookup against its literal distance table.
 
     Scale shape multiplies the two tiers' savings: the probe prunes the
-    scan to nprobe/n_centroids of the corpus (hive-partition the coded
-    table by centroid_id — ``ivf_write_partitioned`` — and the pruning
+    scan to IVF_NPROBE/IVF_LISTS of the corpus (hive-partition the coded
+    table by centroid_id, as :func:`ivf_upsert` does — and the pruning
     is PartitionFilters, no list data read at all), and inside a probed
     list only the 8-byte code columns are touched, never the vectors.
     At 1B×256d that is (2/16 partitions)·(8 B/vector) ≈ 1/512 of the
@@ -889,31 +857,31 @@ def ivfpq_adc_topk(
 
     Both stages are seed-free and deterministic, so the full ranking is
     value-checkable against a SQL oracle (plans/similarity_plans.py).
-    Output: (qid, cid, adist_q, rank), rank 1..k, ADC-distance ties
+    Output: (qid, cid, adist_q, rank), rank 1..5, ADC-distance ties
     broken by cid.
     """
     centroids = ivf_centroids(
-        corpus, corpus_id=corpus_id, vec_col=vec_col, n_centroids=n_centroids
+        corpus, corpus_id="vec_id", vec_col="embedding", n_centroids=IVF_LISTS
     )
     lists = ivf_assign(
-        corpus, centroids, id_col=corpus_id, vec_col=vec_col,
+        corpus, centroids, id_col="vec_id", vec_col="embedding",
         out_vec="cv", nprobe=1,
-    ).select(F.col(corpus_id).alias("cid"), "cv", "centroid_id")
+    ).select(F.col("vec_id").alias("cid"), "cv", "centroid_id")
     # No materialization barrier (r13 optimization round): the coded
     # relation is consumed exactly once by the scored scan below, so an
     # eager localCheckpoint only paid a full extra materialize+read-back
     # pass (measured 3.6 → 3.0 s at sf0.1, identical rows). The
-    # written-index production shape lives in ivf_write_partitioned /
+    # written-index production shape lives in ivf_upsert /
     # ivf_ann_partitioned; this in-memory form is the one-shot query.
-    cb = pq_codebook(corpus, id_col=corpus_id, vec_col=vec_col)
+    cb = pq_codebook(corpus)
     coded = pq_encode(lists, cb, vec_col="cv").drop("cv", "probe_rank")
 
     # Per-query probe lists + vectors: |queries|·nprobe rows driver-held
     # (same metadata-scale contract as the ADC tables themselves).
     qrows = ivf_assign(
-        queries, centroids, id_col=query_id, vec_col=vec_col,
-        out_vec="qv", nprobe=nprobe,
-    ).select(F.col(query_id).alias("qid"), "qv", "centroid_id").collect()
+        queries, centroids, id_col="vec_id", vec_col="embedding",
+        out_vec="qv", nprobe=IVF_NPROBE,
+    ).select(F.col("vec_id").alias("qid"), "qv", "centroid_id").collect()
     probes: dict[int, list[int]] = {}
     qvecs: dict[int, list[float]] = {}
     for r in qrows:
@@ -940,7 +908,7 @@ def ivfpq_adc_topk(
     w = Window.partitionBy("qid").orderBy(F.asc("ad"), F.asc("cid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select(
             "qid",
             "cid",
@@ -955,7 +923,6 @@ def kmeans_lloyd_quantized(
     df: DataFrame,
     *,
     id_col: str,
-    vec_col: str = "embedding",
     k: int = 8,
     iters: int = 2,
     scale: int = 1_000_000,
@@ -988,7 +955,7 @@ def kmeans_lloyd_quantized(
     xq = df.select(
         F.col(id_col),
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda v: F.floor(v.cast("double") * scale).cast("long"),
         ).alias("xq"),
     ).localCheckpoint(eager=True)  # iters+1 passes over the quantized form

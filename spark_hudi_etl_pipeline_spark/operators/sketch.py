@@ -68,16 +68,6 @@ def cms_build(
     return cells.groupBy("row", "col").agg(F.sum("w").alias("cnt"))
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of sketches built with identical (width, depth) —
-    the distributive property that lets per-source/per-day sketches
-    roll up without touching raw data again."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     cms: DataFrame,
     items: DataFrame,

@@ -290,73 +290,3 @@ def group_count_from_stats(
         .agg(F.sum("n_rows").alias("n_rows"))
         .orderBy(col)
     )
-
-
-def boundary_files_for_group(spark: SparkSession, path: str, col: str) -> list[str]:
-    """The files :func:`group_count_from_stats` would actually scan —
-    exposed so tests can assert the metadata-only claim (boundary set ≪
-    live set on a clustered layout)."""
-    _, live = table_live_files(path)
-    stats = _valid_stats(spark, path, live)
-    if stats is None:
-        return sorted(live)
-    mn, mx = f"min_{col}", f"max_{col}"
-    return sorted(
-        r["file"]
-        for r in stats.filter(F.col(mn).isNull() | (F.col(mn) != F.col(mx)))
-        .select("file")
-        .collect()
-    )
-
-
-def update_table_stats(spark: SparkSession, path: str, cols: list[str]) -> int:
-    """Incremental sidecar maintenance — the async-indexer delta path:
-    harvest footers ONLY for live files the sidecar doesn't know yet,
-    drop rows for files no longer live (cleaned/compacted away), and
-    rewrite the (tiny) sidecar. Cost is O(new files), not O(table
-    files) — after a commit that adds a handful of files to a 100k-file
-    table, the full rebuild re-opens every footer for nothing.
-
-    Falls back to a full :func:`build_table_stats` when no sidecar
-    exists or its column set doesn't cover ``cols``. Returns the number
-    of files freshly harvested."""
-    _, live = table_live_files(path)
-    if not live:
-        raise FileNotFoundError(f"no data files at {path!r}")
-    sdir = os.path.join(path, _STATS_DIR)
-    existing = None
-    if os.path.isdir(sdir):
-        import glob
-
-        import pyarrow.parquet as pq
-
-        parts = sorted(glob.glob(os.path.join(sdir, "*.parquet")))
-        if parts:
-            rows: list[dict] = []
-            for p in parts:
-                rows.extend(pq.read_table(p).to_pylist())
-            wanted = {f"min_{c}" for c in cols} | {f"max_{c}" for c in cols}
-            if rows and wanted <= set(rows[0].keys()):
-                existing = rows
-    if existing is None:
-        return build_table_stats(spark, path, cols)
-    known = {r["file"] for r in existing}
-    new_files = sorted(set(live) - known)
-    kept = [r for r in existing if r["file"] in set(live)]
-    schema = _stats_schema(spark, path, live[0], cols)
-    kept_df = local_frame(
-        spark,
-        [tuple(r[f.name] for f in schema.fields) for r in kept], schema
-    )
-    out = kept_df
-    if new_files:
-        # Same driver-below-threshold / distributed-above harvest as the
-        # cold path — a post-commit delta is usually a handful of files,
-        # but a backfill commit can add thousands.
-        out = kept_df.unionByName(
-            _harvest_stats_df(spark, path, cols, new_files)
-        )
-    # repartition(1) for the same reason as the cold path: keep the
-    # delta harvest stage parallel; only the sidecar write is 1-task.
-    out.repartition(1).write.mode("overwrite").parquet(sdir)
-    return len(new_files)

@@ -2,9 +2,9 @@
 ``hoodie.datasource.write.operation`` surface a reference user has
 available on their keyed tables (pipeline_architecture.py:183-192 sets
 ``operation=upsert``; Hudi's writer accepts ``insert_overwrite``,
-``insert_overwrite_table``, ``delete_partition`` and ``bulk_insert``
-with the same table layout), re-expressed on hive-layout parquet with
-Spark-native partition handling.
+``delete_partition`` and ``bulk_insert`` with the same table layout),
+re-expressed on hive-layout parquet with Spark-native partition
+handling.
 
 Scale notes (100 TB table, incremental batch):
 
@@ -66,22 +66,6 @@ def insert_overwrite(
     ).partitionBy(partition_col).parquet(path)
     # counted on the write job itself — a trailing .count() would
     # re-run the batch plan (r13 optimization round)
-    return int(obs.get["n"])
-
-
-def insert_overwrite_table(
-    spark, batch: DataFrame, path: str, partition_col: str | None = None
-) -> int:
-    """Hudi ``insert_overwrite_table``: replace the WHOLE table with the
-    batch (static overwrite) — the full-restatement twin of
-    :func:`insert_overwrite`. Returns rows written."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    w = batch.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite")
-    if partition_col is not None:
-        w = w.partitionBy(partition_col)
-    w.parquet(path)
     return int(obs.get["n"])
 
 

@@ -21,9 +21,10 @@ Hudi at all). This module provides the same capabilities engine-side:
 
 Fold semantics and their precondition
 -------------------------------------
-Sequential upsert semantics (:func:`replay_commits`, a fold of
-``merge_upsert``) are the ground truth: larger precombine wins, the newer
-commit wins ties, a winning delete removes the key. The single-window
+Sequential upsert semantics (``merge_upsert`` applied commit by commit,
+the reference model in ``tests/test_timeline.py``) are the ground
+truth: larger precombine wins, the newer commit wins ties, a winning
+delete removes the key. The single-window
 fold (:func:`fold_commits`) computes per key the row with max
 ``(precombine, commit_ts)``:
 
@@ -35,10 +36,10 @@ fold (:func:`fold_commits`) computes per key the row with max
   commit k, and a LATER commit re-inserts the key with an OLDER
   precombine. Sequential semantics insert it — the key was gone; the
   window still sees the delete as the max. That ordering means your
-  precombine column is not a time; use :func:`replay_commits`.)
+  precombine column is not a time.)
 
-Both are exposed; equivalence on the monotone domain is property-tested
-in ``tests/test_timeline.py``.
+Equivalence with the sequential fold on the monotone domain is
+property-tested in ``tests/test_timeline.py``.
 
 Scale (100 TB): commits shuffle nothing on write. The fold is one hash
 shuffle on the record key over only the pruned commits; with frequent
@@ -48,7 +49,6 @@ Hudi's MOR read-optimized/realtime trade.
 
 from __future__ import annotations
 
-import functools
 import os
 import shutil
 
@@ -56,7 +56,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
-from .merge import merge_upsert
 
 COMMIT_COL = "commit_ts"
 _FOLD_RN = "__fold_rn"
@@ -307,7 +306,7 @@ def fold_commits(
     table state with ONE window: per key, the row with the largest
     ``(precombine, commit_ts)`` wins; a winning delete record removes the
     key. See the module docstring for the delete+non-monotone-precombine
-    precondition; :func:`replay_commits` is the unconditional form.
+    precondition.
 
     ``meta_col`` names an output column carrying the WINNING row's
     commit instant — Hudi's ``_hoodie_commit_time`` record-level
@@ -328,27 +327,6 @@ def fold_commits(
             ~F.coalesce(F.col(delete_col), F.lit(False))
         ).drop(delete_col)
     return folded
-
-
-def replay_commits(
-    commits: list[DataFrame],
-    keys: list[str],
-    precombine: str,
-    *,
-    delete_col: str | None = None,
-) -> DataFrame:
-    """Ground-truth sequential fold: ``merge_upsert`` applied commit by
-    commit, in order. Exact for every input (including deletes that
-    precede older-precombine re-inserts), at the cost of one join per
-    commit — the compactor's path for short timelines, and the oracle the
-    window fold is tested against."""
-    return functools.reduce(
-        lambda state, batch: merge_upsert(
-            state, batch, keys, precombine, delete_col=delete_col
-        ),
-        commits,
-        None,
-    )
 
 
 def _check_reconstructable(path: str, instant: int, what: str) -> None:
@@ -717,14 +695,6 @@ def savepoint(spark, path: str, instant: int) -> None:
     d = os.path.join(path, _SAVEPOINTS_DIR)
     os.makedirs(d, exist_ok=True)
     with open(os.path.join(d, str(instant)), "w"):
-        pass
-
-
-def delete_savepoint(path: str, instant: int) -> None:
-    """Release a savepoint so the cleaner may reclaim its history."""
-    try:
-        os.remove(os.path.join(path, _SAVEPOINTS_DIR, str(instant)))
-    except FileNotFoundError:
         pass
 
 

@@ -24,11 +24,10 @@ retry against the new catalog state).
 
 Per-table writes under a catalog run with ``clean=False``: files
 referenced by an older, still-cataloged manifest version must survive a
-newer per-table publish. Space is reclaimed in two steps: a cleaner
-retires manifest versions no catalog version/branch pins, then
-``operators/merge.py::vacuum_orphans`` (which keeps every file any
-remaining manifest references) removes the files those retired
-manifests exclusively held.
+newer per-table publish. History is kept: no code here retires manifest
+versions, and ``operators/merge.py::vacuum_orphans`` (which keeps every
+file any manifest version on disk references) removes only files no
+manifest holds.
 
 BRANCHES (:func:`create_branch` / :func:`merge_branch`) put a Nessie /
 Iceberg-REST ref model on top: a branch is a named catalog-version
@@ -168,9 +167,8 @@ def txn_commit(
 
     A crash after any per-table publish but before the catalog CAS
     leaves orphan manifest versions that no catalog pins — harmless
-    (catalog readers never resolve them); a cleaner may retire those
-    manifests, after which ``vacuum_orphans`` reclaims their files.
-    Re-running the transaction claims fresh versions.
+    (catalog readers never resolve them). Re-running the transaction
+    claims fresh versions.
 
     ``branch`` commits to a named branch head (see :func:`create_branch`):
     each table merges from the version THE BRANCH pins (``base_version``)
@@ -182,12 +180,9 @@ def txn_commit(
     :func:`~.merge.merge_upsert`): flagged batch rows REMOVE their keys.
     This is the right-to-be-forgotten shape — erase a subject's rows
     from every table of the family in ONE atomic commit, so no reader
-    ever sees the subject half-deleted. Logical erasure is immediate;
-    PHYSICAL erasure additionally needs the pre-delete manifest versions
-    retired (no catalog version/branch may still pin them — audit refs
-    first) and then ``vacuum_orphans`` to reclaim the files only those
-    retired manifests referenced; the vacuum never deletes a file any
-    remaining manifest can still reach.
+    ever sees the subject half-deleted. The erasure is logical: the
+    pre-delete manifest versions stay on disk, and ``vacuum_orphans``
+    never deletes a file any of them can still reach.
     """
     cv, tables = catalog_latest(root, branch)
     if branch != _MAIN and cv == 0:
@@ -285,78 +280,3 @@ def merge_branch(root: str, src: str) -> int:
             merged[t] = pick
     _catalog_publish(root, merged, dv + 1, branch=_MAIN)  # ← commit point
     return dv + 1
-
-
-def catalog_pinned_versions(root: str) -> dict[str, set[int]]:
-    """Per-table manifest versions ANY catalog state can still resolve:
-    the union over every committed catalog version on every branch
-    (``main`` plus ``_catalog/branches/*``), including the fork-point
-    pins recorded on branch-creation commits (the three-way-merge base
-    must stay readable for :func:`merge_branch`). This is the ``pinned``
-    input to ``operators/merge.py::retire_manifests`` — retiring only
-    versions outside this set guarantees no committed catalog snapshot,
-    branch head, or merge base loses a readable table. Metadata-scale:
-    one pass over small JSON records, no data file touched."""
-    cdir = os.path.join(root, _CATALOG_DIR)
-    if not os.path.isdir(cdir):
-        return {}
-    branch_dirs = [cdir]
-    bdir = os.path.join(cdir, "branches")
-    if os.path.isdir(bdir):
-        branch_dirs += [
-            os.path.join(bdir, b)
-            for b in os.listdir(bdir)
-            if os.path.isdir(os.path.join(bdir, b))
-        ]
-    pinned: dict[str, set[int]] = {}
-    for d in branch_dirs:
-        for v in _json_versions(d):
-            with open(os.path.join(d, f"v{v}.json")) as fh:
-                rec = json.load(fh)
-            for tables in (rec.get("tables", {}),
-                           rec.get("fork", {}).get("tables", {})):
-                for name, v in tables.items():
-                    pinned.setdefault(name, set()).add(int(v))
-    return pinned
-
-
-def catalog_reclaim(
-    root: str,
-    table_paths: dict[str, str],
-    *,
-    min_age_seconds: float = 24 * 3600.0,
-) -> dict[str, tuple[list[int], list[str]]]:
-    """The complete, safe reclamation pass for a catalog-managed table
-    family — the composition the ``clean=False`` write path defers to:
-
-    1. compute the cross-branch pin set (:func:`catalog_pinned_versions`)
-    2. retire unpinned manifest history per table
-       (``retire_manifests``)
-    3. vacuum files no surviving manifest references
-       (``vacuum_orphans``, with its union-of-all-manifests live set and
-       age floor)
-
-    Returns ``{table name: (retired versions, removed files)}``. Any
-    version a catalog snapshot, branch head, or fork base can resolve is
-    untouchable by construction, so committed reads never break."""
-    from .merge import retire_manifests, vacuum_orphans
-
-    pinned = catalog_pinned_versions(root)
-    out: dict[str, tuple[list[int], list[str]]] = {}
-    for name, path in table_paths.items():
-        retired = retire_manifests(path, pinned=pinned.get(name, set()))
-        removed = vacuum_orphans(path, min_age_seconds=min_age_seconds)
-        out[name] = (retired, removed)
-    return out
-
-
-def delete_branch(root: str, name: str) -> None:
-    """Drop a branch ref (its catalog version files). Manifest versions
-    it alone pinned become retirable by the cleaner, and their
-    exclusively-held data files then fall to ``vacuum_orphans`` —
-    exactly Nessie's delete-reference semantics."""
-    import shutil
-
-    if name == _MAIN:
-        raise ValueError("refusing to delete 'main'")
-    shutil.rmtree(_branch_dir(root, name), ignore_errors=True)

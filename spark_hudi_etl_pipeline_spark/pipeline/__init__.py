@@ -11,8 +11,6 @@ from .runner import (
     PipelineConfig,
     PipelineResult,
     run_pipeline,
-    run_with_retries,
-    scheduled_run,
 )
 
 __all__ = [
@@ -22,7 +20,5 @@ __all__ = [
     "get_last_run_timestamp",
     "get_pipeline_status",
     "run_pipeline",
-    "run_with_retries",
-    "scheduled_run",
     "write_log_entry",
 ]

@@ -11,6 +11,14 @@ architecture.
 
 Everything is `IF NOT EXISTS`-idempotent: re-running bootstrap on a live
 deployment is a no-op, the reference's operational contract.
+
+The audit log itself is NOT this catalog table. ``run_pipeline`` appends
+its rows to the manifest-committed table at ``PipelineConfig.log_path``,
+and ``api.get_pipeline_status`` reads them from there. A plain
+``USING parquet LOCATION <log_path>`` table would list every parquet
+file in that directory, including the uncommitted files a crashed commit
+leaves behind, so the catalog table stays an empty DDL stand-in for the
+reference's ``SELECT … FROM pipeline_layer.pipeline_log``.
 """
 
 from __future__ import annotations
@@ -23,7 +31,9 @@ from .runlog import LOG_SCHEMA
 def create_pipeline_log_table(spark: SparkSession) -> None:
     """Reference :73-74 and :100-117: the ``pipeline_layer`` database and
     its ``pipeline_log`` audit table, composite key (pipeline_name,
-    created_at), precombine on created_at."""
+    created_at), precombine on created_at. Runs log to the
+    manifest-committed table at ``PipelineConfig.log_path``, not to this
+    one; read them with ``api.get_pipeline_status``."""
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {quoted('pipeline_layer')}")
     # The DDL columns are the audit log's write schema (reference
     # :100-117, FIXTURES.md §A2).

@@ -51,7 +51,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..operators.merge import read_indexed_table
 from .runlog import append_entry, now_ms
 
 COST_SCHEMA = StructType(
@@ -227,33 +226,6 @@ def write_cost_entry(
     through the audit log's append commit (``runlog.append_entry``): one
     staged write and one manifest publish, no read of the table, and a
     ``created_at`` one past the query's previous row when ``entry``'s
-    would repeat it — a crash leaves :func:`cost_report` on the previous
-    version."""
+    would repeat it — a crash leaves readers of the table
+    (``merge.read_indexed_table``) on the previous version."""
     append_entry(spark, cost_path, COST_SCHEMA, entry, "query_name")
-
-
-def cost_report(spark: SparkSession, cost_path: str) -> DataFrame:
-    """Per-query rollup over the cost table: run count, wall stats, and
-    the LATEST run's plan-shape counters (argmax by created_at — a plan
-    regression shows as a counter change between report snapshots)."""
-    log = read_indexed_table(spark, cost_path)
-    w_latest = F.max(F.struct("created_at", "shuffle_exchanges")).alias("_l")
-    return (
-        log.groupBy("query_name")
-        .agg(
-            F.count(F.lit(1)).alias("runs"),
-            F.min("wall_sec").alias("min_wall_sec"),
-            F.avg("wall_sec").alias("avg_wall_sec"),
-            F.max("rows_out").alias("rows_out"),
-            w_latest,
-        )
-        .select(
-            "query_name",
-            "runs",
-            "min_wall_sec",
-            "avg_wall_sec",
-            "rows_out",
-            F.col("_l.shuffle_exchanges").alias("latest_shuffle_exchanges"),
-        )
-        .orderBy("query_name")
-    )

@@ -141,8 +141,8 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineResult:
         # executors until the ContextCleaner collects the RDD after a
         # driver GC, and a local checkpoint has no lineage to recompute
         # from, so losing an executor during the upsert fails the run.
-        # That failure logs FAILED with the watermark unmoved, and
-        # run_with_retries reruns the batch against the idempotent
+        # That failure logs FAILED with the watermark unmoved, so a
+        # retried run re-extracts the batch against the idempotent
         # keyed upsert.
         obs = Observation()
         batch = batch.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
@@ -221,42 +221,3 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineResult:
     finally:
         if cost_group is not None:
             spark.sparkContext.setJobGroup(None, None)
-
-
-def scheduled_run(spark: SparkSession, config: PipelineConfig) -> bool:
-    """Scheduler entry (reference daily_pipeline_run, :371-379): bool
-    instead of exception for cron-style callers."""
-    try:
-        run_pipeline(spark, config)
-        return True
-    except Exception:
-        return False
-
-
-def run_with_retries(
-    spark: SparkSession,
-    config: PipelineConfig,
-    *,
-    max_attempts: int = 3,
-) -> PipelineResult:
-    """Bounded-retry wrapper around :func:`run_pipeline` — the reference
-    README's "error handling and retry logic" (README.md:208) made real.
-
-    Retrying a failed run is SAFE by construction: the watermark only
-    advances on a SUCCESS log row, so a retry re-extracts exactly the
-    same incremental window, and the keyed upsert is idempotent (same
-    batch twice converges to the same table — tested in
-    ``test_merge_properties``). Every failed attempt still writes its
-    FAILED runlog row, so the monitoring surface sees each attempt.
-    Attempts follow each other without a pause. Raises the final error
-    when ``max_attempts`` are exhausted."""
-    if max_attempts < 1:
-        raise ValueError("max_attempts must be >= 1")
-    last_exc: Exception | None = None
-    for _ in range(max_attempts):
-        try:
-            return run_pipeline(spark, config)
-        except Exception as exc:  # noqa: BLE001 — retry any run failure
-            last_exc = exc
-    assert last_exc is not None
-    raise last_exc

@@ -12,7 +12,7 @@ independent pure-Python BPE implementation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bpe import (
@@ -48,6 +48,22 @@ def _duck_fold(expr: str, left: str, right: str) -> str:
     )
 
 
+def bpe_tokens(text: Column, merges: list[tuple[str, str]]) -> Column:
+    """The BPE symbols of ``text``: lower-cased whitespace words, each
+    split into chars + EOW, then one greedy left-to-right fold per merge
+    in rank order (equal to the rank-priority encode loop for a learned
+    merge list)."""
+
+    def enc_word(w):
+        sym = _chars_with_eow(w)
+        for left, right in merges:
+            sym = merge_pair_fold(sym, left, right)
+        return sym
+
+    words = F.filter(F.split(F.trim(F.lower(text)), r"\s+"), lambda x: x != "")
+    return F.flatten(F.transform(words, enc_word))
+
+
 def _duck_encode_expr() -> str:
     e = "string_split(w, '') || ['</w>']"
     for left, right in FIXED_MERGES:
@@ -81,17 +97,7 @@ def bpe_encode_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the identical folds in DuckDB, so every symbol of every
     document is value-checked."""
     d = load_table(spark, sf_dir, "documents")
-
-    def enc_word(w):
-        sym = _chars_with_eow(w)
-        for left, right in FIXED_MERGES:
-            sym = merge_pair_fold(sym, left, right)
-        return sym
-
-    words = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
-    tokens = F.flatten(F.transform(words, enc_word))
+    tokens = bpe_tokens(F.col("text"), FIXED_MERGES)
     return (
         d.select(
             "doc_id",
@@ -109,5 +115,5 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return the merge table. Value parity with an independent pure-Python
     BPE is asserted in tests/test_bpe.py."""
     d = load_table(spark, sf_dir, "documents")
-    merges = bpe_train(word_frequencies(d, "text"), 10)
+    merges = bpe_train(word_frequencies(d), 10)
     return merge_table(spark, merges).orderBy("rank")

@@ -204,7 +204,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact operator are additionally asserted in tests/test_dedup.py."""
     corpus = _with_near_dups(spark, sf_dir)
     return dedup.minhash_dedup_pairs(
-        corpus, "doc_id", "text", threshold=0.3, num_hashes=32, bands=8, k=5
+        corpus, "doc_id", "text", threshold=0.3, k=5
     )
 
 
@@ -293,7 +293,7 @@ def dedup_recall_lsh_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, "doc_id", "text", threshold=0.3, k=5
     ).select("id_a", "id_b")
     lsh = dedup.minhash_dedup_pairs(
-        corpus, "doc_id", "text", threshold=0.3, num_hashes=32, bands=8, k=5
+        corpus, "doc_id", "text", threshold=0.3, k=5
     ).select("id_a", "id_b", F.lit(1).alias("hit"))
     joined = exact.join(lsh, ["id_a", "id_b"], "left")
     stats = joined.agg(
@@ -809,7 +809,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     by min doc_id) by the doc itself over total distinct shingles, in 1e6
     fixed point. Near-copies of earlier docs score near zero."""
     corpus = _with_near_dups(spark, sf_dir)
-    return dedup.ngram_novelty(corpus, "doc_id", "text", k=5).orderBy("doc_id")
+    return dedup.ngram_novelty(corpus).orderBy("doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -1103,9 +1103,7 @@ def dedup_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid, hot-span bucket cap 64): catches the copied-paragraph case
     whole-document fingerprints and shingle-Jaccard miss."""
     corpus = _with_near_dups(spark, sf_dir)
-    return dedup.shared_window_pairs(
-        corpus, "doc_id", "text", window=64, stride=32, max_bucket=64
-    )
+    return dedup.shared_window_pairs(corpus, "doc_id", "text")
 
 
 # --------------------------------------------------------------------------
@@ -1169,7 +1167,6 @@ def record_linkage_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         dirty_name="name",
         clean_name="c_name",
         block_cols=["blk", "c_nationkey"],
-        max_distance=2,
     ).orderBy("dirty_id")
 
 
@@ -1226,9 +1223,7 @@ def dedup_edit_distance_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" xq")).alias("text"),
     )
     corpus = d.unionByName(dups)
-    return dedup.edit_distance_pairs(
-        corpus, "doc_id", "text", max_edits=4, block_tokens=5
-    )
+    return dedup.edit_distance_pairs(corpus, "doc_id", "text")
 
 
 # --------------------------------------------------------------------------
@@ -1308,9 +1303,9 @@ def dedup_minhash_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.col("text"), F.lit(" appended tail words")).alias("text"),
         )
     )
-    minhash_store_ingest(seed, tbl, batch_id="seed", threshold=0.5)
+    minhash_store_ingest(seed, tbl, batch_id="seed")
     return minhash_store_ingest(
-        probe, tbl, batch_id="probe", threshold=0.5
+        probe, tbl, batch_id="probe"
     ).orderBy("doc_id")
 
 
@@ -1519,6 +1514,4 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Containment ≥ 0.8 pairs over the near-dup corpus: the 5 injected
     (original, tail-appended copy) pairs surface with cont_a_q = 1.0."""
     corpus = _with_near_dups(spark, sf_dir)
-    return dedup.containment_pairs(
-        corpus, "doc_id", "text", threshold=0.8, k=5
-    )
+    return dedup.containment_pairs(corpus, "doc_id", "text")

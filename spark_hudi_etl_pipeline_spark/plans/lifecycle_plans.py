@@ -1665,8 +1665,6 @@ def compaction_plan_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compaction_plan(
         files,
         partition_col="part",
-        file_col="file",
-        bytes_col="bytes",
         target_bytes=40000,
         small_file_limit=20000,
     )

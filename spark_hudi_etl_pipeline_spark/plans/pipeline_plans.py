@@ -217,7 +217,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     read as a stream with a 1-hour watermark, windowed-aggregated, and
     drained with an availableNow trigger into a memory sink. Batch and
     stream must agree exactly — the engine's batch/streaming-parity
-    contract (streaming/windows.py holds the operator library)."""
+    contract."""
     ev = load_table(spark, sf_dir, "events")
     stage = scratch(sf_dir, "stream_tumbling")
     ev.write.mode("overwrite").parquet(stage)
@@ -640,7 +640,7 @@ def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the documents fixture is one parquet file -> one input split;
     # fan_out rescues exactly that case and is a no-op on a
-    # well-split scan (at real payload volume: repartition_for_payloads)
+    # well-split scan
     m = fan_out(m)
     frames = sample_frames(m, n_frames=8)
     imgs = attach_metadata(
@@ -678,7 +678,7 @@ def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # Session windows (F.session_window — the built-in the batch sessionize
 # query re-derives by hand with lag+cumsum; both run on the batch path,
-# and the operator is streaming-ready via streaming/windows.py).
+# and the same grouping runs unchanged on a watermarked stream).
 # Window end = last event + gap, which the oracle reproduces explicitly.
 # --------------------------------------------------------------------------
 
@@ -732,7 +732,7 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Streaming within-watermark dedup (streaming/windows.py::stream_dedup):
+# Streaming within-watermark dedup:
 # duplicated events staged to a stream, dropDuplicatesWithinWatermark on
 # the full row key drains to exactly one copy per event — oracle is
 # SELECT DISTINCT. The streaming form of the precombine dedup: state for

@@ -60,7 +60,7 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.topk_cosine(
-        emb, queries, corpus_id="vec_id", query_id="vec_id", vec_col="embedding", k=5
+        emb, queries, corpus_id="vec_id", query_id="vec_id", k=5
     )
 
 
@@ -90,8 +90,6 @@ def radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         corpus_id="vec_id",
         query_id="vec_id",
-        vec_col="embedding",
-        threshold=0.35,
     )
 
 
@@ -157,11 +155,6 @@ def mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         corpus_id="vec_id",
         query_id="vec_id",
-        vec_col="embedding",
-        k=3,
-        m=8,
-        lam=0.7,
-        mu=0.3,
     )
 
 
@@ -230,9 +223,6 @@ def knn_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         corpus_id="vec_id",
         query_id="vec_id",
-        vec_col="embedding",
-        dim=64,
-        n_bits=8,
         k=5,
     )
 
@@ -328,7 +318,6 @@ def knn_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries,
         corpus_id="vec_id",
         query_id="vec_id",
-        vec_col="embedding",
         n_centroids=16,
         nprobe=2,
         k=5,
@@ -893,7 +882,7 @@ SELECT vec_id, cluster_id, dist_q FROM a2 ORDER BY vec_id
 def kmeans_lloyd_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.kmeans_lloyd_quantized(
-        emb, id_col="vec_id", vec_col="embedding", k=_KM_K, iters=2
+        emb, id_col="vec_id", k=_KM_K, iters=2
     ).orderBy("vec_id")
 
 
@@ -998,7 +987,7 @@ def ivf_upsert_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = replaced(emb.filter(F.col("vec_id") < 10))
     return similarity.ivf_ann_partitioned(
         spark, path, queries, centroids,
-        query_id="vec_id", vec_col="embedding", nprobe=2, k=5,
+        query_id="vec_id", k=5,
     )
 
 
@@ -1093,16 +1082,7 @@ def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums. Recall vs brute force asserted in tests/test_similarity.py;
     every surviving distance and rank is value-checked by the oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return similarity.ivfpq_adc_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 10),
-        corpus_id="vec_id",
-        query_id="vec_id",
-        vec_col="embedding",
-        n_centroids=16,
-        nprobe=2,
-        k=5,
-    )
+    return similarity.ivfpq_adc_topk(emb, emb.filter(F.col("vec_id") < 10))
 
 
 # --------------------------------------------------------------------------
@@ -1449,7 +1429,7 @@ def knn_matryoshka_trunc16(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = trunc.filter(F.col("vec_id") < 10)
     return similarity.topk_cosine(
         trunc, queries, corpus_id="vec_id", query_id="vec_id",
-        vec_col="embedding", k=5,
+        k=5,
     )
 
 
@@ -1517,7 +1497,7 @@ def ann_recall_lsh_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("qid", "cid")
     ann = similarity.rp_lsh_ann(
         emb, queries, corpus_id="vec_id", query_id="vec_id",
-        dim=64, n_bits=8, k=5,
+        k=5,
     ).select("qid", "cid", F.lit(1).alias("hit"))
     return (
         exact.join(ann, on=["qid", "cid"], how="left")
@@ -1565,7 +1545,6 @@ def knn_filtered_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 5),
         corpus_id="vec_id",
         query_id="vec_id",
-        vec_col="embedding",
         k=5,
     )
 
@@ -1659,5 +1638,5 @@ def crossmodal_image_to_text_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.topk_cosine(
-        emb, q, corpus_id="vec_id", query_id="media_id", vec_col="embedding", k=5
+        emb, q, corpus_id="vec_id", query_id="media_id", k=5
     )

@@ -332,7 +332,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow twin (parity-asserted): the 4-language interpreted
     # filter/array_contains HOF cascade cost ~4× one Python pass per batch
     return (
-        d.select(text.language_id_arrow("text").alias("lang_pred"))
+        d.select(text.language_id_arrow().alias("lang_pred"))
         .groupBy("lang_pred")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("lang_pred")
@@ -379,7 +379,7 @@ ORDER BY lang, lang_pred
 def text_lang_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select("lang", text.language_id_arrow("text").alias("lang_pred"))
+        d.select("lang", text.language_id_arrow().alias("lang_pred"))
         .groupBy("lang", "lang_pred")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),

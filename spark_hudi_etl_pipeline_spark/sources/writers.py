@@ -22,7 +22,7 @@ Bucketing requires the table catalog (``saveAsTable``); plain
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -45,21 +45,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def write_partitioned(df: DataFrame, path: str, *, partition_cols: list[str]) -> None:
-    """Directory-partitioned parquet, overwriting ``path``: one directory
-    per distinct value combination. Filters on ``partition_cols`` become PartitionFilters
-    (pruned before any file is opened). Keep partition cardinality
-    bounded (≲ 10⁴ directories) — high-cardinality keys belong in
-    bucketing, not partitioning."""
-    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    """Scan a partitioned layout (partition columns are reconstructed
-    from directory names)."""
-    return spark.read.parquet(path)
-
-
 #: Hidden-partitioning transforms (Iceberg partition-spec semantics):
 #: name -> (derive(col) Column fn, rewrite(predicate-bounds) helper).
 #: The reader derives partition filters FROM raw-column predicates, so
@@ -72,13 +57,6 @@ def hidden_day(col):
     from pyspark.sql import functions as F
 
     return F.date_trunc("day", col).cast("date")
-
-
-def hidden_bucket(col, n: int):
-    """bucket(n, key) transform: stable non-negative hash bucket."""
-    from pyspark.sql import functions as F
-
-    return F.pmod(F.xxhash64(col), F.lit(n))
 
 
 #: Internal partition column of a hidden-partitioned layout; readers

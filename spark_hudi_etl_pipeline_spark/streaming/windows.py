@@ -3,115 +3,22 @@
 The reference's "streaming" is a batch-incremental watermark loop
 (SURVEY.md §1.1); this module is the streaming-native tier the README
 aspires to ("Event Streams", README.md:19; "Optimized for both batch and
-streaming", :554): real ``withWatermark`` + windowed aggregations +
-within-watermark dedup + a foreachBatch upsert sink that reuses the
-batch merge operator — the watermark loop made native.
+streaming", :554): real ``withWatermark`` interval joins and chained
+window rollups, plus foreachBatch sinks that reuse the batch timeline,
+dedup-store and OHLC operators — the watermark loop made native.
 
 All operators are transformations on an unbounded DataFrame; they work
 identically on any streaming source (file/kafka/rate). Watermarks bound
 state: at 100 TB/day the state store holds only open windows within the
-lateness horizon, and ``dropDuplicatesWithinWatermark`` evicts seen-key
-state at the horizon instead of growing forever.
+lateness horizon instead of growing forever. The registered
+``streaming_*`` queries build their tumbling, session and
+within-watermark-dedup streams inline.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-#: events fixture schema with ts as proper TimestampType (streams must
-#: declare their schema up front — no inference on unbounded input).
-EVENTS_STREAM_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", TimestampType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
-    ]
-)
-
-
-def events_file_stream(
-    spark: SparkSession, dir_path: str, *, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """File-source stream over a directory of events parquet files —
-    each arriving file is a micro-batch (the test/dev stand-in for a
-    Kafka topic; swap ``readStream.format``)."""
-    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(dir_path)
-
-
-def tumbling_window_counts(
-    events: DataFrame,
-    *,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Per-event-type counts/sums in tumbling event-time windows;
-    late rows beyond ``watermark`` are dropped and their windows closed
-    (bounded state)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def session_window_stats(
-    events: DataFrame,
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Per-user session windows (dynamic length, closed after ``gap`` of
-    inactivity) — the streaming twin of plans.extract.events_sessionize."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def stream_dedup(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Exactly-once-per-key within a 30-minute watermark horizon
-    (``dropDuplicatesWithinWatermark``): the streaming form of the
-    precombine/upsert dedup — state for a key is dropped once the
-    watermark passes it, so state is bounded by horizon × arrival rate."""
-    return events.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
-    )
 
 
 def interval_join(
@@ -202,29 +109,6 @@ def chained_window_rollup(events: DataFrame) -> DataFrame:
             "sum_value_cents",
         )
     )
-
-
-def foreach_batch_upsert(
-    target_path: str, keys: list[str], precombine: str,
-    *, evolve_schema: bool = False,
-):
-    """foreachBatch sink: apply the engine's keyed upsert merge to each
-    micro-batch — streaming upsert is the reference's watermark loop made
-    native (SURVEY.md §7 Phase 3); reuses operators/merge.py so batch and
-    streaming share one merge semantic (including, with
-    ``evolve_schema=True``, Hudi-style schema-on-read widening when a
-    later stream adds columns)."""
-    from ..operators.merge import upsert_parquet
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(
-            batch_df.sparkSession, batch_df, target_path,
-            keys=keys, precombine=precombine, evolve_schema=evolve_schema,
-        )
-
-    return apply
 
 
 def foreach_batch_timeline_commit(target_path: str, *, base_instant: int = 0):

@@ -1,25 +1,8 @@
-"""Latest-per-key and as-of join semantics."""
+"""As-of join semantics."""
 
 from __future__ import annotations
 
-from spark_hudi_etl_pipeline_spark.operators.latest import asof_join, latest_per_key
-
-
-def test_latest_per_key(spark):
-    df = spark.createDataFrame(
-        [("a", 1, "x"), ("a", 3, "y"), ("a", 2, "z"), ("b", 1, "w")],
-        "k string, ts long, v string",
-    )
-    out = latest_per_key(df, ["k"], "ts")
-    assert {tuple(r) for r in out.collect()} == {("a", 3, "y"), ("b", 1, "w")}
-
-
-def test_latest_per_key_tiebreak(spark):
-    df = spark.createDataFrame(
-        [("a", 1, 10), ("a", 1, 20)], "k string, ts long, seq int"
-    )
-    out = latest_per_key(df, ["k"], "ts", tiebreak=["seq"])
-    assert [tuple(r) for r in out.collect()] == [("a", 1, 20)]
+from spark_hudi_etl_pipeline_spark.operators.latest import asof_join
 
 
 def test_asof_join_basic(spark):

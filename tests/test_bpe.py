@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 
 from spark_hudi_etl_pipeline_spark.operators.bpe import (
     EOW,
-    bpe_encode,
     bpe_train,
     merge_pair_fold,
     merge_table,
@@ -75,7 +74,7 @@ def _ref_encode(word: str, merges):
 
 def test_train_matches_reference(spark):
     df = spark.createDataFrame([(i, t) for i, t in enumerate(CORPUS)], "id long, text string")
-    wf = word_frequencies(df, "text")
+    wf = word_frequencies(df)
     got = bpe_train(wf, 8)
     ref_freqs = collections.Counter(
         w for t in CORPUS for w in t.lower().split()
@@ -91,7 +90,7 @@ def test_train_matches_reference(spark):
 
 def test_train_min_freq_stops_early(spark):
     df = spark.createDataFrame([(0, "ab ab cd")], "id long, text string")
-    wf = word_frequencies(df, "text")
+    wf = word_frequencies(df)
     # Only pairs within 'ab' (freq 2) reach bpe_train's floor of 2; 'cd'
     # pairs are freq 1.
     merges = bpe_train(wf, 50)
@@ -109,18 +108,21 @@ def test_merge_fold_greedy_no_chain(spark):
 
 
 def test_encode_matches_reference(spark):
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(CORPUS + ["lowest newlow unseen zzz"])],
-        "id long, text string",
-    )
-    merges = bpe_train(word_frequencies(df, "text"), 10)
+    """The JVM encode that ``bpe_encode_fixed`` runs equals the
+    reference rank-priority loop for a learned merge list."""
+    from spark_hudi_etl_pipeline_spark.plans.bpe_plans import bpe_tokens
+
+    texts = CORPUS + ["lowest newlow unseen zzz"]
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, text string")
+    merges = bpe_train(word_frequencies(df), 10)
     got = {
-        r["id"]: (r["n_tokens"], r["tokens"])
-        for r in bpe_encode(df, "id", "text", merges).collect()
+        r["id"]: r["tokens"]
+        for r in df.select("id", bpe_tokens(F.col("text"), merges).alias("tokens"))
+        .collect()
     }
-    for i, text in enumerate(CORPUS + ["lowest newlow unseen zzz"]):
+    for i, text in enumerate(texts):
         toks = [s for w in text.lower().split() for s in _ref_encode(w, merges)]
-        assert got[i] == (len(toks), " ".join(toks)), f"doc {i}"
+        assert got[i] == toks, f"doc {i}"
 
 
 def test_merge_table_artifact(spark):

@@ -13,7 +13,7 @@ from spark_hudi_etl_pipeline_spark.operators.clustering import (
     file_column_bounds,
     quantile_codes,
     write_clustered,
-    zorder_value,
+    zorder_value_nd,
 )
 from spark_hudi_etl_pipeline_spark.sources import load_table
 
@@ -37,7 +37,7 @@ def orders(spark):
 
 def test_zorder_value_interleaves_bits(spark):
     df = spark.range(1).select(
-        zorder_value(F.lit(0b1010), F.lit(0b0110), bits=4).alias("z")
+        zorder_value_nd([F.lit(0b1010), F.lit(0b0110)], bits=4).alias("z")
     )
     # x bits at even positions, y bits at odd: x=1010,y=0110 → z=01101100.
     assert df.first()["z"] == 0b01101100

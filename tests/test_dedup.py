@@ -1,4 +1,4 @@
-"""Dedup operator family: exact, fingerprint, MinHash-LSH recall,
+"""Dedup operator family: fingerprint, MinHash-LSH recall,
 SimHash hamming properties, n-gram Jaccard, embedding near-dup."""
 
 from __future__ import annotations
@@ -26,17 +26,15 @@ def docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id int, text string")
 
 
-def test_exact_dedup(spark, docs_df):
-    out = dedup.exact_dedup(docs_df.select("text"))
-    assert out.count() == 5  # rows 1,2 identical
-
-
 def test_fingerprint_dedup_normalization(spark, docs_df):
     """Case/punctuation variants collapse onto one fingerprint."""
-    kept = dedup.fingerprint_dedup(docs_df, "doc_id", "text")
-    ids = {r["doc_id"] for r in kept.collect()}
-    assert 1 in ids and 2 not in ids and 6 not in ids  # 2 & 6 fold into 1
-    assert {3, 4, 5} <= ids
+    fp = {
+        r["doc_id"]: r["fp"]
+        for r in docs_df.select("doc_id", text.fingerprint("text").alias("fp"))
+        .collect()
+    }
+    assert fp[1] == fp[2] == fp[6]  # 2 & 6 fold into 1
+    assert len({fp[1], fp[3], fp[4], fp[5]}) == 4
 
 
 def test_ngram_jaccard_finds_near_dups(spark, docs_df):
@@ -58,7 +56,7 @@ def test_minhash_lsh_recall_vs_exact(spark, docs_df):
     lsh = {
         (r["id_a"], r["id_b"])
         for r in dedup.minhash_dedup_pairs(
-            docs_df, "doc_id", "text", threshold=0.5, num_hashes=32, bands=8, k=3
+            docs_df, "doc_id", "text", threshold=0.5, k=3
         ).collect()
     }
     assert exact, "test corpus must contain high-similarity pairs"
@@ -96,8 +94,12 @@ def test_simhash_hamming_property(spark, docs_df):
 
 
 def test_simhash_deterministic(spark, docs_df):
-    a = dedup.simhash(docs_df, "doc_id", "text").collect()
-    b = dedup.simhash(docs_df, "doc_id", "text").collect()
+    def sign():
+        return docs_df.select(
+            "doc_id", dedup.simhash_expr("text").alias("simhash")
+        ).collect()
+
+    a, b = sign(), sign()
     assert {tuple(r) for r in a} == {tuple(r) for r in b}
 
 
@@ -332,9 +334,7 @@ def test_semantic_dedup_default_uses_auto_k(spark):
     # One representative (min id) per planted group.
     assert kept == set(range(8))
     # The auto path is exactly the explicit-k path with the computed k.
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        auto_cluster_count,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (auto_cluster_count)
 
     k = auto_cluster_count(df.count(), target_cluster_size=16)
     explicit = semantic_dedup(
@@ -348,9 +348,7 @@ def test_cc_star_matches_union_find_on_random_graphs(spark):
     a sparse random graph (many singleton and small components)."""
     import random
 
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        connected_components,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (connected_components)
     from tests.test_cc_properties import _union_find_labels
 
     rng = random.Random(13)
@@ -393,9 +391,7 @@ def test_fingerprint_store_ingest_semantics_and_growth(spark):
     shuffles)."""
     from pyspark.sql import functions as F
 
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        fingerprint_store_ingest,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (fingerprint_store_ingest)
 
     tbl = "fp_store_unit"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -457,9 +453,7 @@ def test_fingerprint_store_replay_is_idempotent(spark):
     gets the SAME verdicts as its first attempt — first occurrences stay
     is_dup=0 — and the store does not grow (r6 advisor: without a batch
     id, a replay marked every row dup, including the only copy)."""
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        fingerprint_store_ingest,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (fingerprint_store_ingest)
 
     tbl = "fp_store_replay"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -497,9 +491,7 @@ def test_fingerprint_store_non_long_id_type_stable(spark):
     """canonical_id keeps the batch id_col's type on BOTH the seed path
     and store-backed batches (r6 advisor: the seed path hardcoded a
     long null and relied on implicit coercion)."""
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        fingerprint_store_ingest,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (fingerprint_store_ingest)
 
     tbl = "fp_store_strid"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -530,9 +522,7 @@ def test_shared_window_pairs_copied_paragraph(spark):
     is caught (whole-doc fingerprints and Jaccard would miss it); docs
     shorter than the window yield nothing; the hot-span cap drops
     degenerate all-identical buckets."""
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        shared_window_pairs,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (shared_window_pairs)
 
     para = "the quick brown fox jumps over the lazy dog " * 3  # 132 chars
     rows = [
@@ -544,9 +534,7 @@ def test_shared_window_pairs_copied_paragraph(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     pairs = {
         (r["id_a"], r["id_b"]): r["n_shared"]
-        for r in shared_window_pairs(
-            df, "doc_id", "text", window=64, stride=32
-        ).collect()
+        for r in shared_window_pairs(df, "doc_id", "text").collect()
     }
     # Stride alignment: doc1's copy starts at an arbitrary offset, so
     # only grid-aligned windows can collide — the prefix-copy direction
@@ -588,7 +576,7 @@ def test_record_linkage_semantics(spark):
             dirty, clean,
             dirty_id="did", clean_id="cid",
             dirty_name="name", clean_name="name",
-            block_cols=["country"], max_distance=2,
+            block_cols=["country"]
         ).collect()
     }
     assert got == {10: (1, 1), 11: (3, 0)}
@@ -598,9 +586,7 @@ def test_fingerprint_store_legacy_schema_migrates(spark):
     """Stores created before src_batch tracking (fp, first_id only) stay
     probe-able: their hits dedup as foreign-batch, and appends match the
     legacy schema instead of failing (r7 ADVICE, dedup.py:125)."""
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        fingerprint_store_ingest,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (fingerprint_store_ingest)
     from spark_hudi_etl_pipeline_spark.sources.writers import write_bucketed
 
     tbl = "fp_store_legacy"
@@ -667,9 +653,7 @@ def test_minhash_arrow_and_expression_signatures_identical(spark):
     md5-60bit portable base hash and MINHASH_COEFFS — signatures must be
     BIT-IDENTICAL (this is what makes dedup_minhash_lsh oracle-checkable
     by an exact SQL oracle)."""
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        minhash_signature_arrow,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (minhash_signature_arrow)
 
     df = spark.createDataFrame(
         [
@@ -694,9 +678,7 @@ def test_edit_distance_pairs_blocking_and_threshold(spark):
     distances; docs whose edit falls INSIDE the head land in another
     block and are missed (the documented blocking trade); distances
     above the threshold are dropped."""
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        edit_distance_pairs,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (edit_distance_pairs)
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     df = spark.createDataFrame(
@@ -712,7 +694,7 @@ def test_edit_distance_pairs_blocking_and_threshold(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["edits"]
-        for r in edit_distance_pairs(df, "doc_id", "text", max_edits=4).collect()
+        for r in edit_distance_pairs(df, "doc_id", "text").collect()
     }
     assert got[(1, 2)] == 3
     assert got[(1, 3)] == 1
@@ -726,9 +708,7 @@ def test_minhash_store_ingest_semantics_and_replay(spark):
     STORED content, novel docs join the store, near-dups don't, and a
     same-batch replay is idempotent (verdicts identical, store doesn't
     grow)."""
-    from spark_hudi_etl_pipeline_spark.operators.dedup import (
-        minhash_store_ingest,
-    )
+    from spark_hudi_etl_pipeline_spark.operators.dedup import (minhash_store_ingest)
 
     tbl = "mh_store_unit"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -835,9 +815,7 @@ def test_hot_shingle_jaccard_exact_output(spark, hot_shingle_corpus):
 def test_hot_shingle_containment_exact_output(spark, hot_shingle_corpus):
     got = {
         (r["id_a"], r["id_b"]): (r["cont_a_q"], r["cont_b_q"])
-        for r in dedup.containment_pairs(
-            hot_shingle_corpus, "doc_id", "text", threshold=0.8, k=5
-        ).collect()
+        for r in dedup.containment_pairs(hot_shingle_corpus, "doc_id", "text").collect()
     }
     assert got == {(10001, 10002): (1.0, 1.0)}
 
@@ -854,9 +832,7 @@ def test_containment_asymmetric_prefix_finds_subset_pair(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["cont_a_q"]
-        for r in dedup.containment_pairs(
-            df, "doc_id", "text", threshold=0.8, k=5
-        ).collect()
+        for r in dedup.containment_pairs(df, "doc_id", "text").collect()
     }
     assert got == {(1, 2): 1.0}
 

@@ -8,7 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from spark_hudi_etl_pipeline_spark.functions import scalars, text
+from spark_hudi_etl_pipeline_spark.functions import text
 from spark_hudi_etl_pipeline_spark.operators import dedup, similarity
 from spark_hudi_etl_pipeline_spark.operators.merge import merge_upsert
 
@@ -68,20 +68,6 @@ def test_text_functions_on_empty_and_null(spark):
     ).collect()
     # must not throw; token counts are 0-or-1ish for degenerate inputs
     assert all(r["n"] is not None or r["id"] == 2 for r in out)
-
-
-def test_parse_compact_timestamp(spark):
-    df = spark.createDataFrame([("20240131235959",)], "s string")
-    row = df.select(scalars.parse_compact_timestamp("s").alias("ts")).first()
-    assert str(row["ts"]) == "2024-01-31 23:59:59"
-
-
-def test_epoch_ms_roundtrip(spark):
-    df = spark.createDataFrame([(1706745599123,)], "ms long")
-    row = df.select(
-        scalars.epoch_ms_to_timestamp("ms").alias("ts")
-    ).select(F.unix_millis("ts").alias("back")).first()
-    assert row["back"] == 1706745599123
 
 
 def test_connected_components_empty_edges(spark):

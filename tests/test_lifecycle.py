@@ -16,7 +16,6 @@ from spark_hudi_etl_pipeline_spark.operators.tableops import (
     bulk_insert,
     delete_partitions,
     insert_overwrite,
-    insert_overwrite_table,
     upsert_parquet_partitioned_global,
 )
 from spark_hudi_etl_pipeline_spark.operators.merge import (
@@ -27,7 +26,6 @@ from spark_hudi_etl_pipeline_spark.operators.timeline import (
     commit_append,
     commit_instants,
     compaction_instants,
-    delete_savepoint,
     read_as_of,
     read_realtime,
     restore_to,
@@ -64,8 +62,6 @@ def test_savepoint_requires_commit(spark, tmp_table):
         savepoint(spark, tmp_table, 99)
     savepoint(spark, tmp_table, 2)
     assert savepoints(tmp_table) == [2]
-    delete_savepoint(tmp_table, 2)
-    assert savepoints(tmp_table) == []
 
 
 def test_restore_rewinds_to_instant(spark, tmp_table):
@@ -134,10 +130,6 @@ def test_cleaner_respects_savepoint(spark, tmp_table):
     # 1 clamps the horizon to 1 — nothing older than 1 exists, so no-op.
     assert clean_timeline(spark, tmp_table, KEYS, PRE, retain_last=1) is None
     assert commit_instants(spark, tmp_table) == [1, 2, 3]
-    # Release the pin: the cleaner may now collapse to the horizon.
-    delete_savepoint(tmp_table, 1)
-    assert clean_timeline(spark, tmp_table, KEYS, PRE, retain_last=1) == 3
-    assert commit_instants(spark, tmp_table) == [3]
 
 
 # ---------------------------------------------------------- operation types
@@ -163,15 +155,6 @@ def test_insert_overwrite_replaces_only_batch_partitions(spark, tmp_table):
         for f in glob.glob(f"{tmp_table}/p=b/*.parquet")
         + glob.glob(f"{tmp_table}/p=c/*.parquet")
     }
-
-
-def test_insert_overwrite_table_full_restate(spark, tmp_table):
-    base = _mk(spark, [(1, 1, "a"), (2, 2, "b")])
-    base.write.mode("overwrite").partitionBy("p").parquet(tmp_table)
-    insert_overwrite_table(
-        spark, _mk(spark, [(7, 7, "z")]), tmp_table, partition_col="p"
-    )
-    assert _rows(spark.read.parquet(tmp_table)) == {(7, 7, "z")}
 
 
 def test_delete_partitions_idempotent(spark, tmp_table):

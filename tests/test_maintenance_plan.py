@@ -37,8 +37,6 @@ def test_compaction_plan_invariants_and_execute(spark, tmp_path):
     plan = compaction_plan(
         files,
         partition_col="partition",
-        file_col="file",
-        bytes_col="bytes",
         target_bytes=target,
     ).collect()
     assert plan, "tiny files must produce at least one bin"
@@ -56,8 +54,7 @@ def test_compaction_plan_invariants_and_execute(spark, tmp_path):
     big = files.withColumn("bytes", F.col("bytes") + target)
     assert (
         compaction_plan(
-            big, partition_col="partition", file_col="file",
-            bytes_col="bytes", target_bytes=target,
+            big, partition_col="partition", target_bytes=target,
         ).count()
         == 0
     )

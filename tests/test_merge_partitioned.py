@@ -541,7 +541,6 @@ def test_vacuum_keeps_files_older_manifests_reference(spark, tmp_path):
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         manifest_files_at,
         read_indexed_table,
-        retire_manifests,
         upsert_parquet_indexed,
         vacuum_orphans,
     )
@@ -569,35 +568,11 @@ def test_vacuum_keeps_files_older_manifests_reference(spark, tmp_path):
     }
     # Retire v1 (nothing pins it) -> its exclusive files become true
     # orphans and the vacuum reclaims exactly those.
-    assert retire_manifests(path, pinned=set()) == [1]
+    os.remove(os.path.join(path, "_manifest", "v1.json"))
     removed = set(vacuum_orphans(path, min_age_seconds=60))
     assert removed == v1_only
     after = {(r["k"], r["v"]) for r in read_indexed_table(spark, path).collect()}
     assert after == {(i, i * 2 + (1 if i < 10 else 0)) for i in range(50)}
-
-
-def test_retire_manifests_rules(spark, tmp_path):
-    """The cleaner never touches the latest version or a pinned one."""
-    import os
-
-    from spark_hudi_etl_pipeline_spark.operators.merge import (
-        retire_manifests,
-        upsert_parquet_indexed,
-    )
-
-    path = os.path.join(str(tmp_path), "t")
-    df = spark.createDataFrame([(1, 1, 1)], "k long, v long, prec long")
-    for i in range(4):
-        upsert_parquet_indexed(
-            spark, df.withColumn("v", F.lit(i)), path, "k", "prec", clean=False
-        )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        retire_manifests(path, pinned=set(), keep_latest=0)
-    assert retire_manifests(path, pinned={2}) == [1, 3]
-    mdir = os.path.join(path, "_manifest")
-    assert sorted(os.listdir(mdir)) == ["v2.json", "v4.json"]
 
 
 _FIRST_COMMIT_CRASH = r"""

@@ -1,6 +1,6 @@
-"""Multimodal plumbing: schema, Arrow batch shapes, decoder registry.
-Decoding itself is stubbed (no media libs in this container) — the test
-asserts the distributed plumbing, which is the part that must be real."""
+"""Multimodal plumbing: schema, Arrow batch shapes, and the real
+pure-Python decoders (BMP/PPM/PGM, WAV, Y4M) against fixtures encoded
+here; codecs without a pure-Python decoder take the checksum fallback."""
 
 from __future__ import annotations
 
@@ -37,29 +37,6 @@ def test_decode_features_schema(spark, media_df):
     assert out.schema == mm.FEATURE_SCHEMA
 
 
-def test_registered_decoder_used(spark, media_df):
-    mm.register_decoder("image", lambda payload, meta: {"feature_dim": 7, "feature_checksum": 42})
-    try:
-        out = mm.decode_features(media_df).collect()
-        assert all(r["feature_dim"] == 7 and r["feature_checksum"] == 42 for r in out)
-    finally:
-        mm._DECODERS.pop("image", None)
-
-
-def test_unsupported_decoder_raises(spark, media_df):
-    mm.register_decoder("image", mm.unsupported_decoder)
-    try:
-        with pytest.raises(Exception, match="NotImplementedError|media decoding"):
-            mm.decode_features(media_df).collect()
-    finally:
-        mm._DECODERS.pop("image", None)
-
-
-def test_repartition_for_payloads(spark, media_df):
-    out = mm.repartition_for_payloads(media_df, total_bytes=10 << 30, target_partition_bytes=1 << 30)
-    assert out.rdd.getNumPartitions() == 10
-
-
 def test_sample_frames_one_to_n(spark):
     """Frame sampling is a 1→N mapInPandas expansion with deterministic
     stub frames."""
@@ -83,28 +60,47 @@ def test_sample_frames_one_to_n(spark):
     assert len(by_id[2]) == 2  # shorter payload → fewer frames
 
 
-def test_resize_images_schema_stable(spark):
-    from spark_hudi_etl_pipeline_spark.operators.multimodal import (
-        attach_metadata,
-        resize_images,
-    )
-
-    media = attach_metadata(
-        spark.createDataFrame([(1, b"abcdefgh")], "media_id long, payload binary"),
-        media_type="image",
-    )
-    out = resize_images(media, width=2, height=3)
-    assert out.schema == media.schema
-    row = out.collect()[0]
-    assert len(bytes(row["payload"])) == 6
-
-
 # ---------------------------------------------------------------------------
 # REAL decode path: BMP / PPM / PGM — pure-Python decoders, exact
-# pixel-derived features, header-probe metadata, real resize.
+# pixel-derived features.
 # ---------------------------------------------------------------------------
 
 import numpy as np
+
+
+def encode_ppm(pixels):
+    """Encode H×W×3 uint8 pixels as binary PPM (P6)."""
+    h, w, _ = pixels.shape
+    return b"P6\n%d %d\n255\n" % (w, h) + pixels.tobytes()
+
+
+def encode_bmp(pixels):
+    """Encode H×W×3 uint8 RGB pixels as an uncompressed 24-bit BMP
+    (bottom-up, BGR, rows padded to 4 bytes)."""
+    import struct
+
+    h, w, _ = pixels.shape
+    stride = (w * 3 + 3) & ~3
+    raster = np.zeros((h, stride), dtype=np.uint8)
+    raster[:, : w * 3] = pixels[::-1, :, ::-1].reshape(h, w * 3)  # flip + RGB→BGR
+    data = raster.tobytes()
+    return (
+        struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
+        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
+        + data
+    )
+
+
+def encode_y4m(frames, *, fps):
+    """YUV4MPEG2 (Y4M) payload of uint8 luma planes, shape
+    (n_frames, h, w), with neutral (128) chroma; h and w even (C420)."""
+    f = np.asarray(frames, dtype=np.uint8)
+    n, h, w = f.shape
+    out = [f"YUV4MPEG2 W{w} H{h} F{fps}:1 Ip A1:1 C420\n".encode()]
+    chroma = np.full((h // 2) * (w // 2), 128, dtype=np.uint8).tobytes()
+    for i in range(n):
+        out += [b"FRAME\n", f[i].tobytes(), chroma, chroma]
+    return b"".join(out)
 
 
 def _gradient_px(w, h):
@@ -141,14 +137,14 @@ def _expected_grid_features(px):
 def test_bmp_roundtrip_odd_width():
     """5x3 exercises BMP's 4-byte row padding, bottom-up rows, BGR order."""
     px = _gradient_px(5, 3)
-    codec, w, h, out = mm.decode_bmp(mm.encode_bmp(px))
+    codec, w, h, out = mm.decode_bmp(encode_bmp(px))
     assert (codec, w, h) == ("bmp", 5, 3)
     assert np.array_equal(out, px)
 
 
 def test_ppm_roundtrip_and_comment_header():
     px = _gradient_px(16, 16)
-    codec, w, h, out = mm.decode_ppm(mm.encode_ppm(px))
+    codec, w, h, out = mm.decode_ppm(encode_ppm(px))
     assert (codec, w, h) == ("ppm", 16, 16)
     assert np.array_equal(out, px)
     # comment lines in the header are legal PNM
@@ -171,20 +167,20 @@ def test_image_decoder_exact_features_from_pixels():
     same pixels encoded as BMP and as PPM."""
     px = _gradient_px(32, 24)
     expected = _expected_grid_features(px)
-    for payload, codec in ((mm.encode_bmp(px), "bmp"), (mm.encode_ppm(px), "ppm")):
+    for payload, codec in ((encode_bmp(px), "bmp"), (encode_ppm(px), "ppm")):
         feats = mm.image_decoder(payload, {})
         assert feats["features"] == expected
         assert (feats["width"], feats["height"]) == (32, 24)
         assert feats["codec"] == codec
         assert feats["feature_dim"] == 64
-    assert mm.image_decoder(mm.encode_bmp(px), {})["feature_checksum"] == \
-        mm.image_decoder(mm.encode_ppm(px), {})["feature_checksum"]
+    assert mm.image_decoder(encode_bmp(px), {})["feature_checksum"] == \
+        mm.image_decoder(encode_ppm(px), {})["feature_checksum"]
 
 
 def test_image_smaller_than_grid():
     """Images smaller than 8x8 still produce 64 well-defined features."""
     px = _gradient_px(3, 2)
-    feats = mm.image_decoder(mm.encode_ppm(px), {})
+    feats = mm.image_decoder(encode_ppm(px), {})
     assert len(feats["features"]) == 64
     assert all(0 <= v <= 255_000 for v in feats["features"])
 
@@ -195,8 +191,8 @@ def test_decode_features_real_images_in_spark(spark):
     to the checksum stub with NULL feature columns."""
     px1, px2 = _gradient_px(16, 8), _gradient_px(8, 16)
     rows = [
-        (1, bytearray(mm.encode_bmp(px1))),
-        (2, bytearray(mm.encode_ppm(px2))),
+        (1, bytearray(encode_bmp(px1))),
+        (2, bytearray(encode_ppm(px2))),
         (3, bytearray(b"not an image payload")),
     ]
     media = mm.attach_metadata(
@@ -212,37 +208,6 @@ def test_decode_features_real_images_in_spark(spark):
     assert out[3]["feature_checksum"] is not None  # fallback still runs
 
 
-def test_probe_metadata_fills_dimensions(spark):
-    px = _gradient_px(12, 7)
-    rows = [(1, bytearray(mm.encode_bmp(px))), (2, bytearray(b"opaque"))]
-    media = mm.attach_metadata(
-        spark.createDataFrame(rows, "media_id long, payload binary"),
-        media_type="image",
-    )
-    out = {r["media_id"]: r["meta"] for r in mm.probe_metadata(media).collect()}
-    assert (out[1]["codec"], out[1]["width"], out[1]["height"]) == ("bmp", 12, 7)
-    assert out[1]["media_type"] == "image" and out[1]["n_bytes"] > 0
-    assert out[2]["codec"] is None and out[2]["width"] is None
-
-
-def test_resize_images_real_path(spark):
-    """Decodable rasters resize through actual pixels (nearest
-    neighbor), re-encoded as PPM; opaque payloads keep the stub."""
-    px = _gradient_px(16, 16)
-    rows = [(1, bytearray(mm.encode_bmp(px))), (2, bytearray(b"opaque-bytes"))]
-    media = mm.attach_metadata(
-        spark.createDataFrame(rows, "media_id long, payload binary"),
-        media_type="image",
-    )
-    out = {r["media_id"]: bytes(r["payload"])
-           for r in mm.resize_images(media, width=4, height=4).collect()}
-    codec, w, h, got = mm.decode_ppm(out[1])
-    assert (w, h) == (4, 4)
-    expected = px[(np.arange(4) * 16) // 4][:, (np.arange(4) * 16) // 4]
-    assert np.array_equal(got, expected)
-    assert out[2] == b"opaque-bytes"[:16].ljust(16, b"\0")
-
-
 def test_wav_roundtrip_and_features():
     """encode_wav → decode_wav round-trips samples exactly; the feature
     profile derives from real amplitudes (silent vs loud segments)."""
@@ -252,7 +217,6 @@ def test_wav_roundtrip_and_features():
         audio_decoder,
         decode_wav,
         encode_wav,
-        probe_audio_header,
     )
 
     # 1 second @ 8 kHz stereo: first half silence, second half full-scale.
@@ -263,7 +227,6 @@ def test_wav_roundtrip_and_features():
     rate, ch, back = decode_wav(payload)
     assert (rate, ch) == (8000, 2)
     assert np.array_equal(back, s)
-    assert probe_audio_header(payload) == ("pcm_s16le", 8000, 1000)
     feats = audio_decoder(payload, {})
     assert feats["codec"] == "pcm_s16le" and feats["feature_dim"] == 64
     prof = feats["features"]
@@ -275,11 +238,9 @@ def test_wav_roundtrip_and_features():
 def test_audio_decoder_fallback_and_probe_reject():
     from spark_hudi_etl_pipeline_spark.operators.multimodal import (
         audio_decoder_or_fallback,
-        probe_audio_header,
     )
 
     junk = b"ID3\x03" + b"\x00" * 100  # an MP3-ish payload
-    assert probe_audio_header(junk) is None
     out = audio_decoder_or_fallback(junk, {})
     assert out["codec"] is None and out["features"] is None  # explicit non-decode
 
@@ -323,9 +284,7 @@ def test_y4m_roundtrip_and_real_frame_sampling(spark):
     from spark_hudi_etl_pipeline_spark.operators.multimodal import (
         attach_metadata,
         decode_y4m,
-        encode_y4m,
         image_decoder,
-        probe_video_header,
         sample_frames,
         y4m_frame_sampler,
     )
@@ -338,7 +297,6 @@ def test_y4m_roundtrip_and_real_frame_sampling(spark):
     w, h, fps, back = decode_y4m(payload)
     assert (w, h, fps, len(back)) == (16, 16, 5, 10)
     assert all(np.array_equal(a, b) for a, b in zip(back, frames))
-    assert probe_video_header(payload) == ("y4m_c420", 16, 16, 2000)
     # Even sampling: 4 of 10 -> source frames 0, 2, 5, 7.
     sampled = y4m_frame_sampler(payload, 4)
     assert len(sampled) == 4
@@ -371,33 +329,3 @@ def test_compressed_video_falls_back(spark):
     out = frame_sampler_or_fallback(junk, 4)
     assert len(out) == 4  # deterministic byte-slice stub
     assert not out[0].startswith(b"P5")
-
-
-def test_probe_metadata_all_modalities(spark):
-    import numpy as np
-
-    from spark_hudi_etl_pipeline_spark.operators.multimodal import (
-        attach_metadata,
-        encode_wav,
-        encode_y4m,
-        probe_metadata,
-    )
-
-    wav = encode_wav(np.zeros(4000, dtype=np.int16), 8000)        # 500 ms
-    y4m = encode_y4m(
-        np.zeros((5, 8, 8), dtype=np.uint8), fps=5
-    )                                                             # 1000 ms
-    pgm = b"P5\n4 4\n255\n" + b"\x00" * 16
-    df = spark.createDataFrame(
-        [(1, wav), (2, y4m), (3, pgm), (4, b"junkpayload")],
-        "media_id long, payload binary",
-    )
-    got = {
-        r["media_id"]: r["meta"].asDict()
-        for r in probe_metadata(attach_metadata(df, media_type="video")).collect()
-    }
-    assert got[1]["codec"] == "pcm_s16le" and got[1]["duration_ms"] == 500
-    assert got[2]["codec"] == "y4m_c420" and got[2]["duration_ms"] == 1000
-    assert (got[2]["width"], got[2]["height"]) == (8, 8)
-    assert got[3]["codec"] == "pgm" and got[3]["width"] == 4
-    assert got[4]["codec"] is None

@@ -14,7 +14,6 @@ from spark_hudi_etl_pipeline_spark.pipeline import (
     run_pipeline,
 )
 from spark_hudi_etl_pipeline_spark.pipeline.runlog import now_ms
-from spark_hudi_etl_pipeline_spark.pipeline.runner import scheduled_run
 from tests.conftest import jobs_in
 
 SCHEMA = "record_id long, entity_id string, created_at long, payload string"
@@ -166,14 +165,18 @@ def test_status_report(spark, tmp_path):
 
 
 def test_scheduled_run_returns_bool(spark, tmp_path):
+    """The scheduler entry (``api.daily_pipeline_run``) turns a run's
+    outcome into a bool for cron-style callers."""
+    from spark_hudi_etl_pipeline_spark import api
+
     cfg = make_config(spark, tmp_path, [(1, "u1", now_ms(), "a")])
-    assert scheduled_run(spark, cfg) is True
+    assert api.daily_pipeline_run(cfg, spark) is True
 
     def bad(df):
         raise RuntimeError("boom")
 
     cfg_bad = make_config(spark, tmp_path, [(2, "u2", now_ms() + 120_000, "b")], transform=bad)
-    assert scheduled_run(spark, cfg_bad) is False
+    assert api.daily_pipeline_run(cfg_bad, spark) is False
 
 
 def test_rerun_convergence_upsert(spark, tmp_path):
@@ -366,11 +369,11 @@ def test_reference_api_surface(spark, tmp_path):
 
 
 def test_run_with_retries_recovers_and_logs_each_attempt(spark, tmp_path):
-    """Transient failure: first two attempts explode, third succeeds —
-    the wrapper returns the success result, the runlog shows 2 FAILED
-    rows + 1 SUCCESS, and the table holds the batch exactly once."""
-    from spark_hudi_etl_pipeline_spark.pipeline.runner import run_with_retries
-
+    """Transient failure: a caller that retries ``run_pipeline`` gets the
+    success result on the third attempt, the runlog shows 2 FAILED rows
+    + 1 SUCCESS, and the table holds the batch exactly once (the
+    watermark advances only on SUCCESS, so each retry re-extracts the
+    same window)."""
     calls = {"n": 0}
 
     def flaky_transform(df):
@@ -383,26 +386,14 @@ def test_run_with_retries_recovers_and_logs_each_attempt(spark, tmp_path):
         spark, tmp_path, [(1, "u1", now_ms(), "a"), (2, "u2", now_ms(), "b")],
         transform=flaky_transform,
     )
-    result = run_with_retries(spark, cfg, max_attempts=3)
+    for _ in range(3):
+        try:
+            result = run_pipeline(spark, cfg)
+            break
+        except Exception:
+            continue
     assert result.status == "SUCCESS" and result.records_processed == 2
     log = spark.read.parquet(cfg.log_path)
     statuses = sorted(r["status"] for r in log.collect())
     assert statuses == ["FAILED", "FAILED", "SUCCESS"]
     assert spark.read.parquet(cfg.target_path).count() == 2
-
-
-def test_run_with_retries_exhausts_and_raises(spark, tmp_path):
-    from spark_hudi_etl_pipeline_spark.pipeline.runner import run_with_retries
-
-    def always_fails(df):
-        return df.select("no_such_column")
-
-    cfg = make_config(
-        spark, tmp_path, [(1, "u1", now_ms(), "a")], transform=always_fails
-    )
-    with pytest.raises(Exception):
-        run_with_retries(spark, cfg, max_attempts=2)
-    log = spark.read.parquet(cfg.log_path)
-    assert log.filter(F.col("status") == "FAILED").count() == 2
-    with pytest.raises(ValueError):
-        run_with_retries(spark, cfg, max_attempts=0)

@@ -311,10 +311,10 @@ def test_language_id_arrow_parity(spark):
         ["doc_id", "text"],
     )
     expr = d.select("doc_id", _language_id("text").alias("p")).collect()
-    arrow = d.select("doc_id", text.language_id_arrow("text").alias("p")).collect()
+    arrow = d.select("doc_id", text.language_id_arrow().alias("p")).collect()
     assert [tuple(r) for r in expr] == [tuple(r) for r in arrow]
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     e = docs.select("doc_id", _language_id("text").alias("p")).orderBy("doc_id").collect()
-    a = docs.select("doc_id", text.language_id_arrow("text").alias("p")).orderBy("doc_id").collect()
+    a = docs.select("doc_id", text.language_id_arrow().alias("p")).orderBy("doc_id").collect()
     assert [tuple(r) for r in e] == [tuple(r) for r in a]

@@ -114,24 +114,6 @@ def test_upsert_parquet_evolves_and_mergeschema_read(spark, tmp_path):
     assert merged.filter(F.col("extra").isNotNull()).count() == 1
 
 
-def test_streaming_foreach_batch_evolves(spark, tmp_path):
-    """A later stream whose schema gained a column widens the upsert
-    target through the foreachBatch sink."""
-    from spark_hudi_etl_pipeline_spark.streaming.windows import (
-        foreach_batch_upsert,
-    )
-
-    path = str(tmp_path / "tbl")
-    b1 = _t(spark, [(1, 1, "a")], "k int, v int, payload string")
-    foreach_batch_upsert(path, ["k"], "v")(b1, 0)
-    b2 = _t(spark, [(1, 2, "a2", 0.3), (2, 1, "b", 0.4)],
-            "k int, v int, payload string, score double")
-    foreach_batch_upsert(path, ["k"], "v", evolve_schema=True)(b2, 1)
-    out = {r["k"]: r for r in spark.read.parquet(path).collect()}
-    assert out[1]["v"] == 2 and out[1]["score"] == 0.3
-    assert out[2]["score"] == 0.4
-
-
 def test_align_schemas_properties(spark):
     """For any split of payload columns between table and batch: the
     aligned schemas are identical, ordered table-first, and table types

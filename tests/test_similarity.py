@@ -12,6 +12,15 @@ from spark_hudi_etl_pipeline_spark.operators import similarity
 from tests.conftest import SF_SMALL
 
 
+def l2_distance(a, b):
+    """Euclidean distance of two equal-length float array columns: the
+    exact reference the ADC and vector-math checks compare against."""
+    diff = F.zip_with(
+        F.col(a), F.col(b), lambda x, y: (x.cast("double") - y.cast("double")) ** 2
+    )
+    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x))
+
+
 def test_vector_math(spark):
     df = spark.createDataFrame(
         [([3.0, 4.0], [4.0, 3.0]), ([1.0, 0.0], [0.0, 1.0]), ([0.0, 0.0], [1.0, 1.0])],
@@ -21,7 +30,7 @@ def test_vector_math(spark):
         vectors.dot("a", "b").alias("dot"),
         vectors.norm("a").alias("na"),
         vectors.cosine("a", "b").alias("cos"),
-        vectors.l2_distance("a", "b").alias("l2"),
+        l2_distance("a", "b").alias("l2"),
     ).collect()
     assert rows[0]["dot"] == pytest.approx(24.0)
     assert rows[0]["na"] == pytest.approx(5.0)
@@ -29,12 +38,6 @@ def test_vector_math(spark):
     assert rows[0]["l2"] == pytest.approx(math.sqrt(2.0))
     assert rows[1]["cos"] == pytest.approx(0.0)
     assert rows[2]["cos"] == 0.0  # zero-norm guard, not NaN
-
-
-def test_unit_normalize(spark):
-    df = spark.createDataFrame([([3.0, 4.0],)], "a array<float>")
-    out = df.select(vectors.unit_normalize("a").alias("u")).collect()[0]["u"]
-    assert out[0] == pytest.approx(0.6) and out[1] == pytest.approx(0.8)
 
 
 @pytest.fixture(scope="module")
@@ -66,7 +69,7 @@ def test_ann_recall_vs_bruteforce(spark, emb):
     queries = emb.filter(F.col("vec_id") < 20)
     exact = similarity.topk_cosine(emb, queries, corpus_id="vec_id", query_id="vec_id", k=5)
     ann = similarity.rp_lsh_ann(
-        emb, queries, corpus_id="vec_id", query_id="vec_id", dim=64, n_bits=8, k=5
+        emb, queries, corpus_id="vec_id", query_id="vec_id", k=5
     )
     exact_set = {(r["qid"], r["cid"]) for r in exact.collect()}
     ann_set = {(r["qid"], r["cid"]) for r in ann.collect()}
@@ -88,7 +91,7 @@ def test_ann_is_subset_quality(spark, emb):
         ).collect()
     }
     ann = similarity.rp_lsh_ann(
-        emb, queries, corpus_id="vec_id", query_id="vec_id", dim=64, n_bits=8, k=5
+        emb, queries, corpus_id="vec_id", query_id="vec_id", k=5
     ).collect()
     for r in ann:
         assert r["cid"] in exact
@@ -156,7 +159,8 @@ def test_ivf_partitioned_layout_prunes_and_matches(spark, tmp_path):
     from spark_hudi_etl_pipeline_spark.operators.similarity import (
         ivf_ann,
         ivf_ann_partitioned,
-        ivf_write_partitioned,
+        ivf_centroids,
+        ivf_upsert,
     )
     from spark_hudi_etl_pipeline_spark.sources import load_table
     from tests.conftest import SF_SMALL
@@ -164,9 +168,12 @@ def test_ivf_partitioned_layout_prunes_and_matches(spark, tmp_path):
     emb = load_table(spark, SF_SMALL, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     path = str(tmp_path / "ivf")
-    centroids = ivf_write_partitioned(spark, emb, path, corpus_id="vec_id")
+    centroids = ivf_centroids(
+        emb, corpus_id="vec_id", vec_col="embedding", n_centroids=16
+    )
+    ivf_upsert(spark, path, emb, centroids, corpus_id="vec_id", seq=0)
     got = ivf_ann_partitioned(
-        spark, path, queries, centroids, query_id="vec_id", nprobe=2, k=5
+        spark, path, queries, centroids, query_id="vec_id", k=5
     )
     rows = got.collect()
     expected = ivf_ann(
@@ -179,7 +186,7 @@ def test_ivf_partitioned_layout_prunes_and_matches(spark, tmp_path):
     # UNPRUNED file index), so only those directories are scanned.
     two = emb.filter(F.col("vec_id") < 2)
     pruned = ivf_ann_partitioned(
-        spark, path, two, centroids, query_id="vec_id", nprobe=2, k=5
+        spark, path, two, centroids, query_id="vec_id", k=5
     )
     assert pruned.count() == 2 * 5
     plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -261,7 +268,7 @@ def test_pq_adc_recall_vs_exact_l2(spark):
         .select(
             "qid",
             "cid",
-            (vectors.l2_distance("cv", "qv") ** 2).alias("d2"),
+            (l2_distance("cv", "qv") ** 2).alias("d2"),
         )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 5)
@@ -289,7 +296,7 @@ def test_kmeans_lloyd_quantized_planted_clusters(spark):
         rows.append((vid, [b[0] + jit, b[1] - jit]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = kmeans_lloyd_quantized(
-        df, id_col="vec_id", vec_col="embedding", k=3, iters=3
+        df, id_col="vec_id", k=3, iters=3
     )
     got = {r["vec_id"]: r["cluster_id"] for r in out.collect()}
     # Cluster labels are seed-dependent; membership must follow blobs.
@@ -299,7 +306,7 @@ def test_kmeans_lloyd_quantized_planted_clusters(spark):
     rerun = {
         r["vec_id"]: r["cluster_id"]
         for r in kmeans_lloyd_quantized(
-            df, id_col="vec_id", vec_col="embedding", k=3, iters=3
+            df, id_col="vec_id", k=3, iters=3
         ).collect()
     }
     assert rerun == got
@@ -317,7 +324,7 @@ def test_kmeans_lloyd_zero_iters_is_seed_assignment(spark):
     out = {
         r["vec_id"]: (r["cluster_id"], r["dist_q"])
         for r in kmeans_lloyd_quantized(
-            df, id_col="vec_id", vec_col="embedding", k=2, iters=0
+            df, id_col="vec_id", k=2, iters=0
         ).collect()
     }
     assert out[0] == (0, 0) and out[1] == (1, 0)
@@ -430,14 +437,14 @@ def test_ivf_upsert_matches_full_rebuild_and_rewrites_only_touched_lists(
     )
     queries = final.filter(F.col("vec_id") < 8)
     got = ivf_ann_partitioned(
-        spark, path, queries, cents, query_id="vec_id", nprobe=2, k=5
+        spark, path, queries, cents, query_id="vec_id", k=5
     ).collect()
     # Full rebuild = one-shot load of the final logical state into a
     # fresh index under the SAME centroid table, probed identically.
     path2 = str(tmp_path / "ivf_rebuild")
     ivf_upsert(spark, path2, final, cents, corpus_id="vec_id", seq=0)
     want = ivf_ann_partitioned(
-        spark, path2, queries, cents, query_id="vec_id", nprobe=2, k=5
+        spark, path2, queries, cents, query_id="vec_id", k=5
     ).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
     assert len(got) == 8 * 5
@@ -525,10 +532,7 @@ def test_ivfpq_recall_and_probe_bound(spark, emb):
     2 probed lists (the subset property that makes the partition
     pruning claim real)."""
     queries = emb.filter(F.col("vec_id") < 20)
-    got = similarity.ivfpq_adc_topk(
-        emb, queries, corpus_id="vec_id", query_id="vec_id",
-        n_centroids=16, nprobe=2, k=5,
-    ).collect()
+    got = similarity.ivfpq_adc_topk(emb, queries).collect()
     got_set = {(r["qid"], r["cid"]) for r in got}
 
     exact = similarity.topk_cosine(

@@ -1,5 +1,5 @@
-"""Count-Min sketch (operators/sketch.py): one-sided error, exact
-mergeability, degenerate-width collapse, weighted cells."""
+"""Count-Min sketch (operators/sketch.py): one-sided error,
+degenerate-width collapse, weighted cells."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from spark_hudi_etl_pipeline_spark.operators.sketch import (
     cms_build,
     cms_estimate,
-    cms_merge,
 )
 
 
@@ -51,25 +50,6 @@ def test_exact_on_wide_sketch(spark):
         for r in cms_estimate(cms, items, "t", width=4096, depth=3).collect()
     }
     assert est == truth  # deterministic fixture: no colliding buckets
-
-
-def test_merge_equals_sketch_of_union(spark):
-    a = _corpus(spark, n=300)
-    b = spark.range(300, 500).select(
-        F.concat(F.lit("tok"), (F.col("id") % 37).cast("string")).alias("t")
-    )
-    merged = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in cms_merge(
-            cms_build(a, "t", width=32, depth=3),
-            cms_build(b, "t", width=32, depth=3),
-        ).collect()
-    }
-    direct = {
-        (r["row"], r["col"]): r["cnt"]
-        for r in cms_build(a.unionByName(b), "t", width=32, depth=3).collect()
-    }
-    assert merged == direct  # cell-for-cell distributivity
 
 
 def test_width_one_collapses_to_total(spark):

@@ -16,8 +16,9 @@ from spark_hudi_etl_pipeline_spark.operators.clustering import (
     cluster_linear,
     write_clustered,
 )
+from spark_hudi_etl_pipeline_spark.operators.merge import table_live_files
 from spark_hudi_etl_pipeline_spark.operators.stats import (
-    boundary_files_for_group,
+    _valid_stats,
     build_table_stats,
     group_count_from_stats,
     read_stats_range,
@@ -34,6 +35,20 @@ def _clustered_orders(spark, tmp_path, cols, n_files):
     )
     write_clustered(cluster_linear(orders, cols, n_files), path)
     return path, orders
+
+
+def boundary_files_for_group(spark, path, col):
+    """The files ``group_count_from_stats`` scans: those whose ``col``
+    min and max in a valid sidecar differ or are unknown."""
+    _, live = table_live_files(path)
+    stats = _valid_stats(spark, path, live)
+    mn, mx = f"min_{col}", f"max_{col}"
+    return sorted(
+        r["file"]
+        for r in stats.filter(F.col(mn).isNull() | (F.col(mn) != F.col(mx)))
+        .select("file")
+        .collect()
+    )
 
 
 def test_range_scan_prunes_and_matches(spark, tmp_path):
@@ -100,9 +115,7 @@ def test_group_count_metadata_only_exact(spark, tmp_path):
     path, orders = _clustered_orders(
         spark, tmp_path, ["o_orderstatus", "o_orderkey"], 12
     )
-    _, live = __import__(
-        "spark_hudi_etl_pipeline_spark.operators.merge", fromlist=["x"]
-    ).table_live_files(path)
+    _, live = table_live_files(path)
     build_table_stats(spark, path, ["o_orderstatus"])
     got = {
         r["o_orderstatus"]: r["n_rows"]
@@ -151,55 +164,6 @@ def test_statless_file_conservatively_kept(spark, tmp_path):
     assert "b.parquet" in cand
     rows = read_stats_range(spark, path, "k", 100, 300).collect()
     assert sorted(r["k"] for r in rows) == [100, 200]
-
-
-def test_incremental_stats_update(spark, tmp_path):
-    """update_table_stats harvests only the NEW files' footers, drops
-    rows for no-longer-live files, and yields a sidecar equivalent to a
-    full rebuild — the pruned candidate sets must be identical."""
-    import datetime
-
-    path, orders = _clustered_orders(
-        spark, tmp_path, ["o_orderdate", "o_orderkey"], 8
-    )
-    assert build_table_stats(spark, path, ["o_orderdate"]) == 8
-
-    lo, hi = datetime.date(1995, 3, 1), datetime.date(1995, 3, 31)
-    extra = orders.filter(
-        (F.col("o_orderdate") >= F.lit(lo)) & (F.col("o_orderdate") <= F.lit(hi))
-    ).limit(7)
-    table_schema = pq.read_schema(
-        os.path.join(
-            path,
-            sorted(f for f in os.listdir(path) if f.endswith(".parquet"))[0],
-        )
-    )
-    pq.write_table(
-        pa.Table.from_pandas(extra.toPandas()).cast(table_schema),
-        os.path.join(path, "part-commit2.parquet"),
-    )
-    from spark_hudi_etl_pipeline_spark.operators.stats import (
-        update_table_stats,
-    )
-
-    assert update_table_stats(spark, path, ["o_orderdate"]) == 1  # delta only
-    cand_inc, live = stats_candidate_files(spark, path, "o_orderdate", lo, hi)
-    assert "part-commit2.parquet" in cand_inc
-    assert len(live) == 9
-
-    # Full rebuild must agree exactly.
-    assert build_table_stats(spark, path, ["o_orderdate"]) == 9
-    cand_full, _ = stats_candidate_files(spark, path, "o_orderdate", lo, hi)
-    assert cand_inc == cand_full
-
-    # A removed file's row is dropped on the next incremental update.
-    os.remove(os.path.join(path, "part-commit2.parquet"))
-    assert update_table_stats(spark, path, ["o_orderdate"]) == 0
-    cand_after, live_after = stats_candidate_files(
-        spark, path, "o_orderdate", lo, hi
-    )
-    assert "part-commit2.parquet" not in cand_after
-    assert len(live_after) == 8
 
 
 def test_distributed_harvest_matches_driver_loop(spark, tmp_path):

@@ -1,22 +1,13 @@
-"""Structured Streaming tier: windowed aggs, within-watermark dedup,
-foreachBatch upsert sink — each stream result cross-checked against the
+"""Structured Streaming tier: interval joins, chained window rollups and
+foreachBatch sinks — each stream result cross-checked against the
 equivalent batch computation."""
 
 from __future__ import annotations
-
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from spark_hudi_etl_pipeline_spark.sources import load_table
-from spark_hudi_etl_pipeline_spark.streaming import (
-    events_file_stream,
-    foreach_batch_upsert,
-    session_window_stats,
-    stream_dedup,
-    tumbling_window_counts,
-)
 from tests.conftest import SF_SMALL
 
 
@@ -29,90 +20,13 @@ def events_dir(spark, tmp_path_factory):
     return str(d / "in")
 
 
-def run_stream_to_memory(spark, df, name):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete" if df.isStreaming else "append")
-        .trigger(availableNow=True)
-        .start()
+def events_file_stream(spark, dir_path):
+    """File-source stream over a directory of events parquet files, with
+    the schema of the files already there (a stream declares its schema
+    up front): each arriving file is a micro-batch."""
+    return spark.readStream.schema(spark.read.parquet(dir_path).schema).parquet(
+        dir_path
     )
-    q.awaitTermination(120)
-    return spark.table(name)
-
-
-def test_tumbling_window_matches_batch(spark, events_dir):
-    stream = events_file_stream(spark, events_dir)
-    out = run_stream_to_memory(
-        spark, tumbling_window_counts(stream, window="1 day"), "t_tumbling"
-    )
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in out.collect()
-    }
-    batch = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy(F.window("ts", "1 day").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("s"))
-    )
-    want = {
-        (str(r["win"]["start"]), r["event_type"]): (r["n"], r["s"])
-        for r in batch.collect()
-    }
-    assert got == want
-
-
-def test_session_window_stream_runs(spark, events_dir):
-    stream = events_file_stream(spark, events_dir)
-    out = run_stream_to_memory(
-        spark, session_window_stats(stream, gap="30 minutes"), "t_session"
-    )
-    rows = out.collect()
-    assert len(rows) > 0
-    # Session totals must account for every event exactly once.
-    assert sum(r["n_events"] for r in rows) == 1000
-
-
-def test_stream_dedup_drops_duplicates(spark, tmp_path):
-    src = str(tmp_path / "dup_in")
-    rows = [(1, "2024-01-01 00:00:00", 1, "click", 1.0, "{}"),
-            (1, "2024-01-01 00:00:01", 1, "click", 1.0, "{}"),  # dup event_id
-            (2, "2024-01-01 00:05:00", 1, "view", 2.0, "{}")]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.write.mode("overwrite").parquet(src)
-    stream = events_file_stream(spark, src)
-    q = (
-        stream_dedup(stream, ["event_id"])
-        .writeStream.format("memory")
-        .queryName("t_dedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert spark.table("t_dedup").count() == 2
-
-
-def test_foreach_batch_upsert_sink(spark, events_dir, tmp_path):
-    """Streaming upsert: run the same stream twice into one target —
-    keyed merge keeps the table converged (no duplicates)."""
-    target = str(tmp_path / "target")
-    for chk in ("c1", "c2"):
-        stream = events_file_stream(spark, events_dir)
-        q = (
-            stream.writeStream.foreachBatch(
-                foreach_batch_upsert(target, keys=["event_id"], precombine="ts")
-            )
-            .option("checkpointLocation", str(tmp_path / chk))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    out = spark.read.parquet(target)
-    assert out.count() == 1000
-    assert out.select("event_id").distinct().count() == 1000
 
 
 def test_interval_join_stream_matches_batch(spark, tmp_path):
@@ -175,72 +89,12 @@ def test_interval_join_stream_matches_batch(spark, tmp_path):
     assert streamed == batch
 
 
-def test_late_data_dropped_beyond_watermark(spark, tmp_path):
-    """Append-mode semantics: a row arriving after the watermark passed
-    its window is DROPPED from the finalized count. maxFilesPerTrigger=1
-    splits the files into separate micro-batches (sleeps order them by
-    mtime); Spark applies the late-event filter with the PREVIOUS
-    batch's watermark (multi-stateful-operator semantics, Spark 3.4+),
-    so the advancer needs one extra batch before the late row arrives."""
-    import datetime as dt
-    import time
-
-    from spark_hudi_etl_pipeline_spark.streaming.windows import (
-        events_file_stream,
-        tumbling_window_counts,
-    )
-
-    def ts(minute):
-        return dt.datetime(2024, 1, 1, 10, minute)
-
-    src = str(tmp_path / "late_src")
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    batches = [
-        [(1, ts(0), 1, "view", 1.0, "{}"), (2, ts(1), 1, "view", 1.0, "{}")],
-        [(3, ts(30), 1, "view", 1.0, "{}")],   # watermark -> 10:29
-        [(6, ts(31), 1, "view", 1.0, "{}")],   # one batch of lag
-        [(4, ts(2), 1, "view", 1.0, "{}"),     # LATE: filtered out
-         (5, ts(32), 1, "view", 1.0, "{}")],
-    ]
-    mode = "overwrite"
-    for rows in batches:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            mode).parquet(src)
-        mode = "append"
-        time.sleep(1.1)
-
-    stream = events_file_stream(spark, src, max_files_per_trigger=1)
-    q = (
-        tumbling_window_counts(stream, window="5 minutes", watermark="1 minute")
-        .writeStream.format("memory")
-        .queryName("t_late")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = {str(r["window_start"]): r["n_events"]
-           for r in spark.table("t_late").collect()}
-    # The [10:00, 10:05) window finalized with the 2 on-time rows only —
-    # the late row (event 4) was dropped by the watermark.
-    assert out.get("2024-01-01 10:00:00") == 2
-    dropped = sum(
-        (p["stateOperators"][0]["numRowsDroppedByWatermark"]
-         if p["stateOperators"] else 0)
-        for p in q.recentProgress
-    )
-    assert dropped == 1
-
-
 def test_outer_interval_join_emits_unmatched_after_eviction(spark, tmp_path):
     """left_outer interval join: a click with no purchase in its bound
     emits null purchase columns — but only once the watermark proves no
     match can arrive. A far-future row on each side advances both
     watermarks so the drain flushes every outer result."""
-    from spark_hudi_etl_pipeline_spark.streaming import (
-        events_file_stream,
-        interval_join,
-    )
+    from spark_hudi_etl_pipeline_spark.streaming import interval_join
 
     src = str(tmp_path / "ssj_outer_in")
     rows = [
@@ -298,7 +152,6 @@ def test_chained_rollup_stream_matches_batch(spark, events_dir):
     equal the identical batch computation (windows/window_time work in
     both modes); sentinel row pushes the watermark so append mode
     finalizes every real window."""
-    from spark_hudi_etl_pipeline_spark.streaming import events_file_stream
     from spark_hudi_etl_pipeline_spark.streaming.windows import (
         chained_window_rollup,
     )

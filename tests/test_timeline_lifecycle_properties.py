@@ -1,5 +1,5 @@
 """Property-based test (Hypothesis) for the WHOLE timeline lifecycle:
-random interleavings of commit / savepoint / release / compact / clean /
+random interleavings of commit / savepoint / compact / clean /
 rollback / restore are executed against both the real engine
 (operators/timeline.py) and a pure-Python model; after every op the
 visible state, the error behavior, and the time-travel horizon must
@@ -21,7 +21,6 @@ from spark_hudi_etl_pipeline_spark.operators.timeline import (
     commit_instants,
     compact_timeline,
     compaction_instants,
-    delete_savepoint,
     maybe_compact,
     read_as_of,
     read_realtime,
@@ -40,7 +39,6 @@ OPS = st.lists(
     st.one_of(
         st.tuples(st.just("commit"), st.integers(min_value=0, max_value=7)),
         st.tuples(st.just("savepoint"), st.integers(min_value=0, max_value=9)),
-        st.tuples(st.just("release"), st.integers(min_value=0, max_value=9)),
         st.tuples(st.just("compact"), st.integers(min_value=0, max_value=9)),
         st.tuples(st.just("clean"), st.integers(min_value=1, max_value=3)),
         st.tuples(st.just("maybe"), st.integers(min_value=1, max_value=3)),
@@ -196,10 +194,6 @@ def test_lifecycle_ops_match_model(spark, tmp_path, ops):
             t = inst[arg % len(inst)]
             savepoint(spark, path, t)
             m.pins.add(t)
-        elif kind == "release" and inst:
-            t = inst[arg % len(inst)]
-            delete_savepoint(path, t)
-            m.pins.discard(t)
         elif kind == "compact" and inst:
             t = inst[arg % len(inst)]
             compact_timeline(spark, path, KEYS, PRE, t, delete_col="deleted")
