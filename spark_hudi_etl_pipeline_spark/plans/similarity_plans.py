@@ -1428,8 +1428,7 @@ def knn_matryoshka_trunc16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = trunc.filter(F.col("vec_id") < 10)
     return similarity.topk_cosine(
-        trunc, queries, corpus_id="vec_id", query_id="vec_id",
-        k=5,
+        trunc, queries, corpus_id="vec_id", query_id="vec_id", k=5
     )
 
 
@@ -1496,8 +1495,7 @@ def ann_recall_lsh_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, queries, corpus_id="vec_id", query_id="vec_id", k=5
     ).select("qid", "cid")
     ann = similarity.rp_lsh_ann(
-        emb, queries, corpus_id="vec_id", query_id="vec_id",
-        k=5,
+        emb, queries, corpus_id="vec_id", query_id="vec_id", k=5
     ).select("qid", "cid", F.lit(1).alias("hit"))
     return (
         exact.join(ann, on=["qid", "cid"], how="left")
