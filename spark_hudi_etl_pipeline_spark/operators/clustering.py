@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .merge import _commit_staged, table_record
+
 #: Bits per dimension in the Morton code (256 quantile buckets/dim).
 _BITS = 8
 
@@ -141,9 +143,11 @@ def cluster_zorder_nd(df: DataFrame, cols: list[str], n_files: int) -> DataFrame
 
 
 def write_clustered(df: DataFrame, path: str) -> None:
-    """Persist a clustered rewrite (the output of :func:`cluster_linear`
-    / :func:`cluster_zorder`), one file per range partition."""
-    df.write.mode("overwrite").parquet(path)
+    """Commit a clustered rewrite (the output of :func:`cluster_linear`
+    / :func:`cluster_zorder`) as the whole table at ``path``: one
+    manifest version (``merge._commit_staged``) replacing every live
+    file, one file per range partition, named in range order."""
+    _commit_staged(path, df, table_record(path)["version"] + 1, kept=[])
 
 
 def file_column_bounds(
@@ -151,22 +155,15 @@ def file_column_bounds(
 ) -> list[dict]:
     """Per-file (min, max) statistics for ``cols`` from the parquet
     footers — the skipping index a reader consults. Footer-only reads;
-    no data pages are touched. ``files`` restricts the scan to a known
-    live-file set (e.g. a commit manifest) so orphaned pre-crash files
-    are never consulted."""
+    no data pages are touched. ``files`` (default: the table's live
+    files) restricts the scan to a known file set, so orphaned pre-crash
+    files are never consulted."""
     import os
 
     import pyarrow.parquet as pq
 
-    names = (
-        sorted(files)
-        if files is not None
-        else sorted(os.listdir(path))
-    )
     out = []
-    for name in names:
-        if not name.endswith(".parquet"):
-            continue
+    for name in sorted(table_record(path)["files"] if files is None else files):
         md = pq.ParquetFile(os.path.join(path, name)).metadata
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         bounds: dict = {"file": name, "rows": md.num_rows}

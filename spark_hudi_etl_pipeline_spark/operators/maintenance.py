@@ -22,26 +22,13 @@ lake engine needs at 100 TB:
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
-
-
-def read_state_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read accumulated state at ``path``, or None iff the path does not
-    exist (first refresh). Existence is checked explicitly through the
-    Hadoop FileSystem API (scheme-portable: local, HDFS, object stores)
-    so that a transient or corrupt-footer read failure on EXISTING state
-    propagates instead of being conflated with "no state yet" — the
-    conflation would silently drop accumulated state and overwrite the
-    materialized view with a partial result."""
-    sc = spark.sparkContext
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return None
-    return spark.read.parquet(path)
+from .merge import _commit_staged, _read_files, read_indexed_table, table_record
 
 
 def aggregate_state(
@@ -80,6 +67,15 @@ def merge_aggregate_state(
     )
 
 
+def _read_live(spark: SparkSession, path: str) -> tuple[int, DataFrame | None]:
+    """(manifest version, the table's live files as a frame, None when it
+    has none) — the read half of a read-modify-write that commits
+    version + 1 through ``merge._commit_staged``."""
+    rec = table_record(path)
+    files = rec["files"]
+    return rec["version"], _read_files(spark, path, rec, files) if files else None
+
+
 def refresh_aggregate_parquet(
     spark: SparkSession,
     batch: DataFrame,
@@ -90,16 +86,17 @@ def refresh_aggregate_parquet(
     count_alias: str = "n_rows",
 ) -> DataFrame:
     """Materializing incremental refresh: fold ``batch``'s partial state
-    into the summary table at ``path``: read-modify-write, overwritten
-    in place after a ``localCheckpoint``, so not atomic (unlike the
-    manifest commit of operators/merge.upsert_parquet; a Hudi/Delta
-    connector would make it transactional). Returns the post-refresh
-    state."""
+    into the summary table at ``path``: read-modify-write, committed as
+    one manifest version replacing every live file
+    (``merge._commit_staged``), so readers see the state before or
+    after the refresh, never a mix. Returns the post-refresh state,
+    read back from that commit."""
     state = aggregate_state(batch, keys, sums, count_alias=count_alias)
-    existing = read_state_if_exists(spark, path)
-    merged = merge_aggregate_state(existing, state, keys).localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(path)
-    return merged
+    version, existing = _read_live(spark, path)
+    _commit_staged(
+        path, merge_aggregate_state(existing, state, keys), version + 1, kept=[]
+    )
+    return read_indexed_table(spark, path)
 
 
 def refresh_join_parquet(
@@ -120,6 +117,8 @@ def refresh_join_parquet(
     small relative to the accumulated tables, Catalyst broadcasts the
     batch side and the big side never shuffles; cost is O(Δ · matches),
     never O(|A| · |B|). The full recompute is the oracle, not the plan.
+    Each of the three tables commits its own manifest version, the view
+    first.
 
     Append-only contract (no updates/deletes — the CDC-complete rule
     also subtracts retractions; that path belongs to a connector with a
@@ -128,11 +127,9 @@ def refresh_join_parquet(
     import os
 
     a_path, b_path, v_path = (os.path.join(path, s) for s in ("a", "b", "v"))
-
-    def _read(p: str) -> DataFrame | None:
-        return read_state_if_exists(spark, p)
-
-    a_old, b_old = _read(a_path), _read(b_path)
+    (a_version, a_old), (b_version, b_old) = (
+        _read_live(spark, p) for p in (a_path, b_path)
+    )
     deltas = []
     if a_batch is not None and b_old is not None:
         deltas.append(F.broadcast(a_batch).join(b_old, on=on))
@@ -140,20 +137,18 @@ def refresh_join_parquet(
         deltas.append(a_old.join(F.broadcast(b_batch), on=on))
     if a_batch is not None and b_batch is not None:
         deltas.append(a_batch.join(b_batch, on=on))
-    v_old = _read(v_path)
+    v_version, v_old = _read_live(spark, v_path)
     parts = ([v_old] if v_old is not None else []) + deltas
     if not parts:
         raise ValueError("nothing to refresh: no state and no batches")
-    view = parts[0]
-    for p in parts[1:]:
-        view = view.unionByName(p)
-    view = view.localCheckpoint(eager=True)  # materialize before overwrite
-    view.write.mode("overwrite").parquet(v_path)
-    for batch, old, p in ((a_batch, a_old, a_path), (b_batch, b_old, b_path)):
+    _commit_staged(v_path, reduce(DataFrame.unionByName, parts), v_version + 1, kept=[])
+    for batch, old, version, p in (
+        (a_batch, a_old, a_version, a_path), (b_batch, b_old, b_version, b_path)
+    ):
         if batch is not None:
             acc = old.unionByName(batch) if old is not None else batch
-            acc.localCheckpoint(eager=True).write.mode("overwrite").parquet(p)
-    return view
+            _commit_staged(p, acc, version + 1, kept=[])
+    return read_indexed_table(spark, v_path)
 
 
 def histogram_state(
@@ -270,34 +265,27 @@ def compact_parquet(
     *,
     target_bytes_per_file: int = 128 * 1024 * 1024,
 ) -> tuple[int, int]:
-    """Rewrite the parquet directory at ``path`` into files sized toward
-    ``target_bytes_per_file`` (estimated from current on-disk bytes, so
-    compression ratio carries over). Returns (files_before, files_after).
+    """Rewrite the live files of the table at ``path`` into files sized
+    toward ``target_bytes_per_file`` (estimated from current on-disk
+    bytes, so compression ratio carries over), committed as one manifest
+    version (``merge._commit_staged``). Returns (files_before,
+    files_after).
 
     At scale this is the periodic clustering job: streaming/incremental
     upserts produce per-commit small files; scans then pay per-file open
     + footer costs and lose row-group locality. Data is byte-identical
     after the rewrite (asserted in tests) — only layout changes."""
-    sc = spark.sparkContext
-    hconf = sc._jsc.hadoopConfiguration()
-    jpath = sc._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(hconf)
-    files = [
-        f
-        for f in fs.listStatus(jpath)
-        if f.getPath().getName().endswith(".parquet")
-    ]
-    n_before = len(files)
-    total_bytes = sum(f.getLen() for f in files)
+    import os
+
+    rec = table_record(path)
+    files = rec["files"]
+    total_bytes = sum(os.path.getsize(os.path.join(path, f)) for f in files)
     n_after = max(1, round(total_bytes / target_bytes_per_file))
-    df = spark.read.parquet(path).coalesce(n_after).localCheckpoint(eager=True)
-    df.write.mode("overwrite").parquet(path)
-    files_after = [
-        f
-        for f in fs.listStatus(jpath)
-        if f.getPath().getName().endswith(".parquet")
-    ]
-    return n_before, len(files_after)
+    moved, _ = _commit_staged(
+        path, _read_files(spark, path, rec, files).coalesce(n_after),
+        rec["version"] + 1, kept=[],
+    )
+    return len(files), len(moved)
 
 
 def compaction_plan(

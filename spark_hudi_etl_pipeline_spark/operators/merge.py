@@ -38,6 +38,7 @@ Scale design (100 TB table, small incremental batch):
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import suppress
 from functools import reduce
 from typing import NamedTuple
 
@@ -401,38 +402,25 @@ def _upsert_partitioned(
     ``tableops.upsert_parquet_partitioned_global`` (``True``). They
     differ only in the merge key (``keys + [partition_col]`` or
     ``keys``) and in the partitions they touch: the batch's own, plus,
-    with the global index, those currently holding a batch key.
-
-    Unlike the flat keyed sinks, these are not manifest-committed: the
-    dynamic overwrite replaces each touched partition directory in
-    place, so a crash during it can leave a partition partly written."""
-    import os
-    import shutil
-
-    from pyspark.errors import AnalysisException
-
+    with the global index, those currently holding a batch key."""
     merge_keys = keys if global_index else keys + [partition_col]
-    table = None  # first write
-    if os.path.isdir(path):  # reading an absent path logs a stack trace
-        try:
-            table = spark.read.parquet(path)
-        except AnalysisException:  # deletes emptied every partition
-            pass
+    rec = table_record(path)
     # ONE planning job (r14, guide §1.4) for both touched-partition
     # sets: the batch's distinct target partitions and, with the global
-    # index, the index lookup (column-pruned (keys, partition) table
-    # scan semi-joined against the broadcast batch keys). It runs before
-    # any write, so a NULL partition value is rejected on the first
-    # write exactly as on every later one (same contract as
-    # insert_overwrite) and leaves no table behind.
-    plan = batch.select(
-        F.lit(1).alias("is_new"), F.col(partition_col).alias("p")
-    ).distinct()
-    if global_index and table is not None:
+    # index, the index lookup (column-pruned (keys, partition) scan of
+    # the live files semi-joined against the broadcast batch keys). It
+    # runs before any write, so a NULL partition value is rejected on
+    # the first write exactly as on every later one (same contract as
+    # insert_overwrite) and leaves no table behind. Values compare as
+    # the strings Spark writes into partition directory names.
+    p = F.col(partition_col).cast("string").alias("p")
+    plan = batch.select(F.lit(1).alias("is_new"), p).distinct()
+    if global_index and rec["files"]:
         plan = plan.unionByName(
-            table.select(*keys, partition_col)
+            _read_files(spark, path, rec, rec["files"])
+            .select(*keys, partition_col)
             .join(F.broadcast(batch.select(*keys).distinct()), on=keys, how="left_semi")
-            .select(F.lit(0).alias("is_new"), F.col(partition_col).alias("p"))
+            .select(F.lit(0).alias("is_new"), p)
             .distinct()
         )
     plan_rows = plan.collect()
@@ -441,37 +429,20 @@ def _upsert_partitioned(
             f"null partition value in batch column {partition_col!r} — "
             "Hudi-style partition paths require a non-null partition key"
         )
-    touched = set()
-    if table is not None:
-        touched = {r["p"] for r in plan_rows}
-        table = table.filter(F.col(partition_col).isin(sorted(touched)))
+    files = _files_by_partition(spark, rec["files"], partition_col)
+    affected = [f for v in {r["p"] for r in plan_rows} for f in files.get(v, [])]
+    existing = None  # first write
+    if affected:
+        existing = _read_files(spark, path, rec, affected)
+    elif rec["files"]:  # empty, so the merge output keeps the table's types
+        existing = _read_files(spark, path, rec, rec["files"][:1]).limit(0)
     merged = merge_upsert(
-        table, batch, merge_keys, precombine, delete_col=delete_col
+        existing, batch, merge_keys, precombine, delete_col=delete_col
     )
-    if table is not None:
-        # The commit overwrites files the merge read — materialize first.
-        merged = merged.localCheckpoint(eager=True)
-    # Ride the row count AND the surviving-partition set on the commit
-    # write itself (r14, guide §1.4): a trailing distinct-collect +
-    # count() would be two more jobs for numbers the write already sees.
-    obs = Observation()
-    observed = merged.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.collect_set(partition_col).alias("parts"),
-    )
-    # Dynamic overwrite replaces only the partitions this write has rows
-    # for. It is set per write, so other queries on the shared session
-    # keep their own overwrite mode.
-    observed.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(partition_col).parquet(path)
-    # Partitions emptied by moves/deletes produce no output rows, so the
-    # dynamic overwrite never visits them — drop them as the commit step
-    # (Hudi records this tombstone in the timeline).
-    for value in touched - set(obs.get["parts"]):
-        shutil.rmtree(f"{path}/{partition_col}={value}", ignore_errors=True)
-    return int(obs.get["n"])
+    kept = sorted(set(rec["files"]) - set(affected))
+    return _commit_staged(
+        path, merged, rec["version"] + 1, kept, partition_col=partition_col
+    )[1]
 
 
 def upsert_parquet_partitioned(
@@ -506,15 +477,13 @@ def upsert_parquet_partitioned(
        (what Hudi reads from its index), not by batch rows. A NULL
        partition value raises ``ValueError`` before anything is
        written, on the first write too.
-    2. *Pruned read*: the existing table filtered with
-       ``partition_col IN (touched)`` — Catalyst turns this into
-       ``PartitionFilters``, so untouched partitions are never scanned.
+    2. *Pruned read*: only the manifest's live files of the touched
+       partitions — untouched partitions are never scanned.
     3. :func:`merge_upsert` of the pruned slice against the batch.
-    4. *Pruned commit*: ``partitionOverwriteMode=dynamic`` overwrite —
-       only partitions present in the merge output are replaced; a
-       touched partition emptied by delete records is dropped explicitly
-       (dynamic overwrite leaves absent partitions alone — that is the
-       point — so the empty case is the one manual commit step).
+    4. *Pruned commit*: one :func:`_commit_staged` of the merge output
+       beside the untouched partitions' files; a touched partition
+       emptied by delete records has no live file left, and the cleaner
+       removes its directory.
 
     Returns rows written into the touched partitions.
     """
@@ -525,17 +494,18 @@ def upsert_parquet_partitioned(
 
 
 # ---------------------------------------------------------------------------
-# Manifest commit protocol (shared by every flat keyed upsert sink —
-# upsert_parquet, the range-, bloom- and record-indexed writers and
-# operators/wap.py — and by the clustering service):
-# the commit point is publishing manifest version N+1 — a
-# single new immutable object — never a directory mutation.
+# Manifest commit protocol of every table write: the flat and the
+# hive-partitioned keyed upsert sinks (operators/wap.py too), the
+# tableops write operations, the maintenance and clustering services.
+# The commit point is publishing manifest version N+1 — a single new
+# immutable object — never a directory mutation.
 #
 #   write new data files (unique names; invisible until referenced)
 #     → publish _manifest/vN+1.json        ← THE atomic commit point
 #     → best-effort clean of replaced files (post-commit, a cleaner's job)
 #
-# Each manifest record is ``{"version", "files"}``; a commit through
+# Each manifest record is ``{"version", "files"}``, with table-relative
+# paths (``p=a/part-….parquet`` in a partitioned table). A commit through
 # :func:`_commit_staged` also records the staged ``schema`` (readers
 # pass it to ``spark.read.schema`` instead of inferring it from a
 # footer, which costs a Spark job) and the caller's ``meta`` (small
@@ -652,21 +622,52 @@ def manifest_files_at(path: str, version: int) -> list[str]:
     return manifest_record_at(path, version)["files"]
 
 
+def _data_files(path: str) -> list[str]:
+    """Table-relative paths of the parquet files under ``path``: its top
+    level and its hive ``col=value`` directories. ``_``- and
+    ``.``-prefixed entries (sidecars, manifests, staging directories,
+    checksum files) are skipped."""
+    import os
+
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if "=" in d and not d.startswith(("_", "."))]
+        rel = os.path.relpath(root, path)
+        out += [
+            f if rel == "." else os.path.join(rel, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    return sorted(out)
+
+
+def _files_by_partition(spark, files: list[str], partition_col: str) -> dict:
+    """``files`` of a hive-partitioned table by their ``partition_col``
+    value as Spark writes it: the directory name after ``col=``, decoded
+    by Spark's own ``ExternalCatalogUtils.unescapePathName`` (``p=x%2Fy``
+    holds ``"x/y"``)."""
+    import os
+
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    prefix, by_dir = f"{partition_col}=", {}
+    for f in files:
+        by_dir.setdefault(os.path.dirname(f), []).append(f)
+    return {
+        utils.unescapePathName(d[len(prefix):]): fs
+        for d, fs in by_dir.items()
+        if d.startswith(prefix)
+    }
+
+
 def table_record(path: str) -> dict:
     """The latest manifest record at ``path``, or ``{"version": 0,
     "files": <directory listing>}`` for pre-manifest tables."""
-    import glob
     import os
 
     versions = _json_versions(os.path.join(path, _MANIFEST_DIR))
     if versions:
         return manifest_record_at(path, versions[-1])
-    return {
-        "version": 0,
-        "files": sorted(
-            os.path.basename(f) for f in glob.glob(os.path.join(path, "*.parquet"))
-        ),
-    }
+    return {"version": 0, "files": _data_files(path)}
 
 
 def table_live_files(path: str) -> tuple[int, list[str]]:
@@ -680,12 +681,13 @@ def _read_files(spark, path: str, rec: dict, files: list[str]) -> DataFrame:
     """Scan ``files`` of the table at ``path`` with the schema that
     manifest record ``rec`` holds; a record without one (pre-manifest
     listings, records published outside :func:`_commit_staged`) leaves
-    Spark to infer it from a footer, a one-task job."""
+    Spark to infer it from a footer, a one-task job. ``basePath`` turns
+    ``col=value`` directories into partition columns."""
     import os
 
     from pyspark.sql.types import StructType
 
-    reader = spark.read
+    reader = spark.read.option("basePath", path)
     if "schema" in rec:
         reader = reader.schema(StructType.fromJson(rec["schema"]))
     return reader.parquet(*[os.path.join(path, f) for f in files])
@@ -700,69 +702,75 @@ def read_indexed_table(spark, path: str) -> DataFrame:
 
 
 def _commit_staged(
-    path: str, staged: DataFrame, version: int, kept: list[str],
-    *, clean: bool = True,
+    path: str, staged: DataFrame | None, version: int, kept: list[str],
+    *, partition_col: str | None = None, clean: bool = True,
     before_publish: Callable[[list[str]], None] | None = None,
     meta: dict | None = None,
 ) -> tuple[list[str], int]:
-    """The one commit of every keyed upsert sink and of the audit-log
-    appends: write ``staged`` to a staging directory under the table
-    (rows counted by an Observation on that write job — the write
-    doubles as materialization of a merge that reads the files it
-    replaces), move the part files in under unique names (pre-commit —
-    invisible until referenced), run ``before_publish`` on the candidate
-    live set (the WAP audit hook), publish manifest ``version`` over
-    ``kept`` + the new files with ``staged``'s schema and the caller's
-    ``meta`` (THE commit point), then best-effort-clean the files of
-    version ``version - 1`` the new manifest no longer references. If
-    anything before the publish, the hook or the publish itself raises,
-    the moved files are removed and the error propagates: the table
-    stays on its previous version. Returns (new file basenames, rows
-    written)."""
-    import glob
+    """The one commit of every table write: write ``staged`` to a
+    staging directory under the table, hive-partitioned by
+    ``partition_col`` when given (rows counted by an Observation on that
+    write job — the write doubles as materialization of a merge that
+    reads the files it replaces), move the part files in under one
+    commit's names, in Spark's part order, each in its ``col=value/``
+    directory (pre-commit — invisible until referenced), run
+    ``before_publish`` on the candidate live set (the WAP audit hook),
+    publish manifest ``version`` over ``kept`` + the new files with
+    ``staged``'s schema and the caller's ``meta`` (THE commit point),
+    then best-effort-clean the files of version ``version - 1`` the new
+    manifest no longer references. ``staged=None`` publishes ``kept``
+    with no Spark job. If anything before the publish, the hook or the
+    publish itself raises, the moved files are removed and the error
+    propagates: the table stays on its previous version. Returns (new
+    files' table-relative paths, rows written)."""
     import os
     import shutil
     import uuid
 
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    moved = []
-    guard = None
+    tag = uuid.uuid4().hex
+    staging = f"{path}/.staging-{tag}"
+    moved, guard = [], []  # guard: the v0 manifest of a first commit
+    record = {}
     try:
         try:
-            obs = Observation()
-            staged.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            n_written = int(obs.get["n"])
+            n_written = 0
+            if staged is not None:
+                writer = staged.observe(
+                    obs := Observation(), F.count(F.lit(1)).alias("n")
+                ).write.mode("overwrite")
+                if partition_col is not None:
+                    writer = writer.partitionBy(partition_col)
+                writer.parquet(staging)
+                n_written = int(obs.get["n"])
+                record["schema"] = staged.schema.jsonValue()
+            elif "schema" in (prev := table_record(path)):
+                record["schema"] = prev["schema"]
             if not _json_versions(os.path.join(path, _MANIFEST_DIR)):
                 # First commit: pin the pre-commit state (the listing,
                 # empty for a new path) as v0 before anything moves in,
                 # so a crash before the publish leaves the moved files
                 # unreferenced for readers and vacuum_orphans.
                 _manifest_publish(path, table_live_files(path)[1], 0)
-                guard = os.path.join(path, _MANIFEST_DIR, "v0.json")
-            for i, f in enumerate(sorted(glob.glob(f"{staging}/*.parquet"))):
+                guard = [os.path.join(_MANIFEST_DIR, "v0.json")]
+            for i, f in enumerate(_data_files(staging)):
                 dest = os.path.join(
-                    path, f"part-upsert-{uuid.uuid4().hex}-{i:05d}.parquet"
+                    os.path.dirname(f), f"part-upsert-{tag}-{i:05d}.parquet"
                 )
-                shutil.move(f, dest)
-                moved.append(os.path.basename(dest))
+                os.makedirs(os.path.dirname(os.path.join(path, dest)), exist_ok=True)
+                shutil.move(os.path.join(staging, f), os.path.join(path, dest))
+                moved.append(dest)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
         live = sorted(set(kept) | set(moved))
         if before_publish is not None:
             before_publish(live)
-        record = {"schema": staged.schema.jsonValue()}
         if meta is not None:
             record["meta"] = meta
         _manifest_publish(path, live, version, record)  # ← commit point
     except BaseException:
-        for f in moved:  # never referenced by a manifest
-            try:
-                os.remove(os.path.join(path, f))
-            except OSError:
-                pass
-        _drop_guard(guard)  # the table stays as it was: no manifest
+        # The moved files were never referenced, and without its guard a
+        # first commit leaves no manifest: the table stays as it was.
+        _remove_files(path, moved + guard)
         raise
     # Post-commit cleaner (Hudi's hoodie.clean.automatic): the files this
     # commit replaced — listed by version - 1, not by this one — are
@@ -776,32 +784,28 @@ def _commit_staged(
     # those tables are reclaimed by the retention-aware orphan vacuum
     # instead.
     replaced: list[str] = []
-    if clean:
-        try:
+    if clean:  # version - 1 retired meanwhile: leave it to the vacuum
+        with suppress(OSError):
             replaced = sorted(set(manifest_files_at(path, version - 1)) - set(live))
-        except OSError:
-            pass  # version - 1 retired meanwhile: leave it to the vacuum
-    _drop_guard(guard)  # v{version} supersedes it; nothing pins v0
-    for f in replaced:
-        try:
-            os.remove(os.path.join(path, f))
-        except OSError:
-            pass
+    _remove_files(path, replaced + guard)  # v{version} supersedes the guard
     return moved, n_written
 
 
-def _drop_guard(guard: str | None) -> None:
-    """Remove the v0 guard manifest of a first commit, and the manifest
-    directory with it when that leaves it empty."""
+def _remove_files(path: str, files: list[str]) -> None:
+    """Best-effort removal of table-relative ``files`` with their Hadoop
+    ``.crc`` siblings, then of the directories left empty (a partition
+    directory keeps a concurrent writer's moved-in file; the manifest
+    directory goes with a first commit's v0 guard)."""
     import os
 
-    if guard is None:
-        return
-    try:
-        os.remove(guard)
-        os.rmdir(os.path.dirname(guard))  # fails unless empty
-    except OSError:
-        pass
+    for f in files:
+        d, name = os.path.split(os.path.join(path, f))
+        for p in (os.path.join(d, name), os.path.join(d, f".{name}.crc")):
+            with suppress(OSError):
+                os.remove(p)
+    for d in {os.path.dirname(f) for f in files} - {""}:
+        with suppress(OSError):
+            os.rmdir(os.path.join(path, d))  # fails unless empty
 
 
 class IndexedUpsertResult(NamedTuple):
@@ -829,25 +833,35 @@ class _SidecarIndex(NamedTuple):
 
 
 def _valid_sidecar(
-    spark, path: str, live_files: list[str], dirname: str
+    spark, path: str, rec: dict, dirname: str, key: str
 ) -> DataFrame | None:
     """The sidecar relation in ``dirname`` if present AND its file set
-    equals the manifest's live set (metadata-scale check), else None. A
-    crash between the manifest publish and the sidecar rewrite leaves a
-    stale sidecar whose missing entries for new files would yield index
-    FALSE NEGATIVES — a later upsert would skip those files and write
-    duplicate keys; callers fall back to a cold rebuild over the
-    manifest-listed files instead (orphaned pre-crash files ignored)."""
+    equals the live set of manifest record ``rec`` (metadata-scale
+    check), else None. A crash between the manifest publish and the
+    sidecar rewrite leaves a stale sidecar whose missing entries for new
+    files would yield index FALSE NEGATIVES — a later upsert would skip
+    those files and write duplicate keys; callers fall back to a cold
+    rebuild over the manifest-listed files instead (orphaned pre-crash
+    files ignored). The sidecar's schema is fixed here (the RLI key
+    typed from ``rec``'s), so no footer-inference job runs."""
     import os
+
+    from pyspark.sql.types import StructType
 
     sidecar = os.path.join(path, dirname)
     if not os.path.isdir(sidecar):
         return None
-    candidate = spark.read.parquet(sidecar)
+    reader = spark.read
+    if dirname != _RLI_DIR:
+        reader = reader.schema(_BLOOM_SCHEMA)
+    elif "schema" in rec:
+        key_type = StructType.fromJson(rec["schema"])[key].dataType
+        reader = reader.schema(StructType().add(key, key_type).add("file", "string"))
+    candidate = reader.parquet(sidecar)
     sidecar_files = {
         r["file"] for r in candidate.select("file").distinct().collect()
     }
-    return candidate if sidecar_files == set(live_files) else None
+    return candidate if sidecar_files == set(rec["files"]) else None
 
 
 def _range_probe_files(
@@ -953,7 +967,7 @@ def _indexed_upsert(
     elif index == _RANGE_INDEX:
         affected = _range_probe_files(spark, path, keys[0], live_files, batch)
     else:
-        rel = _valid_sidecar(spark, path, live_files, index.dirname)
+        rel = _valid_sidecar(spark, path, rec, index.dirname, keys[0])
         if rel is None:
             rel = index.build(spark, path, keys[0], live_files)  # cold (re)build
         # Materialize now (metadata-scale): the commit below deletes data
@@ -1052,6 +1066,7 @@ def upsert_parquet_indexed(
 BLOOM_BITS = 65536
 BLOOM_HASHES = 5
 _BLOOM_DIR = "_bloom"  # underscore prefix: invisible to parquet scans
+_BLOOM_SCHEMA = "file string, word_idx int, word long"
 
 
 def _bloom_positions(key_col):
@@ -1083,9 +1098,9 @@ def _bloom_words(file_keys: DataFrame, key: str) -> DataFrame:
     )
 
 
-def _table_bloom_words(spark, path: str, key: str, files: list[str] | None = None) -> DataFrame:
-    """Bloom words for ``files`` of the table (all files when None),
-    reading only the key column (column-pruned scan).
+def _table_bloom_words(spark, path: str, key: str, files: list[str]) -> DataFrame:
+    """Bloom words for ``files`` of the table, reading only the key
+    column (column-pruned scan).
 
     Every file additionally gets one marker row (word_idx = -1, word = 0)
     so that EMPTY data files — a commit's writer can emit zero-row part
@@ -1093,14 +1108,8 @@ def _table_bloom_words(spark, path: str, key: str, files: list[str] | None = Non
     validation on load compares file sets, and a perpetually-absent
     empty file would force a cold rebuild on every upsert. Markers can
     never match a probe (probe word_idx ≥ 0)."""
-    import glob
     import os
 
-    if files is None:
-        files = sorted(
-            os.path.basename(f)
-            for f in glob.glob(os.path.join(path, "*.parquet"))
-        )
     src = spark.read.parquet(*[os.path.join(path, f) for f in files])
     keyed = src.select(
         F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
@@ -1220,12 +1229,12 @@ def read_point_lookup(
     )
     # Exact record-level index first (primary lookups only — the RLI
     # maps the RECORD key): no false positives, minimal file set.
-    rli = _valid_sidecar(spark, path, live_files, _RLI_DIR) if primary else None
+    rli = _valid_sidecar(spark, path, rec, _RLI_DIR, key) if primary else None
     words = None
     if rli is None:
-        words = _valid_sidecar(spark, path, live_files, f"{_BLOOM_DIR}_{key}")
+        words = _valid_sidecar(spark, path, rec, f"{_BLOOM_DIR}_{key}", key)
         if words is None and primary:
-            words = _valid_sidecar(spark, path, live_files, _BLOOM_DIR)
+            words = _valid_sidecar(spark, path, rec, _BLOOM_DIR, key)
     if rli is not None:
         candidates = _rli_probe_files(rli, probe_df, key)
     elif words is not None:
@@ -1437,7 +1446,7 @@ def vacuum_orphans(
     publish leaves files no manifest references (invisible to every
     reader, but paying storage forever).
 
-    Deletes ``*.parquet`` files that are (a) NOT referenced by ANY
+    Deletes data files that are (a) NOT referenced by ANY
     committed manifest version still on disk and (b) older than
     ``min_age_seconds``. The live set is the UNION across every
     ``_manifest/v*.json`` — not just the latest — because older
@@ -1455,10 +1464,11 @@ def vacuum_orphans(
     the longest plausible commit duration. Manifest-referenced files
     are never touched, so a racing read can never lose a live file.
 
-    Returns the removed basenames. A table without a manifest is left
+    Returns the removed files' table-relative paths (data files in
+    ``col=value`` partition directories included; partition directories
+    the removal empties go too). A table without a manifest is left
     alone entirely (nothing can be proven orphaned).
     """
-    import glob
     import os
     import time
 
@@ -1470,15 +1480,9 @@ def vacuum_orphans(
         live_set.update(manifest_files_at(path, v))
     now = time.time()
     removed = []
-    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
-        base = os.path.basename(f)
-        if base in live_set:
-            continue
-        try:
-            if now - os.path.getmtime(f) < min_age_seconds:
-                continue
-            os.remove(f)
-            removed.append(base)
-        except OSError:
-            pass
+    for f in sorted(set(_data_files(path)) - live_set):
+        with suppress(OSError):  # removed meanwhile
+            if now - os.path.getmtime(os.path.join(path, f)) >= min_age_seconds:
+                removed.append(f)
+    _remove_files(path, removed)
     return removed

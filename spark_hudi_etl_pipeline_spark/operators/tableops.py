@@ -6,16 +6,20 @@ available on their keyed tables (pipeline_architecture.py:183-192 sets
 re-expressed on hive-layout parquet with Spark-native partition
 handling.
 
+Every operation commits one manifest version (``merge._commit_staged``).
+
 Scale notes (100 TB table, incremental batch):
 
 - ``insert_overwrite`` replaces ONLY the partitions the batch lands in
-  (dynamic partition overwrite — Catalyst plans a per-partition commit,
-  untouched partitions keep their bytes); no read of the existing table
-  at all, which is precisely why the operation exists: a
-  recompute-and-replace of recent partitions is O(batch), never
-  O(table), and needs no index lookup the way ``upsert`` does.
-- ``delete_partitions`` is metadata-scale: directory drops, no data
-  read or shuffle (Hudi records replacecommit instants for this).
+  (the commit keeps the other partitions' live files — bytes and mtimes
+  untouched); no read of the existing table at all, which is precisely
+  why the operation exists: a recompute-and-replace of recent
+  partitions is O(batch), never O(table), and needs no index lookup the
+  way ``upsert`` does.
+- ``delete_partitions`` is metadata-scale: a commit that drops the
+  partitions' files, no data read, no Spark job (Hudi records
+  replacecommit instants for this). ``retention_delete`` drops the
+  expired partitions and rewrites the boundary one in the same commit.
 - ``bulk_insert`` is the initial-load path: no merge, no index — just
   layout control. GLOBAL_SORT range-partitions + sorts so parquet
   footers carry disjoint key ranges (what makes the SIMPLE file index
@@ -32,13 +36,18 @@ Scale notes (100 TB table, incremental batch):
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import cluster_linear
-from .merge import _upsert_partitioned
+from .clustering import cluster_linear, file_column_bounds
+from .merge import (
+    _commit_staged,
+    _files_by_partition,
+    _read_files,
+    _upsert_partitioned,
+    table_record,
+)
 
 
 def insert_overwrite(
@@ -51,41 +60,47 @@ def insert_overwrite(
     its partitions — the operation for recompute-and-replace pipelines
     (e.g. restating the last N days from source-of-truth).
 
-    O(batch): the existing table is never read. Returns rows written.
+    O(batch): the existing table is never read; one planning job takes
+    the batch's partition values (a NULL one raises before anything is
+    written). Returns rows written.
     """
-    if batch.filter(F.col(partition_col).isNull()).limit(1).count():
+    values = {
+        r[0]
+        for r in batch.select(F.col(partition_col).cast("string")).distinct().collect()
+    }
+    if None in values:
         raise ValueError(
             f"null partition value in batch column {partition_col!r}"
         )
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    observed = batch.observe(obs, F.count(F.lit(1)).alias("n"))
-    observed.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(partition_col).parquet(path)
-    # counted on the write job itself — a trailing .count() would
-    # re-run the batch plan (r13 optimization round)
-    return int(obs.get["n"])
+    rec = table_record(path)
+    files = _files_by_partition(spark, rec["files"], partition_col)
+    gone = {f for v in values for f in files.get(v, [])}
+    kept = [f for f in rec["files"] if f not in gone]
+    return _commit_staged(
+        path, batch, rec["version"] + 1, kept, partition_col=partition_col
+    )[1]
 
 
 def delete_partitions(
     spark, path: str, partition_col: str, values: list
 ) -> list:
     """Hudi ``delete_partition``: drop whole partitions by value —
-    metadata-scale (directory removal; Hudi publishes a replacecommit),
-    no data read, the retention-enforcement operation for hive-layout
-    tables (e.g. dropping expired date partitions). Unknown values are
+    metadata-scale (a commit that drops their files from the live set,
+    no Spark job; Hudi publishes a replacecommit), no data read, the
+    retention-enforcement operation for hive-layout tables (e.g.
+    dropping expired date partitions). A value matches the partition
+    whose decoded directory value is ``str(value)``. Unknown values are
     ignored (idempotent, like re-running a retention job). Returns the
     partition values actually dropped."""
-    dropped = []
-    for v in values:
-        if v is None:
-            raise ValueError("cannot delete the null partition")
-        d = f"{path}/{partition_col}={v}"
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-            dropped.append(v)
+    if any(v is None for v in values):
+        raise ValueError("cannot delete the null partition")
+    rec = table_record(path)
+    files = _files_by_partition(spark, rec["files"], partition_col)
+    dropped = [v for v in values if str(v) in files]
+    if dropped:
+        gone = {f for v in dropped for f in files[str(v)]}
+        kept = [f for f in rec["files"] if f not in gone]
+        _commit_staged(path, None, rec["version"] + 1, kept)
     return dropped
 
 
@@ -127,11 +142,7 @@ def bulk_insert(
         out = df.sortWithinPartitions(*sort_cols)
     else:
         out = df
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
-    return int(obs.get["n"])
+    return _commit_staged(path, out, table_record(path)["version"] + 1, kept=[])[1]
 
 
 def upsert_parquet_partitioned_global(
@@ -160,16 +171,16 @@ def upsert_parquet_partitioned_global(
        batch's (broadcast) distinct keys, yields the partitions
        currently holding batch keys — GLOBAL_SIMPLE's exact plan; only
        the key/partition columns are read, never full rows.
-    2. *Pruned read*: the union of those partitions and the batch's own
-       target partitions — the only partitions whose contents can
-       change.
+    2. *Pruned read*: the live files of those partitions and of the
+       batch's own target partitions — the only partitions whose
+       contents can change.
     3. :func:`~.merge.merge_upsert` on ``keys`` alone (global identity);
        the winning row's ``partition_col`` value decides where it lives,
        which is precisely how the move happens — no special-case code.
-    4. *Pruned commit*: dynamic partition overwrite of the merge output;
-       a touched partition left EMPTY (its only rows moved out or were
-       deleted) is dropped explicitly, since dynamic overwrite never
-       visits partitions with no output rows.
+    4. *Pruned commit*: one manifest commit of the merge output's files
+       beside every live file of the untouched partitions; a touched
+       partition left EMPTY (its only rows moved out or were deleted)
+       has no live file left, and the cleaner removes its directory.
 
     Returns rows written into the touched partitions. A NULL partition
     value raises ``ValueError`` before anything is written, on the first
@@ -194,44 +205,33 @@ def retention_delete(
 
     - partitions strictly BELOW ``cutoff_partition`` (string order —
       zero-padded date/month partition values sort chronologically) are
-      dropped whole via :func:`delete_partitions`: metadata-scale, no
-      data read;
+      dropped whole: metadata-scale, no data read;
     - the BOUNDARY partition (== cutoff_partition) is rewritten keeping
       only rows satisfying ``keep_pred`` (a Column) — the only data
       actually scanned, O(one partition) however large the table;
     - newer partitions are never touched (asserted by file mtimes in
       tests/test_tableops_retention.py).
 
-    Returns (dropped_partition_values, boundary_rows_deleted).
-    Idempotent: re-running with the same cutoff drops nothing and
-    rewrites an already-clean boundary to itself.
+    Both tiers are one manifest commit. Returns
+    (dropped_partition_values, boundary_rows_deleted). Idempotent:
+    re-running with the same cutoff drops nothing and rewrites an
+    already-clean boundary to itself.
     """
-    values = sorted(
-        e.split("=", 1)[1]
-        for e in os.listdir(path)
-        if e.startswith(f"{partition_col}=")
+    rec = table_record(path)
+    files = _files_by_partition(spark, rec["files"], partition_col)
+    expired = sorted(v for v in files if v < cutoff_partition)
+    boundary = files.get(cutoff_partition, [])
+    if not expired and not boundary:
+        return [], 0
+    gone = {f for v in [*expired, cutoff_partition] for f in files.get(v, [])}
+    # Rows read come from the boundary files' footers, not a Spark job.
+    n_read = sum(b["rows"] for b in file_column_bounds(path, [], files=boundary))
+    staged = _read_files(spark, path, rec, boundary).filter(keep_pred) if boundary else None
+    kept = [f for f in rec["files"] if f not in gone]
+    _, n_kept = _commit_staged(
+        path, staged, rec["version"] + 1, kept, partition_col=partition_col
     )
-    expired = [v for v in values if v < cutoff_partition]
-    dropped = delete_partitions(spark, path, partition_col, expired)
-    deleted = 0
-    if cutoff_partition in values:
-        boundary = spark.read.parquet(path).filter(
-            F.col(partition_col) == cutoff_partition
-        )
-        kept = boundary.filter(keep_pred).localCheckpoint(eager=True)
-        deleted = boundary.count() - kept.count()
-        bdir = f"{path}/{partition_col}={cutoff_partition}"
-        shutil.rmtree(bdir)
-        if kept.count() > 0:
-            kept.write.mode("overwrite").partitionBy(partition_col).parquet(
-                f"{path}/__retention_tmp"
-            )
-            os.rename(
-                f"{path}/__retention_tmp/{partition_col}={cutoff_partition}",
-                bdir,
-            )
-            shutil.rmtree(f"{path}/__retention_tmp", ignore_errors=True)
-    return dropped, deleted
+    return expired, n_read - n_kept
 
 
 def export_symlink_manifest(path: str) -> str:
@@ -250,11 +250,7 @@ def export_symlink_manifest(path: str) -> str:
     like any table service. The write is tmp-then-rename so a
     concurrent external reader sees the old manifest or the new one,
     never a partial line. Returns the manifest file path."""
-    import os
-
-    from .merge import table_live_files
-
-    _, live = table_live_files(path)
+    live = table_record(path)["files"]
     if not live:
         raise FileNotFoundError(f"no data files at {path!r}")
     out_dir = os.path.join(path, "_symlink_manifest")

@@ -52,7 +52,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
@@ -559,16 +559,15 @@ def compact_timeline(
         # The folded state has no delete flag; recreate it so the
         # compacted base schema matches later delta commits.
         base = base.withColumn(delete_col, F.lit(False))
-    # The base replaces the partitions it was read from — materialize.
-    base = base.localCheckpoint(eager=True)
+    # The base replaces the partitions it was read from: stage it (one
+    # write job, rows counted on it), then swap it in for them.
+    staging = f"{path}/.staging-compaction-{up_to}"
+    base.observe(obs := Observation(), F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(staging)
     for t in instants:
         shutil.rmtree(f"{path}/{COMMIT_COL}={t}", ignore_errors=True)
-    (
-        base.withColumn(COMMIT_COL, F.lit(up_to).cast("long"))
-        .write.mode("append")
-        .partitionBy(COMMIT_COL)
-        .parquet(path)
-    )
+    os.rename(staging, f"{path}/{COMMIT_COL}={up_to}")
     marker_dir = os.path.join(path, _COMPACTIONS_DIR)
     os.makedirs(marker_dir, exist_ok=True)
     with open(os.path.join(marker_dir, str(up_to)), "w"):
@@ -584,7 +583,7 @@ def compact_timeline(
     # the clone no longer depends on its source.
     if clone is not None:
         os.remove(os.path.join(path, _CLONE_FILE))
-    return base.count()
+    return int(obs.get["n"])
 
 
 def timeline_history(spark, path: str) -> DataFrame:

@@ -188,20 +188,24 @@ def foreach_batch_ohlc_append(state_path: str, *, run_tag: str = "run"):
     Exactly-once under checkpoint recovery: a replayed micro-batch id
     finds its own ``src`` tag already committed and skips — the same
     replay-idempotence contract as foreach_batch_dedup_store (sums
-    would double-count otherwise; min/max alone wouldn't care)."""
-    from ..operators.maintenance import ohlc_partial, read_state_if_exists
+    would double-count otherwise; min/max alone wouldn't care). Each
+    append is one manifest commit (``merge._commit_staged`` keeping
+    every live file), so a batch that died mid-write left no ``src`` tag
+    behind and its replay lands."""
+    from ..operators.maintenance import ohlc_partial
+    from ..operators.merge import _commit_staged, _read_files, table_record
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         src = f"{run_tag}:{batch_id}"
-        existing = read_state_if_exists(spark, state_path)
-        if (
-            existing is not None
-            and existing.filter(F.col("src") == src).limit(1).count() > 0
-        ):
+        rec = table_record(state_path)
+        live = rec["files"]
+        if live and _read_files(spark, state_path, rec, live).filter(
+            F.col("src") == src
+        ).limit(1).count():
             return
         partial = ohlc_partial(batch_df).withColumn("src", F.lit(src))
-        partial.write.mode("append").parquet(state_path)
+        _commit_staged(state_path, partial, rec["version"] + 1, live)
 
     return apply
 

@@ -387,9 +387,10 @@ def test_point_lookup_missing_key_empty(spark, tmp_table):
 
 def test_point_lookup_job_budget(spark, tmp_table):
     """The probe key's type and the reader's schema come from the
-    manifest's recorded schema, not from footer-inference jobs: a 2-key
-    probe of a bloom-indexed table runs at most 7 jobs before its
-    collect (9 when both were inferred from the first live file)."""
+    manifest's recorded schema, and the sidecar is read with the schema
+    the code fixes, not from footer-inference jobs: a 2-key probe of a
+    bloom-indexed table runs at most 6 jobs before its collect (7 when
+    the sidecar's schema was inferred, 9 when the key's was too)."""
     from spark_hudi_etl_pipeline_spark.operators.merge import (
         read_point_lookup,
         upsert_parquet_bloom_indexed,
@@ -398,7 +399,7 @@ def test_point_lookup_job_budget(spark, tmp_table):
     df = spark.range(0, 1000).select(F.col("id").alias("k"), F.col("id").alias("v"))
     upsert_parquet_bloom_indexed(spark, df, tmp_table, "k", "v")
     out, jobs = jobs_in(spark, lambda: read_point_lookup(spark, tmp_table, "k", [5, 777]))
-    assert jobs <= 7
+    assert jobs <= 6
     assert sorted(tuple(r) for r in out.collect()) == [(5, 5), (777, 777)]
 
 

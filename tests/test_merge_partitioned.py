@@ -173,6 +173,244 @@ def test_rerun_idempotent(spark, table):
     assert rows_of(spark.read.parquet(table)) == first  # same col order both reads
 
 
+def _upsert_for(global_index: bool):
+    from spark_hudi_etl_pipeline_spark.operators.tableops import (
+        upsert_parquet_partitioned_global,
+    )
+
+    return upsert_parquet_partitioned_global if global_index else upsert_parquet_partitioned
+
+
+DSCHEMA = "k long, p string, v string, prec long, deleted boolean"
+
+
+@pytest.mark.parametrize("global_index", [False, True], ids=["nonglobal", "global"])
+def test_winning_delete_empties_an_escaped_partition(spark, tmp_path, global_index):
+    """Spark escapes partition values on disk: ``"x/y"`` lives in
+    ``p=x%2Fy``. A winning delete of that partition's only row removes
+    the row and the directory."""
+    from spark_hudi_etl_pipeline_spark.operators.merge import read_indexed_table
+
+    upsert = _upsert_for(global_index)
+    path = str(tmp_path / "tbl")
+    seed = spark.createDataFrame([(1, "x/y", "xy1", 1), (2, "a", "a2", 1)], SCHEMA)
+    upsert(spark, seed, path, ["k"], "prec", "p")
+    assert os.path.isdir(f"{path}/p=x%2Fy")
+    delete = spark.createDataFrame([(1, "x/y", None, 9, True)], DSCHEMA)
+    upsert(spark, delete, path, ["k"], "prec", "p", delete_col="deleted")
+    cols = ["k", "p", "v", "prec"]
+    assert rows_of(spark.read.parquet(path).select(*cols)) == {(2, "a", "a2", 1)}
+    assert rows_of(read_indexed_table(spark, path).select(*cols)) == {(2, "a", "a2", 1)}
+    assert not os.path.exists(f"{path}/p=x%2Fy")
+
+
+def test_concurrent_partitioned_upserts_one_wins(spark, table, monkeypatch):
+    """Writer A has staged and moved its files in when writer B runs a
+    whole upsert from the same table version and publishes it. A's
+    publish of that version loses: it raises ConcurrentCommitError and
+    removes its files, and the table holds B's rows."""
+    from spark_hudi_etl_pipeline_spark.operators import merge
+
+    real = merge._manifest_publish
+    batch_b = spark.createDataFrame([(1, "a", "B", 5), (7, "c", "B7", 5)], SCHEMA)
+
+    def publish(path_, files, version, extra=None):
+        monkeypatch.setattr(merge, "_manifest_publish", real)
+        upsert_parquet_partitioned(spark, batch_b, table, ["k"], "prec", "p")
+        real(path_, files, version, extra)  # A's claim of the same version
+
+    monkeypatch.setattr(merge, "_manifest_publish", publish)
+    batch_a = spark.createDataFrame([(1, "a", "A", 6), (3, "b", "A3", 6)], SCHEMA)
+    with pytest.raises(merge.ConcurrentCommitError):
+        upsert_parquet_partitioned(spark, batch_a, table, ["k"], "prec", "p")
+    want = {
+        (1, "a", "B", 5), (2, "a", "a2", 1), (3, "b", "b1", 1),
+        (4, "b", "b2", 1), (5, "c", "c1", 1), (7, "c", "B7", 5),
+    }
+    cols = ["k", "p", "v", "prec"]
+    assert rows_of(merge.read_indexed_table(spark, table).select(*cols)) == want
+    assert rows_of(spark.read.parquet(table).select(*cols)) == want  # A left nothing
+
+
+def test_cleaner_spares_a_file_moved_into_the_same_partition(spark, table, monkeypatch):
+    """Writer B moves its file into ``p=a/`` right after writer A's
+    publish, and publishes after A's post-commit cleaner has emptied
+    ``p=a/`` of the files A replaced. B's file and its directory
+    survive, B's publish succeeds and the table holds both rows."""
+    import threading
+
+    from spark_hudi_etl_pipeline_spark.operators import merge
+
+    real = merge._manifest_publish
+    writer_a = threading.current_thread()
+    b_moved_in, a_done = threading.Event(), threading.Event()
+    b_errors: list[BaseException] = []
+
+    def writer_b():
+        try:
+            batch = spark.createDataFrame([(8, "a", "B8", 1)], SCHEMA)
+            upsert_parquet_partitioned(spark, batch, table, ["k"], "prec", "p")
+        except BaseException as exc:
+            b_errors.append(exc)
+            b_moved_in.set()
+
+    b = threading.Thread(target=writer_b)
+
+    def publish(path_, files, version, extra=None):
+        if threading.current_thread() is writer_a:
+            real(path_, files, version, extra)  # A's commit point
+            b.start()  # B reads A's version, stages and moves into p=a/
+            assert b_moved_in.wait(timeout=300)
+        else:
+            b_moved_in.set()
+            assert a_done.wait(timeout=300)  # A's cleaner has run
+            real(path_, files, version, extra)
+
+    monkeypatch.setattr(merge, "_manifest_publish", publish)
+    batch_a = spark.createDataFrame([(1, "a", "A1", 2)], SCHEMA)
+    upsert_parquet_partitioned(spark, batch_a, table, ["k"], "prec", "p")
+    a_done.set()
+    b.join(timeout=300)
+    assert not b.is_alive() and not b_errors
+    got = rows_of(
+        merge.read_indexed_table(spark, table).filter(F.col("p") == "a").select("k", "v")
+    )
+    assert got == {(1, "A1"), (2, "a2"), (8, "B8")}
+    assert all(os.path.exists(f"{table}/{f}") for f in merge.table_live_files(table)[1])
+
+
+def test_vacuum_descends_into_partitions_and_skips_staging(spark, table):
+    """The orphan vacuum lists ``col=value`` directories: an aged file no
+    manifest lists in ``p=a/`` goes, while the live files and a staging
+    directory's files stay."""
+    import shutil
+
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_indexed_table,
+        table_live_files,
+        vacuum_orphans,
+    )
+
+    live = table_live_files(table)[1]
+    src = os.path.join(table, next(f for f in live if f.startswith("p=a/")))
+    orphan = os.path.join(table, "p=a", "part-upsert-orphan-00000.parquet")
+    staged = os.path.join(table, ".staging-inflight", "p=a", "part-00000.parquet")
+    os.makedirs(os.path.dirname(staged))
+    for f in (orphan, staged):
+        shutil.copy(src, f)
+        os.utime(f, (0, 0))
+    before = rows_of(read_indexed_table(spark, table))
+    assert vacuum_orphans(table, min_age_seconds=60) == ["p=a/part-upsert-orphan-00000.parquet"]
+    assert not os.path.exists(orphan) and os.path.exists(staged)
+    assert all(os.path.exists(os.path.join(table, f)) for f in live)
+    assert rows_of(spark.read.parquet(table)) == before
+
+
+@pytest.mark.parametrize(
+    "global_index, budget", [(False, 8), (True, 11)], ids=["nonglobal", "global"]
+)
+def test_partitioned_upsert_job_budget(spark, tmp_path, global_index, budget):
+    """A 2-row batch into a 1,000-row, 5-partition table runs at most 8
+    Spark jobs (non-global) or 11 (global); the in-place dynamic
+    overwrite this commit replaced ran 10 and 13."""
+    from tests.conftest import jobs_in
+
+    upsert = _upsert_for(global_index)
+    path = str(tmp_path / "tbl")
+    rows = [(i, f"p{i % 5}", f"v{i}", 1) for i in range(1000)]
+    upsert(spark, spark.createDataFrame(rows, SCHEMA), path, ["k"], "prec", "p")
+    batch = spark.createDataFrame([(3, "p3", "new", 2), (2000, "p1", "ins", 2)], SCHEMA)
+    n, jobs = jobs_in(spark, lambda: upsert(spark, batch, path, ["k"], "prec", "p"))
+    assert n == 401 and jobs <= budget  # partitions p1 and p3
+
+
+def _partitioned_seed(spark, path):
+    upsert_parquet_partitioned(
+        spark, spark.createDataFrame([(1, "a", "a1", 1), (2, "b", "b1", 1)], SCHEMA),
+        path, ["k"], "prec", "p",
+    )
+
+
+def _retention_seed(spark, path):
+    from spark_hudi_etl_pipeline_spark.operators.tableops import insert_overwrite
+
+    insert_overwrite(
+        spark,
+        spark.createDataFrame(
+            [(i, f"2024-{m:02d}", m * 100 + i) for m in (1, 2, 3) for i in range(3)],
+            "id long, month string, v long",
+        ),
+        path, "month",
+    )
+
+
+def _aggregate_seed(spark, path):
+    from spark_hudi_etl_pipeline_spark.operators.maintenance import (
+        refresh_aggregate_parquet,
+    )
+
+    refresh_aggregate_parquet(
+        spark, spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)], "g string, x long"),
+        path, ["g"], {"x": "sx"},
+    )
+
+
+def _partitioned_write(spark, path):
+    batch = spark.createDataFrame([(1, "a", "new", 2), (3, "z", "z3", 2)], SCHEMA)
+    upsert_parquet_partitioned(spark, batch, path, ["k"], "prec", "p")
+
+
+def _retention_write(spark, path):
+    from spark_hudi_etl_pipeline_spark.operators.tableops import retention_delete
+
+    retention_delete(spark, path, "month", F.col("v") >= 301, "2024-02")
+
+
+def _aggregate_write(spark, path):
+    from spark_hudi_etl_pipeline_spark.operators.maintenance import (
+        refresh_aggregate_parquet,
+    )
+
+    refresh_aggregate_parquet(
+        spark, spark.createDataFrame([("a", 10), ("c", 5)], "g string, x long"),
+        path, ["g"], {"x": "sx"},
+    )
+
+
+@pytest.mark.parametrize(
+    "seed, write",
+    [
+        (_partitioned_seed, _partitioned_write),
+        (_retention_seed, _retention_write),
+        (_aggregate_seed, _aggregate_write),
+    ],
+    ids=["partitioned_upsert", "retention_delete", "refresh_aggregate"],
+)
+def test_raise_in_publish_keeps_the_previous_state(spark, tmp_path, monkeypatch, seed, write):
+    """A raise in the publish of a partitioned upsert, a retention
+    delete or an aggregate refresh leaves the manifest read on the
+    previous state, and after the orphan vacuum the directory read
+    agrees with it."""
+    from spark_hudi_etl_pipeline_spark.operators import merge
+
+    path = str(tmp_path / "tbl")
+    seed(spark, path)
+    before = rows_of(merge.read_indexed_table(spark, path))
+    version = merge.table_live_files(path)[0]
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("crash at the commit point")
+
+    monkeypatch.setattr(merge, "_manifest_publish", crash)
+    with pytest.raises(RuntimeError, match="commit point"):
+        write(spark, path)
+    monkeypatch.undo()
+    assert merge.table_live_files(path)[0] == version
+    assert rows_of(merge.read_indexed_table(spark, path)) == before
+    merge.vacuum_orphans(path, min_age_seconds=0)
+    assert rows_of(spark.read.parquet(path)) == before
+
+
 # ---------------------------------------------------------------------------
 # File-level indexed upsert (upsert_parquet_indexed): footer key ranges
 # as the write index on a linear-clustered layout.

@@ -252,3 +252,107 @@ def test_every_package_function_is_reached_from_an_entry_point():
     }
     assert sorted(unreached - _UNREACHED_ALLOWED.keys()) == []
     assert _UNREACHED_ALLOWED.keys() <= unreached
+
+
+#: Writes outside ``merge._commit_staged`` that stay, keyed by (file
+#: under the package, top-level function): what each writes, and why it
+#: is not a table commit.
+_IN_PLACE_ALLOWED = {
+    ("operators/merge.py", "_indexed_upsert"): (
+        "rewrites the `_bloom`/`_rli` sidecar after the commit; readers "
+        "validate it against the manifest's live set and rebuild it cold"
+    ),
+    ("operators/merge.py", "build_secondary_index"): (
+        "writes the `_bloom_<col>` sidecar, validated like the primary index"
+    ),
+    ("operators/stats.py", "build_table_stats"): (
+        "writes the `_stats` sidecar, validated against the live set on load"
+    ),
+    ("operators/tableops.py", "delete_with_vectors"): (
+        "adds one `_dv` sidecar generation; data files stay untouched"
+    ),
+    ("operators/tableops.py", "compact_deletion_vectors"): (
+        "deletion-vector tables are plain directories read by listing "
+        "(`_metadata.row_index` per file): staging directories, then the "
+        "survivor move and the `_dv` sidecar swap"
+    ),
+    ("operators/timeline.py", "commit_append"): (
+        "timeline commit partition: each instant appends its own "
+        "`commit_ts=` directory once"
+    ),
+    ("operators/timeline.py", "compact_timeline"): (
+        "timeline commit partitions: a staging directory swapped in for "
+        "the instants it folds"
+    ),
+    ("operators/timeline.py", "restore_to"): "timeline commit partitions dropped",
+    ("operators/timeline.py", "rollback_last"): "timeline commit partition dropped",
+    ("operators/dedup.py", "fingerprint_store_ingest"): (
+        "streaming dedup state: appends new fingerprints to its "
+        "bucketed catalog store"
+    ),
+    ("operators/dedup.py", "minhash_store_ingest"): (
+        "streaming dedup state: appends new signatures to its bucketed "
+        "catalog store"
+    ),
+    ("pipeline/costlog.py", "profile_run"): "the `noop` sink: writes no files",
+    ("sources/writers.py", "write_bucketed"): (
+        "catalog (`saveAsTable`) table: bucketing needs the catalog"
+    ),
+    ("sources/writers.py", "write_hidden_partitioned"): (
+        "source-layout writer (Iceberg hidden partitioning) of input tables"
+    ),
+    ("sources/writers.py", "evolve_partition_spec"): (
+        "source-layout writer: appends under a new partition spec"
+    ),
+    ("streaming/windows.py", "foreach_batch_dedup_store"): "streaming verdict append",
+    ("streaming/windows.py", "foreach_batch_minhash_store"): "streaming verdict append",
+}
+
+
+def _in_place_writes(tree: ast.Module):
+    """(top-level function, kind) of every in-place write under ``tree``:
+    a ``.mode(…)`` call or ``mode=`` argument that overwrites or appends
+    (or passes a mode through), a ``partitionOverwriteMode`` option, a
+    ``rmtree`` or an ``os.rename``."""
+
+    def writes(mode: ast.expr) -> bool:
+        return isinstance(mode, ast.Name) or any(
+            isinstance(c, ast.Constant) and c.value in ("overwrite", "append")
+            for c in ast.walk(mode)
+        )
+
+    for top in tree.body:
+        for node in ast.walk(top):
+            kind = None
+            if isinstance(node, ast.Constant) and node.value == "partitionOverwriteMode":
+                kind = "partitionOverwriteMode"
+            elif isinstance(node, ast.Call):
+                attr = getattr(node.func, "attr", None)
+                owner = getattr(getattr(node.func, "value", None), "id", None)
+                modes = [*node.args[:1]] if attr == "mode" else []
+                modes += [k.value for k in node.keywords if k.arg == "mode"]
+                if any(writes(m) for m in modes):
+                    kind = "mode"
+                elif attr == "rmtree" or (attr, owner) == ("rename", "os"):
+                    kind = attr
+            if kind is not None:
+                yield getattr(top, "name", "<module>"), kind
+
+
+def test_table_writes_commit_through_commit_staged():
+    """Every table write in ``operators/``, ``pipeline/``, ``sources/``
+    and ``streaming/`` commits through ``merge._commit_staged``: an
+    in-place write anywhere else (an overwriting or appending writer, a
+    dynamic partition overwrite, a directory removal or rename) needs
+    an allow-list entry that says why it is not a table commit, and
+    every entry still names a write."""
+    found = {
+        (path.relative_to(PKG).as_posix(), fn): kind
+        for sub in ("operators", "pipeline", "sources", "streaming")
+        for path in sorted((PKG / sub).rglob("*.py"))
+        for fn, kind in _in_place_writes(ast.parse(path.read_text()))
+        if (path.name, fn) != ("merge.py", "_commit_staged")
+    }
+    assert sorted(set(found) - _IN_PLACE_ALLOWED.keys()) == []
+    assert sorted(_IN_PLACE_ALLOWED.keys() - set(found)) == []
+    assert all(_IN_PLACE_ALLOWED.values())

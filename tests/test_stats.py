@@ -16,7 +16,7 @@ from spark_hudi_etl_pipeline_spark.operators.clustering import (
     cluster_linear,
     write_clustered,
 )
-from spark_hudi_etl_pipeline_spark.operators.merge import table_live_files
+from spark_hudi_etl_pipeline_spark.operators.merge import _manifest_publish, table_live_files
 from spark_hudi_etl_pipeline_spark.operators.stats import (
     _valid_stats,
     build_table_stats,
@@ -98,6 +98,8 @@ def test_stale_sidecar_self_heals(spark, tmp_path):
         pa.Table.from_pandas(extra.toPandas()).cast(table_schema),
         os.path.join(path, "part-late-commit.parquet"),
     )
+    version, live = table_live_files(path)
+    _manifest_publish(path, live + ["part-late-commit.parquet"], version + 1)
     # The stale sidecar must be ignored (file sets differ) — the footer
     # fallback sees the new file and the result includes its rows.
     got = read_stats_range(spark, path, "o_orderdate", lo, hi).count()
