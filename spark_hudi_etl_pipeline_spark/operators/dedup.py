@@ -3,22 +3,24 @@ Phase 4): exact, fingerprint, MinHash+LSH, SimHash, n-gram Jaccard, and
 embedding-cosine near-dup.
 
 All operators are pure DataFrame transforms built from Catalyst
-expressions, except the MinHash signature (one Arrow UDF,
-:func:`minhash_signature_arrow`): hashing is ``xxhash64``/``md5``, set
-math is higher-order array functions, candidate generation is LSH band
+expressions, except the two per-document hash kernels, Arrow UDFs that
+share one normalization and one token hash (:func:`minhash_signature_arrow`,
+:func:`simhash_arrow`): hashing is ``xxhash64``/``md5``, set math is
+higher-order array functions, candidate generation is LSH band
 bucketing — the standard web-scale dedup pipeline shape (shingle →
-minhash → band → bucket-join → verify), which is how you avoid the O(n²)
+minhash → band → bucket → verify), which is how you avoid the O(n²)
 pair blowup at 100 TB:
 
 - signature computation is map-only (linear scan);
-- the only shuffle is the explode+self-join on (band, bucket-hash),
-  whose output is bounded by actual collisions, not n²;
+- the only shuffle is one grouping on (band, bucket-hash), whose output
+  is bounded by actual collisions, not n²;
 - oversized buckets (degenerate content, e.g. empty docs) are capped so
   one hot bucket cannot produce a quadratic task.
 """
 
 from __future__ import annotations
 
+import hashlib
 import random
 import re
 
@@ -29,7 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text
-from ..functions.text import _let
 from ..session import fan_out
 
 MERSENNE_PRIME_31 = (1 << 31) - 1  # 2147483647
@@ -196,6 +197,29 @@ def barrier_col(df: DataFrame, name: str, expr) -> DataFrame:
     return df.select("*", F.explode(F.array(expr)).alias(name))
 
 
+#: Java regex ``\w`` is the ASCII class; Python's is unicode-wide, so the
+#: word class is spelled out. (Python's whitespace, which ``\s`` here and
+#: ``str.split()`` share, is wider than Java's ``\s`` too, but every
+#: character it adds is outside ``\w``: Java turns it into a space.)
+_PUNCT_RE = re.compile(r"[^a-zA-Z0-9_\s]")
+
+
+def _normalized_tokens(s: str) -> list[str]:
+    """``split(functions.text.normalize(s), ' ')`` in Python: lowercase,
+    punctuation to spaces, split on whitespace runs. An empty or
+    punctuation-only text gives ``[""]``, as Spark's split does."""
+    return _PUNCT_RE.sub(" ", s.lower()).split() or [""]
+
+
+def _hash60(strs) -> np.ndarray:
+    """:func:`..functions.text.portable_hash60` of each of ``strs`` as an
+    int64 array: the first 60 bits (15 hex digits) of the UTF-8 md5,
+    read from the joined digests in one numpy pass."""
+    md5 = hashlib.md5
+    digests = b"".join([md5(s.encode()).digest() for s in strs])
+    return (np.frombuffer(digests, dtype=">u8")[::2] >> 4).astype(np.int64)
+
+
 def minhash_signature_arrow(num_hashes: int = 32, k: int = 5):
     """Arrow-vectorized MinHash signature UDF: array<bigint> of length
     ``num_hashes``, ``min((a_i * h + b_i) mod p)`` over the doc's
@@ -205,46 +229,39 @@ def minhash_signature_arrow(num_hashes: int = 32, k: int = 5):
     codegen), which made the pure-expression signature ~10× slower than
     this numpy formulation (measured: 6.6s vs 0.66s for 5k docs); at
     100 TB the signature scan is the dominant cost. Same shingling
-    semantics as functions.text.shingles (Java-regex-compatible ASCII
-    normalize) and the md5-60bit portable base hash
-    (:func:`..functions.text.portable_hash60`), so signatures — and
-    therefore LSH banding — are bit-identical in DuckDB: the
-    candidate-pair pipeline is value-checkable by an exact SQL oracle.
-    The Catalyst-expression form is kept as the reference oracle in
-    ``tests/test_dedup.py`` (``_minhash_signature``), which asserts
-    BIT-IDENTICAL signatures. All arithmetic stays < 2^62, safe under
-    ANSI overflow checks.
-    """
-    import hashlib
+    semantics as functions.text.shingles (:func:`_normalized_tokens`)
+    and the md5-60bit portable base hash (:func:`_hash60`), so
+    signatures — and therefore LSH banding — are bit-identical in
+    DuckDB: the candidate-pair pipeline is value-checkable by an exact
+    SQL oracle. The Catalyst-expression form is kept as the reference
+    oracle in ``tests/test_dedup.py`` (``_minhash_signature``), which
+    asserts BIT-IDENTICAL signatures. All arithmetic stays < 2^62, safe
+    under ANSI overflow checks.
 
+    One numpy pass per Arrow batch: the batch's shingle hashes are one
+    array, and each permutation's per-document minimum is one
+    ``np.minimum.reduceat`` over it.
+    """
     from pyspark.sql.types import ArrayType, LongType
 
-    # Mirror Java regex \w (ASCII) — Python \w is unicode-wide.
-    punct_re = re.compile(r"[^a-zA-Z0-9_\s]")
-    ws_re = re.compile(r"\s+")
-    coeff_a = np.array([a for a, _ in MINHASH_COEFFS[:num_hashes]], dtype=np.int64)[:, None]
-    coeff_b = np.array([b for _, b in MINHASH_COEFFS[:num_hashes]], dtype=np.int64)[:, None]
+    coeffs = MINHASH_COEFFS[:num_hashes]
 
     @F.pandas_udf(ArrayType(LongType()))
     def signature(texts: pd.Series) -> pd.Series:
-        out = []
+        sets = []
         for s in texts:
-            toks = ws_re.sub(" ", punct_re.sub(" ", (s or "").lower())).strip().split(" ")
+            toks = _normalized_tokens(s or "")
             if len(toks) <= k:
-                sh = {" ".join(toks)}
+                sets.append({" ".join(toks)})
             else:
-                sh = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
-            h = np.fromiter(
-                (
-                    int(hashlib.md5(x.encode()).hexdigest()[:15], 16)
-                    for x in sh
-                ),
-                dtype=np.int64,
-                count=len(sh),
-            ) % MERSENNE_PRIME_31
-            out.append((coeff_a * h[None, :] + coeff_b) % MERSENNE_PRIME_31)
-            out[-1] = out[-1].min(axis=1)
-        return pd.Series(out)
+                sets.append({" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)})
+        n = np.fromiter(map(len, sets), dtype=np.int64, count=len(sets))
+        h = _hash60([x for sh in sets for x in sh]) % MERSENNE_PRIME_31
+        starts = np.cumsum(n) - n
+        sig = np.empty((len(sets), len(coeffs)), dtype=np.int64)
+        for i, (a, b) in enumerate(coeffs):
+            sig[:, i] = np.minimum.reduceat((a * h + b) % MERSENNE_PRIME_31, starts)
+        return pd.Series(list(sig))
 
     return signature
 
@@ -263,8 +280,17 @@ def lsh_candidate_pairs(
     ``num_hashes/bands`` rows, bucket by band hash, emit candidate id
     pairs (id_a < id_b) from co-bucketed docs.
 
-    ``max_bucket`` drops degenerate buckets (near-constant content) so a
-    single hot bucket can't go quadratic — the standard skew guard.
+    One hash grouping by ``(band, bucket)`` does it: a window count on
+    that partitioning drops the buckets over ``max_bucket`` (degenerate,
+    near-constant content — the standard skew guard) and the singletons
+    BEFORE any id list exists, so no row ever holds more than
+    ``max_bucket`` ids; the ``collect_list`` groups on the same
+    partitioning (no second exchange), and the pairs are the double
+    ``explode`` of each capped list, deduplicated across bands.
+
+    The result is lazy and its plan starts with the signature's Python
+    stage: a caller that consumes it more than once, or sorts it
+    globally, checkpoints it first (:func:`minhash_dedup_pairs` does).
     """
     rows = num_hashes // bands
     sig_expr = minhash_signature_arrow(num_hashes, k)(F.col(text_col))
@@ -288,24 +314,17 @@ def lsh_candidate_pairs(
     banded = sig.select(
         F.col(id_col), F.explode(band_structs).alias("bb")
     ).select(id_col, "bb.band", "bb.bucket")
-    # banded is consumed three times (bucket counts + both self-join
-    # sides); materialize it once so the signature scan runs once, not
-    # 3×. It is tiny relative to the corpus — (id, band, bucket) ≈ 24
-    # bytes × bands per doc — the standard persist point in LSH; at
-    # cluster scale this is persist(MEMORY_AND_DISK), here localCheckpoint
-    # also truncates the lineage Spark would otherwise re-plan per branch.
-    banded = banded.localCheckpoint(eager=True)
-    counts = banded.groupBy("band", "bucket").count()
-    small = banded.join(
-        F.broadcast(counts.filter(F.col("count") <= max_bucket).select("band", "bucket")),
-        on=["band", "bucket"],
+    size = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    ids = (
+        banded.withColumn("n", size)
+        .filter(F.col("n").between(2, max_bucket))
+        .groupBy("band", "bucket")
+        .agg(F.collect_list(id_col).alias("ids"))
     )
-    a = small.select(F.col("band"), F.col("bucket"), F.col(id_col).alias("id_a"))
-    b = small.select(F.col("band"), F.col("bucket"), F.col(id_col).alias("id_b"))
     return (
-        a.join(b, on=["band", "bucket"])
+        ids.select(F.explode("ids").alias("id_a"), "ids")
+        .select("id_a", F.explode("ids").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
         .distinct()
     )
 
@@ -319,29 +338,32 @@ def minhash_dedup_pairs(
     k: int = 5,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidates (``MINHASH_HASHES`` values in
-    ``MINHASH_BANDS`` bands) verified with the exact shingle-set Jaccard
-    (array_intersect/array_union) ≥ ``threshold``.
+    ``MINHASH_BANDS`` bands, buckets over 1,000 docs dropped by
+    :func:`lsh_candidate_pairs`) verified with the exact shingle-set
+    Jaccard (array_intersect/array_union) ≥ ``threshold``.
     Verification touches only candidate pairs — never all pairs — and
     shingle sets are computed only for docs that appear in a candidate
     pair (semi-join prefilter), so the expensive second shingling pass
-    scales with collisions, not corpus size."""
+    scales with collisions, not corpus size.
+
+    Two checkpoints, each run once at build: the candidates (read by the
+    prefilter and the verify join, and below the final ``orderBy``,
+    whose range sample would otherwise re-run the signature's Python
+    stage) and the involved documents' shingle sets (read by both sides
+    of the verify join, so the corpus is scanned and shingled once)."""
     cands = lsh_candidate_pairs(
         df, id_col, text_col, num_hashes=MINHASH_HASHES, bands=MINHASH_BANDS, k=k
-    )
-    # Candidate pairs are consumed twice (prefilter + verify join) and are
-    # small by construction (bounded by bucket collisions) — materialize
-    # once instead of re-running the LSH pipeline per consumer.
-    cands = cands.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     involved = (
         cands.select(F.col("id_a").alias(id_col))
         .union(cands.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    sh = barrier_col(
-        df.join(F.broadcast(involved), on=id_col, how="left_semi"),
-        "sh",
-        F.array_distinct(text.shingles(text_col, k)),
-    ).select(F.col(id_col), "sh")
+    sh = (
+        df.join(F.broadcast(involved), on=id_col, how="left_semi")
+        .select(F.col(id_col), F.array_distinct(text.shingles(text_col, k)).alias("sh"))
+        .localCheckpoint(eager=True)
+    )
     joined = (
         cands.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), on="id_a")
         .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), on="id_b")
@@ -551,58 +573,69 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 #: reproducible in DuckDB (the old 64-bit xxhash64 form had no SQL twin).
 #: All masks positive (< 2^60), no sign-bit special case.
 SIMHASH_BITS = 60
-_BIT_MASKS = [1 << i for i in range(SIMHASH_BITS)]
 
 
-def simhash_expr(text_col):
-    """Column expr: 60-bit SimHash — portable-md5-hash each normalized
-    token, per-bit majority vote, reassembled into one long.
+def simhash_arrow():
+    """Arrow-vectorized 60-bit SimHash UDF (bigint; NULL for a NULL
+    text): every normalized token (:func:`_normalized_tokens`, repeats
+    included) votes on each bit with its md5-60bit hash (:func:`_hash60`),
+    and bit ``j`` is set iff ``2·Σ bit_j − n > 0`` over the ``n`` tokens,
+    so a tied bit is 0.
 
-    Entirely map-side (single ``aggregate`` pass over the token hashes;
-    no explode, no shuffle): at 100 TB simhash is a plain projection that
-    pipelines with the scan. Base hash is
-    :func:`..functions.text.portable_hash60`, so values are
-    bit-reproducible in DuckDB (exact oracle in plans/dedup_plans.py)."""
-    masks = F.array(*[F.lit(m) for m in _BIT_MASKS])
-    token_hashes = F.transform(
-        text.tokens(text.normalize(text_col)), lambda t: text.portable_hash60(t)
-    )
-    votes = F.aggregate(
-        token_hashes,
-        F.array_repeat(F.lit(0), SIMHASH_BITS),
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda v, m: v + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    return _let(
-        votes,
-        lambda v: F.aggregate(
-            F.zip_with(v, masks, lambda vote, m: F.when(vote > 0, m).otherwise(F.lit(0).cast("long"))),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc.bitwiseOR(x),
-        ),
-    )
+    One numpy pass per Arrow batch: each distinct token of the batch is
+    hashed once (memoized), and each bit's per-document count of set
+    bits is one ``np.add.reduceat`` over the batch's token hashes. The
+    Catalyst form, an interpreted ``aggregate`` of 60 ``zip_with``
+    lambdas per token, is kept as the bit-parity oracle in
+    ``tests/test_dedup.py`` (``_simhash_expr``); the DuckDB oracle of
+    ``dedup_simhash`` computes the same value."""
+    from pyspark.sql.types import LongType
+
+    @F.pandas_udf(LongType())
+    def simhash60(texts: pd.Series) -> pd.Series:
+        null = texts.isna().to_numpy()
+        docs = [_normalized_tokens(s) for s in texts[~null]]
+        n = np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
+        vocab: dict[str, int] = {}
+        ids = np.fromiter(
+            (vocab.setdefault(t, len(vocab)) for d in docs for t in d),
+            dtype=np.int64,
+            count=int(n.sum()),
+        )
+        h = _hash60(vocab)[ids]  # each distinct token hashed once
+        starts = np.cumsum(n) - n
+        vote = np.empty((len(docs), SIMHASH_BITS), dtype=bool)
+        for j in range(SIMHASH_BITS):
+            vote[:, j] = 2 * np.add.reduceat((h >> j) & 1, starts) > n
+        out = np.zeros(len(texts), dtype=np.int64)
+        out[~null] = np.packbits(vote, axis=1, bitorder="little").view("<i8").ravel()
+        return pd.Series(pd.arrays.IntegerArray(out, null))
+
+    return simhash60
 
 
 def simhash_pairs(
     df: DataFrame, id_col: str, text_col: str, *, max_hamming: int = 3
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: band the 60-bit hash into 4×15-bit
-    chunks; by pigeonhole any pair within hamming distance ≤ 3 shares at
-    least one chunk → join on (chunk_idx, chunk), verify with
-    ``bit_count(xor) <= max_hamming``. Same no-O(n²) shape as MinHash-LSH;
-    with the portable base hash the whole pipeline has an exact DuckDB
-    twin (plans/dedup_plans.py::dedup_simhash).
+    """Near-dup pairs by SimHash (:func:`simhash_arrow`): band the 60-bit
+    hash into 4×15-bit chunks; by pigeonhole any pair within hamming
+    distance ≤ 3 shares at least one chunk → join on (chunk_idx, chunk),
+    verify with ``bit_count(xor) <= max_hamming``. Same no-O(n²) shape
+    as MinHash-LSH, with no bucket cap: a chunk shared by many documents
+    (e.g. blank texts, which all hash alike) pairs them all. With the
+    portable base hash the whole pipeline has an exact DuckDB twin
+    (plans/dedup_plans.py::dedup_simhash).
+
+    The chunks are checkpointed once at build: they feed both self-join
+    sides, and the final ``orderBy``'s range sample re-runs its child,
+    which must never be the Python stage.
     """
     # Generate barrier: the 4 chunk expressions + the passthrough column
-    # reference the simhash attribute instead of CollapseProject inlining
-    # (and re-running) tokenize+vote 5× per row.
+    # reference the simhash attribute, one UDF evaluation per row.
     sh = barrier_col(
         fan_out(df.select(F.col(id_col), F.col(text_col))),
         "simhash",
-        simhash_expr(text_col),
+        simhash_arrow()(F.col(text_col)),
     ).drop(text_col)
     chunks = sh.select(
         F.col(id_col).alias("id"),
@@ -621,9 +654,6 @@ def simhash_pairs(
             )
         ).alias("cc"),
     ).select("id", "simhash", "cc.cidx", "cc.chunk")
-    # chunks feeds both self-join sides; one materialization keeps the
-    # interpreted tokenize+vote expression to a single pass (same
-    # rationale as the banded checkpoint in lsh_candidate_pairs).
     chunks = chunks.localCheckpoint(eager=True)
     a = chunks.select(
         "cidx", "chunk", F.col("id").alias("id_a"), F.col("simhash").alias("sh_a")

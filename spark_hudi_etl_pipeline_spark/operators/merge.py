@@ -431,13 +431,9 @@ def _upsert_partitioned(
         )
     files = _files_by_partition(spark, rec["files"], partition_col)
     affected = [f for v in {r["p"] for r in plan_rows} for f in files.get(v, [])]
-    existing = None  # first write
-    if affected:
-        existing = _read_files(spark, path, rec, affected)
-    elif rec["files"]:  # empty, so the merge output keeps the table's types
-        existing = _read_files(spark, path, rec, rec["files"][:1]).limit(0)
     merged = merge_upsert(
-        existing, batch, merge_keys, precombine, delete_col=delete_col
+        _merge_base(spark, path, rec, affected), batch, merge_keys, precombine,
+        delete_col=delete_col,
     )
     kept = sorted(set(rec["files"]) - set(affected))
     return _commit_staged(
@@ -691,6 +687,19 @@ def _read_files(spark, path: str, rec: dict, files: list[str]) -> DataFrame:
     if "schema" in rec:
         reader = reader.schema(StructType.fromJson(rec["schema"]))
     return reader.parquet(*[os.path.join(path, f) for f in files])
+
+
+def _merge_base(spark, path: str, rec: dict, affected: list[str]) -> DataFrame | None:
+    """The table side of an upsert's merge: the ``affected`` files; an
+    empty slice typed by the table when it has live files but none is
+    affected, so the merge output (and the schema the commit records)
+    keeps the table's types, not the batch's; ``None`` on a first
+    write."""
+    if affected:
+        return _read_files(spark, path, rec, affected)
+    if rec["files"]:
+        return _read_files(spark, path, rec, rec["files"][:1]).limit(0)
+    return None
 
 
 def read_indexed_table(spark, path: str) -> DataFrame:
@@ -974,9 +983,8 @@ def _indexed_upsert(
         # files and overwrites the sidecar this lazy plan reads from.
         rel = rel.localCheckpoint(eager=True)
         affected = index.probe(rel, batch, keys[0])
-    existing_sub = _read_files(spark, path, rec, affected) if affected else None
     merged = merge_upsert(
-        existing_sub, batch, keys, precombine,
+        _merge_base(spark, path, rec, affected), batch, keys, precombine,
         delete_col=delete_col, evolve_schema=evolve_schema,
     )
     if index == _ALL_FILES and affected:

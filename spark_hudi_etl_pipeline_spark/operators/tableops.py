@@ -330,7 +330,7 @@ def _fname_col():
     reports a percent-ENCODED URI (verified: a path with a space reads
     back as ``file:/...%20.../part-x.parquet``), hence url_decode; the
     basename itself is always Spark-generated (``part-*.parquet`` /
-    ``dvc-part-*.parquet``: alphanumerics, dashes, dots), so decode
+    ``part-upsert-*.parquet``: alphanumerics, dashes, dots), so decode
     quirks on '+'/'%' can't arise and the decoded value matches
     os.listdir names exactly."""
     return F.url_decode(F.element_at(F.split(F.col("__file"), "/"), -1))
@@ -510,17 +510,14 @@ def compact_deletion_vectors(
     footer-cost); deleted counts from the DV union. Both are O(files)
     relations.
 
-    Swap order (no transaction log on a bare parquet dir, so the
-    window is minimized rather than eliminated — a production table
-    would commit this through the versioned-manifest protocol in
-    operators/merge.py): both staging writes complete FIRST, then
-    dense originals drop (the one crash window: readers briefly miss
-    the dense files' survivors — never resurrected deletes, never
-    duplicates), then survivors move in, and the sidecar swaps last
-    (the old sidecar stays valid throughout: its dense-file entries
-    reference files already gone, which the anti join ignores)."""
-    import shutil as _shutil
-
+    The data-file swap is one manifest commit
+    (:func:`.merge._commit_staged`): the dense files' survivors are
+    staged, the live files minus the dense ones are kept, and the
+    post-commit cleaner removes the dense originals, so a manifest read
+    (:func:`.merge.read_indexed_table`) and the listing read agree. The
+    sidecar swaps after it (:func:`_swap_dv_sidecar`); until then the
+    old sidecar's dense-file entries name files that are gone, which the
+    anti join ignores."""
     _require_local_path(path)
 
     def _n_parquet() -> int:
@@ -541,33 +538,32 @@ def compact_deletion_vectors(
     }
     if not dense_names:
         return (0, _n_parquet())
-    # STAGE 1: both staged writes complete before anything is removed
     survivors = read_with_deletion_vectors(spark, path, _keep_position=True).filter(
         F.col("__fname").isin(*dense_names)
     ).drop("__file", "__pos", "__fname")
-    staging = path + ".dvcompact"
-    survivors.write.mode("overwrite").parquet(staging)
-    kept_dv = dv.filter(~F.col("__fname").isin(*dense_names))
+    rec = table_record(path)
+    kept = [f for f in rec["files"] if f not in dense_names]
+    _commit_staged(path, survivors, rec["version"] + 1, kept)
+    _swap_dv_sidecar(path, dv.filter(~F.col("__fname").isin(*dense_names)))
+    return (len(dense_names), _n_parquet())
+
+
+def _swap_dv_sidecar(path: str, kept_dv: DataFrame) -> None:
+    """Replace the table's ``_dv`` sidecar by ``kept_dv`` as its one
+    generation ``v0`` (no sidecar when it is empty). The kept entries
+    are staged first, beside the table (never a driver collect — the
+    kept DV is O(deleted rows), not planning-scale), so the old sidecar
+    stays whole until the renames."""
+    import shutil
+
+    dv_root = os.path.join(path, _DV_DIR)
     dv_staging = path + ".dvkeep"
     kept_dv_rows = kept_dv.count()
     if kept_dv_rows:
-        # staged write (never a driver collect — the kept DV is
-        # O(deleted rows), not planning-scale)
         kept_dv.write.mode("overwrite").partitionBy("__fname").parquet(dv_staging)
-    # STAGE 2: drop dense originals (the sidecar keys ARE decoded base
-    # names, so they match os.listdir directly), move survivors in,
-    # swap the sidecar last
-    for f in list(os.listdir(path)):
-        if f.endswith(".parquet") and f in dense_names:
-            os.remove(os.path.join(path, f))
-    for f in os.listdir(staging):
-        if f.endswith(".parquet"):
-            os.rename(os.path.join(staging, f), os.path.join(path, f"dvc-{f}"))
-    _shutil.rmtree(staging, ignore_errors=True)
     old_root = dv_root + ".old"
     os.rename(dv_root, old_root)
     if kept_dv_rows:
         os.makedirs(dv_root, exist_ok=True)
         os.rename(dv_staging, os.path.join(dv_root, "v0"))
-    _shutil.rmtree(old_root, ignore_errors=True)
-    return (len(dense_names), _n_parquet())
+    shutil.rmtree(old_root, ignore_errors=True)

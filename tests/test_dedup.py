@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_hudi_etl_pipeline_spark.functions import text
+from spark_hudi_etl_pipeline_spark.functions.text import _let
 from spark_hudi_etl_pipeline_spark.operators import dedup
 
 DOCS = [
@@ -93,14 +94,120 @@ def test_simhash_hamming_property(spark, docs_df):
     assert (1, 4) not in got and (4, 5) not in got
 
 
-def test_simhash_deterministic(spark, docs_df):
-    def sign():
-        return docs_df.select(
-            "doc_id", dedup.simhash_expr("text").alias("simhash")
-        ).collect()
+def _simhash_expr(text_col):
+    """Reference oracle for ``dedup.simhash_arrow``: the same 60-bit
+    SimHash as one Catalyst ``aggregate`` over the portable-md5-hashed
+    normalized tokens, a ``zip_with`` per-bit vote (+1 set, −1 clear),
+    then the positive votes' masks OR-ed into one long."""
+    masks = F.array(*[F.lit(1 << i) for i in range(dedup.SIMHASH_BITS)])
+    token_hashes = F.transform(
+        text.tokens(text.normalize(text_col)), lambda t: text.portable_hash60(t)
+    )
+    votes = F.aggregate(
+        token_hashes,
+        F.array_repeat(F.lit(0), dedup.SIMHASH_BITS),
+        lambda acc, h: F.zip_with(
+            acc,
+            masks,
+            lambda v, m: v + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
+        ),
+    )
+    return _let(
+        votes,
+        lambda v: F.aggregate(
+            F.zip_with(v, masks, lambda vote, m: F.when(vote > 0, m).otherwise(F.lit(0).cast("long"))),
+            F.lit(0).cast("long"),
+            lambda acc, x: acc.bitwiseOR(x),
+        ),
+    )
 
-    a, b = sign(), sign()
-    assert {tuple(r) for r in a} == {tuple(r) for r in b}
+
+#: Texts where a normalization slip in an Arrow kernel, or a vote slip in
+#: the SimHash one, would show: NULL, empty and
+#: whitespace-only; punctuation only; tabs, newlines and other separators
+#: (Python's ``\s`` is wider than Java's); non-ASCII letters, including
+#: ones whose lowercase is ASCII (Kelvin sign, dotted capital I);
+#: repeated tokens; and two-token texts, whose differing bits tie at 0.
+ADVERSARIAL_TEXTS = [
+    None,
+    "",
+    "   ",
+    " \t\n\r\x0b\x0c ",
+    "!!! ... ???",
+    "---",
+    "tab\tseparated\nnew\r\nlines",
+    "a\u00a0b\u2003c\x1cd\x85e",
+    "café déjà vu naïve",
+    "İstanbul \u212aelvin STRASSE straße ΣΊΣΥΦΟΣ",
+    "日本語のテキスト mixed with ascii words",
+    "word word word word word",
+    "spam " * 200,
+    "alpha beta",
+    "alpha beta gamma delta",
+    "under_score mixed123 CASE case",
+    "Punctuation, CASE and   whitespace; should not matter!",
+]
+
+
+def test_simhash_arrow_matches_expression_oracle(spark):
+    """The Arrow kernel is BIT-IDENTICAL to the Catalyst expression on
+    the adversarial texts and on the fixture corpus (with its near-copies,
+    as dedup_simhash reads it)."""
+    from spark_hudi_etl_pipeline_spark.plans.dedup_plans import _with_near_dups
+    from tests.conftest import SF_SMALL
+
+    adversarial = spark.createDataFrame(
+        [(-i - 1, t) for i, t in enumerate(ADVERSARIAL_TEXTS)], "doc_id long, text string"
+    )
+    corpus = _with_near_dups(spark, SF_SMALL)
+    rows = (
+        adversarial.unionByName(corpus)
+        .select(
+            "doc_id",
+            _simhash_expr("text").alias("expr"),
+            dedup.simhash_arrow()(F.col("text")).alias("arrow"),
+        )
+        .collect()
+    )
+    assert len(rows) > len(ADVERSARIAL_TEXTS)
+    assert [r["doc_id"] for r in rows if r["expr"] != r["arrow"]] == []
+    by_id = {r["doc_id"]: r["arrow"] for r in rows}
+    assert by_id[-1] is None  # NULL text, NULL hash: never pairs
+    # One token: its own hash. Two tokens: a bit they disagree on ties
+    # (vote 0) and stays clear, so the hash is the AND of theirs.
+    empty, alpha, beta = dedup._hash60(["", "alpha", "beta"])
+    assert by_id[-2] == empty
+    assert by_id[-1 - ADVERSARIAL_TEXTS.index("alpha beta")] == alpha & beta
+
+
+def test_simhash_deterministic(spark, docs_df):
+    """Same hashes across runs and across Arrow batch boundaries (the
+    token memo is per batch)."""
+
+    def sign(df):
+        return dict(
+            df.select("doc_id", dedup.simhash_arrow()(F.col("text"))).collect()
+        )
+
+    one = sign(docs_df.coalesce(1))
+    assert one == sign(docs_df.repartition(3)) == sign(docs_df.coalesce(1))
+    assert one[1] == one[2] == one[6] and one[1] != one[4]
+
+
+#: Spark jobs of one dedup query, build plus collect, at sf0.001 on
+#: ``local[8]``: the checkpoints run at build (MinHash: candidates and
+#: verify shingles; SimHash: chunks), each AQE shuffle stage and each
+#: broadcast is a job of its own.
+DEDUP_QUERY_JOBS = {"dedup_minhash_lsh": 13, "dedup_simhash": 8}
+
+
+@pytest.mark.parametrize("name", sorted(DEDUP_QUERY_JOBS))
+def test_dedup_query_job_budget(spark, name):
+    from spark_hudi_etl_pipeline_spark.plans import QUERIES
+    from tests.conftest import SF_SMALL, jobs_in
+
+    rows, jobs = jobs_in(spark, lambda: QUERIES[name](spark, SF_SMALL).collect())
+    assert rows and jobs <= DEDUP_QUERY_JOBS[name]
 
 
 def test_embedding_neardup(spark):
@@ -661,7 +768,10 @@ def test_minhash_arrow_and_expression_signatures_identical(spark):
             (2, "Punctuation, CASE and   whitespace; should not matter!"),
             (3, "short doc"),
             (4, ""),
-        ],
+        ]
+        # The Arrow kernel reads a NULL text as empty; the expression
+        # gives NULL.
+        + [(-i - 1, t) for i, t in enumerate(ADVERSARIAL_TEXTS) if t is not None],
         "doc_id long, text string",
     )
     out = df.select(

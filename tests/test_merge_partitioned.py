@@ -482,6 +482,20 @@ def test_indexed_upsert_pure_insert_beyond_ranges(spark, keyed_table):
     assert spark.read.parquet(keyed_table).count() == 102
 
 
+def test_indexed_pure_insert_keeps_the_table_schema(spark, keyed_table):
+    """A commit that rewrites no file records the table's schema, not
+    the batch's: an int-typed ``k`` batch inserted beyond every range of
+    the ``k long`` table merges against an empty, table-typed slice."""
+    from spark_hudi_etl_pipeline_spark.operators.merge import read_indexed_table
+    from tests.test_merge import assert_recorded_schema
+
+    batch = spark.createDataFrame([(1000, "new", 1)], "k int, v string, prec long")
+    upsert_parquet_indexed(spark, batch, keyed_table, "k", "prec")
+    rows = read_indexed_table(spark, keyed_table).collect()
+    assert len(rows) == 101 and (1000, "new") in {(r["k"], r["v"]) for r in rows}
+    assert_recorded_schema(spark, keyed_table)
+
+
 def test_indexed_upsert_delete_records(spark, keyed_table):
     batch = spark.createDataFrame(
         [(3, None, 9, True), (42, None, 9, True)],

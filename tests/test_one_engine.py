@@ -271,10 +271,9 @@ _IN_PLACE_ALLOWED = {
     ("operators/tableops.py", "delete_with_vectors"): (
         "adds one `_dv` sidecar generation; data files stay untouched"
     ),
-    ("operators/tableops.py", "compact_deletion_vectors"): (
-        "deletion-vector tables are plain directories read by listing "
-        "(`_metadata.row_index` per file): staging directories, then the "
-        "survivor move and the `_dv` sidecar swap"
+    ("operators/tableops.py", "_swap_dv_sidecar"): (
+        "swaps the `_dv` sidecar for its kept entries after the data "
+        "commit; entries are keyed by file name, so stale ones are inert"
     ),
     ("operators/timeline.py", "commit_append"): (
         "timeline commit partition: each instant appends its own "

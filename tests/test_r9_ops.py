@@ -430,12 +430,48 @@ def test_dv_compaction_rewrites_only_dense_files(spark, tmp_path):
     assert rewritten >= 1 and remaining == len(post)
     untouched = {f: t for f, t in pre.items() if f in post}
     assert untouched and all(post[f] == t for f, t in untouched.items())
-    assert any(f.startswith("dvc-") for f in post)  # staged survivors moved in
+    assert any(f.startswith("part-upsert-") for f in post)  # staged survivors moved in
     # sparse DV entries survive the sidecar swap; dense ones are gone
     dv = spark.read.parquet(os.path.join(path, "_dv", "*"))
     assert 0 < dv.count() < 25 + 2
     after = sorted(r["k"] for r in read_with_deletion_vectors(spark, path).collect())
     assert after == before == [k for k in range(25, 100) if k % 50 != 49]
+
+
+def test_dv_compaction_commits_the_manifest(spark, tmp_path):
+    """The compaction's file swap is a manifest commit: after it, a
+    manifest read of a manifest-committed table lists the survivors, not
+    the removed dense file, and agrees with the listing read."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from spark_hudi_etl_pipeline_spark.operators.clustering import (
+        cluster_linear,
+        write_clustered,
+    )
+    from spark_hudi_etl_pipeline_spark.operators.merge import (
+        read_indexed_table,
+        table_live_files,
+    )
+    from spark_hudi_etl_pipeline_spark.operators.tableops import (
+        compact_deletion_vectors,
+        delete_with_vectors,
+        read_with_deletion_vectors,
+    )
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame([(i, float(i)) for i in range(100)], "k long, v double")
+    write_clustered(cluster_linear(df, ["k"], 4), path)
+    delete_with_vectors(spark, path, F.col("k") < 25)
+    rewritten, remaining = compact_deletion_vectors(spark, path, min_deleted_fraction=0.3)
+    assert rewritten == 1
+    _, live = table_live_files(path)
+    assert sorted(live) == sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    assert len(live) == remaining
+    manifest = sorted(r["k"] for r in read_indexed_table(spark, path).collect())
+    listed = sorted(r["k"] for r in read_with_deletion_vectors(spark, path).collect())
+    assert manifest == listed == list(range(25, 100))
 
 
 def test_dv_compaction_on_uri_escapable_path(spark, tmp_path):

@@ -58,7 +58,7 @@ REPLICATED = (
 DEFAULT_QUERIES = (
     "q1_pricing_summary",  # single-scan aggregate
     "q9_profit_by_nation_year",  # star join
-    "dedup_simhash",  # map-only expression scan
+    "dedup_simhash",  # Arrow SimHash scan + chunk self-join
     "text_repetition_filters",  # Arrow-UDF scan
     "knn_bruteforce_cosine",  # broadcast join + per-query top-k
     "tfidf_similar_docs",  # shuffle-heavy inverted index
